@@ -41,46 +41,10 @@ HEADLINE = [
 # Newly-landed catalog keys, benched OUTSIDE the fixed headline set so
 # round-over-round baseline comparisons stay apples-to-apples (same
 # policy as `pipelines`). Module-level so tests can pin the census.
-#
-# Graduation policy (r15): the parsed bench line must stay under the
-# driver's tail capture (test_bench_final_line_fits_driver_tail_capture
-# enforces 1,800 chars WITH five-component growth headroom), so
-# components that have been flat for ≥3 rounds and were never flagged
-# by a round's regression scan rotate OUT when the census needs room —
-# their history lives in the committed BENCH_r*.json series; anything a
-# VERDICT actively tracks stays. Retired r15: fn_unpivot,
-# fn_url_extract, llm_bpe_pairs, sessionize_gap, agg_quantile_clip,
-# profile_histogram (the eqdepth sibling stays, covering the family).
-# Retired r16 (making room for the two r16 keys): layout_zorder_prune
-# (0.263/0.253/0.233 across r13-r15) and gapfill_locf_reading
-# (0.339/0.318/0.287 — the hourly + interp siblings stay, covering the
-# family); neither was ever flagged by a regression scan.
-# Retired r17 (making room for llm_index_apply_diff):
-# profile_table (1.628/1.609/1.763 across r14-r16, never flagged;
-# the approx, drift, and histogram_eqdepth siblings stay — the
-# richest-covered family in the census). Also retired r17 (making
-# room for llm_ivf_apply_diff): scd2_history (0.308/0.37/0.279/0.398
-# across r13-r16, never flagged; the merge-family sibling
-# merge_upsert stays) and gapfill_hourly (0.298/0.319/0.252/0.388,
-# never flagged; gapfill_interp_reading keeps the family's census
-# seat — the line-budget test still counts 5-component headroom).
-# Retired r18 (making room for llm_ann_ivf_pq_refine):
-# profile_drift (0.608/0.492/0.924/0.727 across r14-r17, never
-# flagged; the approx + histogram_eqdepth siblings keep the profile
-# family's census seats).
-# Retired r20 (making room for llm_ivf_list_skew, the r20 admission):
-# profile_histogram_eqdepth (0.464/0.391/0.344/0.435/0.42/0.553/0.345
-# across r13-r19, never flagged; profile_table_approx keeps the
-# profile family's census seat).
-# Admitted r22: llm_pq_codes — the pure corpus-encode key the r22
-# Arrow vectorization targets (VERDICT r21 item 1); benched so the
-# driver tracks the encode pass directly instead of only through the
-# refine/apply-diff compositions. Retired r22 (making room under the
-# line budget): llm_corpus_snapshot_diff (0.317/0.407/0.297/0.311/
-# 0.395 across r17-r21, never flagged by a regression scan; the
-# snapshot-diff family keeps TWO census seats via llm_index_apply_diff
-# and llm_ivf_apply_diff, whose maintenance paths run snapshot_diff
-# end to end).
+# Components that have been flat for ≥3 rounds rotate out when the
+# parsed line needs room (test_bench_final_line_fits_driver_tail_capture
+# keeps it under 1,800 chars with five-component headroom); their
+# history lives in the committed BENCH_r*.json series.
 COMPONENTS = [
     "llm_pq_codes",
     "stream_interval_join",
@@ -111,7 +75,7 @@ PIPELINES = [
     "dedup_e2e",
     "incremental_e2e",
 ]
-# LLM-pipeline + streaming headliners (import-safe: skipped if absent).
+# LLM-pipeline + streaming headliners, timed with the headline set.
 OPTIONAL = [
     "agg_salted_hot_key",
     "sql_api_leaderboard",
@@ -139,7 +103,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from github_event_etl_spark.session import ensure_session_defaults
-    from github_event_etl_spark.plans.catalog import query_map
+    from github_event_etl_spark.plans.catalog import resolve
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -151,27 +115,10 @@ def main() -> None:
     ensure_session_defaults(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
-    qmap = query_map()
-    # Slot-less public twins (the r19 indexed-twin catalog
-    # consolidation): demoted from the registry — their in-memory
-    # twins hold the verified slots and a frame-equality pytest pins
-    # identity — but they keep their component census seats, benched
-    # via the module functions so the round-over-round component
-    # series stays unbroken.
-    from github_event_etl_spark.plans import queries_llm as _qllm
-
-    for _twin in (
-        "llm_dedup_incremental_indexed",
-        "llm_dedup_incremental_semantic_indexed",
-    ):
-        qmap.setdefault(_twin, getattr(_qllm, _twin))
-    names = [n for n in HEADLINE if n in qmap]
-    names += [n for n in OPTIONAL if n in qmap]
-
-    # Fault isolation: every warmup/measurement is fenced so one broken
-    # query (or environment drift — round 3 lost the ENTIRE benchmark
-    # to a single timestamp-footer change in the warmup path) degrades
-    # to one missing entry, never an empty BENCH artifact.
+    # Fault isolation: every lookup/warmup/measurement is fenced so one
+    # broken query (or environment drift — round 3 lost the ENTIRE
+    # benchmark to a single timestamp-footer change in the warmup path)
+    # degrades to one missing entry, never an empty BENCH artifact.
     errors: dict[str, str] = {}
 
     def _guard(tag, fn):
@@ -182,6 +129,18 @@ def main() -> None:
             errors[tag] = f"{type(e).__name__}: {e}"[:300]
             print(f"bench: {tag} failed: {errors[tag]}", file=sys.stderr)
             return False
+
+    qmap: dict = {}
+
+    def _resolved(keys):
+        """The `keys` that resolve, in order; a failed lookup (a broken
+        query or pipelines module) costs only its own entries."""
+        return [
+            k for k in keys
+            if _guard(k, lambda k=k: qmap.update({k: resolve(k)}))
+        ]
+
+    names = _resolved(HEADLINE + OPTIONAL)
 
     # Warmup: prime codegen/JIT and the parquet footer cache.
     _guard("warmup", lambda: _force(qmap[names[0]](spark, sf_dir)))
@@ -296,30 +255,6 @@ def main() -> None:
 
         return rep
 
-    # Guarded import (the same fault isolation as every measurement):
-    # a broken plans/pipelines.py must cost ONLY the pipelines section,
-    # never abort main() before the final JSON line prints — the driver
-    # parses the artifact from that line.
-    _pipeline_fns: dict = {}
-
-    def _load_pipelines():
-        from github_event_etl_spark.plans.pipelines import (
-            dedup_e2e_pipeline,
-            incremental_e2e_pipeline,
-        )
-
-        _pipeline_fns.update(
-            {
-                "dedup_e2e": dedup_e2e_pipeline,
-                "incremental_e2e": incremental_e2e_pipeline,
-            }
-        )
-        assert set(_pipeline_fns) == set(PIPELINES), (
-            "PIPELINES census drifted"
-        )
-
-    _guard("pipelines_import", _load_pipelines)
-
     # Pipeline-section warmup (same footing as the JVM/UDF/streaming
     # warmups above): the composite plans dozens of UNIQUE codegen
     # stages, so its first executions pay janino compilation plus the
@@ -332,13 +267,14 @@ def main() -> None:
     # Each pipeline gets its OWN two untimed warmup reps — their stage
     # chains are disjoint sets of unique codegen stages, so each pays
     # its own janino + C2 ramp (the dedup_e2e measurement, r10).
-    for pname in [n for n in PIPELINES if n in _pipeline_fns]:
-        rep = _with_pipeline_parallelism(_pipeline_fns[pname])
+    for pname in _resolved(PIPELINES):
+        rep = _with_pipeline_parallelism(qmap[pname])
         for _ in range(2):
             _guard(f"{pname}_warmup", rep)
         _bench_into(pipelines, pname, rep)
 
     components: dict[str, float] = {}
+    component_names = _resolved(COMPONENTS)
     # Fixture-layout warmup (the streaming-warmup rule: one-time
     # materializations happen OUTSIDE any measured window): BOTH
     # indexed-dedup keys write their band index on first touch of a
@@ -359,7 +295,7 @@ def main() -> None:
                 f"indexed_fixture_warmup_{idx_name}",
                 lambda n=idx_name: _force(qmap[n](spark, sf_dir)),
             )
-    for name in [n for n in COMPONENTS if n in qmap]:
+    for name in component_names:
         _bench_into(
             components, name, lambda: _force(qmap[name](spark, sf_dir))
         )

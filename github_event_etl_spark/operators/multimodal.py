@@ -2,11 +2,13 @@
 
 Image/audio/video payloads are opaque `binary` columns with a typed
 metadata struct; decode / feature-extract run as Arrow-batched
-`mapInPandas` transforms. The real codec libraries are not in this
-container, so the DECODE step itself is stubbed: `decode_media` raises
-NotImplementedError, and `fake_decode_meta` is the deterministic stand-in
-the declared queries use. Everything around the stub — schema, binary
-handling, Arrow batch shape, partitioning — is real and tested.
+`mapInPandas` transforms. Codec libraries are not a dependency, so
+the DECODE step itself is stubbed: `decode_media` raises
+NotImplementedError, and `extract_features` derives (width, height,
+n_frames) deterministically from the first payload bytes, with the
+cost shape of a real header parse. Everything around the stub —
+schema, binary handling, Arrow batch shape, partitioning — is real and
+tested.
 
 Scale posture (100 TB):
 - Binary payloads ride in the same parquet row groups as their metadata;
@@ -70,25 +72,12 @@ def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def decode_media(payload: bytes, media_type: str):
     """Real decode entry point — requires PIL/ffmpeg/soundfile, which
-    are not in this container. Deliberately unimplemented."""
+    are not dependencies. Deliberately unimplemented."""
     raise NotImplementedError(
-        "media decoding requires codec libraries (PIL/ffmpeg) not present "
-        "in this environment; queries use fake_decode_meta, the "
-        "deterministic stand-in with the same output schema"
+        "media decoding requires codec libraries (PIL/ffmpeg), which are "
+        "not dependencies; queries use extract_features' deterministic "
+        "header stand-in with the same output schema"
     )
-
-
-def fake_decode_meta(payload: bytes, media_type: str) -> tuple[int, int, int]:
-    """Deterministic stand-in for decode: (width, height, n_frames)
-    derived from the first payload bytes. Same signature/cost-shape a
-    real decoder header-parse would have."""
-    b0 = payload[0] if len(payload) > 0 else 0
-    b1 = payload[1] if len(payload) > 1 else 0
-    b2 = payload[2] if len(payload) > 2 else 0
-    width = 1 + (b0 % 64)
-    height = 1 + (b1 % 64)
-    n_frames = 1 + (b2 % 30) if media_type == "video" else 1
-    return width, height, n_frames
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -101,8 +90,9 @@ def extract_features(media: DataFrame) -> DataFrame:
     module-level names): Spark Python workers do not inherit the
     driver's sys.path, so a closure that references this module by name
     fails to unpickle when the driver process found the engine via a
-    path entry. Nested defs are pickled by value; the decode logic is
-    therefore inlined here, kept in sync with fake_decode_meta."""
+    path entry. Nested defs are pickled by value, so the stub decode
+    (`decode_meta`: width/height from payload bytes 0/1, frame count
+    from byte 2 for video, 1 otherwise) is defined inside it."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd

@@ -116,12 +116,17 @@ def _uri_parts(p: str) -> tuple[str, str]:
     schemes (hdfs://, s3a://, …) keep their authority and a
     norm-path'd path — the driver cannot realpath remote storage
     (ADVICE r20: realpath-only semantics made every remote comparison
-    silently miss)."""
+    silently miss). A scheme counts only when a ``/`` follows its
+    colon: ``data:v2/part-0`` is a relative local path whose first
+    segment holds a colon, not a ``data:`` URI."""
     from urllib.parse import urlsplit
 
     parts = urlsplit(p)
-    if parts.scheme in ("", "file"):
-        local = parts.path if parts.scheme else p
+    remote = parts.scheme not in ("", "file") and p[
+        len(parts.scheme) + 1:
+    ].startswith("/")
+    if not remote:
+        local = parts.path if parts.scheme == "file" else p
         return ("file", os.path.realpath(local))
     return (
         parts.scheme,

@@ -11,9 +11,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def last_n_view(df: DataFrame, order_col: str, n: int) -> DataFrame:
@@ -70,9 +69,3 @@ def expire_day_partitions(path: str, min_keep_day: str) -> list[str]:
             dropped.append(day)
     return dropped
 
-
-def retain_partitions(df: DataFrame, part_col: Column, min_keep) -> DataFrame:
-    """Partition-drop retention as a view: rows whose partition key >=
-    horizon. On partitioned parquet this predicate is partition pruning —
-    old data is never scanned (EXPIREAT analog)."""
-    return df.filter(part_col >= min_keep)

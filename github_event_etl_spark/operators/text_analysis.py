@@ -125,11 +125,6 @@ def punct_count(text: Column) -> Column:
     return F.length(F.regexp_replace(text, f"[^{PUNCT_CLASS[1:-1]}]", ""))
 
 
-def stopword_count(text: Column) -> Column:
-    toks = words(F.lower(text))
-    return F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-
-
 def mean_word_len(text: Column) -> Column:
     """Average token length, rounded to 6 (stable small-int ratio)."""
     toks = words(text)
@@ -223,11 +218,6 @@ def lang_votes_tokens(wl: Column, lang: str) -> Column:
     """Number of tokens in a pre-split lowercase array matching
     `lang`'s marker list."""
     return F.size(F.filter(wl, lambda t: t.isin(*LANG_MARKERS[lang])))
-
-
-def lang_votes(text: Column, lang: str) -> Column:
-    """Number of tokens matching `lang`'s marker list."""
-    return lang_votes_tokens(words(F.lower(text)), lang)
 
 
 def lang_id_tokens(wl: Column) -> Column:
@@ -464,70 +454,6 @@ def learn_bpe(
     for m in merges[1:]:
         out = out.unionAll(m)
     return out
-
-
-def bpe_segment(
-    docs: DataFrame, merge_table: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Apply a learned merge table to a corpus: (doc_id, tokens) where
-    tokens is each word's final BPE segmentation, space-joined per
-    word. The pandas function re-implements the same greedy
-    left-to-right fold as learn_bpe (parity-tested); merges apply in
-    learning order, each over every word, exactly as at training time.
-
-    DELIBERATE driver materialization of the merge table: it is the
-    MODEL — bounded by the merge count (a tokenizer is tens of
-    thousands of rows), never by data volume — and closure-capturing
-    it ships ONE copy to each executor inside the serialized function,
-    the same shape as broadcasting fitted ML-model coefficients. The
-    two rejected alternatives are both wrong at scale: a crossJoin'd
-    array column duplicates the whole tokenizer into EVERY Arrow row,
-    and a collect_list aggregate's order is not guaranteed after a
-    shuffle, so merges could apply out of learning order (the explicit
-    driver-side sort pins it). This is the repo's one documented
-    exception to the no-driver-collect rule, and it is exempt
-    because the collected size is O(model), not O(data)."""
-    merges = [
-        (r.pair_a, r.pair_b)
-        for r in merge_table.select("iteration", "pair_a", "pair_b")
-        .orderBy("iteration")
-        .collect()
-    ]
-
-    def seg_batches(it):
-        import pandas as _pd
-
-        for pdf in it:
-            out_tokens = []
-            for text in pdf[text_col]:
-                toks = []
-                for w in str(text).strip(" ").split():
-                    syms = list(w)
-                    for a, b in merges:
-                        acc = []
-                        for s in syms:
-                            if acc and acc[-1] == a and s == b:
-                                acc[-1] = a + b
-                            else:
-                                acc.append(s)
-                        syms = acc
-                    toks.append(" ".join(syms))
-                out_tokens.append("|".join(toks))
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "tokens": out_tokens}
-            )
-
-    import pyspark.sql.types as T_
-
-    schema = T_.StructType(
-        [
-            T_.StructField("doc_id", T_.LongType()),
-            T_.StructField("tokens", T_.StringType()),
-        ]
-    )
-    return docs.select("doc_id", text_col).mapInPandas(
-        seg_batches, schema=schema
-    )
 
 
 def chunk_tokens(

@@ -84,41 +84,15 @@ _CHANGED_THIS_ROUND: frozenset[str] = frozenset({
     # (r19's entry, llm_ann_recall_eval, self-cleared: green in r19.)
 })
 
-# Keys added when the current round's 50-key verification window is
-# already exactly full (changed + never-checked + every stale key):
-# rank them LAST so they don't evict a stale key past the one-round
-# staleness discipline. Round-anchored and self-clearing: the deferral
-# holds only while the newest CORRECTNESS artifact predates
-# `_DEFER_NEW_UNTIL_ROUND`; once that round's artifact lands, these
-# become ordinary never-checked keys and jump to the front of the next
-# round's window.
-#
-# New-keys-per-round budget: with R registry keys and the driver's
-# 50-key cap, stalest-first ordering re-verifies every key each
-# ceil(R / 50) rounds — that ceiling IS the documented worst-case
-# staleness bound, pinned against the live registry size by
-# tests/test_oracle.py::test_catalog_staleness_ordering via
-# `staleness_bound_rounds()` below. Two levers keep the bound small:
-# (1) at most ~3 new/changed keys per round (each admitted key
-# displaces one least-stale key by one round), and (2) consolidating
-# strict-projection keys into their verified superset's slot (e.g.
-# llm_token_shards is a public projection of llm_pack_offsets and
-# holds no slot of its own).
-#
-# Indexed-twin consolidation — EXECUTED r19 (VERDICT r18 item 2): the
-# registry sat at exactly 150 keys (the bound-3 boundary, zero
-# admission slots), and the two indexed/in-memory dedup pairs were
-# RESULT-IDENTICAL by construction — each pair shared one oracle
-# string verbatim (_INCRM_ORACLE; _INCR_SEM_ORACLE) and is pinned by a
-# frame-equality pytest — so the indexed member of each dropped to a
-# slot-less public twin (the llm_token_shards precedent), freeing two
-# slots with zero loss of verified surface:
-#   llm_dedup_incremental_indexed           (slot-less since r19)
-#   llm_dedup_incremental_semantic_indexed  (slot-less since r19)
-# Both remain public API, frame-equality- and plan-gate-pinned in
-# tests/test_llm.py, and keep their bench.py component census seats
-# (benched via the module functions, not the catalog). Registry after
-# consolidation: 148 keys, staleness bound 3, two admission slots.
+# Staleness budget: with R registry keys and 50 keys hash-checked per
+# round, stalest-first ordering re-verifies every key each ceil(R / 50)
+# rounds — the documented worst-case staleness bound, pinned against
+# the live registry size by tests/test_oracle.py via
+# `staleness_bound_rounds()` below. Two levers keep it small: few
+# new/changed keys per round, and strict projections or
+# result-identical twins of a verified key holding no slot of their
+# own (llm_token_shards; the two indexed dedup twins in
+# `_SLOTLESS_TWINS`).
 _DRIVER_KEYS_PER_ROUND = 50
 
 
@@ -127,27 +101,7 @@ def staleness_bound_rounds() -> int:
     ceil(registry size / driver window)."""
     n = len(all_specs())
     return -(-n // _DRIVER_KEYS_PER_ROUND)
-_DEFER_NEW_UNTIL_ROUND = 19
-_DEFERRED_NEW_KEYS: frozenset[str] = frozenset({
-    # r19's deferral SELF-CLEARED when CORRECTNESS_r19 landed
-    # (19 < 19 is false), making llm_ivf_pq_apply_diff r20's
-    # never-checked front-rider exactly as planned (judge pre-verified
-    # it hash-green at sf0.01 in the r19 adjudication).
-    #
-    # r20 window arithmetic (recomputed from the 19 artifacts at edit
-    # time): registry 150 = 149 + 1 admission (llm_ivf_list_skew, the
-    # list-skew report — VERDICT r19 item 3's value-checkable key,
-    # taking the one open slot). Cohorts among the 149 pre-admission
-    # keys: 1 never-checked (llm_ivf_pq_apply_diff) / 48 × r17 /
-    # 50 × r18 / 50 × r19. The r20 window = 2 never-checked + all 48
-    # r17-stale keys = 50 exactly; the admission EVICTS the one
-    # earliest-registered r18 key the window would otherwise have
-    # topped up with — safe, because after r20 the cohorts are
-    # 50 × r20 / 50 × r19 / 50 × r18 and no key's latest green row
-    # predates r18, preserving the bound ceil(150/50) = 3 with zero
-    # admission slots left (the next admission must consolidate or
-    # retire a slot first, the indexed-twin precedent).
-})
+
 
 # Declared rows-only queries whose correct answer may legitimately be
 # empty. A 0-row result from one of these still earns a green staleness
@@ -156,24 +110,6 @@ _DEFERRED_NEW_KEYS: frozenset[str] = frozenset({
 # keep the strict `spark_rows > 0` rule: an unexpected empty result
 # stays stale and gets re-checked every round until fixed.
 _ROWS_ONLY_EMPTY_OK: frozenset[str] = frozenset()
-
-
-@functools.lru_cache(maxsize=1)
-def _newest_artifact_round() -> int:
-    """Highest round number among the CORRECTNESS_r*.json artifacts
-    (0 when none exist). Anchors the self-clearing deferral window."""
-    import glob
-    import os
-    import re
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return max(rounds, default=0)
 
 
 @functools.lru_cache(maxsize=1)
@@ -250,11 +186,6 @@ def _load_all() -> None:
             and last_green.get(key, 0) <= _CHANGED_AFTER_ROUND
         ):
             return (0, 0)
-        if (
-            key in _DEFERRED_NEW_KEYS
-            and _newest_artifact_round() < _DEFER_NEW_UNTIL_ROUND
-        ):
-            return (2, 0)
         return (1, last_green.get(key, 0))
 
     ordered = dict(sorted(_REGISTRY.items(), key=rank))
@@ -283,3 +214,37 @@ def oracle_map() -> dict[str, str]:
         for name, spec in all_specs().items()
         if spec.oracle is not None
     }
+
+
+# Benchable names that hold no registry slot. The indexed dedup twins
+# are result-identical to their in-memory twins, which hold the
+# verified slots (a frame-equality pytest pins the identity); the
+# composed pipelines have no oracle.
+_SLOTLESS_TWINS = (
+    "llm_dedup_incremental_indexed",
+    "llm_dedup_incremental_semantic_indexed",
+)
+_PIPELINES = {
+    "dedup_e2e": "dedup_e2e_pipeline",
+    "incremental_e2e": "incremental_e2e_pipeline",
+}
+
+
+def resolve(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The (spark, sf_dir) callable behind any benched or dumped name:
+    the registry entry, else a slot-less indexed twin (queries_llm),
+    else a composed pipeline (pipelines.py, imported only here, so a
+    broken pipelines module fails only the names that need it).
+    Raises KeyError for anything else."""
+    _load_all()
+    if name in _REGISTRY:
+        return _REGISTRY[name].fn
+    if name in _SLOTLESS_TWINS:
+        from . import queries_llm
+
+        return getattr(queries_llm, name)
+    if name in _PIPELINES:
+        from . import pipelines
+
+        return getattr(pipelines, _PIPELINES[name])
+    raise KeyError(name)

@@ -4565,8 +4565,7 @@ def llm_incremental_e2e_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- r16 additions
 # Two pipeline operators a continuously-refreshed 100 TB corpus needs
-# between crawl snapshots, deferred to r17's driver window
-# (catalog._DEFERRED_NEW_KEYS — the r15 over-budget precedent).
+# between crawl snapshots.
 
 
 # Snapshot-diff fixture: derive "yesterday's snapshot" from the one

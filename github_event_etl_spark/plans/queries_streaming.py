@@ -546,64 +546,3 @@ def stream_stateful_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # low serializes the Python stage (measured ~8× slower at 4).
     out = run_bounded(deduped, "update", "stateful_dedup", shuffle_partitions=None)
     return out.select("event_id", "value")
-
-
-# NOT a declared query: Spark 4's transformWithStateInPandas requires
-# the `google.protobuf` package for its driver<->state-server protocol
-# (pyspark/sql/streaming/proto/StateMessage_pb2.py), which this
-# container does not ship and cannot install. The operator itself is
-# fully implemented (streaming/stateful.py dedup_first_wins_tws) and
-# covered by a protobuf-gated pytest (tests/test_streaming.py) that
-# runs wherever the dependency exists — the same acknowledged
-# environment-limit treatment as the Kafka source (SURVEY §1.4).
-def stream_stateful_dedup_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TTL'd first-wins dedup on Spark 4's
-    ``transformWithStateInPandas`` (streaming/stateful.py
-    dedup_first_wins_tws) — the successor stateful API, same semantics
-    and the same oracle as `stream_stateful_dedup_ttl`: the replay
-    carries every event twice (arrival 1 copies mutate value by +100)
-    and first-wins must return exactly the originals.
-
-    transformWithState requires the RocksDB state-store provider — the
-    100 TB-correct store anyway (off-heap/on-disk state, changelog
-    checkpoints); restored to the prior provider after the bounded run
-    so other streaming queries in the session keep their default."""
-    from ..streaming.stateful import dedup_first_wins_tws
-
-    src = _retx_replay_dir(spark, sf_dir)
-    schema = (
-        "event_id long, ts_us long, user_id long, event_type string, "
-        "value double, arrival int"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .json(src)
-        .select(
-            "event_id",
-            F.timestamp_micros(F.col("ts_us")).alias("ts"),
-            "user_id",
-            "event_type",
-            "value",
-            "arrival",
-        )
-    )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, rocksdb)
-    try:
-        deduped = dedup_first_wins_tws(stream, ttl_seconds=300)
-        # Same as the applyInPandasWithState variant: partition count is
-        # the Python-worker parallelism here, so keep the session value.
-        out = run_bounded(
-            deduped, "update", "stateful_dedup_tws", shuffle_partitions=None
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    return out.select("event_id", "value")

@@ -324,7 +324,7 @@ class _NdjsonStreamWriter(DataSourceStreamWriter):
       namespace (`_staging/`, standing in for atomic per-object PUTs)
       and the driver's single atomic commit action is writing
       `{path}/batch_id={N}/manifest.json` naming exactly the parts the
-      batch consists of. Readers (`read_manifested_batches`) list
+      batch consists of. Readers (`manifested_part_paths`) list
       parts FROM the manifests, never by directory listing, so a
       staged object from a dead task attempt is invisible by
       construction. Replay overwrites the SAME manifest (idempotent —
@@ -498,18 +498,3 @@ def manifested_part_paths(path: str) -> list[str]:
         )
     return parts
 
-
-def read_manifested_batches(spark, path: str, schema=None):
-    """Batch-read a manifest-mode sink directory as NDJSON, via the
-    manifest listing (never the directory)."""
-    paths = manifested_part_paths(path)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if not paths:
-        import pyspark.sql.types as _T
-
-        return spark.createDataFrame(
-            [], schema if schema is not None else _T.StructType([])
-        )
-    return reader.json(paths)

@@ -127,95 +127,3 @@ def dedup_first_wins_ttl(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-
-def dedup_first_wins_tws(
-    events: DataFrame,
-    ttl_seconds: int = 300,
-    watermark_delay: str = "10 minutes",
-) -> DataFrame:
-    """The same first-insert-wins TTL dedup on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (`dedup_first_wins_ttl` above; same
-    semantics, same oracle).
-
-    What the new API buys at scale: named state variables with
-    independent schemas (value/list/map) instead of one state tuple,
-    first-class timers (register/delete/list, fired via
-    ``handleExpiredTimer``) instead of one timeout slot, optional
-    native state TTL, and initial-state bootstrap. It requires the
-    RocksDB state-store provider (the caller sets the conf), which is
-    itself the 100 TB choice: state lives off-heap/on-disk with
-    changelog checkpointing rather than in executor heap snapshots.
-
-    Semantics kept identical to the GroupState version: EVENT-time TTL
-    (deterministic under replay), per-key first-wins ordered by
-    (arrival, ts), timer horizon never at/below the current watermark.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    ttl_ms = ttl_seconds * 1000
-
-    class FirstWinsDedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("first_seen", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues: TimerValues):
-            if self._state.exists():
-                # Key already admitted within its TTL horizon: no-op,
-                # the Redis SET-NX-miss branch.
-                return
-            best = None
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                if len(pdf) == 1 and best is None:
-                    best = pdf
-                    continue
-                pool = pdf if best is None else pd.concat(
-                    [best, pdf], ignore_index=True
-                )
-                idx = int(
-                    np.lexsort(
-                        (pool["ts"].to_numpy(), pool["arrival"].to_numpy())
-                    )[0]
-                )
-                best = pool.iloc[idx : idx + 1]
-            if best is None:
-                return
-            first_seen_ms = int(best["ts"].iloc[0].value // 1_000_000)
-            self._state.update((first_seen_ms,))
-            horizon = max(
-                first_seen_ms + ttl_ms,
-                timerValues.getCurrentWatermarkInMs() + 1,
-            )
-            self._handle.registerTimer(horizon)
-            yield best
-
-        def handleExpiredTimer(
-            self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-        ):
-            # Watermark passed first_seen + TTL: drop the mark; a later
-            # arrival re-admits (EX eviction analog).
-            self._state.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy("event_id")
-        .transformWithStateInPandas(
-            statefulProcessor=FirstWinsDedup(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-    )

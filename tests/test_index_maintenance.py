@@ -2116,6 +2116,32 @@ def test_under_path_compares_scheme_qualified_uris():
         assert not _under_path(("/elsewhere/idx",), "/warehouse/idx")
 
 
+def test_uri_parts_relative_path_with_colon_is_local(tmp_path, monkeypatch):
+    """A relative local path whose first segment holds a colon
+    (`data:v2/part-0`) is a local path, not a `data:` URI: it must
+    realpath against the working directory and prefix-match the
+    scheme-qualified scan roots Spark reports for it. Hierarchical
+    remote URIs stay remote."""
+    import os
+
+    from github_event_etl_spark.operators.plan_metrics import (
+        _under_path,
+        _uri_parts,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    assert _uri_parts("data:v2/part-0") == (
+        "file", os.path.realpath(tmp_path / "data:v2" / "part-0")
+    )
+    assert _under_path(
+        ("file:" + str(tmp_path / "data:v2" / "part-0"),), "data:v2"
+    )
+    assert _uri_parts("hdfs:///x") == ("hdfs", "///x")
+    assert _uri_parts("hdfs://nn/x") == ("hdfs", "//nn/x")
+    assert _uri_parts("s3a://b/x") == ("s3a", "//b/x")
+    assert _uri_parts("file:/tmp/x") == ("file", os.path.realpath("/tmp/x"))
+
+
 def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
     """ADVICE r20: `ivf_pq_refresh_from_change_stream` must default
     num_subspaces/num_codewords/dim from the layout's _params.json

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import conftest
@@ -19,10 +20,12 @@ from github_event_etl_spark.operators.multimodal import (
     sample_frames,
 )
 from github_event_etl_spark.operators.similarity import (
+    _subsq_l2_sql,
     ann_ivf,
     ann_lsh,
     ann_recall,
     cosine,
+    cosine_cols,
     knn_bruteforce,
 )
 from github_event_etl_spark.operators.text_analysis import quality_score
@@ -2049,94 +2052,12 @@ def test_learn_bpe_matches_reference(spark):
     assert got == want
 
 
-def test_bpe_segment_matches_reference(spark):
-    """Applying the learned merges must segment every word exactly as
-    the reference's final symbol table."""
-    from github_event_etl_spark.operators.text_analysis import (
-        bpe_segment,
-        learn_bpe,
-    )
-
-    corpus = [(0, "low lower low"), (1, "newest newer new")]
-    docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    merges = learn_bpe(docs, 5)
-    wf = {}
-    for _, t in corpus:
-        for w in t.split():
-            wf[w] = wf.get(w, 0) + 1
-    _, syms = _ref_bpe(wf, 5)
-    got = {r.doc_id: r.tokens for r in bpe_segment(docs, merges).collect()}
-    for doc_id, text in corpus:
-        want = "|".join(" ".join(syms[w]) for w in text.split())
-        assert got[doc_id] == want
-
-
 def test_learn_bpe_rejects_zero_merges(spark):
     from github_event_etl_spark.operators.text_analysis import learn_bpe
 
     docs = spark.createDataFrame([(0, "ab")], "doc_id long, text string")
     with pytest.raises(ValueError, match="n_merges"):
         learn_bpe(docs, 0)
-
-
-def test_ivfadc_residual_encoding_beats_raw_with_trained_coarse(spark):
-    """The faithful IVFADC claim, measured: residual PQ encoding beats
-    raw-vector PQ ONLY when the coarse quantizer captures the data's
-    cluster structure. On deterministic clustered vectors with Lloyd-
-    trained centroids (train_pq_codebook at num_subspaces=1) +
-    residual codes, the ADC distance-approximation error must fall
-    far below raw-vector PQ's (measured ~25x; asserted 5x) and recall
-    must not regress; with the default md5-seed coarse quantizer the
-    residuals are as spread as the data and the advantage must vanish
-    — both sides of the theory pinned."""
-    import numpy as np
-
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_pq,
-        ann_ivf_pq_residual,
-        ivf_assign_with_centroids,
-        knn_bruteforce,
-        train_pq_codebook,
-    )
-
-    rng = np.random.RandomState(7)
-    centers = rng.randn(16, 64)
-    pts = np.vstack([c + 0.15 * rng.randn(32, 64) for c in centers])
-    cemb = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(pts)],
-        "vec_id long, embedding array<double>",
-    )
-    qs = cemb.filter(F.col("vec_id") % 67 == 0)
-    E = {i: pts[i] for i in range(len(pts))}
-
-    def err_and_pairs(df):
-        rows = df.collect()
-        errs = [
-            abs(r.adist - float(((E[r.qid] - E[r.nid]) ** 2).sum()))
-            for r in rows
-        ]
-        return sum(errs) / len(errs), {(r.qid, r.nid) for r in rows}
-
-    cents = train_pq_codebook(
-        cemb, num_subspaces=1, num_codewords=16, dim=64, iters=3
-    )
-    centroids = cents.select(F.col("code_id").alias("centroid_id"), "c_vec")
-    assigned = ivf_assign_with_centroids(cemb, centroids)
-
-    bf = {(r.qid, r.nid) for r in knn_bruteforce(cemb, qs, k=10).collect()}
-    e_raw, p_raw = err_and_pairs(ann_ivf_pq(cemb, qs, k=10))
-    e_res, p_res = err_and_pairs(
-        ann_ivf_pq_residual(
-            cemb, qs, k=10, train_iters=2, coarse=(assigned, centroids)
-        )
-    )
-    e_res_md5, _ = err_and_pairs(
-        ann_ivf_pq_residual(cemb, qs, k=10, train_iters=2)
-    )
-    assert e_res < e_raw / 5, (e_res, e_raw)
-    assert len(bf & p_res) >= len(bf & p_raw)
-    # md5-seed coarse quantizer: residuals stay raw-spread, advantage gone
-    assert e_res_md5 > e_res * 10, (e_res_md5, e_res)
 
 
 # ------------------------------------------------- semantic dedup clusters
@@ -3557,6 +3478,101 @@ def test_ivf_pq_apply_diff_equals_rebuild_and_plan_gates(spark, sf_dir):
     assert tree.count("SortMergeJoin") == 0, tree
 
 
+# Broadcast-join + grouped-aggregate encoders: the r21 shapes the
+# vectorized encode replaced, kept here as its value reference.
+
+
+def _pq_codes_agg(
+    corpus: DataFrame,
+    codebook: DataFrame,
+    num_subspaces: int,
+    d_sub: int,
+    num_codewords: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The legacy broadcast-join + grouped struct-min PQ assignment —
+    the reference implementation the vectorized UDF is parity-tested
+    against."""
+    joined = corpus.select(id_col, vec_col).join(F.broadcast(codebook))
+    # min(struct(d, r)).r per subspace as ONE SQL parse each (r21, see
+    # _dot_sql — construction round trips); tree identical to the
+    # F.min(F.struct(sub_dist, code_rank))["r"] form it replaces.
+    codes = joined.groupBy(id_col).agg(
+        *[
+            F.expr(
+                f"min(struct({_subsq_l2_sql(vec_col, 'c_vec', s * d_sub + 1, d_sub)}"
+                " AS d, code_rank AS r)).r"
+            ).alias(f"c{s}")
+            for s in range(num_subspaces)
+        ]
+    )
+    packed = None
+    for s in range(num_subspaces):
+        term = F.col(f"c{s}").cast("long") * F.lit(num_codewords**s).cast("long")
+        packed = term if packed is None else packed + term
+    return codes.select(F.col(id_col), packed.alias("pq_code"))
+
+
+def _pq_qerr_agg(
+    corpus: DataFrame,
+    codebook: DataFrame,
+    num_subspaces: int,
+    d_sub: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Legacy broadcast-join + grouped-min quantization error — the
+    vectorized UDF's parity reference."""
+    joined = corpus.select(id_col, vec_col).join(F.broadcast(codebook))
+    per_sub = joined.groupBy(id_col).agg(
+        *[
+            F.min(
+                F.expr(_subsq_l2_sql(vec_col, "c_vec", s * d_sub + 1, d_sub))
+            ).alias(f"_d{s}")
+            for s in range(num_subspaces)
+        ]
+    )
+    total = None
+    for s in range(num_subspaces):
+        term = F.col(f"_d{s}")
+        total = term if total is None else total + term
+    return per_sub.select(F.col(id_col), total.alias("qerr"))
+
+
+def _ivf_assign_agg(
+    corpus: DataFrame,
+    centroids: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The legacy broadcast-join + grouped struct-max assignment (r21
+    shape) — the vectorized UDF's parity reference. Struct MAX compares (_csim, -centroid_id) with
+    Spark's double ordering (NaN largest, null smallest); the payload
+    fields after the unique centroid id are never compared."""
+    scored = corpus.join(F.broadcast(centroids)).select(
+        F.col(id_col),
+        F.col(vec_col),
+        "centroid_id",
+        cosine_cols(vec_col, "c_vec").alias("_csim"),
+    )
+    best = scored.groupBy(id_col).agg(
+        F.max(
+            F.struct(
+                F.col("_csim"),
+                (-F.col("centroid_id")).alias("_ncid"),
+                F.col("centroid_id"),
+                F.col(vec_col).alias("_vec"),
+            )
+        ).alias("_b")
+    )
+    return best.select(
+        F.col(id_col),
+        F.col("_b._vec").alias(vec_col),
+        F.col("_b.centroid_id").alias("centroid_id"),
+    )
+
+
 def test_vectorized_encode_parity_with_legacy_agg(spark):
     """The r22 Arrow-vectorized encode paths (PQ code assignment, IVF
     centroid assignment, quantization error) must be VALUE-IDENTICAL to
@@ -3578,9 +3594,6 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
     from pyspark.sql import types as T
 
     from github_event_etl_spark.operators.similarity import (
-        _ivf_assign_agg,
-        _pq_codes_agg,
-        _pq_qerr_agg,
         ivf_assign_with_centroids,
         ivf_seed_centroids,
         pq_codebook,
@@ -3657,6 +3670,64 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
             isinstance(a, float) and isinstance(b, float)
             and math.isnan(a) and math.isnan(b)
         ), (k, a, b)
+
+
+def test_empty_model_table_gives_empty_reference_schema(spark):
+    """An EMPTY codebook or centroid table yields an empty frame with
+    the schema of the broadcast-join references above — the inner join
+    against an empty model table returned no rows, and neither may the
+    vectorized encode."""
+    from github_event_etl_spark.operators.similarity import (
+        _ivf_pq_build_tables,
+        ivf_assign,
+        ivf_assign_with_centroids,
+        ivf_seed_centroids,
+        pq_codebook,
+        pq_codes,
+        pq_quantization_error,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [1.0] * 8), (2, [0.5] * 8)], "vec_id long, embedding array<float>"
+    )
+    cb = pq_codebook(df, 4).limit(0)
+    cents = ivf_seed_centroids(df, 2).limit(0)
+    empty = df.limit(0)
+
+    def ref_lists():
+        asg = _ivf_assign_agg(df, cents).select(
+            F.col("vec_id").alias("nid"), "centroid_id"
+        )
+        codes = _pq_codes_agg(df, cb, 2, 4, 4, "vec_id", "embedding")
+        return asg.join(
+            codes.select(F.col("vec_id").alias("nid"), "pq_code"), "nid"
+        )
+
+    cases = [
+        (
+            pq_codes(df, 2, 4, 8, codebook=cb),
+            _pq_codes_agg(df, cb, 2, 4, 4, "vec_id", "embedding"),
+        ),
+        (
+            pq_quantization_error(df, cb, 2, 8),
+            _pq_qerr_agg(df, cb, 2, 4, "vec_id", "embedding"),
+        ),
+        (ivf_assign_with_centroids(df, cents), _ivf_assign_agg(df, cents)),
+        (
+            ivf_assign(empty, 2)[0],
+            _ivf_assign_agg(empty, ivf_seed_centroids(empty, 2)),
+        ),
+        (
+            _ivf_pq_build_tables(
+                df, 2, 2, 4, 8, "vec_id", "embedding",
+                centroids=cents, codebook=cb,
+            )[0],
+            ref_lists(),
+        ),
+    ]
+    for got, ref in cases:
+        assert got.collect() == [] == ref.collect()
+        assert got.schema == ref.schema, (got.schema, ref.schema)
 
 
 def test_embed_random_projection_distortion_bounds(spark, sf_dir):

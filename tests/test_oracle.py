@@ -58,7 +58,6 @@ def test_catalog_staleness_ordering():
     from github_event_etl_spark.plans import catalog
 
     last_green = catalog._rounds_checked_green()
-    newest = catalog._newest_artifact_round()
     names = list(SPECS)
 
     def expected_rank(key: str) -> tuple[int, int]:
@@ -67,11 +66,6 @@ def test_catalog_staleness_ordering():
             and last_green.get(key, 0) <= catalog._CHANGED_AFTER_ROUND
         ):
             return (0, 0)
-        if (
-            key in catalog._DEFERRED_NEW_KEYS
-            and newest < catalog._DEFER_NEW_UNTIL_ROUND
-        ):
-            return (2, 0)
         return (1, last_green.get(key, 0))
 
     ranks = [expected_rank(n) for n in names]
@@ -87,26 +81,32 @@ def test_catalog_staleness_ordering():
     for key in catalog._CHANGED_THIS_ROUND:
         if key in SPECS and last_green.get(key, 0) <= catalog._CHANGED_AFTER_ROUND:
             assert names.index(key) < 50, f"{key} outside the 50-key window"
-    # Never-checked keys (no deferral active) must also make the window.
-    never = [
-        n for n in names
-        if n not in last_green
-        and not (
-            n in catalog._DEFERRED_NEW_KEYS
-            and newest < catalog._DEFER_NEW_UNTIL_ROUND
-        )
-    ]
+    # Never-checked keys must also make the window.
+    never = [n for n in names if n not in last_green]
     for key in never:
         assert names.index(key) < 50, f"new key {key} outside the 50-key window"
-    # Deferred new keys must rank OUTSIDE the window while the deferral
-    # holds — the whole point is that they cannot evict a stale
-    # re-check (they become ordinary never-checked front-riders once
-    # the anchoring round's artifact lands).
-    if catalog._newest_artifact_round() < catalog._DEFER_NEW_UNTIL_ROUND:
-        for key in catalog._DEFERRED_NEW_KEYS:
-            assert names.index(key) >= 50, (
-                f"deferred key {key} inside the window it must not evict from"
-            )
+
+
+def test_resolve_covers_every_benched_name():
+    """`catalog.resolve` is the one name lookup bench.py and tools/
+    share: every benched name resolves to a callable, while the two
+    slot-less indexed twins and the two pipelines stay out of the
+    registry that `queries()` exposes."""
+    import bench
+    from github_event_etl_spark.plans import catalog
+
+    for name in bench.HEADLINE + bench.OPTIONAL + bench.COMPONENTS + bench.PIPELINES:
+        assert callable(catalog.resolve(name)), name
+    qmap = catalog.query_map()
+    for name in (
+        "llm_dedup_incremental_indexed",
+        "llm_dedup_incremental_semantic_indexed",
+        "dedup_e2e",
+        "incremental_e2e",
+    ):
+        assert name not in qmap, name
+    with pytest.raises(KeyError):
+        catalog.resolve("no_such_key")
 
 
 def test_staleness_bound_documented_matches_arithmetic():

@@ -236,93 +236,6 @@ def test_stateful_dedup_ttl_eviction_and_readmission(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_stateful_dedup_tws_matches_group_state_variant(spark):
-    """Spark 4's transformWithStateInPandas successor of the dedup
-    (streaming/stateful.py dedup_first_wins_tws) must reproduce the
-    same lifecycle as the applyInPandasWithState form on the identical
-    4-batch scenario above.
-
-    SKIPPED where `google.protobuf` is unavailable: the
-    transformWithState driver<->state-server protocol is
-    protobuf-serialized (pyspark/sql/streaming/proto/StateMessage_pb2),
-    a hard runtime dependency this container does not ship. The
-    operator is complete and runs unmodified wherever protobuf exists."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from github_event_etl_spark.streaming.stateful import dedup_first_wins_tws
-
-    src = tempfile.mkdtemp(prefix="geetl_tws_src_")
-    ckpt = tempfile.mkdtemp(prefix="geetl_tws_ckpt_")
-
-    def rtx(eid, hour, arrival, value):
-        e = _event(eid, hour)
-        e["arrival"] = arrival
-        e["value"] = value
-        return e
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(provider_key, None)
-    try:
-        now = time.time()
-        _write_file(os.path.join(src, "a.json"), [rtx(100, 10.0, 0, 1.0)], now - 240)
-        _write_file(
-            os.path.join(src, "b.json"),
-            [rtx(100, 10.0, 1, 2.0), rtx(998, 10.5, 0, 9.0)],
-            now - 180,
-        )
-        _write_file(os.path.join(src, "c.json"), [rtx(997, 11.0, 0, 9.0)], now - 120)
-        _write_file(
-            os.path.join(src, "d.json"), [rtx(100, 11 + 1 / 6, 2, 3.0)], now - 60
-        )
-        schema = (
-            "event_id long, ts_us long, user_id long, event_type string, "
-            "value double, arrival int"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .select(
-                "event_id",
-                F.timestamp_micros(F.col("ts_us")).alias("ts"),
-                "user_id",
-                "event_type",
-                "value",
-                "arrival",
-            )
-        )
-        spark.conf.set(provider_key, rocksdb)
-        deduped = dedup_first_wins_tws(
-            stream, ttl_seconds=300, watermark_delay="10 minutes"
-        )
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName("tws_dedup_test")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            (r.event_id, r.value)
-            for r in spark.table("tws_dedup_test").select("event_id", "value").collect()
-        )
-        assert got == [(100, 1.0), (100, 3.0), (997, 9.0), (998, 9.0)]
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def _ssj_streams(spark, sf_dir):
     """(purchase stream, view stream) over the bounded replay source."""
     from pyspark.sql import functions as F

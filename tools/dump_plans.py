@@ -1,12 +1,11 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for a list of keys (catalog or the
-slot-less twins) into plans/<tag>/<key>_<suffix>.txt — the r21
-optimization round's before/after plan evidence.
+"""Dump `.explain("formatted")` for a list of keys into
+plans/<tag>/<key>_<suffix>.txt — before/after plan evidence.
 
     python tools/dump_plans.py <tag> <suffix> <key> [key ...]
 
-Uses one session for all keys. Pipelines (dedup_e2e/incremental_e2e)
-are resolved from plans.pipelines; slot-less twins from queries_llm.
+Uses one session for all keys. A key is any name `catalog.resolve`
+knows: a catalog key, a slot-less indexed twin, or a pipeline.
 """
 
 from __future__ import annotations
@@ -37,25 +36,14 @@ def main() -> int:
     ensure_session_defaults(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from github_event_etl_spark.plans import pipelines as pl
-    from github_event_etl_spark.plans import queries_llm as qllm
-    from github_event_etl_spark.plans.catalog import query_map
-
-    qmap = dict(query_map())
-    qmap.setdefault("dedup_e2e", pl.dedup_e2e_pipeline)
-    qmap.setdefault("incremental_e2e", pl.incremental_e2e_pipeline)
-    for twin in (
-        "llm_dedup_incremental_indexed",
-        "llm_dedup_incremental_semantic_indexed",
-    ):
-        qmap.setdefault(twin, getattr(qllm, twin))
+    from github_event_etl_spark.plans.catalog import resolve
 
     outdir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     jvm_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
     for key in keys:
-        df = qmap[key](spark, sf_dir)
+        df = resolve(key)(spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
             jvm_mode.fromString("formatted")
         )

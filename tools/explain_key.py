@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Dump the physical plan of any declared catalog key — the plan-audit
-companion to tools/driver_sim.py.
+"""Dump the physical plan of any declared catalog key, slot-less indexed
+twin or pipeline (`catalog.resolve`) — the plan-audit companion to
+tools/driver_sim.py.
 
     python tools/explain_key.py <key> [sf_dir] [mode]
 
@@ -36,7 +37,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from github_event_etl_spark.plans.catalog import get_spec
+    from github_event_etl_spark.plans.catalog import resolve
     from github_event_etl_spark.session import ensure_session_defaults
 
     spark = (
@@ -49,8 +50,7 @@ def main() -> int:
     ensure_session_defaults(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
-    spec = get_spec(key)
-    df = spec.fn(spark, sf_dir)
+    df = resolve(key)(spark, sf_dir)
 
     import contextlib
     import io
