@@ -85,10 +85,10 @@ into the streaming loop), and
 training baseline and triggers the probe-compatible re-derive rebuild
 (`maybe_compact`'s analog one level up the model stack) — and list
 SKEW — `ivf_list_stats` measures the per-centroid size distribution
-probes actually read, feeding the `topk_salts` probe-side mitigation
-(`similarity._pre_topk_salted`). `ivf_pq_drift_stats` /
-`ivf_pq_index_stats` are the monitoring reads tying all three
-policies to one observation call.
+probes actually read; the response to a hot list is the same
+`maybe_retrain` re-derive (more centroids where the mass is).
+`ivf_pq_drift_stats` / `ivf_pq_index_stats` are the monitoring reads
+tying these policies to one observation call.
 """
 
 from __future__ import annotations
@@ -508,9 +508,6 @@ def ivf_pq_write_index_delta(
     index_path: str,
     diff: DataFrame,
     cur_corpus: DataFrame,
-    num_subspaces: int = 8,
-    num_codewords: int = 16,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
@@ -527,14 +524,14 @@ def ivf_pq_write_index_delta(
     partitioned like the base); removed/re-embedded ids are
     tombstoned. Returns the generation number.
 
-    The serving read path (`similarity.ann_ivf_pq_partitioned`[+refine],
-    both prune modes) folds committed generations automatically
+    The serving read path (`similarity.ann_ivf_pq_partitioned`[+refine])
+    folds committed generations automatically
     (`read_index`), so a refresh is change-sized INSTEAD of the full
     `ivf_pq_write_index` rebuild the layout previously required —
     at a billion vectors that is the difference between re-encoding
     <1% of the corpus per crawl and re-reading all of it. Pinned by
     pytest: probe-over-maintained ≡ probe-over-rebuilt (frozen
-    quantizer/codebook rebuild, both prune modes, refine included)
+    quantizer/codebook rebuild, refine included)
     and maintained list contents ≡ re-encoded current snapshot.
     Compaction composes: `compact_index(key='nid',
     partition_col='centroid_id')` folds the generations back into a
@@ -542,10 +539,10 @@ def ivf_pq_write_index_delta(
     summary merge, update-contributor-scores.js:252-263 — refresh
     the stored artifact from changes, never recompute it whole.)
 
-    PQ geometry arguments are validated against the layout's
-    `_params.json` sidecar first: maintaining with mismatched geometry
-    would append codes that unpack at the wrong base beside valid
-    ones — the silent-garbage case the sidecar exists to prevent.
+    The PQ geometry comes from the layout's `_params.json` sidecar
+    (`similarity._read_ivf_pq_params`), so the appended codes are
+    packed at the same base as the ones beside them; a missing
+    sidecar fails before anything is written.
 
     The diff's key column (`id_col`) is renamed to the lists' `nid`
     on the way in, so callers pass the same `merge.snapshot_diff`
@@ -553,17 +550,18 @@ def ivf_pq_write_index_delta(
     materialized — it feeds the tombstone write and the upsert
     semi-filter."""
     from .similarity import (
-        _check_ivf_pq_params,
         _qerr_stats,
+        _read_ivf_pq_params,
         ivf_pq_encode_fn,
     )
 
-    _check_ivf_pq_params(index_path, num_subspaces, num_codewords, dim,
-                         op="ivf_pq_write_index_delta")
+    params = _read_ivf_pq_params(index_path, "ivf_pq_write_index_delta")
+    num_subspaces, dim = params["num_subspaces"], params["dim"]
     centroids = spark.read.parquet(os.path.join(index_path, "centroids"))
     codebook = spark.read.parquet(os.path.join(index_path, "codebook"))
     encode = ivf_pq_encode_fn(
-        centroids, codebook, num_subspaces, num_codewords, dim, vec_col
+        centroids, codebook, num_subspaces, params["num_codewords"], dim,
+        vec_col,
     )
     diff_n = (
         diff if id_col == "nid" else diff.withColumnRenamed(id_col, "nid")
@@ -842,9 +840,6 @@ def ivf_pq_refresh_from_change_stream(
     changes_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    num_subspaces: int | None = None,
-    num_codewords: int | None = None,
-    dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     assert_unique_keys: bool = True,
@@ -857,8 +852,8 @@ def ivf_pq_refresh_from_change_stream(
     `refresh_index_from_change_stream`: every micro-batch of embedding
     CDC rows (verdict + new vector on the same row) routes through
     `ivf_pq_write_index_delta`, so a streamed refresh gets everything
-    the batch apply-diff path gets — sidecar geometry validation
-    BEFORE any codes append, the frozen-artifact re-assign/re-encode,
+    the batch apply-diff path gets — the sidecar's geometry, the
+    frozen-artifact re-assign/re-encode,
     AND the per-generation `_drift.json` reconstruction-error record
     the quantizer-drift policy (`maybe_retrain`) reads. The generic
     loop with a bare `ivf_pq_encode_fn` band_fn maintains the same
@@ -878,20 +873,13 @@ def ivf_pq_refresh_from_change_stream(
     with the layout's (nid, centroid_id) geometry. Bounded
     (AvailableNow) like the repo's replay harness.
 
-    PQ geometry (ADVICE r20): `num_subspaces`/`num_codewords`/`dim`
-    DEFAULT from the layout's required `_params.json` sidecar — the
-    artifact already records them, so a non-default-geometry
-    deployment no longer has to restate (and can no longer forget)
-    them. Explicit args remain as overrides and are cross-checked
-    against the sidecar by `ivf_pq_write_index_delta`'s existing
-    geometry validation before any codes append."""
-    params = _read_ivf_pq_params(index_path)
-    if num_subspaces is None:
-        num_subspaces = int(params["num_subspaces"])
-    if num_codewords is None:
-        num_codewords = int(params["num_codewords"])
-    if dim is None:
-        dim = int(params["dim"])
+    PQ geometry (ADVICE r20) comes from the layout's required
+    `_params.json` sidecar, so a non-default-geometry deployment never
+    restates it. The sidecar is read once before the stream starts, so
+    a missing one fails here rather than inside the first batch."""
+    from .similarity import _read_ivf_pq_params
+
+    _read_ivf_pq_params(index_path, "ivf_pq_refresh_from_change_stream")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _prepare_stream_batch(
@@ -904,8 +892,6 @@ def ivf_pq_refresh_from_change_stream(
         try:
             ivf_pq_write_index_delta(
                 batch_df.sparkSession, index_path, batch_df, batch_df,
-                num_subspaces=num_subspaces,
-                num_codewords=num_codewords, dim=dim,
                 id_col=id_col, vec_col=vec_col,
             )
             if (
@@ -1226,20 +1212,6 @@ def _append_drift_entry(index_path: str, entry: dict) -> None:
     os.replace(tmp, path)
 
 
-def _read_ivf_pq_params(index_path: str) -> dict:
-    import json
-
-    p = os.path.join(index_path, "_params.json")
-    if not os.path.exists(p):
-        raise FileNotFoundError(
-            f"no _params.json sidecar at {index_path} — not a committed "
-            "ivf_pq_write_index layout (see similarity."
-            "_check_ivf_pq_params for the torn/pre-sidecar cases)"
-        )
-    with open(p) as f:
-        return json.load(f)
-
-
 def _qerr_ratio(cur: float | None, train: float | None) -> float | None:
     """current/train reconstruction error, None when either side is
     unknown; a zero training error (every vector was a codeword) makes
@@ -1263,10 +1235,8 @@ def ivf_list_stats(
     SKEW monitor (VERDICT r19 item 3). Synthetic fixtures give balanced
     lists, but real embedding corpora concentrate mass in few cells, so
     one hot centroid dominates probe cost; this stat is what a refresh
-    pipeline watches to decide when to turn on the probe-side
-    mitigation (`similarity.ivf_probe`/ADC `topk_salts` — bounds the
-    rank stage's max task input, result-identical) or re-derive the
-    quantizer (`maybe_retrain` — more centroids where the mass is).
+    pipeline watches to decide when to re-derive the quantizer
+    (`maybe_retrain` — more centroids where the mass is).
 
     Counts the FOLDED state (`read_index` semantics — what probes
     see), one groupBy job; the collected result is one row per
@@ -1344,7 +1314,9 @@ def ivf_pq_drift_stats(
     one corpus-sized `pq_quantization_error` aggregate adds
     corpus_qerr_mean/p95 and corpus_qerr_ratio, the number
     `maybe_retrain` thresholds on."""
-    params = _read_ivf_pq_params(index_path)
+    from .similarity import _qerr_stats, _read_ivf_pq_params
+
+    params = _read_ivf_pq_params(index_path, "ivf_pq_drift_stats")
     log = _read_drift_log(index_path)
     train_mean = params.get("train_qerr_mean")
     out = {
@@ -1357,8 +1329,6 @@ def ivf_pq_drift_stats(
         last.get("qerr_mean") if last else None, train_mean
     )
     if corpus is not None:
-        from .similarity import _qerr_stats
-
         if audit_fraction is not None:
             corpus = _md5_fraction(corpus, id_col, audit_fraction)
         codebook = spark.read.parquet(
@@ -1411,7 +1381,9 @@ def maybe_retrain(
     built with `record_train_error=False` has no baseline to compare
     against and raises — rebuild once with recording on (the default)
     to calibrate."""
-    params = _read_ivf_pq_params(index_path)
+    from .similarity import _read_ivf_pq_params
+
+    params = _read_ivf_pq_params(index_path, "maybe_retrain")
     if params.get("train_qerr_mean") is None:
         raise ValueError(
             f"maybe_retrain: the layout at {index_path} carries no "
@@ -1457,11 +1429,10 @@ def ivf_pq_index_stats(
     `index_stats` of the lists layout (generations, volumes, read
     amplification → feeds `maybe_compact`) plus the two signals the
     generic layer cannot see: per-centroid list SKEW
-    (`ivf_list_stats`, nested under "list_skew" → feeds the
-    `topk_salts` mitigation) and quantizer DRIFT
-    (`ivf_pq_drift_stats`, nested under "drift" → feeds
-    `maybe_retrain`; pass `corpus` for the full audit ratio). One call
-    per refresh covers all three maintenance policies."""
+    (`ivf_list_stats`, nested under "list_skew") and quantizer DRIFT
+    (`ivf_pq_drift_stats`, nested under "drift"; pass `corpus` for the
+    full audit ratio) — both answered by `maybe_retrain`. One call per
+    refresh covers both maintenance policies."""
     lists_path = os.path.join(index_path, "lists")
     out = index_stats(spark, lists_path, key="nid",
                       include_live=include_live)

@@ -22,15 +22,20 @@ Scale posture (100 TB / billions of vectors):
 - IVF: corpus partitioned by nearest of C centroids (broadcast join
   against the tiny centroid table); queries scan only `nprobe`
   centroid partitions. This is the classic inverted-file layout
-  expressed as a partition-pruned equi-join.
+  expressed as a partition-pruned equi-join; the on-disk probes plan
+  the probe set on the driver and prune with a static partition
+  filter (`_pruned_lists`).
 
 Eager model collect: `pq_codes`, `ivf_assign`, `ivf_assign_with_centroids`,
 `pq_quantization_error` and the IVF-PQ index builders on top of them
 collect their O(16-row) codebook or centroid table when CALLED.
 Each call therefore runs a Spark job (a corpus-sized TakeOrdered when
-the model derives from the corpus) before it returns a plan; do not
-compose them into foreachBatch setup or plan-only tooling that expects
-laziness.
+the model derives from the corpus) before it returns a plan. The
+on-disk probes `ann_ivf_partitioned`, `ann_ivf_pq_partitioned` and
+`ann_ivf_pq_partitioned_refine` likewise run exactly one small action
+when called: the collect of the ≤ Q×nprobe probed centroid ids (one
+SQL execution; AQE may split it into stage jobs). Do not compose any of them into foreachBatch setup or plan-only tooling
+that expects laziness.
 """
 
 from __future__ import annotations
@@ -196,8 +201,14 @@ def _np_valid_rows(vecs: "pd.Series", width: int):
     rows are non-null AND length-matched to the model table — exactly
     the rows the legacy zip_with gave non-null distances for (a length
     mismatch null-pads the zip, so every distance folds to null; a null
-    vector nulls everything). Invalid rows take the legacy null-field
-    ordering outcome, which each caller applies."""
+    vector nulls everything). A vector SHORTER or LONGER than the model
+    dimension is invalid alike: NULL qerr, code 0, lowest centroid_id
+    (the legacy slice folds scored a longer vector's first `dim`
+    elements and ignored the rest; the contract refuses it instead).
+    Invalid rows take the legacy null-field ordering outcome, which
+    each caller applies. A null ELEMENT cannot be seen here — Arrow
+    hands it over as NaN — so `pq_quantization_error` nulls those rows
+    JVM-side instead."""
     vals = vecs.to_numpy()
     valid = np.array(
         [v is not None and len(v) == width for v in vals], dtype=bool
@@ -629,43 +640,21 @@ def ann_ivf(
     )
 
 
-def _pre_topk_salted(
-    scored: DataFrame,
-    k: int,
-    order_by: list,
-    n_salts: int,
-    group_col: str = "qid",
-    salt_from: str = "nid",
+def _nearest_centroids(
+    q: DataFrame, centroids: DataFrame, nprobe: int
 ) -> DataFrame:
-    """Per-(group, salt) partial top-k ahead of a global per-group rank
-    window — the probe-side HOT-LIST skew mitigation (VERDICT r19 item
-    3, the `operators/skew.py` salting pattern applied to ANN ranking).
-
-    Real embedding corpora concentrate mass in few IVF cells; a query
-    probing a hot inverted list feeds that list's entire candidate set
-    into ONE rank-window task (window functions co-locate each
-    partition key), so the probe stage's max task input grows with the
-    hottest list, not the average. Salting nid deterministically into
-    `n_salts` sub-keys bounds that task at ~|candidates|/n_salts: the
-    first window ranks within (group, salt) and keeps k per sub-key,
-    the global window then ranks ≤ n_salts×k survivors per group.
-    Result-identical by construction — a group's global top-k is a
-    subset of the union of its per-salt top-ks (each global winner
-    wins its own salt slice too) — pinned by frame-equality pytest.
-    The salt is a content hash (xxhash64, the skew.py rule), never
-    rand(): retries and replays must salt identically."""
-    if n_salts < 1:
-        raise ValueError(
-            f"topk_salts must be a positive int, got {n_salts!r}"
-        )
-    salted = scored.withColumn(
-        "_tk_salt", F.pmod(F.xxhash64(salt_from), F.lit(n_salts))
+    """Each query's `nprobe` nearest centroids — the one centroid-rank
+    window of every IVF probe: broadcast the tiny centroid table
+    against the (qid, q_vec) query frame, cosine, and keep the first
+    `nprobe` by (cosine DESC, centroid_id ASC). Columns: qid, q_vec,
+    centroid_id, _csim, _r; callers select what they need."""
+    qc = q.join(F.broadcast(centroids)).select(
+        "qid", "q_vec", "centroid_id",
+        cosine_cols("q_vec", "c_vec").alias("_csim"),
     )
-    w1 = Window.partitionBy(group_col, "_tk_salt").orderBy(*order_by)
-    return (
-        salted.withColumn("_tk_r", F.row_number().over(w1))
-        .filter(F.col("_tk_r") <= k)
-        .drop("_tk_salt", "_tk_r")
+    wq = Window.partitionBy("qid").orderBy(F.col("_csim").desc(), F.col("centroid_id"))
+    return qc.withColumn("_r", F.row_number().over(wq)).filter(
+        F.col("_r") <= nprobe
     )
 
 
@@ -677,7 +666,6 @@ def ivf_probe(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    topk_salts: int | None = None,
 ) -> DataFrame:
     """The IVF search shared by every index source — a freshly built
     assignment (`ann_ivf`), the on-disk partitioned layout
@@ -688,22 +676,10 @@ def ivf_probe(
     the top-`nprobe` lists, candidate-join the assigned table against
     the broadcast probe set (partition-pruned when `assigned` is the
     partitioned scan), exact-score within them with a deterministic
-    (sim DESC, id ASC) tie-break.
-
-    `topk_salts`: bound the rank stage's max task input on skewed
-    (hot-list) layouts via a salted partial top-k before the global
-    per-query window (`_pre_topk_salted` — result-identical; use when
-    `index_maintenance.ivf_list_stats` reports a hot list)."""
+    (sim DESC, id ASC) tie-break."""
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("q_vec"))
-    qc = q.join(F.broadcast(centroids)).select(
-        "qid", "q_vec", "centroid_id",
-        cosine_cols("q_vec", "c_vec").alias("_csim"),
-    )
-    wq = Window.partitionBy("qid").orderBy(F.col("_csim").desc(), F.col("centroid_id"))
-    probes = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= nprobe)
-        .select("qid", "q_vec", "centroid_id")
+    probes = _nearest_centroids(q, centroids, nprobe).select(
+        "qid", "q_vec", "centroid_id"
     )
     cand = assigned.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("c_vec"), "centroid_id"
@@ -711,10 +687,6 @@ def ivf_probe(
     scored = cand.select(
         "qid", "nid", cosine_cols("q_vec", "c_vec").alias("sim")
     )
-    if topk_salts:
-        scored = _pre_topk_salted(
-            scored, k, [F.col("sim").desc(), F.col("nid")], topk_salts
-        )
     w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -835,7 +807,13 @@ def pq_quantization_error(
     collects to the driver and the per-subspace minima run as ONE
     Arrow-vectorized pass over the input; no expansion, no join, no
     exchange. Change-sized when fed a refresh batch, corpus-sized only
-    at build/audit time. An empty codebook gives an empty result."""
+    at build/audit time. An empty codebook gives an empty result.
+
+    A vector with a null element gets a NULL qerr, as the legacy
+    broadcast-join fold gave (null propagates through the distance).
+    Arrow turns the null element into NaN before the UDF sees it, so
+    the guard is JVM-side; without it one such vector made the
+    `_qerr_stats` mean and p95 NaN."""
     d_sub = dim // num_subspaces
     rows = codebook.select("code_rank", "c_vec").collect()
     if not rows:
@@ -843,7 +821,13 @@ def pq_quantization_error(
             corpus, F.col(id_col), F.lit(None).cast("double").alias("qerr")
         )
     qerr = _pq_qerr_udf(rows, num_subspaces, d_sub)
-    return corpus.select(F.col(id_col), qerr(F.col(vec_col)).alias("qerr"))
+    vec = F.col(vec_col)
+    return corpus.select(
+        F.col(id_col),
+        F.when(F.exists(vec, lambda x: x.isNull()), F.lit(None))
+        .otherwise(qerr(vec))
+        .alias("qerr"),
+    )
 
 
 def _qerr_stats(
@@ -1136,7 +1120,6 @@ def _ivf_pq_probe_rank(
     dim: int,
     id_col: str,
     vec_col: str,
-    topk_salts: int | None = None,
 ) -> DataFrame:
     """The IVF-PQ probe/ADC/rank tail over its three tables —
     (nid, centroid_id, pq_code) inverted lists, the tiny centroid
@@ -1147,19 +1130,8 @@ def _ivf_pq_probe_rank(
     drift on probe selection, ADC arithmetic, or tie-breaks — the same
     sharing rule as the incremental-dedup classify skeleton."""
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("q_vec"))
-    qc = q.join(F.broadcast(centroids)).select(
-        "qid",
-        "q_vec",
-        "centroid_id",
-        cosine_cols("q_vec", "c_vec").alias("_csim"),
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("_csim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= nprobe)
-        .select("qid", "centroid_id")
+    probes = _nearest_centroids(q, centroids, nprobe).select(
+        "qid", "centroid_id"
     )
     tables = _adc_tables(q, codebook, num_subspaces, dim)
     # both sides are query-sized (Q×nprobe and Q rows) — broadcast the
@@ -1173,10 +1145,6 @@ def _ivf_pq_probe_rank(
         "nid",
         _adc_distance(num_subspaces, num_codewords).alias("adist"),
     )
-    if topk_salts:
-        ranked = _pre_topk_salted(
-            ranked, k, [F.col("adist"), F.col("nid")], topk_salts
-        )
     w = Window.partitionBy("qid").orderBy(F.col("adist"), F.col("nid"))
     return (
         ranked.withColumn("rnk", F.row_number().over(w))
@@ -1305,22 +1273,21 @@ def ivf_pq_write_index(
 
     The PQ geometry (subspaces, codewords, dim, centroids) is baked
     into the packed codes, so it is persisted in a `_params.json`
-    sidecar the readers VALIDATE against: probing with mismatched
-    parameters would unpack codes at the wrong base — silently wrong
-    distances, no error — which the sidecar turns into a loud
-    ValueError. Commit ordering makes a TORN REBUILD detectable too:
-    any existing sidecar is DELETED before the first table overwrite
-    and the fresh one lands LAST, so the sidecar's presence certifies
-    that every table beside it finished under that geometry — an
-    in-place rebuild that crashes mid-overwrite leaves no sidecar, and
-    `_check_ivf_pq_params` (which REQUIRES one) fails the probe loudly
-    instead of unpacking half-new codes against a stale geometry. The
-    three writes are one corpus pass plus two cached-table flushes:
-    the tiny centroid/codebook frames are cache()'d so the lists write
-    populates them and their own writes reuse the cached rows instead
-    of re-scanning the corpus (Catalyst does not dedupe
-    identically-derived subtrees across actions — the pq_codes
-    caching note).
+    sidecar every reader takes its geometry from: a caller restating
+    it could unpack codes at the wrong base — silently wrong
+    distances, no error. Commit ordering makes a TORN REBUILD
+    detectable too: any existing sidecar is DELETED before the first
+    table overwrite and the fresh one lands LAST, so the sidecar's
+    presence certifies that every table beside it finished under that
+    geometry — an in-place rebuild that crashes mid-overwrite leaves
+    no sidecar, and `_read_ivf_pq_params` (which REQUIRES one) fails
+    the probe loudly instead of unpacking half-new codes against a
+    stale geometry. The three writes are one corpus pass plus two
+    cached-table flushes: the tiny centroid/codebook frames are
+    cache()'d so the lists write populates them and their own writes
+    reuse the cached rows instead of re-scanning the corpus (Catalyst
+    does not dedupe identically-derived subtrees across actions — the
+    pq_codes caching note).
 
     `record_train_error` (default True) additionally records the build
     corpus' PQ reconstruction-error stats (`pq_quantization_error`
@@ -1396,21 +1363,18 @@ def ivf_pq_write_index(
     os.replace(tmp, os.path.join(path, "_params.json"))
 
 
-def _check_ivf_pq_params(
-    path: str, num_subspaces: int, num_codewords: int, dim: int,
-    op: str = "ann_ivf_pq_partitioned",
-) -> None:
-    """Fail fast on PQ-geometry mismatch between an on-disk index and
-    the probe call: codes packed under one (subspaces, codewords, dim)
-    unpack as garbage under another — NULL or wrong ADC distances that
-    sort into the top-k with no exception. The sidecar is REQUIRED:
-    `ivf_pq_write_index` has written one since the layout existed and
-    commits it LAST (after deleting any stale one first), so a missing
-    sidecar means either a rebuild died mid-overwrite (the tables may
-    be a geometry mix) or the path is not this layout at all — both
-    must fail loudly, not skip validation (ADVICE r18)."""
+def _read_ivf_pq_params(path: str, op: str) -> dict:
+    """The layout's `_params.json` sidecar — the one reader of the PQ
+    geometry (num_centroids, num_subspaces, num_codewords, dim) and
+    the drift baseline. Every reader of an `ivf_pq_write_index` layout
+    takes its geometry from here, so a probe or refresh can never
+    unpack codes at a base other than the one they were packed with.
+    The sidecar is REQUIRED: `ivf_pq_write_index` commits it LAST
+    (after deleting any stale one first), so a missing sidecar means
+    either a rebuild died mid-overwrite (the tables may be a geometry
+    mix) or the path is not this layout at all — both fail loudly
+    under the caller's entry-point name `op` (ADVICE r18)."""
     import json
-    import os
 
     sidecar = os.path.join(path, "_params.json")
     if not os.path.exists(sidecar):
@@ -1428,28 +1392,7 @@ def _check_ivf_pq_params(
             "stated geometry against the tables before writing"
         )
     with open(sidecar) as f:
-        params = json.load(f)
-    got = {
-        "num_subspaces": num_subspaces,
-        "num_codewords": num_codewords,
-        "dim": dim,
-    }
-    bad = {
-        k: (params[k], got[k])
-        for k in got
-        if k in params and params[k] != got[k]
-    }
-    if bad:
-        raise ValueError(
-            f"{op}: PQ geometry mismatch vs the "
-            f"index at {path} — "
-            + ", ".join(
-                f"{k}: index={w} call={g}" for k, (w, g) in bad.items()
-            )
-            + ". Codes packed under the index's geometry unpack as "
-            "garbage under the call's; pass the parameters the index "
-            "was written with (_params.json)"
-        )
+        return json.load(f)
 
 
 def ivf_pq_backfill_params(
@@ -1482,21 +1425,20 @@ def ivf_pq_backfill_params(
       subspaces or codewords overflow the stated base).
 
     Refuses to run when a sidecar already exists (nothing to backfill —
-    and overwriting could mask a real geometry mismatch) or when the
-    layout carries maintenance generations (those can only be written
-    through sidecar-validated paths, so the sidecar cannot be missing
-    legitimately). The write is the same tmp-then-`os.replace` atomic
-    commit `ivf_pq_write_index` uses."""
+    and overwriting would replace the record of what the codes were
+    packed under) or when the layout carries maintenance generations
+    (those can only be written through sidecar-reading paths, so the
+    sidecar cannot be missing legitimately). The write is the same
+    tmp-then-`os.replace` atomic commit `ivf_pq_write_index` uses."""
     import json
 
     sidecar = os.path.join(path, "_params.json")
     if os.path.exists(sidecar):
         raise ValueError(
             f"ivf_pq_backfill_params: {sidecar} already exists — this "
-            "layout needs no backfill. If the probe rejects it with a "
-            "geometry mismatch, the sidecar is telling the truth; "
-            "rebuild with ivf_pq_write_index instead of overwriting "
-            "the record of what the codes were packed under"
+            "layout needs no backfill. The sidecar records what the "
+            "codes were packed under; to change the geometry, rebuild "
+            "with ivf_pq_write_index instead of overwriting it"
         )
     from .index_maintenance import _manifest_file
 
@@ -1504,7 +1446,7 @@ def ivf_pq_backfill_params(
         raise ValueError(
             f"ivf_pq_backfill_params: {path} carries a maintenance "
             "manifest — maintained generations are only written "
-            "through sidecar-validated paths, so a missing sidecar "
+            "through sidecar-reading paths, so a missing sidecar "
             "here means the layout is torn, not merely pre-sidecar. "
             "Rebuild with ivf_pq_write_index"
         )
@@ -1564,71 +1506,38 @@ def ann_ivf_pq_partitioned(
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    num_subspaces: int = 8,
-    num_codewords: int = 16,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    static_prune: bool | str = False,
-    topk_salts: int | None = None,
 ) -> DataFrame:
-    """ADC search against the on-disk `ivf_pq_write_index` layout: the
-    broadcast (qid, centroid_id, ADC-tables) probe frame equi-joins
-    the partition column of the code lists, so Catalyst inserts a
-    DYNAMIC PARTITION PRUNING subquery on the scan (plan-gated), and
-    what the probed directories hold is packed codes, not vectors.
-    As with `ann_ivf_partitioned`, the declarative DPP subquery can be
-    dropped by Spark's reuse/benefit machinery (observed at small
-    scale); `static_prune=True` plans the probe driver-side —
-    ≤ Q×nprobe ids, ONE EAGER job at call time (the returned frame is
-    otherwise lazy) — for a static partition filter that ALWAYS
-    prunes (executed-metrics-gated); `static_prune="auto"` measures
-    the dynamic plan's executed scan metrics once and falls back to
-    the static plan with a RuntimeWarning when Spark dropped the
-    subquery (`_auto_pruned` — the deployment-acceptance decision
-    rule, so a serving stack cannot silently run full-index scans).
-    Identical results in all three modes,
-    and identical to the in-memory `ann_ivf_pq` for the same corpus
-    and parameters (the shared `_ivf_pq_probe_rank` tail;
-    frame-equality pytest). PQ geometry arguments are validated
-    against the index's `_params.json` sidecar — a mismatch would
-    unpack codes at the wrong base, silently corrupting distances.
+    """ADC search against the on-disk `ivf_pq_write_index` layout:
+    the probe set is planned on the driver and the code lists are
+    filtered to it by a static partition filter (`_pruned_lists`), so
+    the scan opens at most Q×nprobe list directories
+    (executed-metrics-gated), and what those directories hold is
+    packed codes, not vectors. The PQ geometry comes from the layout's
+    `_params.json` sidecar (`_read_ivf_pq_params`). Identical to the
+    in-memory `ann_ivf_pq` for the same corpus and parameters (the
+    shared `_ivf_pq_probe_rank` tail; frame-equality pytest).
+
+    Trade: calling this runs ONE small Spark action — the collect of the
+    ≤ Q×nprobe probed centroid ids — before the (otherwise lazy) frame
+    returns, as `pq_codes` / `ivf_assign*` do. In return pruning never
+    depends on Spark keeping a dynamic-partition-pruning subquery,
+    which its cost model drops for this window-shaped probe at small
+    scale.
 
     The lists are read through `index_maintenance.read_index`, so a
     layout refreshed by `ivf_pq_write_index_delta` (change-sized
     tombstone+append generations under `<path>/lists`) probes its
     MAINTAINED state — committed generations fold over the base as
     broadcast anti-joins + unions before the probe join; a freshly
-    built layout has no generations and reads as the plain
-    partition-pruned base scan, byte-identical to the pre-maintenance
-    plan. Partition pruning survives the fold: the probe's
-    centroid_id filter pushes into the base scan AND each generation's
+    built layout has no generations and reads as the plain base scan.
+    The static filter prunes the base scan AND each generation's
     append scan (both partitioned by centroid_id)."""
-    from .index_maintenance import read_index
-
-    _require_prune_mode("ann_ivf_pq_partitioned", static_prune)
-    _check_ivf_pq_params(path, num_subspaces, num_codewords, dim)
-    lists = read_index(spark, f"{path}/lists", key="nid")
-    centroids = spark.read.parquet(f"{path}/centroids")
-    codebook = spark.read.parquet(f"{path}/codebook")
-
-    def _tail(lst: DataFrame) -> DataFrame:
-        return _ivf_pq_probe_rank(
-            lst, centroids, codebook, queries, k, nprobe,
-            num_subspaces, num_codewords, dim, id_col, vec_col,
-            topk_salts=topk_salts,
-        )
-
-    if static_prune is True:
-        return _tail(_static_prune_lists(lists, centroids, queries,
-                                         nprobe, id_col, vec_col))
-    df = _tail(lists)
-    if static_prune == "auto":
-        return _auto_pruned(
-            df, lists, centroids, queries, nprobe, id_col, vec_col,
-            _tail, "ann_ivf_pq_partitioned", f"{path}/lists",
-        )
-    return df
+    return _ivf_pq_partitioned_probe(
+        spark, path, queries, k, nprobe, id_col, vec_col,
+        "ann_ivf_pq_partitioned",
+    )
 
 
 def ann_ivf_pq_partitioned_refine(
@@ -1639,38 +1548,51 @@ def ann_ivf_pq_partitioned_refine(
     k: int = 10,
     refine_r: int = 30,
     nprobe: int = 4,
-    num_subspaces: int = 8,
-    num_codewords: int = 16,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    static_prune: bool | str = False,
-    topk_salts: int | None = None,
 ) -> DataFrame:
     """IVFADC+refine over the on-disk layout — the complete serving
-    read path: partition-pruned ADC shortlist from the packed-code
-    lists (declarative DPP by default; `static_prune=True` for the
-    guaranteed driver-planned pruning, `"auto"` for the measured
-    fallback — see `ann_ivf_pq_partitioned`),
-    then the shared exact re-rank fetches ONLY the Q×refine_r true
-    embeddings (broadcast equi-join against the embedding table — the
-    single place vectors are read at all). Identical results to the
-    in-memory `ann_ivf_pq_refine` (shared shortlist + shared
-    `_exact_rerank`; frame-equality pytest)."""
+    read path: the pruned ADC shortlist of `ann_ivf_pq_partitioned`
+    (one probe-set collect when called), then the shared exact re-rank
+    fetches ONLY the Q×refine_r true embeddings (broadcast equi-join
+    against the embedding table — the single place vectors are read
+    at all). Identical results to the in-memory `ann_ivf_pq_refine`
+    (shared shortlist + shared `_exact_rerank`; frame-equality
+    pytest)."""
     _require_shortlist("ann_ivf_pq_partitioned_refine", refine_r, k)
-    # validate the sidecar under THIS entry point's name before
-    # delegating: a geometry-mismatch/missing-sidecar error must blame
-    # the function the caller actually invoked, not the inner ADC stage
-    # (ADVICE r19); the delegate's own re-check is then a no-op pass
-    _check_ivf_pq_params(path, num_subspaces, num_codewords, dim,
-                         op="ann_ivf_pq_partitioned_refine")
-    cands = ann_ivf_pq_partitioned(
-        spark, path, queries, k=refine_r, nprobe=nprobe,
-        num_subspaces=num_subspaces, num_codewords=num_codewords,
-        dim=dim, id_col=id_col, vec_col=vec_col,
-        static_prune=static_prune, topk_salts=topk_salts,
+    cands = _ivf_pq_partitioned_probe(
+        spark, path, queries, refine_r, nprobe, id_col, vec_col,
+        "ann_ivf_pq_partitioned_refine",
     ).select("qid", "nid")
     return _exact_rerank(corpus, queries, cands, k, id_col, vec_col)
+
+
+def _ivf_pq_partitioned_probe(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    op: str,
+) -> DataFrame:
+    """The on-disk IVF-PQ probe both partitioned entry points share:
+    the sidecar geometry (a missing sidecar fails under the entry
+    point `op` the caller invoked, ADVICE r19), the layout's three
+    tables, the lists pruned to the driver-planned probe set, then the
+    in-memory flagship's `_ivf_pq_probe_rank` tail."""
+    from .index_maintenance import read_index
+
+    params = _read_ivf_pq_params(path, op)
+    lists = read_index(spark, f"{path}/lists", key="nid")
+    centroids = spark.read.parquet(f"{path}/centroids")
+    codebook = spark.read.parquet(f"{path}/codebook")
+    return _ivf_pq_probe_rank(
+        _pruned_lists(lists, centroids, queries, nprobe, id_col, vec_col),
+        centroids, codebook, queries, k, nprobe, params["num_subspaces"],
+        params["num_codewords"], params["dim"], id_col, vec_col,
+    )
 
 
 def ivf_write_index(
@@ -1701,218 +1623,61 @@ def ann_ivf_partitioned(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    static_prune: bool | str = False,
-    topk_salts: int | None = None,
 ) -> DataFrame:
     """IVF probe against the on-disk index written by `ivf_write_index`.
 
-    The candidate join keys the partition column of the assigned table
-    against the broadcast probe set, so Catalyst inserts a DYNAMIC
-    PARTITION PRUNING subquery (PartitionFilters:
-    [dynamicpruning#...]) and no centroid id reaches the driver — the
-    fully declarative default. Honestly measured, though
-    (tests/test_plans.py's executed_scan_metrics): whether that
-    subquery EXECUTES is up to Spark's broadcast-reuse and
-    cost-benefit machinery, and with a window-shaped probe plan it
-    degrades to `dynamicpruningexpression(true)` — a full-index scan —
-    at small scale in both AQE modes (at 100 TB the benefit arithmetic
-    flips, but that is Spark's call, not this operator's).
-    `static_prune=True` is the GUARANTEED path a serving deployment
-    wants: one driver-side job materializes the ≤ Q×nprobe probe pairs
-    (probe planning is driver-side in every production ANN system),
-    and the scan gets a static partition filter that always prunes to
-    the probed directories — executed-metrics-gated in pytest.
-    `static_prune="auto"` is the acceptance mode between them: it
-    executes the dynamic plan once, reads its scan metrics, and falls
-    back to the static plan with a RuntimeWarning if the subquery was
-    dropped (`_auto_pruned`). Results are identical in all modes and
-    identical to `ann_ivf` for the same corpus and parameters
-    (asserted in tests/test_llm.py).
+    The probe set is planned on the driver (probe planning is
+    driver-side in every production ANN system) and the assigned table
+    is filtered to it by a static partition filter (`_pruned_lists`),
+    so the scan opens at most Q×nprobe list directories —
+    executed-metrics-gated in pytest. Trade: calling this runs ONE
+    small Spark action, the collect of the ≤ Q×nprobe probed centroid
+    ids, before the (otherwise lazy) frame returns; in return pruning
+    never depends on Spark keeping a dynamic-partition-pruning
+    subquery, which its cost model drops for this window-shaped probe
+    at small scale. Results are identical to `ann_ivf` for the same
+    corpus and parameters (asserted in tests/test_llm.py).
     """
     from .index_maintenance import read_index
 
-    _require_prune_mode("ann_ivf_partitioned", static_prune)
     # read_index, not a plain scan (the PQ sibling's convention): a
     # layout maintained through write_index_delta
     # (value_cols=('centroid_id',) — see its docstring, or the
     # full-column serving variant) probes its MAINTAINED state by
     # folding committed generations; a freshly built index has none
-    # and reads as the plain partition-pruned base scan.
+    # and reads as the plain base scan.
     assigned = read_index(spark, f"{path}/assigned", key=id_col)
     centroids = spark.read.parquet(f"{path}/centroids")
-
-    def _tail(lst: DataFrame) -> DataFrame:
-        return ivf_probe(lst, centroids, queries, k, nprobe,
-                         id_col, vec_col, topk_salts=topk_salts)
-
-    if static_prune is True:
-        return _tail(_static_prune_lists(assigned, centroids, queries,
-                                         nprobe, id_col, vec_col))
-    df = _tail(assigned)
-    if static_prune == "auto":
-        return _auto_pruned(
-            df, assigned, centroids, queries, nprobe, id_col, vec_col,
-            _tail, "ann_ivf_partitioned", f"{path}/assigned",
-        )
-    return df
+    return ivf_probe(
+        _pruned_lists(assigned, centroids, queries, nprobe, id_col, vec_col),
+        centroids, queries, k, nprobe, id_col, vec_col,
+    )
 
 
-def _probed_centroid_ids(
+def _pruned_lists(
+    lists: DataFrame,
     centroids: DataFrame,
     queries: DataFrame,
     nprobe: int,
     id_col: str,
     vec_col: str,
-) -> list:
-    """Static probe planning's driver action: rank centroids per query
-    (the same broadcast + window derivation the dynamic path embeds)
-    and pull the DISTINCT probed centroid ids to the driver — bounded
-    by min(Q×nprobe, C), a handful of longs. The one deliberate driver
-    action in the ANN stack (probe planning is driver-side in every
-    production ANN system): it buys pruning that cannot be silently
-    dropped by the DPP cost model, and it is the yardstick the "auto"
-    mode measures the dynamic plan against."""
-    q = queries.select(F.col(id_col).alias("qid"),
-                       F.col(vec_col).alias("q_vec"))
-    qc = q.join(F.broadcast(centroids)).select(
-        "qid",
-        "centroid_id",
-        cosine_cols("q_vec", "c_vec").alias("_csim"),
-    )
-    wq = Window.partitionBy("qid").orderBy(
-        F.col("_csim").desc(), F.col("centroid_id")
-    )
-    return [
+) -> DataFrame:
+    """`lists` filtered to the driver-planned probe set by a literal IN
+    on its partition column, which the scan resolves against directory
+    names at plan time. The probe set is the DISTINCT centroid ids of
+    every query's `nprobe` nearest centroids, fetched by one small
+    collect — bounded by min(Q×nprobe, C), a handful of longs. The
+    downstream probe join still keys on centroid_id, so the filter
+    changes what is read, never what is returned."""
+    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("q_vec"))
+    probed = [
         r.centroid_id
-        for r in qc.withColumn("_r", F.row_number().over(wq))
-        .filter(F.col("_r") <= nprobe)
+        for r in _nearest_centroids(q, centroids, nprobe)
         .select("centroid_id")
         .distinct()
         .collect()
     ]
-
-
-def _static_prune_lists(
-    lists: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """`lists` filtered to the driver-planned probe set
-    (`_probed_centroid_ids`) by a literal IN on its partition column,
-    which the scan resolves against directory names at plan time — the
-    GUARANTEED pruning path. The downstream probe join is unchanged,
-    so results are identical with and without it."""
-    probed = _probed_centroid_ids(centroids, queries, nprobe,
-                                  id_col, vec_col)
     return lists.filter(F.col("centroid_id").isin(probed))
-
-
-#: Accepted values of the partitioned probes' `static_prune` knob.
-_PRUNE_MODES = (False, True, "auto")
-
-
-def _require_prune_mode(fn: str, static_prune) -> None:
-    # identity checks, not `in`: Python equality blesses 1 == True (and
-    # numpy bools), and a truthy non-True value would then dispatch to
-    # the UNguaranteed dynamic branch below — the silent-full-scan case
-    # this knob exists to prevent must reject loudly instead
-    if (
-        static_prune is not False
-        and static_prune is not True
-        and static_prune != "auto"
-    ):
-        raise ValueError(
-            f"{fn}: static_prune must be one of {_PRUNE_MODES} "
-            f"(got {static_prune!r}) — False serves the declarative "
-            "DPP plan, True the driver-planned guaranteed-pruning "
-            "one, 'auto' measures the DPP plan's executed scan "
-            "metrics once and falls back to static with a warning if "
-            "Spark dropped the pruning subquery"
-        )
-
-
-def _auto_pruned(
-    dyn_df: DataFrame,
-    lists: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-    tail_fn,
-    op_name: str,
-    index_path: str,
-) -> DataFrame:
-    """The `static_prune="auto"` decision rule (VERDICT r18 item 5):
-    a deployment must not silently serve full-index scans, but whether
-    the declarative DPP subquery actually EXECUTES is Spark's
-    cost-model call — invisible in plan text (it degrades to
-    `dynamicpruningexpression(true)`; the r18 finding) and only
-    measurable from executed scan metrics. So: plan the probe set
-    driver-side (`_probed_centroid_ids` — the same bounded action the
-    static path pays), execute the dynamic frame ONCE, and compare
-    each INDEX scan's `numPartitions` against the probe-set size.
-    Within the bound ⇒ DPP is working: return the declarative frame
-    (future executions keep the subquery and adapt as queries
-    change). Over it ⇒ warn loudly and return the statically pruned
-    frame.
-
-    Cost note: the measurement executes the probe exactly ONCE, and
-    the healthy path does not pay it again — the dynamic frame is
-    persisted before measuring, so the measurement run populates the
-    cache and the caller's own consumption is served from memory
-    (DPP prunes identically under persist — verified by executed
-    metrics). The returned healthy frame is therefore cached; a
-    caller done with it may `.unpersist()` (Q×k rows — Spark evicts
-    under pressure regardless). On a DEGRADED plan detection itself
-    pays one full-index scan and the useless cache is dropped before
-    the static frame is returned — "auto" is the
-    deployment-acceptance/canary mode; a serving loop that has seen
-    the warning should pin `static_prune=True` (and one that hasn't
-    can pin False). The check is per-call by design: pruning health
-    depends on the query batch's shape, not just the layout.
-
-    The bound is scoped to scans under `index_path` (base AND each
-    maintained generation's appends — all partitioned by centroid_id
-    under that root), so a delta generation read unpruned past the
-    probe set trips the fallback, while a partitioned scan UNRELATED
-    to the index (e.g. a queries frame loaded from a date-partitioned
-    table) cannot false-trip it into permanent static fallback plus a
-    misleading "DPP dropped" warning (ADVICE r19)."""
-    import warnings
-
-    probed = _probed_centroid_ids(centroids, queries, nprobe,
-                                  id_col, vec_col)
-    from .plan_metrics import partitioned_scans_within
-
-    dyn_df = dyn_df.persist()
-    try:
-        healthy = partitioned_scans_within(
-            dyn_df, len(probed), within_path=index_path
-        )
-    except Exception:
-        # ADVICE r20: a failed measurement (e.g. a py4j error walking
-        # the executed plan) must not leave the frame persisted
-        # forever — drop the cache before propagating.
-        dyn_df.unpersist()
-        raise
-    if healthy:
-        return dyn_df
-    dyn_df.unpersist()
-    warnings.warn(
-        f"{op_name}: dynamic partition pruning did not prune — the "
-        f"executed plan read more than the {len(probed)} driver-"
-        "planned probe partitions (Spark dropped the DPP subquery, "
-        "the window-build-side degradation); serving the statically "
-        "pruned plan instead. Pin static_prune=True to skip this "
-        "check on future calls",
-        RuntimeWarning,
-        stacklevel=3,
-    )
-    return tail_fn(lists.filter(F.col("centroid_id").isin(probed)))
 
 
 def kmeans_refine_int(

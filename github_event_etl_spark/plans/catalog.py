@@ -71,18 +71,7 @@ def query(name: str, oracle: Optional[str] = None, tags: tuple[str, ...] = ()):
 # permanently hog the 50-key budget.
 _CHANGED_AFTER_ROUND = 19  # round-20 edits; r01-r19 artifacts predate them
 
-_CHANGED_THIS_ROUND: frozenset[str] = frozenset({
-    # round 20: EMPTY — no registered key's output semantics changed.
-    # The r20 edits are result-identical for every registered key:
-    # the drift monitor adds sidecar/drift-log bytes beside the IVF-PQ
-    # layout (llm_ivf_pq_apply_diff's probe results never read them;
-    # its one extra change-sized qerr aggregate is observability, not
-    # output), topk_salts defaults to None on every probe entry point
-    # (and is result-identical when set, pinned by pytest), the
-    # static_prune='auto' rework touches only the non-catalog auto
-    # mode, and ivf_pq_backfill_params is a new migration helper.
-    # (r19's entry, llm_ann_recall_eval, self-cleared: green in r19.)
-})
+_CHANGED_THIS_ROUND: frozenset[str] = frozenset()
 
 # Staleness budget: with R registry keys and 50 keys hash-checked per
 # round, stalest-first ordering re-verifies every key each ceil(R / 50)
@@ -101,15 +90,6 @@ def staleness_bound_rounds() -> int:
     ceil(registry size / driver window)."""
     n = len(all_specs())
     return -(-n // _DRIVER_KEYS_PER_ROUND)
-
-
-# Declared rows-only queries whose correct answer may legitimately be
-# empty. A 0-row result from one of these still earns a green staleness
-# row (it is not suspicious), so it cannot permanently occupy one of
-# the driver's 50 per-round verification slots. Keys NOT listed here
-# keep the strict `spark_rows > 0` rule: an unexpected empty result
-# stays stale and gets re-checked every round until fixed.
-_ROWS_ONLY_EMPTY_OK: frozenset[str] = frozenset()
 
 
 @functools.lru_cache(maxsize=1)
@@ -152,7 +132,7 @@ def _rounds_checked_green() -> dict[str, int]:
             rows_only_green = (
                 row.get("err") == "no_oracle"
                 and isinstance(spark_rows, int)
-                and (spark_rows > 0 or key in _ROWS_ONLY_EMPTY_OK)
+                and spark_rows > 0
             )
             if hash_green or rows_only_green:
                 latest[key] = max(latest.get(key, 0), rnd)

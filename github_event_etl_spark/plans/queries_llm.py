@@ -1285,10 +1285,11 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("llm_ann_ivf_partitioned", oracle=_IVF_ORACLE, tags=("llm", "similarity"))
 def llm_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF scale path made physical: the assigned corpus is WRITTEN
-    partitioned by centroid_id (one directory per inverted list) and
-    the probe joins that table against the broadcast probe set, so the
-    scan is dynamic-partition-pruned to the probed centroids only
-    (operators/similarity.py:ann_ivf_partitioned; DPP asserted in
+    partitioned by centroid_id (one directory per inverted list); the
+    probe set is planned on the driver (one small collect when the
+    plan is built) and the scan is statically partition-pruned to the
+    probed centroids only (operators/similarity.py:ann_ivf_partitioned;
+    the executed scan's partition count is gated in
     tests/test_plans.py). Results are identical to llm_ann_ivf — same
     centroids, same ranking — so it shares the same full value oracle
     (_IVF_ORACLE), and pytest asserts the in-memory/on-disk equality
@@ -1346,9 +1347,8 @@ def llm_ivf_list_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment — the LIST-SKEW monitor as a value-checked report
     (VERDICT r19 item 3): real embedding corpora concentrate mass in
     few cells, and this is the stat a refresh pipeline thresholds to
-    turn on the probe-side mitigation (`topk_salts` — the salted rank
-    window, result-identical) or re-derive the quantizer
-    (`index_maintenance.maybe_retrain`). Columns are the list size
+    re-derive the quantizer (`index_maintenance.maybe_retrain`).
+    Columns are the list size
     plus integer basis-point shares of the total and of the hottest
     list (bp_of_max = 10000 marks the hot cell), so the hash compares
     pure integers. The disk-layout twin is

@@ -595,9 +595,9 @@ def test_ivf_pq_serving_lists_maintain_from_diff(spark, sf_dir, tmp_path):
     change-sized generation under <index>/lists. Proofs, per the
     contract: (1) maintained list CONTENTS equal a re-encode of the
     current snapshot; (2) probe-over-maintained equals
-    probe-over-rebuilt in BOTH prune modes, refine path included —
+    probe-over-rebuilt, refine path included —
     the rebuild twin uses the same frozen artifacts, the versioned-
-    model contract; (3) static pruning still opens <= Q*nprobe list
+    model contract; (3) pruning still opens <= Q*nprobe list
     directories through the generation fold (executed metrics, not
     plan text); (4) compaction folds the generations back and the
     probe still agrees."""
@@ -655,33 +655,30 @@ def test_ivf_pq_serving_lists_maintain_from_diff(spark, sf_dir, tmp_path):
     )
     assert _rowset(folded.select(*cols)) == _rowset(fresh.select(*cols))
 
-    # (2) probe equality, both prune modes, ADC and refined
+    # (2) probe equality, ADC and refined
     qs = cur.filter(F.col("vec_id") < 8)
-    for static in (False, True):
-        got = _rowset(ann_ivf_pq_partitioned(
-            spark, maintained, qs, k=10, nprobe=4, static_prune=static
-        ))
-        want = _rowset(ann_ivf_pq_partitioned(
-            spark, rebuilt, qs, k=10, nprobe=4, static_prune=static
-        ))
-        assert got == want and len(got) > 0, f"static={static}"
-        got_r = _rowset(ann_ivf_pq_partitioned_refine(
-            spark, maintained, cur, qs, k=10, refine_r=30,
-            nprobe=4, static_prune=static,
-        ))
-        want_r = _rowset(ann_ivf_pq_partitioned_refine(
-            spark, rebuilt, cur, qs, k=10, refine_r=30,
-            nprobe=4, static_prune=static,
-        ))
-        assert got_r == want_r and len(got_r) > 0, f"refine static={static}"
+    got = _rowset(ann_ivf_pq_partitioned(
+        spark, maintained, qs, k=10, nprobe=4
+    ))
+    want = _rowset(ann_ivf_pq_partitioned(
+        spark, rebuilt, qs, k=10, nprobe=4
+    ))
+    assert got == want and len(got) > 0
+    got_r = _rowset(ann_ivf_pq_partitioned_refine(
+        spark, maintained, cur, qs, k=10, refine_r=30, nprobe=4,
+    ))
+    want_r = _rowset(ann_ivf_pq_partitioned_refine(
+        spark, rebuilt, cur, qs, k=10, refine_r=30, nprobe=4,
+    ))
+    assert got_r == want_r and len(got_r) > 0
 
     # (3) pruning survives the generation fold: every partitioned scan
-    # in the executed static-prune plan opens <= Q*nprobe directories
+    # in the executed plan opens <= Q*nprobe directories
     from .test_plans import executed_scan_metrics
 
     df_sp = ann_ivf_pq_partitioned(
         spark, maintained, cur.filter(F.col("vec_id") < 2),
-        k=5, nprobe=2, static_prune=True,
+        k=5, nprobe=2,
     )
     pruned = [s for s in executed_scan_metrics(df_sp)
               if "numPartitions" in s]
@@ -694,19 +691,12 @@ def test_ivf_pq_serving_lists_maintain_from_diff(spark, sf_dir, tmp_path):
     )
     assert folded_n == 1
     got = _rowset(ann_ivf_pq_partitioned(
-        spark, maintained, qs, k=10, nprobe=4, static_prune=True
+        spark, maintained, qs, k=10, nprobe=4
     ))
     want = _rowset(ann_ivf_pq_partitioned(
-        spark, rebuilt, qs, k=10, nprobe=4, static_prune=True
+        spark, rebuilt, qs, k=10, nprobe=4
     ))
     assert got == want
-
-    # geometry guard: maintaining with mismatched PQ parameters must
-    # fail against the sidecar before any codes are appended
-    with pytest.raises(ValueError, match="geometry mismatch"):
-        ivf_pq_write_index_delta(
-            spark, maintained, diff, cur, num_codewords=32
-        )
 
 
 def _rowset(df):
@@ -811,11 +801,9 @@ def test_refresh_stream_composes_with_ivf_pq_encode(spark, sf_dir, tmp_path):
     qs = nxt.filter(d < 8)
     got = _rowset(ann_ivf_pq_partitioned(
         spark, layout, qs, k=10, nprobe=4, id_col="nid",
-        static_prune=True,
     ))
     want = _rowset(ann_ivf_pq_partitioned(
         spark, rebuilt, qs, k=10, nprobe=4, id_col="nid",
-        static_prune=True,
     ))
     assert got == want and len(got) > 0
 
@@ -1629,7 +1617,7 @@ def test_quantizer_drift_monitor_and_maybe_retrain(spark, tmp_path):
     diff = snapshot_diff(prev, cur, "vec_id", ["embedding"]).localCheckpoint(
         eager=False
     )
-    assert ivf_pq_write_index_delta(spark, path, diff, cur, **geo) == 1
+    assert ivf_pq_write_index_delta(spark, path, diff, cur) == 1
     stats = ivf_pq_drift_stats(spark, path, cur)
     (entry,) = stats["refresh_log"]
     assert entry["gen"] == 1 and entry["n"] == 40
@@ -1665,13 +1653,13 @@ def test_quantizer_drift_monitor_and_maybe_retrain(spark, tmp_path):
     qs = cur.filter(F.col("vec_id").isin(8, 9, 10, 11))
     truth = knn_bruteforce(cur, qs, k=5).select("qid", "nid")
     before = _recall_of(
-        ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=2, **geo),
+        ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=2),
         truth,
     )
     report = maybe_retrain(spark, path, cur, max_qerr_ratio=1.5)
     assert report["fired"] and report["qerr_ratio"] >= 1.5
     after = _recall_of(
-        ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=2, **geo),
+        ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=2),
         truth,
     )
     # the planted shift reads ~0.1 before (every shifted vector shares
@@ -1684,7 +1672,7 @@ def test_quantizer_drift_monitor_and_maybe_retrain(spark, tmp_path):
     # the retrained layout equals the in-memory twin on the current
     # corpus — the rebuild used no frozen artifacts, by design
     mem = ann_ivf_pq(cur, qs, k=5, num_centroids=4, nprobe=2, **geo)
-    disk = ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=2, **geo)
+    disk = ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=2)
     assert _rowset(disk) == _rowset(mem)
 
     # (4) fresh baseline, empty log: the policy converges
@@ -1734,35 +1722,18 @@ def _planted_hot_list(spark):
     )
 
 
-def test_ivf_list_skew_stat_fires_and_salted_topk_is_identical(
-    spark, tmp_path
-):
+def test_ivf_list_skew_stat_fires(spark, tmp_path):
     """IVF list skew (VERDICT r19 item 3): `ivf_list_stats` measures
     the per-centroid size distribution of the layout probes actually
-    read (the folded state) and flags the hot cell; the probe-side
-    mitigation — `topk_salts`, the `operators/skew.py` salting pattern
-    applied to the rank window — is RESULT-IDENTICAL on every serving
-    path (plain IVF, IVF-PQ ADC, refine) while bounding the rank
-    stage's max task input: a query probing the hot list feeds its
-    candidates into per-(qid, salt) partitions of ~|list|/S rows
-    instead of one |list|-row partition."""
+    read (the folded state) and flags the hot cell."""
     from github_event_etl_spark.operators.index_maintenance import (
         ivf_list_stats,
     )
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_partitioned,
-        ann_ivf_pq_partitioned,
-        ann_ivf_pq_partitioned_refine,
-        ivf_pq_write_index,
-        ivf_write_index,
-    )
+    from github_event_etl_spark.operators.similarity import ivf_write_index
 
     corpus = _planted_hot_list(spark)
     ivf_path = str(tmp_path / "hot_ivf")
-    pq_path = str(tmp_path / "hot_pq")
     ivf_write_index(corpus, ivf_path, num_centroids=8)
-    ivf_pq_write_index(corpus, pq_path, num_centroids=8,
-                       num_subspaces=4, num_codewords=8, dim=8)
 
     # the stat fires: one list holds >= the 160 duplicates
     stats = ivf_list_stats(
@@ -1772,63 +1743,6 @@ def test_ivf_list_skew_stat_fires_and_salted_topk_is_identical(
     assert stats["max_list"] >= 160
     assert stats["max_median_ratio"] >= 4, stats
     assert len(stats["hot_lists"]) == 1, stats
-
-    # the mitigation bounds the rank stage's max task input: the hot
-    # list's candidates split across 8 deterministic salt slices
-    assigned = spark.read.parquet(f"{ivf_path}/assigned")
-    slice_max = (
-        assigned.groupBy(
-            "centroid_id",
-            F.pmod(F.xxhash64("vec_id"), F.lit(8)).alias("s"),
-        )
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert slice_max <= 40, slice_max  # vs the 160-row unsalted group
-
-    # ...and is result-identical on every serving path
-    qs = corpus.filter(F.col("vec_id").isin(0, 160, 171, 185))
-    for salted_fn, plain_fn in [
-        (
-            lambda: ann_ivf_partitioned(
-                spark, ivf_path, qs, k=5, nprobe=2, topk_salts=8
-            ),
-            lambda: ann_ivf_partitioned(
-                spark, ivf_path, qs, k=5, nprobe=2
-            ),
-        ),
-        (
-            lambda: ann_ivf_pq_partitioned(
-                spark, pq_path, qs, k=5, nprobe=2, num_subspaces=4,
-                num_codewords=8, dim=8, topk_salts=8,
-            ),
-            lambda: ann_ivf_pq_partitioned(
-                spark, pq_path, qs, k=5, nprobe=2, num_subspaces=4,
-                num_codewords=8, dim=8,
-            ),
-        ),
-        (
-            lambda: ann_ivf_pq_partitioned_refine(
-                spark, pq_path, corpus, qs, k=5, refine_r=15, nprobe=2,
-                num_subspaces=4, num_codewords=8, dim=8, topk_salts=8,
-            ),
-            lambda: ann_ivf_pq_partitioned_refine(
-                spark, pq_path, corpus, qs, k=5, refine_r=15, nprobe=2,
-                num_subspaces=4, num_codewords=8, dim=8,
-            ),
-        ),
-    ]:
-        got, want = _rowset(salted_fn()), _rowset(plain_fn())
-        assert got == want and got
-
-    # a non-positive salt count is a misconfiguration, not a mode —
-    # the truthiness gate on the entry points would let -8 through to
-    # pmod; the shared helper fails it loudly instead
-    with pytest.raises(ValueError, match="topk_salts"):
-        ann_ivf_partitioned(
-            spark, ivf_path, qs, k=5, nprobe=2, topk_salts=-8
-        ).collect()
 
 
 def test_recall_after_refresh_equals_rebuilt_layout(
@@ -1907,12 +1821,12 @@ def test_recall_after_refresh_equals_rebuilt_layout(
     truth = knn_bruteforce(cur2, qs, k=10).select("qid", "nid")
     tagged = (
         ann_ivf_pq_partitioned(
-            spark, maintained, qs, k=10, nprobe=4, static_prune=True
+            spark, maintained, qs, k=10, nprobe=4
         )
         .withColumn("method", F.lit("maintained"))
         .unionByName(
             ann_ivf_pq_partitioned(
-                spark, rebuilt, qs, k=10, nprobe=4, static_prune=True
+                spark, rebuilt, qs, k=10, nprobe=4
             ).withColumn("method", F.lit("rebuilt"))
         )
     )
@@ -2052,11 +1966,9 @@ def test_ivf_pq_refresh_stream_logs_drift_per_generation(
     qs = nxt.filter(d < 8)
     got = _rowset(ann_ivf_pq_partitioned(
         spark, layout, qs, k=10, nprobe=4, id_col="nid",
-        static_prune=True,
     ))
     want = _rowset(ann_ivf_pq_partitioned(
         spark, rebuilt, qs, k=10, nprobe=4, id_col="nid",
-        static_prune=True,
     ))
     assert got == want and len(got) > 0
 
@@ -2068,86 +1980,20 @@ def test_ivf_pq_refresh_stream_logs_drift_per_generation(
     assert [e["gen"] for e in _read_drift_log(layout)] == [1, 2]
     got2 = _rowset(ann_ivf_pq_partitioned(
         spark, layout, qs, k=10, nprobe=4, id_col="nid",
-        static_prune=True,
     ))
     assert got2 == want
 
 
-def test_under_path_compares_scheme_qualified_uris():
-    """ADVICE r20: `_under_path` must match scheme-qualified scan
-    roots (hdfs://, s3a://) against a same-scheme prefix — the old
-    realpath-only local semantics never prefix-matched them, so
-    static_prune='auto' on remote storage silently fell back — and
-    must WARN (not silently miss) when the prefix and every root
-    carry different schemes. Local `file:`/bare-path semantics are
-    unchanged."""
-    import warnings
-
-    import pytest
-
-    from github_event_etl_spark.operators.plan_metrics import _under_path
-
-    assert _under_path(
-        ("hdfs://nn:8020/warehouse/idx/lists/centroid_id=1",),
-        "hdfs://nn:8020/warehouse/idx",
-    )
-    assert not _under_path(
-        ("hdfs://other:8020/warehouse/idx/lists",),
-        "hdfs://nn:8020/warehouse/idx",
-    )
-    assert _under_path(
-        ("s3a://bucket/prefix/idx/part-0",), "s3a://bucket/prefix/idx"
-    )
-    # not a path-prefix match: /prefix/idx2 is a sibling, not a child
-    assert not _under_path(
-        ("s3a://bucket/prefix/idx2",), "s3a://bucket/prefix/idx"
-    )
-    # local semantics unchanged: file: scheme stripped, realpath'd
-    assert _under_path(("file:/tmp/x/y",), "/tmp/x")
-    assert _under_path(("/tmp/x",), "/tmp/x")
-    # cross-scheme: no match, loud warning
-    with pytest.warns(UserWarning, match="different\\s+scheme"):
-        assert not _under_path(
-            ("s3a://bucket/warehouse/idx/lists",), "/warehouse/idx"
-        )
-    # same-scheme non-match stays silent
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert not _under_path(("/elsewhere/idx",), "/warehouse/idx")
-
-
-def test_uri_parts_relative_path_with_colon_is_local(tmp_path, monkeypatch):
-    """A relative local path whose first segment holds a colon
-    (`data:v2/part-0`) is a local path, not a `data:` URI: it must
-    realpath against the working directory and prefix-match the
-    scheme-qualified scan roots Spark reports for it. Hierarchical
-    remote URIs stay remote."""
-    import os
-
-    from github_event_etl_spark.operators.plan_metrics import (
-        _under_path,
-        _uri_parts,
-    )
-
-    monkeypatch.chdir(tmp_path)
-    assert _uri_parts("data:v2/part-0") == (
-        "file", os.path.realpath(tmp_path / "data:v2" / "part-0")
-    )
-    assert _under_path(
-        ("file:" + str(tmp_path / "data:v2" / "part-0"),), "data:v2"
-    )
-    assert _uri_parts("hdfs:///x") == ("hdfs", "///x")
-    assert _uri_parts("hdfs://nn/x") == ("hdfs", "//nn/x")
-    assert _uri_parts("s3a://b/x") == ("s3a", "//b/x")
-    assert _uri_parts("file:/tmp/x") == ("file", os.path.realpath("/tmp/x"))
-
-
 def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
-    """ADVICE r20: `ivf_pq_refresh_from_change_stream` must default
-    num_subspaces/num_codewords/dim from the layout's _params.json
-    sidecar, so a NON-default-geometry deployment that passes no
-    geometry args refreshes correctly instead of failing the first
-    micro-batch against hardcoded defaults."""
+    """ADVICE r20: every reader of a NON-default-geometry IVF-PQ layout
+    takes num_subspaces/num_codewords/dim from its _params.json
+    sidecar — the stream refresh, the batch delta, and both partitioned
+    probes take no geometry arguments — and the maintained layout then
+    answers exactly as the in-memory `ann_ivf_pq` over the current
+    corpus. The changed ids avoid the md5 seed ids, so the in-memory
+    quantizer equals the layout's frozen one. A layout without a
+    sidecar is refused before anything is written."""
+    import hashlib
     import shutil
 
     from pyspark.sql import functions as F
@@ -2155,8 +2001,13 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
     from github_event_etl_spark.operators.index_maintenance import (
         _committed_generations,
         ivf_pq_refresh_from_change_stream,
+        ivf_pq_write_index_delta,
     )
     from github_event_etl_spark.operators.similarity import (
+        ann_ivf_pq,
+        ann_ivf_pq_partitioned,
+        ann_ivf_pq_partitioned_refine,
+        ann_ivf_pq_refine,
         ivf_pq_write_index,
     )
 
@@ -2198,3 +2049,51 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
         id_col="nid",
     )
     assert len(_committed_generations(f"{layout}/lists")) == 1
+
+    # a batch delta over the streamed state: nid 7 removed, the
+    # nid % 9 == 5 vectors re-embedded
+    seeds = sorted(
+        range(40), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )[:cw]
+    assert not {2, 11, 20, 29, 38, 5, 14, 23, 32, 7} & set(seeds)
+    cur = base.filter(F.col("nid") % 9 != 2).unionByName(
+        changes.select("nid", "embedding")
+    )
+    cur2 = cur.filter(F.col("nid") != 7).select(
+        "nid",
+        F.when(
+            F.col("nid") % 9 == 5,
+            F.transform("embedding", lambda x: x * 0.5 + 1.0),
+        ).otherwise(F.col("embedding")).alias("embedding"),
+    ).localCheckpoint()
+    diff = snapshot_diff(cur, cur2, "nid", ["embedding"]).localCheckpoint()
+    assert ivf_pq_write_index_delta(
+        spark, layout, diff, cur2, id_col="nid"
+    ) == 2
+
+    geo = dict(num_centroids=4, num_subspaces=subs, num_codewords=cw,
+               dim=dim, id_col="nid")
+    qs = cur2.filter(F.col("nid") < 6)
+    got = _rowset(ann_ivf_pq_partitioned(
+        spark, layout, qs, k=5, nprobe=2, id_col="nid"
+    ))
+    want = _rowset(ann_ivf_pq(cur2, qs, k=5, nprobe=2, **geo))
+    assert got == want and len(got) == 6 * 5
+    got_r = _rowset(ann_ivf_pq_partitioned_refine(
+        spark, layout, cur2, qs, k=5, refine_r=15, nprobe=2, id_col="nid"
+    ))
+    want_r = _rowset(ann_ivf_pq_refine(
+        cur2, qs, k=5, refine_r=15, nprobe=2, **geo
+    ))
+    assert got_r == want_r and got_r
+
+    # no sidecar, no geometry: refused before any generation is written
+    os.remove(os.path.join(layout, "_params.json"))
+    with pytest.raises(ValueError, match="no _params.json"):
+        ivf_pq_write_index_delta(spark, layout, diff, cur2, id_col="nid")
+    with pytest.raises(ValueError, match="no _params.json"):
+        ivf_pq_refresh_from_change_stream(
+            stream, layout, checkpoint_dir=str(tmp_path / "ckpt32b"),
+            id_col="nid",
+        )
+    assert len(_committed_generations(f"{layout}/lists")) == 2

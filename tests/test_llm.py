@@ -604,8 +604,8 @@ def test_ann_recall_eval_matches_set_intersections(emb):
 def test_ivf_partitioned_index_equals_in_memory(spark, emb, tmp_path):
     """The on-disk partitioned IVF index (ivf_write_index +
     ann_ivf_partitioned) must return exactly the in-memory ann_ivf
-    results — same centroids, same ranking — while reading through the
-    dynamic-partition-pruned path."""
+    results — same centroids, same ranking — while its lists scan
+    opens only the driver-planned probe directories."""
     from github_event_etl_spark.operators.similarity import (
         ann_ivf_partitioned,
         ivf_write_index,
@@ -618,18 +618,12 @@ def test_ivf_partitioned_index_equals_in_memory(spark, emb, tmp_path):
     )
     mem = sorted(map(tuple, ann_ivf(emb, qs, k=10, nprobe=4, num_centroids=16).collect()))
     assert disk == mem
-    # static probe planning (guaranteed pruning) is result-identical,
-    # and its lists scan provably opens <= Q*nprobe directories
-    static = sorted(map(tuple, ann_ivf_partitioned(
-        spark, str(tmp_path / "ivf"), qs, k=10, nprobe=4,
-        static_prune=True,
-    ).collect()))
-    assert static == mem
+    # the lists scan provably opens <= Q*nprobe directories
     from .test_plans import executed_scan_metrics
 
     df_sp = ann_ivf_partitioned(
         spark, str(tmp_path / "ivf"), emb.filter(F.col("vec_id") < 2),
-        k=5, nprobe=2, static_prune=True,
+        k=5, nprobe=2,
     )
     pruned = [s for s in executed_scan_metrics(df_sp)
               if "numPartitions" in s]
@@ -1400,10 +1394,11 @@ def test_ann_ivf_pq_partitioned_serving_layout(emb, spark, tmp_path):
     """The on-disk IVF-PQ serving layout (ivf_pq_write_index →
     ann_ivf_pq_partitioned[+refine]) must return EXACTLY the
     in-memory flagship's results — same shared probe/ADC/rank and
-    re-rank tails, only the table source differs — and its probe scan
-    must be dynamic-partition-pruned to the probed centroid
-    directories (the whole point of partitioning the packed-code
-    lists) with no shuffle join anywhere in the read path."""
+    re-rank tails, only the table source differs — with the PQ
+    geometry taken from the sidecar, and its probe scan must open only
+    the probed centroid directories (the whole point of partitioning
+    the packed-code lists) with no shuffle join anywhere in the read
+    path."""
     import contextlib
     import io
 
@@ -1424,7 +1419,7 @@ def test_ann_ivf_pq_partitioned_serving_layout(emb, spark, tmp_path):
         tuple(r)
         for r in ann_ivf_pq(emb, qs, k=10, num_centroids=16, **kw).collect()
     }
-    disk_df = ann_ivf_pq_partitioned(spark, path, qs, k=10, **kw)
+    disk_df = ann_ivf_pq_partitioned(spark, path, qs, k=10, nprobe=4)
     disk = {tuple(r) for r in disk_df.collect()}
     assert disk == mem
     assert len(disk) == 8 * 10
@@ -1438,7 +1433,7 @@ def test_ann_ivf_pq_partitioned_serving_layout(emb, spark, tmp_path):
     disk_r = {
         tuple(r)
         for r in ann_ivf_pq_partitioned_refine(
-            spark, path, emb, qs, k=10, refine_r=30, **kw
+            spark, path, emb, qs, k=10, refine_r=30, nprobe=4
         ).collect()
     }
     assert disk_r == mem_r
@@ -1446,41 +1441,16 @@ def test_ann_ivf_pq_partitioned_serving_layout(emb, spark, tmp_path):
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         disk_df.explain(mode="formatted")
-    plan = buf.getvalue()
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert any("dynamicpruning" in l for l in pf), plan
-    tree = plan.split("\n\n")[0]
+    tree = buf.getvalue().split("\n\n")[0]
     assert "SortMergeJoin" not in tree, tree
     assert "CartesianProduct" not in tree
 
-    # static probe planning: same results through the same tail, and
-    # pruning that CANNOT be dropped by the DPP cost model — the lists
-    # scan provably opens <= Q*nprobe of the 16 list directories
-    # (executed-plan metrics, the honest probe; the declarative DPP
-    # subquery above is plan-gated but Spark may degrade it to a full
-    # scan, which is exactly why this knob exists)
-    disk_static = {
-        tuple(r)
-        for r in ann_ivf_pq_partitioned(
-            spark, path, qs, k=10, static_prune=True, **kw
-        ).collect()
-    }
-    assert disk_static == mem
-    disk_static_r = {
-        tuple(r)
-        for r in ann_ivf_pq_partitioned_refine(
-            spark, path, emb, qs, k=10, refine_r=30,
-            static_prune=True, **kw
-        ).collect()
-    }
-    assert disk_static_r == mem_r
+    # the lists scan provably opens <= Q*nprobe of the 16 list
+    # directories (executed-plan metrics, the honest probe)
     from .test_plans import executed_scan_metrics
 
     qs2 = emb.filter(F.col("vec_id") < 2)
-    df_sp = ann_ivf_pq_partitioned(
-        spark, path, qs2, k=5, nprobe=2, num_subspaces=8,
-        num_codewords=16, dim=64, static_prune=True,
-    )
+    df_sp = ann_ivf_pq_partitioned(spark, path, qs2, k=5, nprobe=2)
     pruned = [s for s in executed_scan_metrics(df_sp)
               if "numPartitions" in s]
     assert pruned, "no partitioned scan found in the executed plan"
@@ -1488,208 +1458,61 @@ def test_ann_ivf_pq_partitioned_serving_layout(emb, spark, tmp_path):
 
     with pytest.raises(ValueError, match="refine_r"):
         ann_ivf_pq_partitioned_refine(
-            spark, path, emb, qs, k=10, refine_r=3, **kw
-        )
-
-    # PQ geometry is baked into the packed codes: probing with the
-    # wrong parameters must fail LOUDLY against the _params.json
-    # sidecar, not silently unpack garbage distances
-    with pytest.raises(ValueError, match="geometry mismatch"):
-        ann_ivf_pq_partitioned(
-            spark, path, qs, k=10, nprobe=4,
-            num_subspaces=8, num_codewords=32, dim=64,
+            spark, path, emb, qs, k=10, refine_r=3, nprobe=4
         )
 
 
-def test_static_prune_auto_warns_and_falls_back_on_dropped_dpp(
-    emb, spark, tmp_path
-):
-    """static_prune='auto' is the decision rule that keeps a serving
-    deployment from silently running full-index scans (VERDICT r18
-    item 5): it executes the declarative-DPP plan once, reads its
-    EXECUTED scan metrics (plan text lies — the subquery degrades to
-    dynamicpruningexpression(true)), and only falls back — loudly — if
-    Spark dropped the pruning. The window-build-side probe shape at
-    this scale IS the dropped-DPP fixture (the r18 finding), so auto
-    must warn, return results identical to both other modes, and serve
-    a frame whose scans provably open <= Q*nprobe directories. With
-    nprobe = C (every list legitimately probed) a full read is within
-    the driver-planned bound, pinning the keep-dynamic branch: no
-    warning, declarative frame served."""
-    import warnings
-
-    from github_event_etl_spark.operators.plan_metrics import (
-        partitioned_scans_within,
-    )
+def test_partitioned_probes_run_one_eager_action(emb, spark, tmp_path):
+    """Calling an on-disk probe runs exactly one Spark action before
+    the caller's own: the collect of the driver-planned probe set (AQE
+    may split that one SQL execution into stage jobs). The only other
+    jobs in the call are Spark's parquet schema reads of the layout's
+    tables. Pins the eager contract the `similarity` module note
+    documents."""
     from github_event_etl_spark.operators.similarity import (
-        ann_ivf,
         ann_ivf_partitioned,
-        ann_ivf_pq,
         ann_ivf_pq_partitioned,
         ivf_pq_write_index,
         ivf_write_index,
     )
 
-    pq_path = str(tmp_path / "ivfpq")
-    ivf_path = str(tmp_path / "ivf")
+    pq_path, ivf_path = str(tmp_path / "ivfpq"), str(tmp_path / "ivf")
     ivf_pq_write_index(emb, pq_path)
     ivf_write_index(emb, ivf_path, num_centroids=16)
     qs = emb.filter(F.col("vec_id") < 2)
+    sc = spark.sparkContext
+    jobs = sc._jsc.sc().statusStore()
+    sql = spark._jsparkSession.sharedState().statusStore()
 
-    # fallback branch, on BOTH partitioned probe paths
-    with pytest.warns(RuntimeWarning, match="did not prune"):
-        auto_pq = ann_ivf_pq_partitioned(
-            spark, pq_path, qs, k=5, nprobe=2, static_prune="auto"
-        )
-    static_pq = ann_ivf_pq_partitioned(
-        spark, pq_path, qs, k=5, nprobe=2, static_prune=True
-    )
-    mem_pq = ann_ivf_pq(emb, qs, k=5, nprobe=2, num_centroids=16)
-    assert {tuple(r) for r in auto_pq.collect()} == {
-        tuple(r) for r in static_pq.collect()
-    } == {tuple(r) for r in mem_pq.collect()}
-    # the served frame's scans are provably pruned (Q=2 × nprobe=2)
-    assert partitioned_scans_within(auto_pq, 4)
-    # ...which the degraded dynamic frame is provably NOT
-    dyn_pq = ann_ivf_pq_partitioned(spark, pq_path, qs, k=5, nprobe=2)
-    assert not partitioned_scans_within(dyn_pq, 4)
+    def executions_of(job_ids):
+        found = set()
+        execs = sql.executionsList()
+        for i in range(execs.size()):
+            e = execs.apply(i)
+            ids = e.jobs().keySet().toSeq()
+            if {ids.apply(j) for j in range(ids.size())} & job_ids:
+                found.add(e.executionId())
+        return found
 
-    with pytest.warns(RuntimeWarning, match="did not prune"):
-        auto_ivf = ann_ivf_partitioned(
-            spark, ivf_path, qs, k=5, nprobe=2, static_prune="auto"
-        )
-    mem_ivf = ann_ivf(emb, qs, k=5, nprobe=2, num_centroids=16)
-    assert {tuple(r) for r in auto_ivf.collect()} == {
-        tuple(r) for r in mem_ivf.collect()
-    }
-    assert partitioned_scans_within(auto_ivf, 4)
-
-    # keep-dynamic branch: probing ALL 16 lists makes the full read
-    # legitimate — auto must NOT warn and must serve the declarative
-    # frame with correct results
-    qs8 = emb.filter(F.col("vec_id") < 8)
-    with warnings.catch_warnings():
-        # escalate ONLY the fallback's own warning class: a GC-timed
-        # py4j ResourceWarning must not flake this branch
-        warnings.simplefilter("error", RuntimeWarning)
-        auto_all = ann_ivf_pq_partitioned(
-            spark, pq_path, qs8, k=5, nprobe=16, static_prune="auto"
-        )
-    mem_all = ann_ivf_pq(emb, qs8, k=5, nprobe=16, num_centroids=16)
-    assert {tuple(r) for r in auto_all.collect()} == {
-        tuple(r) for r in mem_all.collect()
-    }
-
-    # the knob rejects anything outside its three documented modes —
-    # including truthy values that EQUAL True (1 == True): equality
-    # validation would bless them while the `is True` dispatch served
-    # the unguaranteed dynamic plan, the exact silent-full-scan case
-    for bad in ("yes", 1, 0):
-        with pytest.raises(ValueError, match="static_prune"):
-            ann_ivf_pq_partitioned(
-                spark, pq_path, qs, k=5, nprobe=2, static_prune=bad
-            )
-
-
-def test_auto_mode_healthy_path_measures_once_and_serves_cache(
-    emb, spark, tmp_path
-):
-    """static_prune='auto' must not pay the probe twice on the HEALTHY
-    branch (VERDICT r19 item 5): the dynamic frame is persisted before
-    the measurement executes it, so the acceptance run populates the
-    cache and the caller's own consumption is served from memory.
-    Proof by metric freeze: scan metrics are CUMULATIVE per plan
-    instance, so if the collect below re-executed any scan its metrics
-    would move — snapshot them (walk-only, no execution) before and
-    after consuming the frame and assert nothing moved."""
-    import warnings
-
-    from github_event_etl_spark.operators.plan_metrics import (
-        _walk_scan_metrics,
-    )
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_pq_partitioned,
-        ivf_pq_write_index,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    ivf_pq_write_index(emb, path)
-    qs = emb.filter(F.col("vec_id") < 8)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        auto = ann_ivf_pq_partitioned(
-            spark, path, qs, k=5, nprobe=16, static_prune="auto"
-        )
-    assert auto.storageLevel.useMemory, (
-        "healthy auto frame is not persisted — consumption re-executes"
-    )
-
-    def snap():
-        return [
-            {k: v for k, v in s.items() if k != "_location"}
-            for s in _walk_scan_metrics(auto)
-        ]
-
-    before = snap()
-    assert auto.collect(), "healthy auto frame served no rows"
-    assert snap() == before, (
-        "scan metrics moved during consumption — the probe was paid a "
-        "second time instead of being served from the measurement "
-        "run's cache"
-    )
-    auto.unpersist()
-
-
-def test_auto_mode_ignores_unrelated_partitioned_scans(
-    emb, spark, tmp_path
-):
-    """ADVICE r19: auto's pruning bound is scoped to scans under the
-    INDEX root. Fixture: the queries frame is loaded from a table
-    partitioned into 17 directories — more than the 16-list probe
-    bound — while the index itself is probed on ALL lists (the healthy
-    keep-dynamic branch). Unscoped, the queries scan alone would
-    exceed the bound and force a spurious warn + permanent static
-    fallback (plus one wasted full execution per call in a real
-    deployment); scoped, no warning fires, the declarative frame is
-    served, and results match the in-memory twin."""
-    import warnings
-
-    from github_event_etl_spark.operators.plan_metrics import (
-        partitioned_scans_within,
-    )
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_pq,
-        ann_ivf_pq_partitioned,
-        ivf_pq_write_index,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    qdir = str(tmp_path / "queries_by_day")
-    ivf_pq_write_index(emb, path)
-    emb.filter(F.col("vec_id") < 17).withColumn(
-        "qday", F.col("vec_id") % 17
-    ).write.partitionBy("qday").parquet(qdir)
-    qs = spark.read.parquet(qdir).select("vec_id", "embedding")
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        auto = ann_ivf_pq_partitioned(
-            spark, path, qs, k=5, nprobe=16, static_prune="auto"
-        )
-    got = {tuple(r) for r in auto.collect()}
-    mem = ann_ivf_pq(
-        emb, emb.filter(F.col("vec_id") < 17), k=5, nprobe=16,
-        num_centroids=16,
-    )
-    assert got == {tuple(r) for r in mem.collect()} and got
-    # the scoping IS the fix: the same executed plan fails the
-    # unscoped bound (the queries scan read 17 partitions) and passes
-    # the index-scoped one — without within_path this fixture would
-    # have fallen back
-    assert not partitioned_scans_within(auto, 16)
-    assert partitioned_scans_within(auto, 16,
-                                    within_path=f"{path}/lists")
-    auto.unpersist()
+    for name, call in [
+        ("ann_ivf_pq_partitioned",
+         lambda: ann_ivf_pq_partitioned(spark, pq_path, qs, k=5, nprobe=2)),
+        ("ann_ivf_partitioned",
+         lambda: ann_ivf_partitioned(spark, ivf_path, qs, k=5, nprobe=2)),
+    ]:
+        group = f"eager-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            df = call()
+        finally:
+            sc._jsc.clearJobGroup()
+        job_ids = set(sc.statusTracker().getJobIdsForGroup(group))
+        names = {i: jobs.job(i).name() for i in job_ids}
+        action = {i for i, n in names.items() if not n.startswith("parquet at")}
+        assert action, (name, names)
+        assert {names[i].split(" at ")[0] for i in action} == {"collect"}, names
+        assert len(executions_of(action)) == 1, (name, names)
+        assert df.count() == 2 * 5
 
 
 def test_ivf_pq_backfill_params_restores_pre_sidecar_layout(
@@ -1756,10 +1579,13 @@ def test_ivf_pq_backfill_params_restores_pre_sidecar_layout(
 def test_ivf_pq_geometry_error_names_the_entry_point(
     emb, spark, tmp_path
 ):
-    """A geometry-mismatch error raised on the REFINE read path must
-    blame ann_ivf_pq_partitioned_refine, not the inner ADC stage it
-    delegates to (ADVICE r19) — an operator chasing the error message
-    to a function they never called is chasing the wrong call site."""
+    """A missing-sidecar (geometry) error raised on the REFINE read
+    path must blame ann_ivf_pq_partitioned_refine, not the inner ADC
+    stage it delegates to (ADVICE r19) — an operator chasing the error
+    message to a function they never called is chasing the wrong call
+    site."""
+    import os
+
     from github_event_etl_spark.operators.similarity import (
         ann_ivf_pq_partitioned_refine,
         ivf_pq_write_index,
@@ -1767,11 +1593,12 @@ def test_ivf_pq_geometry_error_names_the_entry_point(
 
     path = str(tmp_path / "ivfpq")
     ivf_pq_write_index(emb, path)
+    os.remove(os.path.join(path, "_params.json"))
     qs = emb.filter(F.col("vec_id") < 2)
     with pytest.raises(ValueError,
-                       match="ann_ivf_pq_partitioned_refine"):
+                       match="ann_ivf_pq_partitioned_refine: no _params"):
         ann_ivf_pq_partitioned_refine(
-            spark, path, emb, qs, k=5, refine_r=10, num_codewords=32
+            spark, path, emb, qs, k=5, refine_r=10
         )
 
 
@@ -3670,6 +3497,81 @@ def test_vectorized_encode_parity_with_legacy_agg(spark):
             isinstance(a, float) and isinstance(b, float)
             and math.isnan(a) and math.isnan(b)
         ), (k, a, b)
+
+
+def test_qerr_null_element_is_null_and_long_vector_is_invalid(spark):
+    """Two encode-contract corners (ADVICE r22). A vector with a null
+    ELEMENT gets a NULL qerr, as the `_pq_qerr_agg` reference gives —
+    Arrow hands the element to the UDF as NaN, so without the JVM-side
+    guard its qerr was NaN and one such vector made the `_qerr_stats`
+    mean and p95 NaN. A vector LONGER than the model dimension is
+    invalid like a shorter one: NULL qerr, code 0, lowest centroid —
+    the contract, where the legacy slice folds scored its first `dim`
+    elements."""
+    import math
+
+    from pyspark.sql import types as T
+
+    from github_event_etl_spark.operators.similarity import (
+        _qerr_stats,
+        ivf_assign_with_centroids,
+        ivf_seed_centroids,
+        pq_codebook,
+        pq_codes,
+        pq_quantization_error,
+    )
+
+    dim, subs, cw = 8, 2, 4
+    base = [
+        [float((i * 5 + j * 3) % 11) - 5.0 for j in range(dim)]
+        for i in range(12)
+    ]
+    null_elem = list(base[1])
+    null_elem[3] = None
+    vecs = [(i, v) for i, v in enumerate(base)] + [
+        (200, null_elem),
+        (201, base[2] + [1.0, 2.0]),  # longer than dim
+    ]
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+    ])
+    df = spark.createDataFrame(vecs, schema)
+    train = df.filter(F.col("vec_id") < 50)
+    cb = pq_codebook(train, cw)
+    cents = ivf_seed_centroids(train, cw)
+
+    new_q = {
+        r[0]: r[1] for r in pq_quantization_error(df, cb, subs, dim).collect()
+    }
+    old_q = {
+        r[0]: r[1]
+        for r in _pq_qerr_agg(
+            df, cb, subs, dim // subs, "vec_id", "embedding"
+        ).collect()
+    }
+    # the legacy slice folds ignored a longer vector's tail and scored
+    # it; the encode contract marks it invalid instead
+    assert old_q.pop(201) is not None
+    assert new_q.pop(201) is None
+    assert new_q == old_q
+    assert new_q[200] is None
+    stats = _qerr_stats(df, cb, subs, dim, "vec_id", "embedding")
+    assert math.isfinite(stats["qerr_mean"]), stats
+    assert math.isfinite(stats["qerr_p95"]), stats
+
+    codes = {
+        r[0]: r[1] for r in pq_codes(df, subs, cw, dim, codebook=cb).collect()
+    }
+    assert codes[201] == 0
+    min_cid = min(r[0] for r in cents.collect())
+    asg = {
+        r[0]: r[2]
+        for r in ivf_assign_with_centroids(
+            df.filter(F.col("vec_id") == 201), cents
+        ).collect()
+    }
+    assert asg == {201: min_cid}
 
 
 def test_empty_model_table_gives_empty_reference_schema(spark):

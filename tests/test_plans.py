@@ -43,9 +43,7 @@ def tree_of(plan: str) -> str:
     return plan.split("\n\n")[0]
 
 
-# Promoted into the package (r19) so the static_prune="auto" serving
-# decision rule measures exactly what these gates measure; re-exported
-# here because sibling test modules import it from this file.
+# Re-exported here because sibling test modules import it from this file.
 from github_event_etl_spark.operators.plan_metrics import (  # noqa: E402
     executed_scan_metrics,
 )
@@ -457,15 +455,26 @@ def test_map_side_curation_ops_never_shuffle(qmap, spark, sf_dir):
         assert tree.count("Exchange") == 0, name
 
 
-def test_ivf_probe_is_dynamic_partition_pruned(qmap, spark, sf_dir):
+def test_ivf_probe_is_partition_pruned(qmap, spark, sf_dir):
     """The on-disk IVF probe must scan ONLY the probed centroid
-    directories: the partitioned scan carries a dynamic-partition-
-    pruning subquery keyed on the broadcast probe set — at a billion
-    vectors this is the difference between reading nprobe/C of the
-    index and reading all of it."""
-    plan = plan_of(qmap, spark, sf_dir, "llm_ann_ivf_partitioned")
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert any("dynamicpruning" in l for l in pf), plan
+    directories — at a billion vectors this is the difference between
+    reading nprobe/C of the index and reading all of it. Gated on the
+    EXECUTED index scan's partition count (plan text cannot certify
+    pruning), which must stay within Q×nprobe and below the list
+    count."""
+    from github_event_etl_spark.plans.queries_llm import _KNN_QUERIES
+
+    df = qmap["llm_ann_ivf_partitioned"](spark, sf_dir)
+    index = [
+        s for s in executed_scan_metrics(df)
+        if "numPartitions" in s
+        and any(p.endswith("/assigned") for p in s["_location"])
+    ]
+    assert index, "no index scan in the executed plan"
+    # nprobe=4 of 16 lists: Q×nprobe = 32 alone would not bound it, so
+    # the fixture's probe set must also leave at least one list unread
+    for scan in index:
+        assert scan["numPartitions"] <= min(_KNN_QUERIES * 4, 16 - 1), scan
 
 
 # -------------------------------------------------------- physical layout
