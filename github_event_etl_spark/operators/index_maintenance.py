@@ -42,9 +42,10 @@ Two layers:
   unlike the earlier marker-based protocol — a violation is now
   DETECTED (best-effort): every commit re-validates the manifest's
   FULL commit identity (`_manifest_drift`: base, generation list, the
-  counters, and the monotone `commit_seq` that makes even a
-  commit-then-compaction ABA interleave visible) and aborts instead
-  of silently losing a concurrent generation. The revalidate-then-
+  counters, the monotone `commit_seq` that makes even a
+  commit-then-compaction ABA interleave visible, and the `build_id`
+  that makes a builder rebuild visible) and aborts instead of
+  silently losing a concurrent generation. The revalidate-then-
   replace is not a CAS, so a commit landing inside that window can
   still be lost — the single-writer contract is the guarantee;
   detection is the tripwire for violating it.
@@ -60,10 +61,15 @@ read path decides commit state). This is the manifest-commit pattern
 the ndjson sink's manifest mode established (sources/pysource.py
 `_commit_manifest` / `manifested_part_paths`): readers list parts
 FROM the manifest, never by directory walk, and unreferenced trees
-are garbage a later writer sweeps (manifest-anchored GC). Indexes
-built by the `*_write_index` builders before any maintenance carry no
-manifest yet; `_read_manifest` derives an implicit one from the
-legacy parquet `_SUCCESS` markers, and the first commit persists it.
+are garbage a later writer sweeps (manifest-anchored GC). Every
+layout is born committed: the `*_write_index` builders
+(`text_dedup.minhash_write_index`, `similarity.rhp_write_index`,
+`similarity.ivf_write_index`, `similarity.ivf_pq_write_index`) write
+the empty manifest as their last step (`_commit_base`). The manifest
+is the only commit state — a path without one is no committed index,
+whatever parquet `_SUCCESS` markers it holds. Every metadata commit
+here and in the sidecars beside it goes through one durable JSON
+write (`_atomic_write_json`).
 
 Read-path cost note: each generation adds one broadcast anti-join +
 one union to the read plan, so generations should be compacted
@@ -94,7 +100,6 @@ tying these policies to one observation call.
 from __future__ import annotations
 
 import os
-import re
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -183,28 +188,28 @@ def _delta_root(index_path: str) -> str:
     return os.path.join(index_path, "_delta")
 
 
-def _atomic_write_manifest(index_path: str, manifest: dict) -> None:
-    """THE commit op: the new manifest replaces the old in one atomic
-    metadata write. Locally that is a same-directory `os.replace` (a
-    reader never observes a torn manifest — the one rename left in the
-    module, of a ~100-byte file, the pysource `_commit_manifest`
-    pattern); on an object store it is a single manifest PUT."""
+def _atomic_write_json(path: str, obj) -> None:
+    """THE metadata commit op: `obj` replaces the JSON file at `path`
+    in one atomic write — the index manifest, the IVF-PQ `_params.json`
+    / `_drift.json` sidecars and the ndjson sink's batch manifests all
+    commit through here. Locally that is a same-directory `os.replace`
+    (a reader never observes a torn file); on an object store it is a
+    single PUT."""
     import json
 
-    path = _manifest_file(index_path)
     tmp = path + ".inprogress"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
+        json.dump(obj, f)
         # fsync BEFORE the rename: on journaled filesystems with
         # delayed allocation the rename metadata can commit ahead of
         # the data blocks, and a power cut in that window would leave
-        # a present-but-empty manifest — bricking every reader, which
-        # is worse than the crash losing the uncommitted write.
+        # a present-but-empty file — bricking every reader, which is
+        # worse than the crash losing the uncommitted write.
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
     try:
-        dfd = os.open(index_path, os.O_RDONLY)
+        dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
         try:
             os.fsync(dfd)  # persist the rename itself (best-effort)
         finally:
@@ -213,13 +218,26 @@ def _atomic_write_manifest(index_path: str, manifest: dict) -> None:
         pass
 
 
-def _read_manifest_file(index_path: str) -> dict | None:
-    """The persisted manifest, or None when none has been committed
-    yet. Commit-time revalidation reads THIS (never the legacy
-    bootstrap below): mid-call, freshly-written data trees carry
-    parquet _SUCCESS markers of their own, and re-deriving an implicit
-    manifest from markers would mistake the caller's OWN staged work
-    for a concurrent commit."""
+def _commit_base(index_path: str) -> None:
+    """The builders' shared last step: commit the freshly written base
+    at the index root as an index with no generations. Until this
+    lands the path is no committed index, so a build that dies
+    mid-write is never read or maintained. The random `build_id`
+    tells two builds of the same path apart (`_IDENTITY_FIELDS`)."""
+    import uuid
+
+    _atomic_write_json(
+        _manifest_file(index_path),
+        {"format": 1, "base": ".", "generations": [], "next_gen": 1,
+         "next_base": 1, "build_id": uuid.uuid4().hex},
+    )
+
+
+def _read_manifest(index_path: str) -> dict | None:
+    """The index's commit state, or None when no manifest has been
+    committed (a bare, half-written or builder-interrupted directory
+    is NOT an index; maintenance against it would fabricate an
+    unreadable tree)."""
     import json
 
     path = _manifest_file(index_path)
@@ -233,64 +251,23 @@ def _read_manifest_file(index_path: str) -> dict | None:
             f"corrupt index manifest at {path}: {e}. The atomic "
             "fsync+rename write makes this unreachable through the "
             "API; a truncated file means out-of-band damage — restore "
-            "the manifest (or, if the tree predates manifests, delete "
-            "the corrupt file so the legacy-marker bootstrap applies)"
+            "the manifest or rebuild the index with its builder"
         ) from e
 
 
-def _listed_marker_generations(index_path: str) -> list[str]:
-    """Legacy-bootstrap generation discovery — the pre-manifest
-    protocol: the longest prefix of gen=1,2,... whose BOTH component
-    writes left parquet _SUCCESS markers. Used ONLY to derive the
-    implicit manifest of an index tree no manifest commit has touched
-    yet; once a manifest exists it is the sole authority (a
-    marker-complete directory the manifest does not name is invisible
-    — a dead writer's residue, never half of the index)."""
-    root = _delta_root(index_path)
-    if not os.path.isdir(root):
-        return []
-    present = {
-        int(m.group(1)): os.path.join(root, d)
-        for d in os.listdir(root)
-        if (m := re.fullmatch(r"gen=(\d+)", d))
-    }
-    out: list[str] = []
-    g = 1
-    while g in present:
-        p = present[g]
-        if not all(
-            os.path.exists(os.path.join(p, part, "_SUCCESS"))
-            for part in ("tombstones", "appends")
-        ):
-            break
-        out.append(p)
-        g += 1
-    return out
-
-
-def _read_manifest(index_path: str) -> dict | None:
-    """The index's commit state: the persisted manifest when one
-    exists, else an implicit manifest derived from the legacy marker
-    protocol (base at the index root with its `_SUCCESS`, generations
-    by longest committed-marker prefix) so trees built by the
-    `*_write_index` builders are maintainable with no migration step —
-    the first commit persists the real manifest. None ⇒ no committed
-    index here at all (a bare or half-written directory is NOT an
-    index; maintenance against it would fabricate an unreadable
-    tree)."""
-    m = _read_manifest_file(index_path)
-    if m is not None:
-        return m
-    if not os.path.exists(os.path.join(index_path, "_SUCCESS")):
-        return None
-    gens = _listed_marker_generations(index_path)
-    return {
-        "format": 1,
-        "base": ".",
-        "generations": [os.path.relpath(g, index_path) for g in gens],
-        "next_gen": len(gens) + 1,
-        "next_base": 1,
-    }
+def _require_manifest(index_path: str, op: str) -> dict:
+    """`_read_manifest` for the entry points that need an index: a
+    missing manifest fails loudly under the caller's name `op`."""
+    m = _read_manifest(index_path)
+    if m is None:
+        raise FileNotFoundError(
+            f"{op}: no committed index at {index_path} (no {_MANIFEST}) "
+            "— an index is committed only by its builder "
+            "(minhash_write_index, rhp_write_index, ivf_write_index, "
+            "ivf_pq_write_index), which writes the manifest as its "
+            "last step; build the base first"
+        )
+    return m
 
 
 def _base_path(index_path: str, manifest: dict) -> str:
@@ -401,23 +378,7 @@ def write_index_delta(
     """
     import shutil
 
-    m = _read_manifest(index_path)
-    if m is None:
-        raise FileNotFoundError(
-            f"write_index_delta: no committed base index at "
-            f"{index_path} (no manifest and no legacy _SUCCESS) — "
-            "writing a generation against a vacant or half-written "
-            "base would fabricate an unreadable index tree; write the "
-            "base with its *_write_index builder first"
-        )
-    if _read_manifest_file(index_path) is None:
-        # legacy tree: persist the bootstrapped manifest BEFORE any
-        # data is staged, so commit state is manifest-based from the
-        # first write onward. Without this, a crash after both parquet
-        # trees finish but before the manifest commit would let the
-        # marker-based bootstrap count the fully-staged generation as
-        # committed — a phantom commit the caller believes failed.
-        _atomic_write_manifest(index_path, m)
+    m = _require_manifest(index_path, "write_index_delta")
     n = m["next_gen"]
     gen_rel = os.path.join("_delta", f"gen={n}")
     base = os.path.join(index_path, gen_rel)
@@ -448,9 +409,10 @@ def write_index_delta(
 #: could see next_gen=1 again (the ABA case) — but any commit grows
 #: `generations` or bumps `commit_seq`, and any compaction moves `base`
 #: and increments the never-reset `next_base`, so comparing the full
-#: ensemble cannot alias across intervening commits.
+#: ensemble cannot alias across intervening commits. A builder rebuild
+#: resets all of those, so each build also draws a fresh `build_id`.
 _IDENTITY_FIELDS = ("base", "generations", "next_gen", "next_base",
-                    "commit_seq")
+                    "commit_seq", "build_id")
 
 
 def _manifest_drift(m: dict, cur: dict) -> dict:
@@ -476,31 +438,32 @@ def _commit_generation(
     compaction interleave can return to its old value (the ABA case:
     commit_seq is the monotone tiebreaker that can never recur) —
     then atomically publish the manifest naming the generation. A
-    manifest absent at entry AND at commit is the legacy single-writer
-    bootstrap: the entry-time implicit manifest stands, and this
-    commit persists the first real one. Best-effort by construction:
-    the revalidate-then-replace is not a CAS, so a commit landing
-    INSIDE that window can still be lost — single-writer-per-index
-    remains the contract; this check turns every violation wider than
-    the window into a loud abort instead of silent loss."""
+    manifest that vanished since entry (a builder rebuild overwrote
+    the tree) drifts on every field and aborts the same way.
+    Best-effort by construction: the revalidate-then-replace is not a
+    CAS, so a commit landing INSIDE that window can still be lost —
+    single-writer-per-index remains the contract; this check turns
+    every violation wider than the window into a loud abort instead of
+    silent loss."""
     import shutil
 
-    cur = _read_manifest_file(index_path) or m
+    cur = _read_manifest(index_path) or {}
     drift = _manifest_drift(m, cur)
     if drift:
         shutil.rmtree(staged_dir, ignore_errors=True)
         raise RuntimeError(
             f"write_index_delta: the manifest at {index_path} changed "
             f"between read and commit of gen={n} (drifted fields: "
-            f"{drift}) — a concurrent writer committed; the "
-            "single-writer-per-index contract was violated. Staged "
-            "trees were discarded, the index is unchanged"
+            f"{drift}) — a concurrent writer committed or a builder "
+            "rebuilt the tree; the single-writer-per-index contract "
+            "was violated. Staged trees were discarded, the index is "
+            "unchanged"
         )
-    cur = dict(cur)
-    cur["generations"] = list(cur["generations"]) + [gen_rel]
-    cur["next_gen"] = n + 1
-    cur["commit_seq"] = cur.get("commit_seq", 0) + 1
-    _atomic_write_manifest(index_path, cur)
+    _atomic_write_json(
+        _manifest_file(index_path),
+        dict(cur, generations=cur["generations"] + [gen_rel],
+             next_gen=n + 1, commit_seq=cur.get("commit_seq", 0) + 1),
+    )
 
 
 def ivf_pq_write_index_delta(
@@ -614,11 +577,7 @@ def read_index(
     an all-added or all-removed generation legitimately writes an EMPTY
     tombstone or append set, which schema inference cannot read back.
     """
-    m = _read_manifest(index_path)
-    if m is None:
-        raise FileNotFoundError(
-            f"read_index: no committed index at {index_path}"
-        )
+    m = _require_manifest(index_path, "read_index")
     return _fold_generations(
         spark,
         spark.read.parquet(_base_path(index_path, m)),
@@ -943,11 +902,7 @@ def index_stats(
     inf is reserved for the genuinely anomalous all-rows-tombstoned-
     but-uncompacted state, where readers scan everything for nothing —
     the state a compaction policy SHOULD fire on."""
-    m = _read_manifest(index_path)
-    if m is None:
-        raise FileNotFoundError(
-            f"index_stats: no committed index at {index_path}"
-        )
+    m = _require_manifest(index_path, "index_stats")
     base = spark.read.parquet(_base_path(index_path, m))
     gens = [os.path.join(index_path, rel) for rel in m["generations"]]
     tomb_schema = base.select(key).schema
@@ -1063,21 +1018,11 @@ def compact_index(
     generation log advanced during the fold (a concurrent
     `write_index_delta` committed), flipping would silently drop that
     generation, so the staging is discarded and the call fails loudly
-    with the index untouched."""
+    with the index untouched. A manifest that vanished during the fold
+    (a builder rebuild overwrote the tree) aborts the same way."""
     import shutil
 
-    m = _read_manifest(index_path)
-    if m is None:
-        raise FileNotFoundError(
-            f"compact_index: no committed index at {index_path} — "
-            "nothing to compact (a vacant path beside .compacting/"
-            ".precompact sibling trees is a crash from the pre-"
-            "manifest rename-swap protocol: rename the committed "
-            "sibling back in by hand once, then the manifest protocol "
-            "owns it)"
-        )
-    if _read_manifest_file(index_path) is None:
-        _atomic_write_manifest(index_path, m)  # legacy tree: persist
+    m = _require_manifest(index_path, "compact_index")
     _gc(index_path)  # sweep crash garbage from any prior attempt
     gens = [os.path.join(index_path, rel) for rel in m["generations"]]
     if not gens:
@@ -1088,28 +1033,28 @@ def compact_index(
     new_base_rel = os.path.join("_base", f"v{m['next_base']}")
     staging = os.path.join(index_path, new_base_rel)
     _stage_compacted_base(folded, staging, partition_col)
-    cur = _read_manifest_file(index_path) or m
+    cur = _read_manifest(index_path) or {}  # vanished ⇒ drift
     drift = _manifest_drift(m, cur)
     if drift:
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
             f"compact_index: the commit state at {index_path} changed "
-            "during the fold (a concurrent writer committed; drifted "
-            f"fields: {drift}) — flipping to the "
-            "staged base would silently drop that work; staging was "
-            "discarded, the index is unchanged. Re-run compaction, or "
+            "during the fold (a concurrent writer committed or a "
+            f"builder rebuilt the tree; drifted fields: {drift}) — "
+            "flipping to the staged base would silently drop that "
+            "work; staging was discarded. Re-run compaction, or "
             "fix the caller violating the single-writer-per-index "
             "contract"
         )
-    new_m = {
-        "format": 1,
-        "base": new_base_rel,
-        "generations": [],
-        "next_gen": 1,
-        "next_base": m["next_base"] + 1,
-        "commit_seq": cur.get("commit_seq", 0) + 1,
-    }
-    _atomic_write_manifest(index_path, new_m)
+    new_m = dict(
+        cur,
+        base=new_base_rel,
+        generations=[],
+        next_gen=1,
+        next_base=m["next_base"] + 1,
+        commit_seq=cur.get("commit_seq", 0) + 1,
+    )
+    _atomic_write_json(_manifest_file(index_path), new_m)
     # the FOLDED generations are superseded by the flip (their content
     # lives in the new base) — delete them explicitly: the generic GC
     # below spares the gen={next_gen}=1 slot, which after the counter
@@ -1154,11 +1099,7 @@ def maybe_compact(
             "max_read_amplification — with neither, the policy can "
             "never fire and the call is a misconfiguration"
         )
-    m = _read_manifest(index_path)
-    if m is None:
-        raise FileNotFoundError(
-            f"maybe_compact: no committed index at {index_path}"
-        )
+    m = _require_manifest(index_path, "maybe_compact")
     n_gens = len(m["generations"])
     if n_gens == 0:
         return 0
@@ -1198,18 +1139,12 @@ def _read_drift_log(index_path: str) -> list[dict]:
 
 def _append_drift_entry(index_path: str, entry: dict) -> None:
     """Append one refresh's drift record to `<index>/_drift.json` —
-    read-modify-atomic-replace, covered by the same single-writer-per-
-    index contract as the generation commits it trails. Capped at
-    `_DRIFT_LOG_CAP` entries so a long-lived refresh loop cannot grow
-    the sidecar unboundedly."""
-    import json
-
+    read-modify-`_atomic_write_json`, covered by the same single-
+    writer-per-index contract as the generation commits it trails.
+    Capped at `_DRIFT_LOG_CAP` entries so a long-lived refresh loop
+    cannot grow the sidecar unboundedly."""
     log = _read_drift_log(index_path) + [entry]
-    path = _drift_log_path(index_path)
-    tmp = path + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(log[-_DRIFT_LOG_CAP:], f)
-    os.replace(tmp, path)
+    _atomic_write_json(_drift_log_path(index_path), log[-_DRIFT_LOG_CAP:])
 
 
 def _qerr_ratio(cur: float | None, train: float | None) -> float | None:
@@ -1305,8 +1240,8 @@ def ivf_pq_drift_stats(
 ) -> dict:
     """Quantizer-drift snapshot of an IVF-PQ layout (VERDICT r19 item
     2): the training-time reconstruction-error baseline from the
-    `_params.json` sidecar (None when the layout was built with
-    `record_train_error=False`), the per-refresh drift log
+    `_params.json` sidecar (None when the build corpus was empty),
+    the per-refresh drift log
     `ivf_pq_write_index_delta` appends (each generation's re-encoded
     batch vs the frozen codebook), and the ratio of the LATEST
     non-empty refresh to the baseline — the cheap always-available
@@ -1377,20 +1312,19 @@ def maybe_retrain(
     artifact while that is sound, recompute it whole when it stops
     being.) Cost: one corpus-sized aggregate per call (the audit), so
     run it at crawl cadence, not per query; the rebuild itself is the
-    one corpus pass a scheduled re-index would pay anyway. A layout
-    built with `record_train_error=False` has no baseline to compare
-    against and raises — rebuild once with recording on (the default)
-    to calibrate."""
+    one corpus pass a scheduled re-index would pay anyway. A sidecar
+    without a baseline has nothing to compare against and raises —
+    every `ivf_pq_write_index` records one, so rebuild to recalibrate."""
     from .similarity import _read_ivf_pq_params
 
     params = _read_ivf_pq_params(index_path, "maybe_retrain")
     if params.get("train_qerr_mean") is None:
         raise ValueError(
             f"maybe_retrain: the layout at {index_path} carries no "
-            "train_qerr_mean baseline (built with "
-            "record_train_error=False, or pre-drift-monitor) — the "
-            "policy has nothing to compare against. Rebuild once with "
-            "ivf_pq_write_index(record_train_error=True) to calibrate"
+            "train_qerr_mean baseline in its _params.json sidecar (an "
+            "empty build corpus, or a sidecar edited out of band) — "
+            "the policy has nothing to compare against. Rebuild with "
+            "ivf_pq_write_index, which records the baseline"
         )
     stats = ivf_pq_drift_stats(spark, index_path, corpus, id_col,
                                vec_col, audit_fraction=audit_fraction)

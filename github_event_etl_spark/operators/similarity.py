@@ -1256,7 +1256,6 @@ def ivf_pq_write_index(
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     codebook: DataFrame | None = None,
-    record_train_error: bool = True,
 ) -> None:
     """Materialize the IVF-PQ serving layout — the physical shape the
     `ann_ivf_pq` docstring promises for a billion-vector deployment:
@@ -1282,24 +1281,28 @@ def ivf_pq_write_index(
     geometry — an in-place rebuild that crashes mid-overwrite leaves
     no sidecar, and `_read_ivf_pq_params` (which REQUIRES one) fails
     the probe loudly instead of unpacking half-new codes against a
-    stale geometry. The three writes are one corpus pass plus two
-    cached-table flushes: the tiny centroid/codebook frames are
-    cache()'d so the lists write populates them and their own writes
-    reuse the cached rows instead of re-scanning the corpus (Catalyst
-    does not dedupe identically-derived subtrees across actions — the
-    pq_codes caching note).
+    stale geometry. Just before the sidecar, the lists get their empty
+    maintenance manifest (`index_maintenance._commit_base`), so the
+    layout is born a committed index that `ivf_pq_write_index_delta`,
+    `compact_index` and the partitioned probes read as such. Both
+    metadata writes are durable JSON commits
+    (`index_maintenance._atomic_write_json`). The three table writes
+    are one corpus pass plus two cached-table flushes: the tiny
+    centroid/codebook frames are cache()'d so the lists write populates
+    them and their own writes reuse the cached rows instead of
+    re-scanning the corpus (Catalyst does not dedupe
+    identically-derived subtrees across actions — the pq_codes caching
+    note).
 
-    `record_train_error` (default True) additionally records the build
-    corpus' PQ reconstruction-error stats (`pq_quantization_error`
-    mean/p95/n) in the sidecar as the quantizer-drift BASELINE
-    `index_maintenance.maybe_retrain` compares refresh batches and
-    audit passes against. Cost: one extra broadcast-join aggregate
+    The sidecar also records the build corpus' PQ reconstruction-error
+    stats (`pq_quantization_error` mean/p95/n) as the quantizer-drift
+    BASELINE `index_maintenance.maybe_retrain` compares refresh batches
+    and audit passes against. Cost: one extra broadcast-join aggregate
     pass over the corpus at build time (the codebook is already
-    cached); pass False to skip it — the layout then serves normally
-    but the drift policy refuses to run until a recording rebuild."""
+    cached)."""
     import contextlib
-    import json
-    import os
+
+    from .index_maintenance import _atomic_write_json, _commit_base
 
     # frozen-artifact hook (see _ivf_pq_build_tables): a REBUILD of a
     # maintained deployment passes the versioned centroid/codebook
@@ -1338,29 +1341,24 @@ def ivf_pq_write_index(
         )
         centroids.write.mode("overwrite").parquet(f"{path}/centroids")
         codebook.write.mode("overwrite").parquet(f"{path}/codebook")
-        train = (
-            _qerr_stats(corpus, codebook, num_subspaces, dim,
-                        id_col, vec_col)
-            if record_train_error
-            else None
-        )
+        train = _qerr_stats(corpus, codebook, num_subspaces, dim,
+                            id_col, vec_col)
     finally:
         centroids.unpersist()
         codebook.unpersist()
-    params = {
-        "num_centroids": num_centroids,
-        "num_subspaces": num_subspaces,
-        "num_codewords": num_codewords,
-        "dim": dim,
-    }
-    if train is not None:
-        params["train_qerr_mean"] = train["qerr_mean"]
-        params["train_qerr_p95"] = train["qerr_p95"]
-        params["train_n"] = train["n"]
-    tmp = os.path.join(path, "_params.json.inprogress")
-    with open(tmp, "w") as f:
-        json.dump(params, f)
-    os.replace(tmp, os.path.join(path, "_params.json"))
+    _commit_base(f"{path}/lists")
+    _atomic_write_json(
+        os.path.join(path, "_params.json"),
+        {
+            "num_centroids": num_centroids,
+            "num_subspaces": num_subspaces,
+            "num_codewords": num_codewords,
+            "dim": dim,
+            "train_qerr_mean": train["qerr_mean"],
+            "train_qerr_p95": train["qerr_p95"],
+            "train_n": train["n"],
+        },
+    )
 
 
 def _read_ivf_pq_params(path: str, op: str) -> dict:
@@ -1383,121 +1381,11 @@ def _read_ivf_pq_params(path: str, op: str) -> dict:
             f"{path} — either this is not an ivf_pq_write_index "
             "layout, or an in-place rebuild was interrupted between "
             "the table overwrites and the sidecar commit (the tables "
-            "may mix two geometries), or the layout predates the "
-            "required sidecar (a BREAKING change since the r19 "
-            "hard-requirement — see BASELINE.md). Rebuild the index "
-            "with ivf_pq_write_index, or — for a HEALTHY pre-sidecar "
-            "layout of known geometry — backfill the sidecar once "
-            "with ivf_pq_backfill_params, which cross-checks the "
-            "stated geometry against the tables before writing"
+            "may mix two geometries). Rebuild the index with "
+            "ivf_pq_write_index"
         )
     with open(sidecar) as f:
         return json.load(f)
-
-
-def ivf_pq_backfill_params(
-    spark,
-    path: str,
-    num_centroids: int,
-    num_subspaces: int,
-    num_codewords: int,
-    dim: int,
-) -> None:
-    """One-shot `_params.json` backfill for a PRE-SIDECAR
-    `ivf_pq_write_index` layout of known geometry (ADVICE r19): the
-    sidecar became REQUIRED at probe time in r19 — a silent
-    compatibility break for layouts written before the sidecar existed,
-    which went from working-unvalidated to ValueError. A healthy such
-    layout does not need the full rebuild the error message's first
-    remedy prescribes; this helper writes the missing sidecar once,
-    after CROSS-CHECKING the stated geometry against the tables
-    themselves — a backfill that just trusted the caller would
-    re-create exactly the silently-wrong-distances hole the sidecar
-    plugs. Checks (all driver-cheap: two tiny-table reads plus one
-    column-pruned aggregate over the packed codes):
-
-    - `centroids` has exactly `num_centroids` rows;
-    - `codebook` has exactly `num_codewords` rows and `dim`-length
-      codewords;
-    - `dim` divides by `num_subspaces`;
-    - every packed code in `lists` is < num_codewords**num_subspaces
-      (a coarse but order-of-magnitude check: codes packed under more
-      subspaces or codewords overflow the stated base).
-
-    Refuses to run when a sidecar already exists (nothing to backfill —
-    and overwriting would replace the record of what the codes were
-    packed under) or when the layout carries maintenance generations
-    (those can only be written through sidecar-reading paths, so the
-    sidecar cannot be missing legitimately). The write is the same
-    tmp-then-`os.replace` atomic commit `ivf_pq_write_index` uses."""
-    import json
-
-    sidecar = os.path.join(path, "_params.json")
-    if os.path.exists(sidecar):
-        raise ValueError(
-            f"ivf_pq_backfill_params: {sidecar} already exists — this "
-            "layout needs no backfill. The sidecar records what the "
-            "codes were packed under; to change the geometry, rebuild "
-            "with ivf_pq_write_index instead of overwriting it"
-        )
-    from .index_maintenance import _manifest_file
-
-    if os.path.exists(_manifest_file(os.path.join(path, "lists"))):
-        raise ValueError(
-            f"ivf_pq_backfill_params: {path} carries a maintenance "
-            "manifest — maintained generations are only written "
-            "through sidecar-reading paths, so a missing sidecar "
-            "here means the layout is torn, not merely pre-sidecar. "
-            "Rebuild with ivf_pq_write_index"
-        )
-    if dim % num_subspaces != 0:
-        raise ValueError(
-            f"ivf_pq_backfill_params: dim ({dim}) is not divisible by "
-            f"num_subspaces ({num_subspaces}) — no ivf_pq_write_index "
-            "layout can have this geometry"
-        )
-    n_cent = spark.read.parquet(os.path.join(path, "centroids")).count()
-    cb = spark.read.parquet(os.path.join(path, "codebook"))
-    n_code, cb_dim = cb.select(
-        F.count(F.lit(1)), F.max(F.size("c_vec"))
-    ).first()
-    max_code = (
-        spark.read.parquet(os.path.join(path, "lists"))
-        .select(F.max("pq_code"))
-        .first()[0]
-    )
-    bad = []
-    if n_cent != num_centroids:
-        bad.append(f"centroids table has {n_cent} rows, "
-                   f"stated num_centroids={num_centroids}")
-    if n_code != num_codewords:
-        bad.append(f"codebook has {n_code} rows, "
-                   f"stated num_codewords={num_codewords}")
-    if cb_dim != dim:
-        bad.append(f"codewords are {cb_dim}-dim, stated dim={dim}")
-    if max_code is not None and max_code >= num_codewords ** num_subspaces:
-        bad.append(
-            f"max packed code {max_code} >= "
-            f"{num_codewords}**{num_subspaces} — codes were packed "
-            "under a larger geometry"
-        )
-    if bad:
-        raise ValueError(
-            "ivf_pq_backfill_params: stated geometry contradicts the "
-            f"layout at {path}: " + "; ".join(bad)
-        )
-    tmp = sidecar + ".inprogress"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "num_centroids": num_centroids,
-                "num_subspaces": num_subspaces,
-                "num_codewords": num_codewords,
-                "dim": dim,
-            },
-            f,
-        )
-    os.replace(tmp, sidecar)
 
 
 def ann_ivf_pq_partitioned(
@@ -1607,12 +1495,18 @@ def ivf_write_index(
     centroid_id (one directory per inverted list) plus the tiny centroid
     table beside it. At 100 TB this write is one shuffle-free pass over
     the corpus (the assignment is a broadcast join + window) and the
-    probe path below never reads more than nprobe/C of it."""
+    probe path below never reads more than nprobe/C of it. The
+    assigned table's empty maintenance manifest
+    (`index_maintenance._commit_base`) is the last write, so the
+    layout is born a committed index."""
+    from .index_maintenance import _commit_base
+
     assigned, centroids = ivf_assign(corpus, num_centroids, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
         f"{path}/assigned"
     )
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
+    _commit_base(f"{path}/assigned")
 
 
 def ann_ivf_partitioned(
@@ -1965,7 +1859,10 @@ def rhp_write_index(
     "doc_id" (the `_band_keys` convention), whatever `id_col` the
     source frame uses — so the read-back frame plugs into
     `corpus_banded=` for ANY id_col without a rename that could
-    silently no-op."""
+    silently no-op. The last write is the empty maintenance manifest
+    (`index_maintenance._commit_base`): the index is born committed."""
+    from .index_maintenance import _commit_base
+
     sig_fn = rhp_signatures(dim, num_tables, planes_per_table)
     (
         vectors.select(
@@ -1976,6 +1873,7 @@ def rhp_write_index(
         .partitionBy("band")
         .parquet(path)
     )
+    _commit_base(path)
 
 
 # ------------------------------------------------------- exact near-dup pairs

@@ -724,7 +724,11 @@ def minhash_write_index(
     schedule (per corpus snapshot), not per increment — the daily
     classify then reads ~corpus/|bands| narrow rows per band instead
     of re-shingling and re-hashing every document. Feed the read-back
-    frame to `incremental_dedup_minhash(..., corpus_banded=...)`."""
+    frame to `incremental_dedup_minhash(..., corpus_banded=...)`. The
+    last write is the empty maintenance manifest
+    (`index_maintenance._commit_base`): the index is born committed."""
+    from .index_maintenance import _commit_base
+
     bands_vec = minhash_band_buckets_vec(num_bands, rows_per_band, k)
     (
         _band_keys(corpus, bands_vec, id_col, text_col)
@@ -732,6 +736,7 @@ def minhash_write_index(
         .partitionBy("band")
         .parquet(path)
     )
+    _commit_base(path)
 
 
 _PAIR_CHUNK = 64

@@ -399,13 +399,17 @@ class _NdjsonStreamWriter(DataSourceStreamWriter):
 
     def _commit_manifest(self, messages, batchId: int) -> None:
         """Atomic commit = one manifest write; parts stay where they
-        were uploaded. The manifest is written through a same-directory
-        rename so a reader never observes a torn manifest — the ONE
-        rename this mode performs, and it is driver-local metadata (an
-        object store's single-object PUT gives the same atomicity)."""
+        were uploaded. The manifest goes through the index layer's
+        durable JSON commit (`_atomic_write_json`: fsync, same-directory
+        rename, directory fsync), so a reader never observes a torn or
+        power-cut-emptied manifest — the ONE rename this mode performs,
+        and it is driver-local metadata (an object store's single-object
+        PUT gives the same atomicity)."""
         import glob
         import json
         import os
+
+        from ..operators.index_maintenance import _atomic_write_json
 
         parts = sorted(
             os.path.basename(m.path)
@@ -420,11 +424,10 @@ class _NdjsonStreamWriter(DataSourceStreamWriter):
                     pass
         out = os.path.join(self.path, f"batch_id={batchId}")
         os.makedirs(out, exist_ok=True)
-        manifest = os.path.join(out, "manifest.json")
-        tmp = manifest + ".inprogress"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batchId, "parts": parts}, f)
-        os.replace(tmp, manifest)
+        _atomic_write_json(
+            os.path.join(out, "manifest.json"),
+            {"batch_id": batchId, "parts": parts},
+        )
         # Manifest-anchored GC: a staged object referenced by no
         # manifest is garbage (dead task attempt, or a replaced replay
         # attempt). One batch commits at a time, so everything live is

@@ -300,9 +300,14 @@ def test_write_read_index_delta_ivf_layout(spark, tmp_path):
     (value_cols/partition_col generalization), one maintenance
     generation, folded read equals a from-scratch assignment of the
     current snapshot — base list directories never rewritten."""
+    from github_event_etl_spark.operators.index_maintenance import (
+        _commit_base,
+    )
+
     prev, cur, assign_fn = _ivf_fixture(spark)
     path = str(tmp_path / "ivf")
     assign_fn(prev).write.partitionBy("centroid_id").parquet(path)
+    _commit_base(path)  # the builders' shared manifest step
     base_files = _base_mtimes(path)
     write_index_delta(
         path,
@@ -811,20 +816,80 @@ def test_refresh_stream_composes_with_ivf_pq_encode(spark, sf_dir, tmp_path):
 def test_write_index_delta_requires_committed_base(spark, tmp_path):
     """Maintenance against a vacant or half-written base fails fast:
     a generation written there would fabricate an unreadable index
-    tree — and the recreated directory is exactly what used to disarm
-    compact_index's mid-swap recovery."""
+    tree. The manifest is the only commit state, so a COMPLETE parquet
+    tree with its `_SUCCESS` marker but no manifest is rejected too —
+    by the writer, the reader and compaction alike, each naming the
+    builders that commit an index."""
     band_fn = _mh_band_fn()
     prev, cur = _prev_cur(spark)
     diff = snapshot_diff(prev, cur, "doc_id", ["text"])
-    with pytest.raises(FileNotFoundError, match="no committed base"):
+    # complete parquet tree no builder committed: _SUCCESS, no manifest
+    bare = str(tmp_path / "bare")
+    band_fn(prev).select("doc_id", "band", "bucket").write.partitionBy(
+        "band"
+    ).parquet(bare)
+    assert os.path.exists(os.path.join(bare, "_SUCCESS"))
+    builders = (
+        "minhash_write_index, rhp_write_index, ivf_write_index, "
+        "ivf_pq_write_index"
+    )
+    for op, call in [
+        ("write_index_delta",
+         lambda: write_index_delta(bare, diff, cur, band_fn)),
+        ("read_index", lambda: read_index(spark, bare)),
+        ("compact_index", lambda: compact_index(spark, bare)),
+    ]:
+        with pytest.raises(FileNotFoundError, match=f"{op}: .*{builders}"):
+            call()
+    assert not os.path.exists(os.path.join(bare, "_manifest.json"))
+    assert not os.path.isdir(os.path.join(bare, "_delta"))
+    # vacant path
+    with pytest.raises(FileNotFoundError, match="no committed index"):
         write_index_delta(
             str(tmp_path / "nowhere"), diff, cur, band_fn
         )
     # half-written: directory exists, _SUCCESS does not
     half = tmp_path / "half"
     half.mkdir()
-    with pytest.raises(FileNotFoundError, match="no committed base"):
+    with pytest.raises(FileNotFoundError, match="no committed index"):
         write_index_delta(str(half), diff, cur, band_fn)
+
+
+def test_builders_commit_an_empty_manifest(spark, tmp_path):
+    """Every layout is born committed: each of the four builders writes
+    the empty manifest (base ".", no generations, next_gen 1) as its
+    last step, and `read_index` of the fresh build is exactly the base
+    parquet."""
+    from github_event_etl_spark.operators.index_maintenance import (
+        _read_manifest,
+    )
+    from github_event_etl_spark.operators.similarity import (
+        ivf_pq_write_index,
+        ivf_write_index,
+        rhp_write_index,
+    )
+
+    docs, _ = _prev_cur(spark)
+    vecs, _ = _planted_shift(spark)
+    mh, rhp, ivf, pq = (str(tmp_path / n) for n in ("mh", "rhp", "ivf", "pq"))
+    minhash_write_index(docs, mh, num_bands=2, rows_per_band=2, k=2)
+    rhp_write_index(vecs, rhp, dim=16, num_tables=3, planes_per_table=2)
+    ivf_write_index(vecs, ivf, num_centroids=4)
+    ivf_pq_write_index(vecs, pq, num_centroids=4, num_subspaces=4,
+                       num_codewords=4, dim=16)
+    for index, key in [
+        (mh, "doc_id"),
+        (rhp, "doc_id"),
+        (os.path.join(ivf, "assigned"), "vec_id"),
+        (os.path.join(pq, "lists"), "nid"),
+    ]:
+        assert os.path.exists(os.path.join(index, "_manifest.json")), index
+        m = _read_manifest(index)
+        assert (m["base"], m["generations"], m["next_gen"]) == (".", [], 1)
+        got = read_index(spark, index, key=key)
+        want = spark.read.parquet(index)
+        assert got.columns == want.columns
+        assert sorted(got.collect()) == sorted(want.collect()), index
 
 
 def test_compact_index_survives_fully_tombstoned_fold(spark, tmp_path):
@@ -866,7 +931,7 @@ def test_compact_crash_windows_are_manifest_visibility(spark, tmp_path):
     the new state readable with the old trees as garbage; the next
     compaction call's manifest-anchored GC sweeps either residue."""
     from github_event_etl_spark.operators.index_maintenance import (
-        _read_manifest_file,
+        _read_manifest,
         compact_index,
         read_index,
     )
@@ -891,7 +956,7 @@ def test_compact_crash_windows_are_manifest_visibility(spark, tmp_path):
     assert len(_committed_generations(p1)) == 1  # staging invisible
     assert _rows(read_index(spark, p1)) == _rows(band_fn(cur))
     assert compact_index(spark, p1) == 1
-    m1 = _read_manifest_file(p1)
+    m1 = _read_manifest(p1)
     assert m1["base"] == os.path.join("_base", "v1")
     assert m1["generations"] == []
     assert _rows(read_index(spark, p1)) == _rows(band_fn(cur))
@@ -1012,7 +1077,7 @@ def test_commit_aba_across_compaction_detected(spark, tmp_path):
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
 
     def seq():
-        return (im._read_manifest_file(path) or {}).get("commit_seq", 0)
+        return (im._read_manifest(path) or {}).get("commit_seq", 0)
 
     # one commit + one compaction so the stale read starts from a
     # compacted state (base already off the root)
@@ -1049,6 +1114,134 @@ def test_commit_aba_across_compaction_detected(spark, tmp_path):
     assert not os.path.isdir(staged)  # stale writer's staging discarded
     # the committed state is exactly the concurrent writers' work
     assert _rows(read_index(spark, path)) == _rows(band_fn(nxt))
+
+
+def test_vanished_manifest_at_commit_aborts(spark, tmp_path):
+    """A manifest that disappears between a writer's read and its
+    commit (a builder rebuild overwrote the tree) is drift: both commit
+    paths discard their staging and raise instead of committing against
+    the entry snapshot. A rebuild that has already committed its own
+    fresh manifest aborts the writer too — each build draws a new
+    `build_id`, so two fresh manifests never look alike."""
+    from unittest import mock
+
+    from github_event_etl_spark.operators import index_maintenance as im
+
+    band_fn = _mh_band_fn()
+    prev, cur = _prev_cur(spark)
+    diff = snapshot_diff(prev, cur, "doc_id", ["text"])
+
+    def stage(path, n):
+        gen_rel = os.path.join("_delta", f"gen={n}")
+        os.makedirs(os.path.join(path, gen_rel))
+        return gen_rel, os.path.join(path, gen_rel)
+
+    # (a) generation commit, manifest deleted after staging
+    p1 = str(tmp_path / "idx1")
+    minhash_write_index(prev, p1, num_bands=2, rows_per_band=2, k=2)
+    write_index_delta(p1, diff, cur, band_fn)
+    m = im._read_manifest(p1)
+    gen_rel, staged = stage(p1, 2)
+    os.remove(os.path.join(p1, "_manifest.json"))
+    with pytest.raises(RuntimeError, match="changed between read and commit"):
+        im._commit_generation(p1, m, 2, gen_rel, staged)
+    assert not os.path.isdir(staged)
+    assert im._read_manifest(p1) is None  # nothing committed
+
+    # (b) generation commit after a complete rebuild of the same path
+    p2 = str(tmp_path / "idx2")
+    minhash_write_index(prev, p2, num_bands=2, rows_per_band=2, k=2)
+    m = im._read_manifest(p2)
+    minhash_write_index(cur, p2, num_bands=2, rows_per_band=2, k=2)
+    gen_rel, staged = stage(p2, 1)
+    with pytest.raises(RuntimeError, match="build_id"):
+        im._commit_generation(p2, m, 1, gen_rel, staged)
+    assert not os.path.isdir(staged)
+    assert im._read_manifest(p2)["generations"] == []
+    assert _rows(read_index(spark, p2)) == _rows(band_fn(cur))
+
+    # (c) compaction, manifest deleted after the folded base is staged
+    p3 = str(tmp_path / "idx3")
+    minhash_write_index(prev, p3, num_bands=2, rows_per_band=2, k=2)
+    write_index_delta(p3, diff, cur, band_fn)
+    real_stage = im._stage_compacted_base
+
+    def stage_then_vanish(folded, staging, partition_col):
+        real_stage(folded, staging, partition_col)
+        os.remove(os.path.join(p3, "_manifest.json"))
+
+    with mock.patch.object(
+        im, "_stage_compacted_base", side_effect=stage_then_vanish
+    ):
+        with pytest.raises(RuntimeError, match="during the fold"):
+            compact_index(spark, p3)
+    assert not os.path.isdir(os.path.join(p3, "_base", "v1"))
+    assert im._read_manifest(p3) is None
+
+
+def test_metadata_commits_are_durable(spark, tmp_path, monkeypatch):
+    """Every JSON metadata commit is fsynced before its rename, and its
+    directory right after: the index manifest, the IVF-PQ
+    `_params.json` and `_drift.json` sidecars and the ndjson sink's
+    batch manifest. An un-fsynced rename can surface after a power cut
+    as a present-but-empty file, which bricks every reader."""
+    from pyspark.sql import Row
+
+    from github_event_etl_spark.operators.index_maintenance import (
+        ivf_pq_write_index_delta,
+    )
+    from github_event_etl_spark.operators.similarity import (
+        ivf_pq_write_index,
+    )
+    from github_event_etl_spark.sources.pysource import _NdjsonStreamWriter
+
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.stat(src).st_ino, os.path.basename(dst),
+                       os.stat(os.path.dirname(dst)).st_ino))
+        real_replace(src, dst)
+
+    def commits(call):
+        """{committed file name: fsynced before AND directory after}"""
+        events.clear()
+        call()
+        out = {}
+        for i, e in enumerate(events):
+            if e[0] == "replace":
+                _, f_ino, name, d_ino = e
+                out[name] = (
+                    events[i - 1: i] == [("fsync", f_ino)]
+                    and events[i + 1: i + 2] == [("fsync", d_ino)]
+                )
+        return out
+
+    prev, cur = _planted_shift(spark)
+    path = str(tmp_path / "pq")
+    diff = snapshot_diff(prev, cur, "vec_id", ["embedding"]).localCheckpoint()
+    sink = _NdjsonStreamWriter({"path": str(tmp_path / "sink"),
+                                "commit": "manifest"})
+    msg = sink.write(iter([Row(event_id=i) for i in range(3)]))
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    got = {
+        "build": commits(lambda: ivf_pq_write_index(
+            prev, path, num_centroids=4, num_subspaces=4, num_codewords=4,
+            dim=16)),
+        "delta": commits(lambda: ivf_pq_write_index_delta(
+            spark, path, diff, cur)),
+        "sink": commits(lambda: sink.commit([msg], 0)),
+    }
+    assert got == {
+        "build": {"_manifest.json": True, "_params.json": True},
+        "delta": {"_manifest.json": True, "_drift.json": True},
+        "sink": {"manifest.json": True},
+    }
 
 
 def test_index_stats_tracks_generations_and_compaction(spark, tmp_path):
@@ -1232,46 +1425,6 @@ def test_maybe_compact_policy_fires_exactly_at_thresholds(spark, tmp_path):
     # neither threshold set is a misconfiguration, not a silent no-op
     with pytest.raises(ValueError, match="max_generations"):
         maybe_compact(spark, path)
-
-
-def test_legacy_tree_crash_before_commit_is_not_a_phantom_commit(
-    spark, tmp_path
-):
-    """The legacy-bootstrap hole, closed: on a marker-built tree with
-    no manifest yet, write_index_delta persists the bootstrapped
-    manifest BEFORE staging any data — so a crash after both parquet
-    trees finish but before the generation commit leaves a staged
-    gen the reader does NOT count (the manifest is now the authority
-    and does not list it). Without the eager persist, the marker
-    fallback would resurrect the fully-staged generation as a phantom
-    commit the caller believes failed. The retry then lands normally."""
-    from unittest import mock
-
-    from github_event_etl_spark.operators import index_maintenance as im
-
-    band_fn = _mh_band_fn()
-    prev, cur = _prev_cur(spark)
-    path = str(tmp_path / "idx")
-    minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
-    assert im._read_manifest_file(path) is None  # genuinely legacy
-
-    diff = snapshot_diff(prev, cur, "doc_id", ["text"])
-    with mock.patch.object(
-        im, "_commit_generation",
-        side_effect=RuntimeError("simulated crash before commit"),
-    ):
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            write_index_delta(path, diff, cur, band_fn)
-    # both staged parquet trees are marker-complete on disk…
-    gen1 = os.path.join(path, "_delta", "gen=1")
-    assert os.path.exists(os.path.join(gen1, "appends", "_SUCCESS"))
-    assert os.path.exists(os.path.join(gen1, "tombstones", "_SUCCESS"))
-    # …yet invisible: the eagerly-persisted manifest does not name them
-    assert _committed_generations(path) == []
-    assert _rows(read_index(spark, path)) == _rows(band_fn(prev))
-    # the retry clears the residue and commits for real
-    assert write_index_delta(path, diff, cur, band_fn) == 1
-    assert _rows(read_index(spark, path)) == _rows(band_fn(cur))
 
 
 def test_gc_spares_live_staging_slot_and_sweeps_the_rest(spark, tmp_path):
@@ -1683,10 +1836,12 @@ def test_quantizer_drift_monitor_and_maybe_retrain(spark, tmp_path):
 
 
 def test_maybe_retrain_requires_a_recorded_baseline(spark, tmp_path):
-    """A layout built with record_train_error=False carries no drift
-    baseline — the policy must refuse loudly (comparing against
-    nothing would either never fire or always fire), naming the
-    calibration rebuild."""
+    """A sidecar with no drift baseline (here: stripped out of band
+    from a built layout) — the policy must refuse loudly (comparing
+    against nothing would either never fire or always fire), naming
+    the calibration rebuild."""
+    import json
+
     from github_event_etl_spark.operators.index_maintenance import (
         maybe_retrain,
     )
@@ -1697,9 +1852,16 @@ def test_maybe_retrain_requires_a_recorded_baseline(spark, tmp_path):
     prev, _ = _planted_shift(spark)
     path = str(tmp_path / "uncalibrated")
     ivf_pq_write_index(prev, path, num_centroids=4, num_subspaces=4,
-                       num_codewords=4, dim=16,
-                       record_train_error=False)
-    with pytest.raises(ValueError, match="record_train_error"):
+                       num_codewords=4, dim=16)
+    sidecar = os.path.join(path, "_params.json")
+    with open(sidecar) as f:
+        params = json.load(f)
+    for k in ("train_qerr_mean", "train_qerr_p95", "train_n"):
+        del params[k]
+    with open(sidecar, "w") as f:
+        json.dump(params, f)
+    with pytest.raises(ValueError,
+                       match="no train_qerr_mean baseline.*ivf_pq_write_index"):
         maybe_retrain(spark, path, prev)
 
 

@@ -1515,67 +1515,6 @@ def test_partitioned_probes_run_one_eager_action(emb, spark, tmp_path):
         assert df.count() == 2 * 5
 
 
-def test_ivf_pq_backfill_params_restores_pre_sidecar_layout(
-    emb, spark, tmp_path
-):
-    """The r19 sidecar hard-requirement broke PRE-sidecar layouts
-    (working-unvalidated → ValueError at probe time; ADVICE r19).
-    `ivf_pq_backfill_params` is the documented one-shot migration for
-    a HEALTHY such layout of known geometry: it cross-checks the
-    stated geometry against the tables (refusing every contradiction,
-    so a backfill cannot re-open the silent-wrong-distances hole),
-    writes the sidecar once, and probes serve again — no full rebuild.
-    It refuses to overwrite an existing sidecar and refuses layouts
-    carrying maintenance manifests (those cannot legitimately lack a
-    sidecar)."""
-    import os
-
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_pq,
-        ann_ivf_pq_partitioned,
-        ivf_pq_backfill_params,
-        ivf_pq_write_index,
-    )
-
-    path = str(tmp_path / "ivfpq")
-    ivf_pq_write_index(emb, path)
-    with pytest.raises(ValueError, match="already exists"):
-        ivf_pq_backfill_params(spark, path, 16, 8, 16, 64)
-    os.remove(os.path.join(path, "_params.json"))  # pre-sidecar layout
-
-    qs = emb.filter(F.col("vec_id") < 4)
-    # the probe's refusal names the migration path
-    with pytest.raises(ValueError, match="ivf_pq_backfill_params"):
-        ann_ivf_pq_partitioned(spark, path, qs, k=5, nprobe=4)
-    # every stated-geometry contradiction is refused, named
-    with pytest.raises(ValueError, match="codebook has 16 rows"):
-        ivf_pq_backfill_params(spark, path, 16, 8, 32, 64)
-    with pytest.raises(ValueError, match="centroids table has 16"):
-        ivf_pq_backfill_params(spark, path, 8, 8, 16, 64)
-    with pytest.raises(ValueError, match="not divisible"):
-        ivf_pq_backfill_params(spark, path, 16, 7, 16, 64)
-    with pytest.raises(ValueError, match="larger geometry"):
-        ivf_pq_backfill_params(spark, path, 16, 4, 16, 64)
-    # the true geometry backfills once, and the layout serves again
-    ivf_pq_backfill_params(spark, path, 16, 8, 16, 64)
-    got = {
-        tuple(r)
-        for r in ann_ivf_pq_partitioned(
-            spark, path, qs, k=5, nprobe=4
-        ).collect()
-    }
-    mem = ann_ivf_pq(emb, qs, k=5, nprobe=4, num_centroids=16)
-    assert got == {tuple(r) for r in mem.collect()} and got
-
-    # a maintained layout missing its sidecar is TORN, not pre-sidecar
-    os.remove(os.path.join(path, "_params.json"))
-    os.makedirs(os.path.join(path, "lists"), exist_ok=True)
-    with open(os.path.join(path, "lists", "_manifest.json"), "w") as f:
-        f.write("{}")
-    with pytest.raises(ValueError, match="maintenance manifest"):
-        ivf_pq_backfill_params(spark, path, 16, 8, 16, 64)
-
-
 def test_ivf_pq_geometry_error_names_the_entry_point(
     emb, spark, tmp_path
 ):
