@@ -618,9 +618,7 @@ def refresh_index_from_change_stream(
     key: str = "doc_id",
     value_cols: tuple[str, ...] = ("band", "bucket"),
     partition_col: str = "band",
-    assert_unique_keys: bool = True,
     reconcile_order_col: str | None = None,
-    assert_order: bool = True,
     max_generations: int | None = None,
     max_read_amplification: float | None = None,
 ) -> None:
@@ -653,23 +651,19 @@ def refresh_index_from_change_stream(
     batch that coalesces several change-log drops (larger triggers do)
     can carry a key twice — conflicting payloads both band, and an
     add-then-remove pair leaks a null-payload row through the upsert
-    semi-join. Three ways to hold it: publish one RECONCILED diff per
+    semi-join. Two ways to hold it: publish one RECONCILED diff per
     batch (diff of oldest→newest snapshot, the change-log contract);
-    pass `reconcile_order_col` (a per-key-unique sequence column on
+    or pass `reconcile_order_col` (a per-key-unique sequence column on
     the log rows) and the batch nets itself through
     `merge.reconcile_change_log` before the generation is written —
     the coalescing-trigger deployment path, where a batch that nets to
     NOTHING (every key added then removed in-window) skips its
-    generation entirely; or leave the default `assert_unique_keys`
-    guard to fail the batch fast (one change-sized aggregate — the
-    shared `merge.assert_unique_key` fail-fast). The two guards are
-    SEPARATE knobs because they protect different invariants:
-    `assert_unique_keys` covers the no-reconcile path's
-    one-row-per-key contract (vacuous once a batch is netted), while
-    `assert_order` covers the reconcile path's precondition (non-null,
-    tie-free (key, order) pairs — unguarded, an all-null-order key
-    silently VANISHES from the net log). Opt out of either only when
-    the producer guarantees that contract upstream.
+    generation entirely. Each path's precondition is checked on every
+    batch, with no opt-out (one change-sized aggregate each): without
+    an order column a duplicate key fails the batch fast
+    (`merge.assert_unique_key`); with one, the raw rows must carry
+    non-null, tie-free (key, order) pairs (unguarded, an
+    all-null-order key silently VANISHES from the net log).
 
     Compaction policy: pass `max_generations` and/or
     `max_read_amplification` and `maybe_compact` runs after each
@@ -692,8 +686,7 @@ def refresh_index_from_change_stream(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _prepare_stream_batch(
-            batch_df, key, reconcile_order_col, assert_order,
-            assert_unique_keys, batch_id,
+            batch_df, key, reconcile_order_col, batch_id,
             "refresh_index_from_change_stream",
         )
         if batch_df is None:
@@ -723,8 +716,6 @@ def _prepare_stream_batch(
     batch_df: DataFrame,
     key: str,
     reconcile_order_col: str | None,
-    assert_order: bool,
-    assert_unique_keys: bool,
     batch_id: int,
     op: str,
 ) -> DataFrame | None:
@@ -732,8 +723,8 @@ def _prepare_stream_batch(
     generic and IVF-PQ loops cannot drift on the guard semantics the
     `refresh_index_from_change_stream` docstring contracts): skip an
     empty delivery, net a coalesced batch through
-    `merge.reconcile_change_log` when an order column is given (the
-    reconcile-precondition guard riding `assert_order`), persist the
+    `merge.reconcile_change_log` when an order column is given (with
+    its reconcile-precondition guard on), persist the
     change-sized frame (two consumers downstream — the stale select
     and the upsert semi-join), skip a batch that nets to NOTHING, or
     fail-fast on duplicate keys on the no-reconcile path. Returns the
@@ -747,16 +738,14 @@ def _prepare_stream_batch(
         # the guard the reconcile path needs is the RECONCILE
         # precondition on the RAW rows — non-null, tie-free
         # (key, order) pairs — not key uniqueness, which the
-        # groupBy makes vacuously true post-net; its own knob so
-        # disabling the (here-irrelevant) uniqueness guard cannot
-        # silently disarm the null-order protection
+        # groupBy makes vacuously true post-net
         payload = [
             c for c in batch_df.columns
             if c not in (key, "change_type", reconcile_order_col)
         ]
         batch_df = reconcile_change_log(
             batch_df, key, reconcile_order_col, payload,
-            assert_order=assert_order,
+            assert_order=True,
         )
     batch_df.persist()
     try:
@@ -767,7 +756,7 @@ def _prepare_stream_batch(
             if batch_df.isEmpty():
                 batch_df.unpersist()
                 return None
-        elif assert_unique_keys:
+        else:
             assert_unique_key(
                 batch_df, key,
                 f"{op} (batch {batch_id})",
@@ -801,9 +790,7 @@ def ivf_pq_refresh_from_change_stream(
     checkpoint_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assert_unique_keys: bool = True,
     reconcile_order_col: str | None = None,
-    assert_order: bool = True,
     max_generations: int | None = None,
     max_read_amplification: float | None = None,
 ) -> None:
@@ -842,8 +829,7 @@ def ivf_pq_refresh_from_change_stream(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _prepare_stream_batch(
-            batch_df, id_col, reconcile_order_col, assert_order,
-            assert_unique_keys, batch_id,
+            batch_df, id_col, reconcile_order_col, batch_id,
             "ivf_pq_refresh_from_change_stream",
         )
         if batch_df is None:

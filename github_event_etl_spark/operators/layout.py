@@ -14,6 +14,12 @@ rows are already co-located by bucket id. At 100 TB the facts→dims
 join shuffle is usually the single largest cost in a pipeline; a
 bucketed fact table pays that shuffle once at write time and amortizes
 it over every subsequent join.
+
+The `ensure_*` faces write a layout once per path and serve it on later
+calls, in this process or a fresh one. `scratch.materialize_once` is
+their only commit: the files count as written when `<path>/_spec.json`
+equals the call's spec, which is committed last, so a torn write or a
+layout written for another spec is rewritten, never served.
 """
 
 from __future__ import annotations
@@ -22,6 +28,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..scratch import materialize_once
 
 
 def write_day_partitioned(
@@ -46,20 +54,6 @@ def read_day_partition(
     in the scan) — no data files outside the day are opened."""
     df = spark.read.parquet(path)
     return df.filter(F.col("bucket_day") == day)
-
-
-def _read_spec(spec_path: str):
-    """Read a materialize-once fingerprint file; None when absent or
-    unreadable (both mean: do not trust the files, rewrite). Shared by
-    every ensure_* face so the compare rule can never diverge between
-    them."""
-    import json as _json
-
-    try:
-        with open(spec_path) as f:
-            return _json.load(f)
-    except (OSError, ValueError):
-        return None
 
 
 def _normalize_location(loc: str) -> str:
@@ -167,30 +161,27 @@ def ensure_bucketed_table(
     """Cross-process idempotent face of `write_bucketed_table`: the
     bucketed files materialize ONCE per `path`, and later processes
     re-REGISTER the existing layout instead of re-shuffling and
-    re-writing it (the `events_replay_dir` materialize-once contract).
+    re-writing it.
 
-    Three cases:
-    - table already in this session's catalog AND the on-disk
-      fingerprint matches this call's spec → return it (the fast
-      path is gated by the SAME fingerprint rule as the register
-      path: a same-session caller asking for a different bucket
-      count/sort/schema must not silently get the old layout);
-    - files exist on disk (`_SUCCESS` plus a MATCHING `_BUCKET_SPEC`
-      fingerprint) but the catalog is fresh (new process) →
-      `CREATE TABLE ... CLUSTERED BY ... LOCATION`, the DDL a
-      metastore-backed deployment would persist once;
-    - nothing on disk, or the fingerprint disagrees with this call's
-      (bucket spec, sort col, schema) → `write_bucketed_table` (pays
-      the one-time shuffle+sort+write).
+    The files are committed by `scratch.materialize_once` with a spec
+    of (bucket col, bucket count, sort col, schema); a tree whose spec
+    differs is rewritten (`write_bucketed_table`, which registers the
+    table). When the committed tree is served, the table is returned
+    as registered in this session, or — in a fresh catalog (new
+    process) — re-registered by `CREATE TABLE ... CLUSTERED BY ...
+    LOCATION`, the DDL a metastore-backed deployment would persist
+    once. A name already registered here must point at `path`: a
+    different location or a temp view (no location) under the name is
+    a caller collision and raises.
 
-    The fingerprint is what makes the register path SAFE to trust:
+    The spec is what makes the register path SAFE to trust:
     registering bucket metadata the files don't satisfy would make
     Spark skip the join shuffle and silently DROP matches (rows hashed
     into buckets the metadata doesn't predict never meet their join
     partners) — a spec/schema change across code versions must rewrite,
-    never re-register. The fingerprint does not hash the DATA: callers
-    must use a distinct `path` per source dataset (as the catalog keys
-    do, one per sf), since regenerated source files under an unchanged
+    never re-register. The spec does not hash the DATA: callers must
+    use a distinct `path` per source dataset (as the catalog keys do,
+    one per sf), since regenerated source files under an unchanged
     path+spec cannot be detected here.
 
     Live-handle hazard on in-session respec (the same hazard the
@@ -203,24 +194,12 @@ def ensure_bucketed_table(
     handle the old spec handed out; callers that need both layouts
     live at once must use distinct paths.
     """
-    import json as _json
-    import os
-
-    spec = {
-        "bucket_col": bucket_col,
-        "num_buckets": num_buckets,
-        "sort_col": sort_col,
-        "schema": df.schema.simpleString(),
-    }
-    spec_path = os.path.join(path, "_BUCKET_SPEC.json")
-
     if spark.catalog.tableExists(table_name):
         # A registered table must actually point at THIS call's `path`
-        # before the fingerprint at that path can vouch for it — the
-        # same name registered at a different location is a caller
-        # collision, answered loudly rather than with another
-        # location's data (or a silent drop of the other caller's
-        # registration).
+        # before the spec at that path can vouch for it — the same name
+        # registered at a different location is a caller collision,
+        # answered loudly rather than with another location's data (or
+        # a silent drop of the other caller's registration).
         loc = _table_location(spark, table_name)
         if loc is None:
             # A catalog entry with no storage location (a temp view
@@ -240,35 +219,31 @@ def ensure_bucketed_table(
                 f"registered at {loc!r}, not the requested {path!r} — "
                 "use a distinct table name per layout path"
             )
-        # Same fingerprint rule as the register path: return the
-        # session table only when the files at `path` were written for
-        # exactly this spec. A mismatch (different bucket count / sort
-        # / schema requested in the same session) drops the stale
-        # registration and falls through to the rewrite below — the
-        # cross-process behavior, applied in-process.
-        if _read_spec(spec_path) == spec:
-            return spark.table(table_name)
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        if _read_spec(spec_path) == spec:
-            ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in df.schema.fields
-            )
-            sort_clause = (
-                f"SORTED BY ({sort_col}) " if sort_col is not None else ""
-            )
-            spark.sql(
-                f"CREATE TABLE {table_name} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY ({bucket_col}) {sort_clause}"
-                f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
-            )
-            return spark.table(table_name)
-    write_bucketed_table(
-        df, table_name, path, bucket_col, num_buckets, sort_col
+    spec = {
+        "bucket_col": bucket_col,
+        "num_buckets": num_buckets,
+        "sort_col": sort_col,
+        "schema": df.schema.simpleString(),
+    }
+    wrote = materialize_once(
+        path,
+        spec,
+        lambda p: write_bucketed_table(
+            df, table_name, p, bucket_col, num_buckets, sort_col
+        ),
     )
-    with open(spec_path, "w") as f:
-        _json.dump(spec, f)
+    if not wrote and not spark.catalog.tableExists(table_name):
+        ddl = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+        )
+        sort_clause = (
+            f"SORTED BY ({sort_col}) " if sort_col is not None else ""
+        )
+        spark.sql(
+            f"CREATE TABLE {table_name} ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({bucket_col}) {sort_clause}"
+            f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
+        )
     return spark.table(table_name)
 
 
@@ -288,23 +263,20 @@ def ensure_zordered(
     shuffle + sorted write — the same amortization contract as
     `ensure_bucketed_table`.
 
-    The `_ZORDER_SPEC.json` fingerprint records (dims, bits, file
-    count, schema, derivation, normalize). Unlike bucket metadata, a stale
-    Z-layout cannot DROP rows — pruning only narrows the scan via
-    footer stats, values are layout-invariant — but a schema or
-    derived-column change across code versions would make the cached
-    files answer with old CONTENT, so a fingerprint mismatch rewrites,
-    never trusts. The schema string alone cannot see a derived
-    column's DEFINITION change (same name, same type, new formula):
-    callers computing columns into `df` must fold the formula's
-    constants into `derivation` (as layout_zorder_prune does with its
-    day-ordinal epoch) so a definition change rewrites instead of
-    serving stale values. Same caveat as the bucketed face: the
-    fingerprint does not hash the data; use a distinct `path` per
-    source dataset."""
-    import json as _json
-    import os
-
+    The files are committed by `scratch.materialize_once` with a spec
+    of (dims, bits, file count, schema, derivation, normalize). Unlike
+    bucket metadata, a stale Z-layout cannot DROP rows — pruning only
+    narrows the scan via footer stats, values are layout-invariant —
+    but a schema or derived-column change across code versions would
+    make the cached files answer with old CONTENT, so a spec mismatch
+    rewrites, never trusts. The schema string alone cannot see a
+    derived column's DEFINITION change (same name, same type, new
+    formula): callers computing columns into `df` must fold the
+    formula's constants into `derivation` (as layout_zorder_prune does
+    with its day-ordinal epoch) so a definition change rewrites instead
+    of serving stale values. Same caveat as the bucketed face: the spec
+    does not hash the data; use a distinct `path` per source
+    dataset."""
     spec = {
         "col_a": col_a,
         "col_b": col_b,
@@ -314,18 +286,15 @@ def ensure_zordered(
         "derivation": derivation,
         "normalize": normalize,
     }
-    spec_path = os.path.join(path, "_ZORDER_SPEC.json")
-    spark = df.sparkSession
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        if _read_spec(spec_path) == spec:
-            return spark.read.parquet(path)
-    write_zordered(
-        df, path, col_a, col_b,
-        bits=bits, num_files=num_files, normalize=normalize,
+    materialize_once(
+        path,
+        spec,
+        lambda p: write_zordered(
+            df, p, col_a, col_b,
+            bits=bits, num_files=num_files, normalize=normalize,
+        ),
     )
-    with open(spec_path, "w") as f:
-        _json.dump(spec, f)
-    return spark.read.parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
 def pack_layout(

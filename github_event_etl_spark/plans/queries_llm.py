@@ -17,8 +17,6 @@ SQL). The one rows-only key is the HLL `agg_approx_distinct`
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -99,26 +97,20 @@ from ..operators.text_dedup import (
     words,
 )
 from ..operators.vocab import tfidf_topk, unigram_rarity
-from ..scratch import scratch_dir
+from ..scratch import materialize_once, scratch_dir
 from ..sources.tables import load_table
 from .catalog import query
 
 
-def _fixture_token(*parts) -> str:
-    """8-hex fingerprint folded into materialize-once scratch paths
-    (the indexed-dedup keys) so editing the fixture automatically keys
-    a fresh index tree instead of serving stale committed content —
-    whose failure mode was a confusing oracle value-mismatch pointing
-    nowhere near the fixture (ADVICE r15 item 3). Call sites pass the
-    key's ORACLE SQL: the oracle is the complete public description of
-    the expected output (plant literals, residue classes, split rule,
-    banding geometry), so any fixture edit either flows through it —
-    new token, fresh tree — or desynchronizes fixture from oracle,
-    which the sf0.001 differential pytest fails loudly on the spot.
-    Hashing hand-picked constants instead was the r16 review's
-    finding: it silently missed the residue moduli."""
-    joined = "|".join(str(p) for p in parts)
-    return hashlib.md5(joined.encode("utf-8")).hexdigest()[:8]
+# The indexed-fixture keys below materialize their index tree once per
+# dataset through `scratch.materialize_once`. Each spec carries the
+# key's ORACLE SQL next to the geometry and the input schema: the
+# oracle is the complete public description of the expected output
+# (plant literals, residue classes, split rule, banding geometry), so
+# any fixture edit either changes the spec — the tree is rewritten —
+# or desynchronizes fixture from oracle, which the sf0.001
+# differential pytest fails loudly on the spot (ADVICE r15 item 3;
+# hand-picked constants alone silently missed the residue moduli).
 
 # --------------------------------------------------------------------------
 # Shared SQL fragments (DuckDB dialect), kept in lockstep with the Spark
@@ -558,37 +550,20 @@ def llm_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     slot) and plan-gates that the indexed classify carries strictly
     fewer Arrow banding UDF evaluations (the corpus banding is gone);
     bench.py keeps its component census seat."""
-    import os as _os
-
     corpus, batch = _incrm_split(spark, sf_dir)
-    # The banding geometry is baked into the index CONTENT, so it is
-    # folded into the PATH (the events_replay_dir convention: retuning
-    # _NUM_BANDS/_ROWS_PER_BAND gets a fresh tree instead of silently
-    # serving stale band keys); the shingle k rides the same suffix,
-    # and the fixture token fingerprints this key's FULL oracle SQL —
-    # which spells out _incrm_split's plant literals, residue classes,
-    # and split rule — so any fixture edit gets a fresh tree
-    # automatically instead of serving stale committed plants (ADVICE
-    # r15 item 3; widened from hand-picked constants to the whole
-    # oracle per the r16 review).
-    index = scratch_dir(
-        sf_dir,
-        f"minhash_index_b{_NUM_BANDS}r{_ROWS_PER_BAND}k3_f"
-        + _fixture_token(_INCRM_ORACLE),
+    # built per corpus SNAPSHOT in production: once per dataset here
+    index = scratch_dir(sf_dir, "minhash_index")
+    materialize_once(
+        index,
+        {
+            "num_bands": _NUM_BANDS, "rows_per_band": _ROWS_PER_BAND,
+            "k": 3, "oracle": _INCRM_ORACLE,
+            "schema": corpus.schema.simpleString(),
+        },
+        lambda p: minhash_write_index(
+            corpus, p, num_bands=_NUM_BANDS, rows_per_band=_ROWS_PER_BAND,
+        ),
     )
-    # materialize-once per dataset, gated on the _SUCCESS marker (the
-    # replay-dir convention, streaming/replay.py) — a bare dir-exists
-    # check would let an interrupted first write permanently poison
-    # the key (the dir appears before the commit). The fixture derives
-    # deterministically from the immutable sf_dir, so a COMMITTED
-    # index is the correct index; the ivf key's rewrite-every-run
-    # convention is for layouts whose parameters the key itself
-    # sweeps.
-    if not _os.path.exists(_os.path.join(index, "_SUCCESS")):
-        minhash_write_index(
-            corpus, index, num_bands=_NUM_BANDS,
-            rows_per_band=_ROWS_PER_BAND,
-        )
     return incremental_dedup_minhash(
         corpus=corpus,
         batch=batch,
@@ -4039,31 +4014,24 @@ def llm_dedup_incremental_semantic_indexed(
     in-memory/indexed frame equality directly and plan-gates the
     Arrow-stage reduction (only the batch side still runs the
     signature UDF); bench.py keeps its component census seat."""
-    import os as _os
-
     corpus, batch = _incr_sem_split(spark, sf_dir)
-    # geometry folded into the path; _SUCCESS-gated materialize-once
-    # (the minhash_index conventions — see that key's comments for the
-    # interrupted-write and stale-retune rationale)
     # "doc" marks the doc_id-named id column (rhp_write_index's
-    # contract since the id-alias fix) so a pre-fix tree under the old
-    # name can never be served; the fixture token fingerprints this
-    # key's FULL oracle SQL — which spells out _planted_dup_corpus's
-    # offset/perturbation literals, the three-residue batch split, and
-    # the banding geometry — so any fixture edit gets a fresh tree
-    # automatically (ADVICE r15 item 3; widened from hand-picked
-    # constants to the whole oracle per the r16 review)
-    index = scratch_dir(
-        sf_dir,
-        f"rhp_doc_index_t{_SEMANTIC_LSH_TABLES}p{_SEMANTIC_LSH_PLANES}_f"
-        + _fixture_token(_INCR_SEM_ORACLE),
-    )
-    if not _os.path.exists(_os.path.join(index, "_SUCCESS")):
-        rhp_write_index(
-            corpus, index, dim=64,
+    # contract since the id-alias fix)
+    index = scratch_dir(sf_dir, "rhp_doc_index")
+    materialize_once(
+        index,
+        {
+            "dim": 64, "num_tables": _SEMANTIC_LSH_TABLES,
+            "planes_per_table": _SEMANTIC_LSH_PLANES,
+            "oracle": _INCR_SEM_ORACLE,
+            "schema": corpus.schema.simpleString(),
+        },
+        lambda p: rhp_write_index(
+            corpus, p, dim=64,
             num_tables=_SEMANTIC_LSH_TABLES,
             planes_per_table=_SEMANTIC_LSH_PLANES,
-        )
+        ),
+    )
     return incremental_dedup_semantic(
         corpus=corpus,
         batch=batch,
@@ -4708,8 +4676,8 @@ def llm_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CURRENT snapshot — so the oracle simply recomputes cur's banding
 # with the shared MinHash SQL formula pair and never sees prev, the
 # diff, or the maintenance at all. Module constant because the key's
-# scratch path fingerprints it (with the prev-snapshot derivation
-# rules the oracle deliberately omits — see the key's path comment).
+# materialize-once spec carries it (with the prev-snapshot derivation
+# rules the oracle deliberately omits — see the key's spec comment).
 _APPLY_DIFF_ORACLE = f"""
     WITH cur AS (
       SELECT doc_id, text FROM documents
@@ -4761,8 +4729,6 @@ def llm_index_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     change-sized tombstone+append generations under the index, base
     partitions never rewritten) is pinned by an end-to-end
     frame-equality pytest against a from-scratch rebuild."""
-    import os as _os
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
@@ -4771,24 +4737,23 @@ def llm_index_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columns are pruned right after the builders apply their rules
     prev = _snap_prev(docs).select("doc_id", "text")
     cur = _snap_cur(docs).select("doc_id", "text")
-    # Geometry in the path (retunes re-key, the index convention) plus
-    # a fixture token over this key's oracle AND the prev-snapshot
-    # derivation: the oracle describes only cur's banding, but the
-    # MATERIALIZED tree is prev's — its content also depends on the
-    # 'added' membership class and the prev text-edit rule, so both
-    # are folded in explicitly (the _fixture_token convention widened
-    # exactly as far as the committed content reaches).
-    index = scratch_dir(
-        sf_dir,
-        f"minhash_prev_index_b{_NUM_BANDS}r{_ROWS_PER_BAND}k3_f"
-        + _fixture_token(
-            _APPLY_DIFF_ORACLE, _SNAP_ADDED, _SNAP_PREV_TEXT_SQL
+    # the oracle describes only cur's banding, but the MATERIALIZED
+    # tree is prev's — its content also depends on the 'added'
+    # membership class and the prev text-edit rule, so both join the
+    # spec
+    index = scratch_dir(sf_dir, "minhash_prev_index")
+    materialize_once(
+        index,
+        {
+            "num_bands": _NUM_BANDS, "rows_per_band": _ROWS_PER_BAND,
+            "k": 3, "oracle": _APPLY_DIFF_ORACLE,
+            "snap_added": _SNAP_ADDED, "snap_prev_text": _SNAP_PREV_TEXT_SQL,
+            "schema": prev.schema.simpleString(),
+        },
+        lambda p: minhash_write_index(
+            prev, p, num_bands=_NUM_BANDS, rows_per_band=_ROWS_PER_BAND
         ),
     )
-    if not _os.path.exists(_os.path.join(index, "_SUCCESS")):
-        minhash_write_index(
-            prev, index, num_bands=_NUM_BANDS, rows_per_band=_ROWS_PER_BAND
-        )
     # lazily checkpointed: the change log feeds two maintenance
     # consumers (anti + semi), whose build-side verdict predicates are
     # pushed below each broadcast exchange — unmaterialized, the diff's
@@ -4911,8 +4876,6 @@ def llm_ivf_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     value_cols=('centroid_id',) / partition_col='centroid_id':
     change-sized tombstone+append generations under the base lists) is
     pinned by frame-equality pytest in tests/test_index_maintenance.py."""
-    import os as _os
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -4927,26 +4890,22 @@ def llm_ivf_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "centroid_id"
         )
 
-    # geometry + fixture token in the path (the index convention):
     # the oracle describes cur's assignment only, so the MATERIALIZED
     # prev tree's extra dependencies — the 'added' membership class
-    # and the edit-class negation rule — are folded in explicitly
-    index = scratch_dir(
-        sf_dir,
-        f"ivf_prev_index_c{_IVF_APPLY_CENTROIDS}_f"
-        + _fixture_token(
-            _IVF_APPLY_ORACLE, _SNAP_ADDED, _SNAP_EDIT, "negate-edit-vec"
-        ),
-    )
-    # overwrite, not errorifexists: a first write that crashed mid-job
-    # leaves the dir without _SUCCESS, and the retry must replace the
-    # residue rather than wedge on AnalysisException — the same mode
-    # every index writer uses (minhash_write_index, ivf_write_index,
-    # rhp_write_index)
-    if not _os.path.exists(_os.path.join(index, "_SUCCESS")):
-        assign(prev).write.mode("overwrite").partitionBy(
+    # and the edit-class negation rule — join the spec
+    index = scratch_dir(sf_dir, "ivf_prev_index")
+    materialize_once(
+        index,
+        {
+            "num_centroids": _IVF_APPLY_CENTROIDS,
+            "oracle": _IVF_APPLY_ORACLE, "snap_added": _SNAP_ADDED,
+            "snap_edit": _SNAP_EDIT, "edit_rule": "negate-edit-vec",
+            "schema": prev.schema.simpleString(),
+        },
+        lambda p: assign(prev).write.mode("overwrite").partitionBy(
             "centroid_id"
-        ).parquet(index)
+        ).parquet(p),
+    )
     # change-sized and twice-consumed — same checkpoint contract as
     # the band-index key above
     diff = snapshot_diff(prev, cur, "vec_id", ["embedding"]).localCheckpoint(
@@ -5048,8 +5007,6 @@ def llm_ivf_pq_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     folding them via read_index) is pinned by frame-equality pytest
     in tests/test_index_maintenance.py; this key carries the logical
     layer's full value oracle."""
-    import os as _os
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -5068,23 +5025,23 @@ def llm_ivf_pq_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prev = _emb_snap_prev(emb)
     cur = _emb_snap_cur(emb)
-    # geometry + fixture token in the path (the index convention): the
-    # oracle describes cur's lists only, so the MATERIALIZED prev
+    # the oracle describes cur's lists only, so the MATERIALIZED prev
     # tree's extra dependencies — the 'added' membership class and the
-    # edit-class negation rule — are folded in explicitly
-    index = scratch_dir(
-        sf_dir,
-        f"ivf_pq_prev_lists_c{_IVF_APPLY_CENTROIDS}"
-        f"s{_PQ_SUBSPACES}w{_PQ_CODEWORDS}_f"
-        + _fixture_token(
-            _ivf_pq_apply_oracle(), _SNAP_ADDED, _SNAP_EDIT,
-            "negate-edit-vec",
-        ),
-    )
-    if not _os.path.exists(_os.path.join(index, "_SUCCESS")):
-        encode(nidify(prev)).write.mode("overwrite").partitionBy(
+    # edit-class negation rule — join the spec
+    index = scratch_dir(sf_dir, "ivf_pq_prev_lists")
+    materialize_once(
+        index,
+        {
+            "num_centroids": _IVF_APPLY_CENTROIDS,
+            "num_subspaces": _PQ_SUBSPACES, "num_codewords": _PQ_CODEWORDS,
+            "oracle": _ivf_pq_apply_oracle(), "snap_added": _SNAP_ADDED,
+            "snap_edit": _SNAP_EDIT, "edit_rule": "negate-edit-vec",
+            "schema": prev.schema.simpleString(),
+        },
+        lambda p: encode(nidify(prev)).write.mode("overwrite").partitionBy(
             "centroid_id"
-        ).parquet(index)
+        ).parquet(p),
+    )
     # change-sized and twice-consumed — the apply_index_diff contract
     diff = (
         snapshot_diff(prev, cur, "vec_id", ["embedding"])

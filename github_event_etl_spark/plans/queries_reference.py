@@ -31,12 +31,6 @@ _TS_SQL = "strftime(ts, '%Y-%m-%d %H:%M:%S.%f')"
 _SCORING_KINDS = ("purchase", "signup")
 
 
-def _tmpdir(tag: str, sf_dir: str) -> str:
-    """Deterministic scratch dir per (query, dataset) — realpath-keyed
-    identity via scratch_dir so same-basename sf_dirs never share."""
-    return scratch_dir(sf_dir, tag)
-
-
 # ---------------------------------------------------------------- A1/B1: scans
 
 
@@ -77,7 +71,7 @@ def scan_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
     out as .json.gz and read back with an explicit schema — Spark
     gunzips natively, one task per file; no imperative decompress step.
     """
-    out = _tmpdir("archive_ndjson", sf_dir)
+    out = scratch_dir(sf_dir, "archive_ndjson")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", ts_string(F.col("ts")).alias("ts_str")
     )
@@ -157,7 +151,7 @@ def parse_ndjson_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a corrupt-record column and the query keeps the good ones — the
     reference's log-and-skip policy (update-contributor-scores.js:147-150)
     without killing the scan."""
-    out = _tmpdir("corrupt_ndjson", sf_dir)
+    out = scratch_dir(sf_dir, "corrupt_ndjson")
     ev = load_table(spark, sf_dir, "events")
     line = F.to_json(F.struct("event_id", "event_type"))
     corrupted = F.when(
@@ -390,7 +384,7 @@ def retention_expire_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     The horizon (newest day − 7) comes from the partition DIRECTORY
     NAMES the write just produced — a pure metadata read, zero Spark
     jobs, zero rows touched. No declared query collects row data."""
-    out = _tmpdir("events_retention", sf_dir)
+    out = scratch_dir(sf_dir, "events_retention")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     write_day_partitioned(ev, out)
     days = sorted(

@@ -473,8 +473,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the plain-join oracle asserts.
 
     The bucketed twins materialize ONCE per (sf, table) under the
-    scratch dir — the events_replay_dir materialize-once contract: a
-    fresh process finds the files and re-REGISTERS the layout
+    scratch dir (`scratch.materialize_once`): a fresh process finds
+    the committed files and re-REGISTERS the layout
     (CREATE TABLE ... CLUSTERED BY ... LOCATION, the DDL a metastore
     persists) instead of re-paying the shuffle+write
     (operators/layout.py ensure_bucketed_table)."""
@@ -498,8 +498,8 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         name = f"geetl_{sf}_{table}_bucketed"
         # No bare tableExists shortcut here: ensure_bucketed_table's own
-        # fast path IS the warm path, and it is the checked one — spec
-        # fingerprint, storage-location match, and the loud temp-view
+        # fast path IS the warm path, and it is the checked one —
+        # committed spec, storage-location match, and the loud temp-view
         # collision error. A caller-side spark.table(name) would bypass
         # all three for the exact collisions they exist to catch.
         tables[table] = ensure_bucketed_table(
@@ -558,7 +558,7 @@ def layout_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan facts stay pinned in the footer-stats pytest. Decimal-exact
     sums keep the double hash stable across row orders. The layout
     materializes once per sf under the scratch dir and re-reads on
-    warm starts (ensure_zordered's fingerprint contract)."""
+    warm starts (ensure_zordered's materialize-once spec)."""
     from ..operators.layout import ensure_zordered
 
     ev = load_table(spark, sf_dir, "events").withColumn(
@@ -572,7 +572,7 @@ def layout_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day_num",
         bits=16,
         num_files=8,
-        # the derived column's DEFINITION is part of the fingerprint:
+        # the derived column's DEFINITION is part of the spec:
         # an epoch change must rewrite the cached layout, not serve
         # day_num values computed under the old epoch
         derivation=f"day_num=datediff(to_date(ts),'{_ZORDER_EPOCH}')",

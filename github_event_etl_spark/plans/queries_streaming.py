@@ -18,7 +18,6 @@ restart ≙ the hour-exists idempotence scan (:195-204).
 
 from __future__ import annotations
 
-import os
 import shutil
 import tempfile
 
@@ -26,9 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.timeutil import ts_string
-from ..scratch import scratch_dir
-from ..sources.tables import load_table
 from ..streaming.replay import (
+    _replay_drop,
     events_replay_dir,
     events_replay_dir_by_type,
     events_replay_dir_with_dupes,
@@ -482,22 +480,19 @@ def _retx_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Replay dir where every event appears twice: the original
     (arrival 0) and a retransmitted copy with a mutated payload
     (arrival 1, value+100). Shared fixture for both stateful-dedup
-    variants; idempotent scratch-dir contract as replay.py."""
-    src = scratch_dir(sf_dir, "stream_src_retx")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            F.expr("unix_micros(ts)").alias("ts_us"),
-            "user_id",
-            "event_type",
-            "value",
-        )
+    variants; materialize-once like every replay.py drop."""
+    bump = 100.0
+
+    def derive(ev: DataFrame) -> DataFrame:
         first = ev.withColumn("arrival", F.lit(0))
-        retx = first.withColumn("value", F.col("value") + 100.0).withColumn(
+        retx = first.withColumn("value", F.col("value") + bump).withColumn(
             "arrival", F.lit(1)
         )
-        first.unionByName(retx).repartition(8).write.mode("overwrite").json(src)
-    return src
+        return first.unionByName(retx)
+
+    return _replay_drop(
+        spark, sf_dir, "stream_src_retx", 8, derive, retx_value_bump=bump
+    )
 
 
 @query(

@@ -5,7 +5,9 @@ The reference's stream is a Redis Stream fed by polling ingest
 (insert-events.js → insert-events-into-db.lua XADD); the Spark-native
 equivalent is a file (or Kafka) source replayed through the micro-batch
 engine. These helpers materialize the test `events` table as an NDJSON
-drop directory — the same shape a real ingest tier would land — and run
+drop directory — the same shape a real ingest tier would land — once
+per dataset (committed by `scratch.materialize_once`, so a tree from
+an interrupted write or an older derivation is rewritten), and run
 bounded streams to a deterministic final state with
 Trigger.AvailableNow.
 
@@ -28,13 +30,14 @@ import os
 import shutil
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..scratch import scratch_dir
-from ..sources.tables import load_table
+from ..scratch import materialize_once, scratch_dir
+from ..sources.tables import SCHEMAS, load_table
 
 REPLAY_SCHEMA = T.StructType(
     [
@@ -47,6 +50,38 @@ REPLAY_SCHEMA = T.StructType(
 )
 
 
+def _replay_drop(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    num_files: int,
+    derive: Callable[[DataFrame], DataFrame],
+    **constants,
+) -> str:
+    """Materialize `derive(events)` — the events table in replay shape
+    (epoch-µs `ts_us`) — as `num_files` NDJSON files under
+    `scratch_dir(sf_dir, name)` and return the directory. Committed by
+    `scratch.materialize_once`; the spec is the derivation's
+    `constants`, the file count and the declared events schema, so a
+    served tree costs no table read."""
+
+    def write(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            F.unix_micros(F.col("ts")).alias("ts_us"),
+            "user_id",
+            "event_type",
+            "value",
+        )
+        derive(ev).repartition(num_files).write.mode("overwrite").json(path)
+
+    out = scratch_dir(sf_dir, name)
+    spec = {**constants, "num_files": num_files,
+            "schema": SCHEMAS["events"].simpleString()}
+    materialize_once(out, spec, write)
+    return out
+
+
 def events_replay_dir(
     spark: SparkSession,
     sf_dir: str,
@@ -55,52 +90,38 @@ def events_replay_dir(
     event_type: str | None = None,
 ) -> str:
     """Materialize the events table as `num_files` NDJSON files under a
-    deterministic scratch dir (idempotent: reused if already written —
-    the cache key includes tag, num_files AND event_type, so a
-    different layout request never silently returns an old one). Files
-    are the replay's micro-batch unit. `event_type` restricts the drop
-    to one type — the per-topic landing layout (a real ingest tier
+    deterministic scratch dir, once (`_replay_drop`: reused while its
+    spec matches — the path includes tag, num_files AND event_type, so
+    a different layout request never lands on another one's tree).
+    Files are the replay's micro-batch unit. `event_type` restricts the
+    drop to one type — the per-topic landing layout (a real ingest tier
     drops purchases and views into separate topics/prefixes; consumers
     don't re-filter an interleaved log)."""
-    # event_type is part of the cache key: a filtered request under the
+    # event_type is part of the path: a filtered request under the
     # default tag must never return (or poison) the unfiltered 'base'
     # drop every other streaming key reads.
     if event_type is not None:
         tag = f"{tag}_{event_type}"
-    out = scratch_dir(sf_dir, f"stream_src_{tag}_{num_files}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events")
-        if event_type is not None:
-            ev = ev.filter(F.col("event_type") == event_type)
-        ev = ev.select(
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-            "user_id",
-            "event_type",
-            "value",
-        )
-        ev.repartition(num_files).write.mode("overwrite").json(out)
-    return out
+    return _replay_drop(
+        spark, sf_dir, f"stream_src_{tag}_{num_files}", num_files,
+        lambda ev: ev if event_type is None
+        else ev.filter(F.col("event_type") == event_type),
+        event_type=event_type,
+    )
 
 
 def events_replay_dir_with_dupes(spark: SparkSession, sf_dir: str) -> str:
     """Replay directory carrying injected duplicates (every 7th event
-    twice) — the input for the streaming-dedup demos. Same idempotent
-    scratch-dir contract as `events_replay_dir`; a separate helper so
-    harness warmup can materialize it OUTSIDE any measured window (it
-    is test-fixture setup, not query work)."""
-    out = scratch_dir(sf_dir, "stream_src_dup")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-            "user_id",
-            "event_type",
-            "value",
-        )
-        dupes = ev.filter(F.col("event_id") % 7 == 0)
-        ev.unionAll(dupes).repartition(8).write.mode("overwrite").json(out)
-    return out
+    twice) — the input for the streaming-dedup demos. Same
+    materialize-once contract as `events_replay_dir`; a separate helper
+    so harness warmup can materialize it OUTSIDE any measured window
+    (it is test-fixture setup, not query work)."""
+    every = 7
+    return _replay_drop(
+        spark, sf_dir, "stream_src_dup", 8,
+        lambda ev: ev.unionAll(ev.filter(F.col("event_id") % every == 0)),
+        dupe_every=every,
+    )
 
 
 def events_replay_dir_by_type(

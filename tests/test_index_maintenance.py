@@ -1182,13 +1182,19 @@ def test_vanished_manifest_at_commit_aborts(spark, tmp_path):
 def test_metadata_commits_are_durable(spark, tmp_path, monkeypatch):
     """Every JSON metadata commit is fsynced before its rename, and its
     directory right after: the index manifest, the IVF-PQ
-    `_params.json` and `_drift.json` sidecars and the ndjson sink's
-    batch manifest. An un-fsynced rename can surface after a power cut
-    as a present-but-empty file, which bricks every reader."""
+    `_params.json` and `_drift.json` sidecars, the ndjson sink's batch
+    manifest and the `_spec.json` that commits the layout helpers'
+    materialize-once trees. An un-fsynced rename can surface after a
+    power cut as a present-but-empty file, which bricks every
+    reader."""
     from pyspark.sql import Row
 
     from github_event_etl_spark.operators.index_maintenance import (
         ivf_pq_write_index_delta,
+    )
+    from github_event_etl_spark.operators.layout import (
+        ensure_bucketed_table,
+        ensure_zordered,
     )
     from github_event_etl_spark.operators.similarity import (
         ivf_pq_write_index,
@@ -1227,6 +1233,7 @@ def test_metadata_commits_are_durable(spark, tmp_path, monkeypatch):
     sink = _NdjsonStreamWriter({"path": str(tmp_path / "sink"),
                                 "commit": "manifest"})
     msg = sink.write(iter([Row(event_id=i) for i in range(3)]))
+    grid = spark.range(16).select("id", (F.col("id") % 4).alias("g"))
     monkeypatch.setattr(os, "fsync", fsync)
     monkeypatch.setattr(os, "replace", replace)
     got = {
@@ -1236,11 +1243,21 @@ def test_metadata_commits_are_durable(spark, tmp_path, monkeypatch):
         "delta": commits(lambda: ivf_pq_write_index_delta(
             spark, path, diff, cur)),
         "sink": commits(lambda: sink.commit([msg], 0)),
+        "zorder": commits(lambda: ensure_zordered(
+            grid, str(tmp_path / "z"), "id", "g", bits=4, num_files=1)),
     }
+    table = "geetl_durable_spec_bucketed"
+    try:
+        got["bucketed"] = commits(lambda: ensure_bucketed_table(
+            spark, grid, table, str(tmp_path / "b"), "id", 2))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
     assert got == {
         "build": {"_manifest.json": True, "_params.json": True},
         "delta": {"_manifest.json": True, "_drift.json": True},
         "sink": {"manifest.json": True},
+        "zorder": {"_spec.json": True},
+        "bucketed": {"_spec.json": True},
     }
 
 

@@ -3694,3 +3694,49 @@ def test_snapshot_diff_routes_increment_into_waterfall(spark, sf_dir):
         ("none", "new"),
     }
     assert {(r.stage, r.status) for r in per_doc} <= valid
+
+
+@pytest.mark.parametrize(
+    "sf", [conftest.SF_SMOKE, conftest.SF_CORRECT], ids=["sf_smoke", "sf_correct"]
+)
+def test_ivf_pq_fixture_vectors_are_well_formed(spark, sf):
+    """The vector contract every IVF/PQ key assumes but never checks
+    at run time: in the `embeddings` table and in each frame the IVF/PQ
+    keys derive from it, `vec_id` is non-null and unique, and every
+    vector is non-null, 64 long, free of null elements and non-zero
+    (cosine divides by its norm)."""
+    from github_event_etl_spark.plans.queries_llm import (
+        _emb_snap_cur,
+        _emb_snap_prev,
+        _planted_dup_corpus,
+    )
+
+    emb = load_table(spark, sf, "embeddings").select("vec_id", "embedding")
+    frames = {
+        "embeddings": emb,
+        "_emb_snap_prev": _emb_snap_prev(emb),
+        "_emb_snap_cur": _emb_snap_cur(emb),
+        "_planted_dup_corpus": _planted_dup_corpus(emb),
+    }
+    for name, df in frames.items():
+        v = F.col("embedding")
+        r = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count("vec_id").alias("ids"),
+            F.count_distinct("vec_id").alias("distinct_ids"),
+            F.count(v).alias("vectors"),
+            F.min(F.size(v)).alias("min_len"),
+            F.max(F.size(v)).alias("max_len"),
+            F.sum(F.exists(v, lambda x: x.isNull()).cast("int")).alias(
+                "with_null_element"
+            ),
+            F.min(F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x)).alias(
+                "min_sq_norm"
+            ),
+        ).first()
+        assert r.n > 0, name
+        assert r.ids == r.distinct_ids == r.n, (name, r)
+        assert r.vectors == r.n, (name, r)
+        assert r.min_len == r.max_len == 64, (name, r)
+        assert r.with_null_element == 0, (name, r)
+        assert r.min_sq_norm > 0, (name, r)

@@ -584,3 +584,39 @@ def test_salted_skew_join_stream_static_hot_key(spark):
                 spark.conf.unset(k)
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_replay_dir_rewrites_tree_without_committed_spec(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A complete JSON write with its `_SUCCESS` marker but no
+    `_spec.json` — what an older derivation leaves behind — is not a
+    committed replay tree: the dupes helper must rewrite it, so the
+    directory it returns holds the injected duplicates, not the plain
+    events."""
+    from github_event_etl_spark.scratch import scratch_dir
+    from github_event_etl_spark.sources.tables import load_table
+    from github_event_etl_spark.streaming.replay import (
+        events_replay_dir_with_dupes,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    stale = scratch_dir(sf_dir, "stream_src_dup")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        F.unix_micros(F.col("ts")).alias("ts_us"),
+        "user_id",
+        "event_type",
+        "value",
+    )
+    ev.repartition(8).write.mode("overwrite").json(stale)
+    assert os.path.exists(os.path.join(stale, "_SUCCESS"))
+    n = ev.count()
+    n_dupes = ev.filter(F.col("event_id") % 7 == 0).count()
+    assert n_dupes > 0
+
+    out = events_replay_dir_with_dupes(spark, sf_dir)
+    assert out == stale
+    got = spark.read.schema(REPLAY_SCHEMA).json(out)
+    assert got.count() == n + n_dupes
+    assert os.path.exists(os.path.join(out, "_spec.json"))

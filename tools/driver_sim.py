@@ -5,13 +5,14 @@ vanilla session (no engine defaults), smoke-runs entry(), then compares
 every queries()[k] against oracle_sql()[k] at sf0.01.
 """
 import datetime
+import os
 import sys
 import traceback
 
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as mod
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
