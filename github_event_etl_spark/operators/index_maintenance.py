@@ -58,8 +58,8 @@ ONLY when a new manifest referencing them replaces the old one
 (same-directory `os.replace` locally; on an object store the manifest
 PUT is the atomic op — no rename of data, no directory listing on the
 read path decides commit state). This is the manifest-commit pattern
-the ndjson sink's manifest mode established (sources/pysource.py
-`_commit_manifest` / `manifested_part_paths`): readers list parts
+the ndjson sink's commit established (sources/pysource.py
+`_NdjsonStreamWriter.commit` / `manifested_part_paths`): readers list parts
 FROM the manifest, never by directory walk, and unreferenced trees
 are garbage a later writer sweeps (manifest-anchored GC). Every
 layout is born committed: the `*_write_index` builders

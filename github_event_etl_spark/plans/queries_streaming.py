@@ -160,37 +160,25 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING face of the custom Python data source
-    (sources/pysource.py), on its PARTITIONED `DataSourceStreamReader`
-    — the executor-side scale shape: the driver plans offsets only and
-    the rows are generated inside executor tasks, aggregated under
+    (sources/pysource.py), its `DataSourceStreamReader` — the
+    executor-side scale shape: the driver plans offsets only and the
+    rows are generated inside executor tasks, aggregated under
     complete mode. The batch face holds the `scan_python_source` slot;
     this key gives the stream reader its own driver row — same
     determinism contract, so the same `range(0, n)` oracle re-derives
     the final state. Value sums go through DECIMAL(18,2) (exact,
     association-order-free) per the repo's determinism rules.
 
-    The CONTRAST this key used to measure the hard way: its first
-    implementation rode the `SimpleDataSourceStreamReader` face, whose
-    engine wrapper prefetches every row THROUGH THE DRIVER — fine for
-    the offset-model pytests that still pin it via
-    `.option("reader", "simple")`, but a driver bottleneck shape at
-    any scale (3.77 s here vs ~1.8 s for every other streaming key; a
-    production source must implement the partitioned face, as this one
-    now does by default — see the reader class docstrings for the full
-    design note).
-
-    Termination follows the stream_rate_source pattern
-    (run_until_input_rows): the run stops on the engine's own progress
-    telemetry once all n tracked rows are committed (one micro-batch —
-    a static finite source is wholly available at start).
+    Termination is the bounded-replay one (`run_bounded`,
+    AvailableNow): the finite source reports its whole range as
+    available at start, so the trigger runs one micro-batch and stops.
     `sf_dir` is unused: the source IS the data."""
     from ..sources.pysource import register_synthetic_source
 
     register_synthetic_source(spark)
-    n_total = 5000
     stream = (
         spark.readStream.format("synthetic_events")
-        .option("n", n_total)
+        .option("n", 5000)
         .option("num_partitions", 4)
         .load()
     )
@@ -200,7 +188,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    return run_until_input_rows(shaped, n_total, "pysrc")
+    return run_bounded(shaped, "complete", "pysrc")
 
 
 @query(

@@ -22,7 +22,11 @@ contiguous InputPartitions, each generated independently executor-side
 materializes on the driver. `pushFilters` accepts `event_type =
 '...'` equality filters so the predicate prunes INSIDE the generator
 loop (the Python-source analog of parquet row-group pruning); all
-other filters are returned to Spark to evaluate post-scan.
+other filters are returned to Spark to evaluate post-scan. The stream
+face splits each micro-batch's index range the same way.
+
+`NdjsonSinkDataSource` is the write side: an exactly-once NDJSON
+stream sink whose only commit is one manifest per batch.
 """
 
 from __future__ import annotations
@@ -38,7 +42,6 @@ from pyspark.sql.datasource import (
     EqualTo,
     Filter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql import types as T
@@ -67,10 +70,33 @@ class _RangePartition(InputPartition):
         self.end = end
 
 
+def _options(options: dict) -> tuple[int, int]:
+    """(n, num_partitions), checked once for both faces: a negative
+    `n` or a non-positive `num_partitions` fails the query instead of
+    planning an empty scan."""
+    n = int(options.get("n", 1000))
+    num_partitions = int(options.get("num_partitions", 4))
+    if n < 0:
+        raise ValueError(f"n must be >= 0, got {n}")
+    if num_partitions < 1:
+        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
+    return n, num_partitions
+
+
+def _range_partitions(
+    lo: int, hi: int, num_partitions: int
+) -> list[_RangePartition]:
+    """[lo, hi) as at most `num_partitions` contiguous ranges; an empty
+    or regressed range (hi <= lo) plans none."""
+    if hi <= lo:
+        return []
+    per = -(-(hi - lo) // num_partitions)
+    return [_RangePartition(a, min(a + per, hi)) for a in range(lo, hi, per)]
+
+
 class _SyntheticEventsReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.n = int(options.get("n", 1000))
-        self.num_partitions = int(options.get("num_partitions", 4))
+        self.n, self.num_partitions = _options(options)
         self.type_filter: str | None = None
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -94,19 +120,10 @@ class _SyntheticEventsReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> Sequence[InputPartition]:
-        if self.num_partitions < 1:
-            raise ValueError(
-                f"num_partitions must be >= 1, got {self.num_partitions}"
-            )
-        if self.n <= 0:
-            # an empty source is zero rows, not a crash; one empty
-            # range partition (an empty LIST makes Spark call read
-            # with a None partition)
-            return [_RangePartition(0, 0)]
-        per = -(-self.n // self.num_partitions)
-        return [
-            _RangePartition(lo, min(lo + per, self.n))
-            for lo in range(0, self.n, per)
+        # n == 0 is zero rows, not a crash: one empty range partition
+        # (an empty LIST makes Spark call read with a None partition)
+        return _range_partitions(0, self.n, self.num_partitions) or [
+            _RangePartition(0, 0)
         ]
 
     def read(self, partition: _RangePartition):
@@ -117,93 +134,28 @@ class _SyntheticEventsReader(DataSourceReader):
                 yield row
 
 
-class _SyntheticEventsStreamReader(SimpleDataSourceStreamReader):
-    """Micro-batched view of the same deterministic row stream: batch
-    k carries indices [k·rows_per_batch, (k+1)·rows_per_batch) ∩
-    [0, n). Offsets are plain {'index': i} dicts checkpointed by the
-    engine, so replay/readBetweenOffsets re-derives any batch exactly
-    — the replayability contract a recoverable source must meet. With
-    a finite `n`, read() at the cap returns no rows and the SAME
-    offset, which is the caught-up signal.
-
-    Trigger.AvailableNow caveat (measured, Spark 4.1): against a
-    SimpleDataSourceStreamReader the trigger bounds the run at the
-    offset the driver-side prefetcher happens to hold at start — ONE
-    batch (e.g. 2 500 of 5 000 rows processed, then clean
-    termination), silently incomplete. Bounded consumption of this
-    source must therefore use the progress-telemetry stop
-    (streaming/replay.run_until_input_rows), not availableNow."""
-
-    def __init__(self, options: dict):
-        self.n = int(options.get("n", 1000))
-        self.rows_per_batch = int(options.get("rows_per_batch", 250))
-        # Fail fast: rows_per_batch <= 0 would walk offsets backward
-        # (negative hi) or stall at index 0 forever.
-        if self.rows_per_batch < 1:
-            raise ValueError(
-                f"rows_per_batch must be >= 1, got {self.rows_per_batch}"
-            )
-        if self.n < 0:
-            raise ValueError(f"n must be >= 0, got {self.n}")
-
-    def initialOffset(self) -> dict:
-        return {"index": 0}
-
-    def read(self, start: dict):
-        lo = int(start["index"])
-        # Clamp BOTH ends: a query restarted from a checkpoint whose
-        # offset exceeds a now-smaller `n` must hold its offset (empty
-        # batch, same offset back — the caught-up signal), not report
-        # an end offset below the start (an offset regression the
-        # engine treats as source corruption).
-        hi = max(lo, min(lo + self.rows_per_batch, self.n))
-        return iter([_row(i) for i in range(lo, hi)]), {"index": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(
-            [_row(i) for i in range(int(start["index"]), int(end["index"]))]
-        )
-
-
 class _SyntheticEventsPartitionedStreamReader(DataSourceStreamReader):
-    """The EXECUTOR-SIDE streaming face — the scale shape of this
-    source, and the contrast to `_SyntheticEventsStreamReader`:
-
-    - Simple face (`SimpleDataSourceStreamReader`): the engine's
-      wrapper prefetches every row THROUGH THE DRIVER and ships the
-      cached batch to executors alongside the partition plan. That is
-      the API's documented design — right for offset-model tests and
-      low-volume sources, a driver bottleneck at any real volume
-      (measured here: ~2× the per-key cost of every other streaming
-      bench entry).
-    - Partitioned face (this class): the driver only PLANS offsets;
-      `read()` runs in executor tasks, generating rows where they are
-      consumed. Nothing row-shaped ever crosses the driver — the shape
-      a production stream source (Kafka-like log, object-store drop)
-      must take at scale.
+    """The streaming face: the driver only PLANS offsets; `read()` runs
+    in executor tasks, generating rows where they are consumed. Nothing
+    row-shaped ever crosses the driver — the shape a production stream
+    source (Kafka-like log, object-store drop) must take at scale.
 
     Offset model: the whole [0, n) index range of this static synthetic
     source is available the moment the query starts, so `latestOffset`
     honestly reports {'index': n} and a fresh run is ONE micro-batch of
-    `num_partitions` executor tasks. (An incrementally-advancing
-    latestOffset would need the checkpointed position to avoid
-    regressing after a restart, and this API never hands the reader
-    that position — a real source derives latest from its upstream log
-    instead.) `rows_per_batch` is therefore a simple-face knob only.
-    Restart caveat, same as the simple face: shrinking `n` below an
-    existing checkpoint's offset is an offset regression the engine
-    may reject; `partitions()` guards it locally by emitting no work.
+    `num_partitions` executor tasks; `trigger(availableNow=True)` runs
+    that batch and stops. (An incrementally-advancing latestOffset
+    would need the checkpointed position to avoid regressing after a
+    restart, and this API never hands the reader that position — a
+    real source derives latest from its upstream log instead.) A
+    restart against the same checkpoint with a larger `n` commits
+    [old n, new n) as the next batch. Shrinking `n` below an existing
+    checkpoint's offset is an offset regression the engine may reject;
+    `partitions()` guards it locally by emitting no work.
     """
 
     def __init__(self, options: dict):
-        self.n = int(options.get("n", 1000))
-        self.num_partitions = int(options.get("num_partitions", 4))
-        if self.n < 0:
-            raise ValueError(f"n must be >= 0, got {self.n}")
-        if self.num_partitions < 1:
-            raise ValueError(
-                f"num_partitions must be >= 1, got {self.num_partitions}"
-            )
+        self.n, self.num_partitions = _options(options)
 
     def initialOffset(self) -> dict:
         return {"index": 0}
@@ -212,13 +164,9 @@ class _SyntheticEventsPartitionedStreamReader(DataSourceStreamReader):
         return {"index": self.n}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        lo, hi = int(start["index"]), int(end["index"])
-        if hi <= lo:
-            return []
-        per = -(-(hi - lo) // self.num_partitions)
-        return [
-            _RangePartition(a, min(a + per, hi)) for a in range(lo, hi, per)
-        ]
+        return _range_partitions(
+            int(start["index"]), int(end["index"]), self.num_partitions
+        )
 
     def read(self, partition: _RangePartition):
         for i in range(partition.start, partition.end):
@@ -248,24 +196,8 @@ class SyntheticEventsDataSource(DataSource):
     def reader(self, schema) -> DataSourceReader:
         return _SyntheticEventsReader(self.options)
 
-    def streamReader(self, schema) -> "DataSourceStreamReader":
-        """Default streaming face: the partitioned executor-side
-        reader. `.option("reader", "simple")` selects the driver-
-        prefetch `SimpleDataSourceStreamReader` instead (raising
-        NOT_IMPLEMENTED here is the API's documented fallback path to
-        `simpleStreamReader`) — kept for the offset-model tests and as
-        the micro-batched {'index'} offset progression demo."""
-        if self.options.get("reader", "partitioned") == "simple":
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
+    def streamReader(self, schema) -> DataSourceStreamReader:
         return _SyntheticEventsPartitionedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
-        return _SyntheticEventsStreamReader(self.options)
 
 
 def register_synthetic_source(spark) -> None:
@@ -294,115 +226,73 @@ class _NdjsonCommitMessage(WriterCommitMessage):
         self.rows = rows
 
 
+def _json_default(v):
+    """JSON form of the values `json` cannot encode: dates and
+    timestamps as ISO-8601 strings, `Decimal` as its exact string form
+    (Spark's JSON reader parses both back under the stream schema)."""
+    from decimal import Decimal
+
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    if isinstance(v, Decimal):
+        return str(v)
+    raise TypeError(f"{type(v).__name__} is not JSON serializable")
+
+
 class _NdjsonStreamWriter(DataSourceStreamWriter):
     """Exactly-once NDJSON sink via the two-phase commit the writer API
-    provides: each task writes its partition to a UNIQUELY-NAMED temp
-    file (task retries never collide) and reports it in the commit
-    message; `commit` — called once per successful batch on the driver
-    — atomically renames the reported files into
-    `{path}/batch_id={N}/` and then SWEEPS the staging area (a task
-    that died before delivering its message leaves a temp file no
-    message references; per-attempt-unique names make removing the
-    unreferenced ones safe, and `abort` additionally removes the
-    reported ones on a failed batch). A batch replayed after a failure
-    re-runs its tasks and re-commits the SAME batch directory, which
-    commit clears first — the overwrite-by-batch idempotence
-    run_foreach_batch_to_parquet documents, here implemented beneath
-    the engine's own commit protocol instead of inside a user
-    callback.
+    provides, in the object-storage shape — no rename of data anywhere.
+    Each task "uploads" its partition as one uniquely-named object into
+    a flat staging namespace (`{path}/_staging/`, standing in for
+    atomic per-object PUTs; task retries never collide) and reports it
+    in the commit message. `commit` — called once per successful batch
+    on the driver — is the batch's single atomic action: writing
+    `{path}/batch_id={N}/manifest.json` naming exactly the parts the
+    batch consists of. Readers (`manifested_part_paths`) list parts
+    FROM the manifests, never by directory listing, so a staged object
+    from a dead task attempt is invisible by construction. A batch
+    replayed after a failure re-runs its tasks and overwrites the SAME
+    manifest (idempotent — the re-run's part names simply replace the
+    old attempt's), and commit sweeps staged objects referenced by NO
+    manifest (manifest-anchored GC; on a real deployment this runs as
+    an out-of-band lifecycle job instead); `abort` removes the reported
+    objects of a failed batch. This is the commit protocol a multi-node
+    cluster without a shared POSIX mount needs; the local filesystem
+    here only stands in for the object store's put/list/delete API.
 
-    COMMIT MODES (`commit` option):
-
-    - ``rename`` (default): task temp files are os.replace'd into
-      `{path}/batch_id={N}/` at commit. Requires driver and executors
-      to share `path` on ONE mount (local mode, NFS/FUSE-mounted
-      object storage) — write() stages on the executor and the rename
-      runs on the driver, and rename-based commits only work within a
-      mount.
-    - ``manifest``: the object-storage commit shape, no rename
-      anywhere. Each task "uploads" its part into a flat staging
-      namespace (`_staging/`, standing in for atomic per-object PUTs)
-      and the driver's single atomic commit action is writing
-      `{path}/batch_id={N}/manifest.json` naming exactly the parts the
-      batch consists of. Readers (`manifested_part_paths`) list
-      parts FROM the manifests, never by directory listing, so a
-      staged object from a dead task attempt is invisible by
-      construction. Replay overwrites the SAME manifest (idempotent —
-      the re-run's part names simply replace the old attempt's), and
-      commit sweeps staged objects referenced by NO manifest
-      (manifest-anchored GC; on a real deployment this runs as an
-      out-of-band lifecycle job instead). This is the commit protocol
-      a multi-node cluster without a shared POSIX mount needs; the
-      local filesystem here only stands in for the object store's
-      put/list/delete API.
-
-    One writer per `path` at a time, in either mode."""
+    One writer per `path` at a time."""
 
     def __init__(self, options: dict):
         self.path = options["path"]
-        self.mode = options.get("commit", "rename")
-        if self.mode not in ("rename", "manifest"):
-            raise ValueError(
-                f"commit option must be 'rename' or 'manifest', got "
-                f"{self.mode!r}"
-            )
-
-    def _stage_dir(self) -> str:
-        return "_staging" if self.mode == "manifest" else "_tmp"
 
     def write(self, iterator) -> _NdjsonCommitMessage:
         import json
         import os
         import uuid
 
-        tmp_dir = os.path.join(self.path, self._stage_dir())
-        os.makedirs(tmp_dir, exist_ok=True)
-        tmp = os.path.join(tmp_dir, f"part-{uuid.uuid4().hex}.ndjson")
+        staging = os.path.join(self.path, "_staging")
+        os.makedirs(staging, exist_ok=True)
+        part = os.path.join(staging, f"part-{uuid.uuid4().hex}.ndjson")
         n = 0
-        with open(tmp, "w") as f:
+        with open(part, "w") as f:
             for row in iterator:
-                rec = row.asDict()
-                for k, v in rec.items():
-                    if hasattr(v, "isoformat"):
-                        rec[k] = v.isoformat()
-                f.write(json.dumps(rec, sort_keys=True) + "\n")
+                rec = row.asDict(recursive=True)
+                f.write(
+                    json.dumps(rec, sort_keys=True, default=_json_default)
+                    + "\n"
+                )
                 n += 1
-        return _NdjsonCommitMessage(tmp, n)
+            # durable before the manifest can name it (a PUT is)
+            f.flush()
+            os.fsync(f.fileno())
+        return _NdjsonCommitMessage(part, n)
 
     def commit(self, messages, batchId: int) -> None:
-        if self.mode == "manifest":
-            self._commit_manifest(messages, batchId)
-        else:
-            self._commit_rename(messages, batchId)
-
-    def _commit_rename(self, messages, batchId: int) -> None:
-        import glob
-        import os
-        import shutil
-
-        out = os.path.join(self.path, f"batch_id={batchId}")
-        shutil.rmtree(out, ignore_errors=True)  # replay overwrites
-        os.makedirs(out, exist_ok=True)
-        for i, m in enumerate(messages):
-            if m is not None and m.rows > 0:
-                os.replace(m.path, os.path.join(out, f"part-{i:05d}.ndjson"))
-            elif m is not None:
-                os.remove(m.path)
-        # Sweep orphans: temp files from task attempts that died before
-        # reporting a message. Names are per-attempt unique, so
-        # anything still in _tmp after the renames is garbage.
-        for stale in glob.glob(os.path.join(self.path, "_tmp", "*")):
-            try:
-                os.remove(stale)
-            except OSError:
-                pass
-
-    def _commit_manifest(self, messages, batchId: int) -> None:
         """Atomic commit = one manifest write; parts stay where they
         were uploaded. The manifest goes through the index layer's
         durable JSON commit (`_atomic_write_json`: fsync, same-directory
         rename, directory fsync), so a reader never observes a torn or
-        power-cut-emptied manifest — the ONE rename this mode performs,
+        power-cut-emptied manifest — the ONE rename this sink performs,
         and it is driver-local metadata (an object store's single-object
         PUT gives the same atomicity)."""
         import glob
@@ -463,10 +353,10 @@ class _NdjsonStreamWriter(DataSourceStreamWriter):
 
 class NdjsonSinkDataSource(DataSource):
     """`writeStream.format("ndjson_dir")`: the landing-directory sink
-    shape (one NDJSON drop per committed batch) as a first-class
-    Python data source — the write-side twin of the synthetic source's
-    read path, and the same physical layout `events_replay_dir`
-    replays."""
+    shape (one manifest-committed NDJSON drop per batch) as a
+    first-class Python data source — the write-side twin of the
+    synthetic source's read path. Read its output through
+    `manifested_part_paths`, never by listing `batch_id=*`."""
 
     @classmethod
     def name(cls) -> str:
@@ -481,9 +371,9 @@ def register_ndjson_sink(spark) -> None:
 
 
 def manifested_part_paths(path: str) -> list[str]:
-    """The committed data files of a manifest-mode sink directory: the
+    """The committed data files of an `ndjson_dir` sink directory: the
     union of every batch manifest's parts, resolved into the staging
-    namespace. THE reader contract for manifest commits — a staged
+    namespace. THE reader contract for the sink — a staged
     object no manifest names (dead task attempt, superseded replay
     attempt) is invisible because listing never touches the directory,
     mirroring how manifest-committed tables (Iceberg/Delta-style) read

@@ -243,8 +243,7 @@ def run_until_input_rows(
     committed, then stop and return the sink table.
 
     This is the termination pattern for sources that never signal
-    completion (rate sources, capped synthetic streams where the cap
-    shows up only as empty batches): boundedness is imposed by the
+    completion (the rate source): boundedness is imposed by the
     CALLER's row budget, and the wait reads recentProgress — driver
     metadata, no Spark job — between awaitTermination naps. The 600 ×
     0.2 s cap bounds the loop without wall-clock arithmetic. Note

@@ -1230,8 +1230,7 @@ def test_metadata_commits_are_durable(spark, tmp_path, monkeypatch):
     prev, cur = _planted_shift(spark)
     path = str(tmp_path / "pq")
     diff = snapshot_diff(prev, cur, "vec_id", ["embedding"]).localCheckpoint()
-    sink = _NdjsonStreamWriter({"path": str(tmp_path / "sink"),
-                                "commit": "manifest"})
+    sink = _NdjsonStreamWriter({"path": str(tmp_path / "sink")})
     msg = sink.write(iter([Row(event_id=i) for i in range(3)]))
     grid = spark.range(16).select("id", (F.col("id") % 4).alias("g"))
     monkeypatch.setattr(os, "fsync", fsync)

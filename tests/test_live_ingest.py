@@ -259,72 +259,12 @@ def test_synthetic_events_python_datasource(spark):
     assert "= purchase" not in physical
 
 
-def test_synthetic_events_streaming_source(spark):
-    """The SIMPLE streaming face of the Python data source
-    (reader=simple): micro-batches of rows_per_batch rows driven by
-    the engine's repeated read() calls (offsets are {'index'} dicts
-    the engine checkpoints; at the n cap read() reports no new data).
-    The run stops on the engine's own progress telemetry — the
-    stream_rate_source termination pattern — and the landed rows must
-    equal the deterministic model exactly. The per-batch row-count
-    assertion below is WHY this test pins the simple face: it is the
-    offset-progression model test; the default partitioned face plans
-    one all-available batch instead."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from github_event_etl_spark.sources.pysource import (
-        _row,
-        register_synthetic_source,
-    )
-
-    register_synthetic_source(spark)
-    n_total = 1000
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("n", n_total)
-        .option("rows_per_batch", 250)
-        .option("reader", "simple")
-        .load()
-    )
-    name = f"synth_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="geetl_synth_ckpt_")
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        _drain_until(q, n_total, "synthetic stream")
-        batches = [
-            int(p.numInputRows)
-            for p in q.recentProgress
-            if int(p.numInputRows) > 0
-        ]
-        q.stop()
-        got = sorted(tuple(r) for r in spark.table(name).collect())
-        model = sorted(
-            (i, ts.replace(tzinfo=None), u, t, v)
-            for i, ts, u, t, v in (_row(i) for i in range(n_total))
-        )
-        assert got == model
-        assert all(b == 250 for b in batches) and sum(batches) == n_total
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_synthetic_events_partitioned_stream_reader(spark):
-    """The PARTITIONED (default) streaming face: the driver plans
-    offsets only and `read()` executes in executor tasks — the scale
-    shape, vs the simple face's driver-side prefetch. For this static
+    """The streaming face: the driver plans offsets only and `read()`
+    executes in executor tasks — the scale shape. For this static
     finite source every index is available at start, so the run is ONE
     micro-batch carrying all n rows; rows must equal the deterministic
-    model exactly (same rows either face — that is the twin
-    contract)."""
+    model exactly (the same rows the batch face yields)."""
     import shutil
     import tempfile
     import uuid
@@ -401,74 +341,6 @@ def test_partitioned_stream_reader_offset_model():
     assert [r[0] for r in rows] == [90, 91, 92]
 
 
-def test_python_ndjson_stream_sink_end_to_end(spark):
-    """Full Python-API streaming loop: synthetic Python source →
-    Python NDJSON sink. The sink's two-phase commit must land each
-    micro-batch as a complete batch_id directory whose records equal
-    the deterministic model exactly, with the temp staging area
-    drained."""
-    import glob
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from github_event_etl_spark.sources.pysource import (
-        _row,
-        register_ndjson_sink,
-        register_synthetic_source,
-    )
-
-    register_synthetic_source(spark)
-    register_ndjson_sink(spark)
-    out = tempfile.mkdtemp(prefix="geetl_pysink_")
-    ckpt = tempfile.mkdtemp(prefix="geetl_pysink_ckpt_")
-    n_total = 600
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("n", n_total)
-        .option("rows_per_batch", 200)
-        # the SIMPLE face: these sink tests exist to exercise the
-        # commit protocol ACROSS micro-batches (three batch_id dirs,
-        # staging swept per batch) — the default partitioned face
-        # plans one all-available batch and would collapse that
-        # coverage to a single commit
-        .option("reader", "simple")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("ndjson_dir")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        _drain_until(q, n_total, "python sink")
-        q.stop()
-
-        got = []
-        for path in glob.glob(os.path.join(out, "batch_id=*", "*.ndjson")):
-            with open(path) as f:
-                got.extend(_json.loads(line) for line in f)
-        model = {
-            i: {
-                "event_id": i,
-                "ts": ts.replace(tzinfo=None).isoformat(),
-                "user_id": u,
-                "event_type": t,
-                "value": v,
-            }
-            for i, ts, u, t, v in (_row(i) for i in range(n_total))
-        }
-        assert {r["event_id"]: r for r in got} == model
-        assert len(got) == n_total  # no duplicated batch content
-        assert glob.glob(os.path.join(out, "_tmp", "*")) == []
-    finally:
-        q.stop()
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_synthetic_datasource_edge_options(spark):
     """Edge options must behave, not crash: n=0 is an empty scan;
     contradictory event_type equalities (only one is consumed by
@@ -494,23 +366,27 @@ def test_synthetic_datasource_edge_options(spark):
     assert contradiction.count() == 0
 
 
-def test_synthetic_stream_reader_offset_clamp():
-    """A checkpointed offset past a now-smaller `n` (the query was
-    restarted with a reduced option) must HOLD the offset — empty batch,
-    same offset back, the caught-up signal — never report an end offset
-    below the start (an offset regression the engine rejects)."""
+def test_synthetic_datasource_rejects_bad_options(spark):
+    """Both faces check their options in one place: a negative `n` or
+    a non-positive `num_partitions` fails the query, naming the
+    option, instead of planning an empty scan."""
     from github_event_etl_spark.sources.pysource import (
-        _SyntheticEventsStreamReader,
+        _SyntheticEventsPartitionedStreamReader,
+        register_synthetic_source,
     )
 
-    rdr = _SyntheticEventsStreamReader({"n": "100", "rows_per_batch": "50"})
-    rows, end = rdr.read({"index": 250})
-    assert list(rows) == []
-    assert end == {"index": 250}
-    # normal progression still clamps the tail batch to n
-    rows, end = rdr.read({"index": 75})
-    assert len(list(rows)) == 25
-    assert end == {"index": 100}
+    register_synthetic_source(spark)
+    with pytest.raises(Exception, match=r"\bn must be >= 0"):
+        spark.read.format("synthetic_events").option("n", -1).load().collect()
+    with pytest.raises(Exception, match="num_partitions must be >= 1"):
+        (
+            spark.read.format("synthetic_events")
+            .option("num_partitions", 0)
+            .load()
+            .collect()
+        )
+    with pytest.raises(ValueError, match=r"\bn must be >= 0"):
+        _SyntheticEventsPartitionedStreamReader({"n": "-1"})
 
 
 def test_ndjson_sink_manifest_commit_with_task_retry():
@@ -537,7 +413,7 @@ def test_ndjson_sink_manifest_commit_with_task_retry():
 
     out = tempfile.mkdtemp(prefix="geetl_manifest_")
     try:
-        w = _NdjsonStreamWriter({"path": out, "commit": "manifest"})
+        w = _NdjsonStreamWriter({"path": out})
         rows = [Row(event_id=i, value=float(i)) for i in range(5)]
 
         # attempt 1 dies after upload (no message delivered);
@@ -581,11 +457,12 @@ def test_ndjson_sink_manifest_commit_with_task_retry():
 
 
 def test_ndjson_sink_manifest_mode_live_stream(spark):
-    """End-to-end manifest mode under the real engine: synthetic
-    source → ndjson_dir sink with commit=manifest. Every committed
-    batch directory carries a manifest, the manifest-listed parts
-    reconstruct the deterministic model exactly, and nothing
-    unreferenced survives in staging."""
+    """End-to-end sink under the real engine, across micro-batches:
+    three AvailableNow runs against ONE checkpoint with n = 200, 400,
+    600 commit batch_id=0..2, each [old n, new n) as one batch. Every
+    committed batch directory holds only its manifest, the
+    manifest-listed parts reconstruct the deterministic model exactly
+    with no duplicated row, and staging holds only referenced parts."""
     import glob
     import json as _json
     import os
@@ -604,29 +481,26 @@ def test_ndjson_sink_manifest_mode_live_stream(spark):
     out = tempfile.mkdtemp(prefix="geetl_pysink_mf_")
     ckpt = tempfile.mkdtemp(prefix="geetl_pysink_mf_ckpt_")
     n_total = 600
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("n", n_total)
-        .option("rows_per_batch", 200)
-        # the SIMPLE face: these sink tests exist to exercise the
-        # commit protocol ACROSS micro-batches (three batch_id dirs,
-        # staging swept per batch) — the default partitioned face
-        # plans one all-available batch and would collapse that
-        # coverage to a single commit
-        .option("reader", "simple")
-        .load()
-    )
-    q = (
-        stream.writeStream.format("ndjson_dir")
-        .option("path", out)
-        .option("commit", "manifest")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
     try:
-        _drain_until(q, n_total, "manifest sink")
-        q.stop()
+        for n in (200, 400, n_total):
+            (
+                spark.readStream.format("synthetic_events")
+                .option("n", n)
+                .load()
+                .writeStream.format("ndjson_dir")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
 
+        batch_dirs = sorted(glob.glob(os.path.join(out, "batch_id=*")))
+        assert [os.path.basename(d) for d in batch_dirs] == [
+            "batch_id=0", "batch_id=1", "batch_id=2"
+        ]
+        for d in batch_dirs:
+            assert os.listdir(d) == ["manifest.json"]
         got = []
         for path in manifested_part_paths(out):
             with open(path) as f:
@@ -642,22 +516,65 @@ def test_ndjson_sink_manifest_mode_live_stream(spark):
             for i, ts, u, t, v in (_row(i) for i in range(n_total))
         }
         assert {r["event_id"]: r for r in got} == model
-        assert len(got) == n_total
-        # every staged object is referenced by some manifest
+        assert len(got) == n_total  # no duplicated batch content
         staged = set(glob.glob(os.path.join(out, "_staging", "*")))
         assert staged == set(manifested_part_paths(out))
-        # every committed batch dir holds exactly a manifest (no data
-        # files land in batch dirs in manifest mode)
-        for d in glob.glob(os.path.join(out, "batch_id=*")):
-            assert os.listdir(d) == ["manifest.json"]
     finally:
-        q.stop()
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_ndjson_sink_rejects_unknown_commit_mode():
-    from github_event_etl_spark.sources.pysource import _NdjsonStreamWriter
+def test_ndjson_sink_round_trips_nested_and_decimal_columns(spark):
+    """The sink's JSON must read back under the stream's own schema:
+    a struct keeps its field names (not a positional array), and a
+    timestamp nested in a struct and DECIMAL(18,2) values — top-level
+    and nested — serialize instead of failing the batch."""
+    import shutil
+    import tempfile
 
-    with pytest.raises(ValueError, match="commit option"):
-        _NdjsonStreamWriter({"path": "/tmp/x", "commit": "two-phase"})
+    from github_event_etl_spark.sources.pysource import (
+        manifested_part_paths,
+        register_ndjson_sink,
+        register_synthetic_source,
+    )
+
+    register_synthetic_source(spark)
+    register_ndjson_sink(spark)
+
+    def shaped(df):
+        amount = F.col("value").cast("decimal(18,2)")
+        return df.select(
+            "event_id",
+            F.struct(
+                F.col("user_id").alias("x"),
+                F.col("ts").alias("at"),
+                amount.alias("amt"),
+            ).alias("s"),
+            amount.alias("amount"),
+        )
+
+    stream = shaped(
+        spark.readStream.format("synthetic_events").option("n", 50).load()
+    )
+    out = tempfile.mkdtemp(prefix="geetl_pysink_nested_")
+    ckpt = tempfile.mkdtemp(prefix="geetl_pysink_nested_ckpt_")
+    try:
+        (
+            stream.writeStream.format("ndjson_dir")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        got = spark.read.schema(stream.schema).json(
+            manifested_part_paths(out)
+        )
+        want = shaped(
+            spark.read.format("synthetic_events").option("n", 50).load()
+        )
+        assert sorted(got.collect()) == sorted(want.collect())
+        assert got.count() == 50
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
