@@ -67,9 +67,11 @@ layout is born committed: the `*_write_index` builders
 `similarity.ivf_write_index`, `similarity.ivf_pq_write_index`) write
 the empty manifest as their last step (`_commit_base`). The manifest
 is the only commit state — a path without one is no committed index,
-whatever parquet `_SUCCESS` markers it holds. Every metadata commit
-here and in the sidecars beside it goes through one durable JSON
-write (`_atomic_write_json`).
+whatever parquet `_SUCCESS` markers it holds. It also records the
+layout's `key` and `partition_col`, fixed by its builder, so no
+maintenance entry point asks for them (a format-1 manifest lacks them
+and is refused). Every metadata commit here and in the sidecars
+beside it goes through one durable JSON write (`_atomic_write_json`).
 
 Read-path cost note: each generation adds one broadcast anti-join +
 one union to the read plan, so generations should be compacted
@@ -218,18 +220,25 @@ def _atomic_write_json(path: str, obj) -> None:
         pass
 
 
-def _commit_base(index_path: str) -> None:
+#: Format 2 records the layout's `key` and `partition_col`.
+_MANIFEST_FORMAT = 2
+
+
+def _commit_base(index_path: str, key: str, partition_col: str) -> None:
     """The builders' shared last step: commit the freshly written base
-    at the index root as an index with no generations. Until this
-    lands the path is no committed index, so a build that dies
-    mid-write is never read or maintained. The random `build_id`
-    tells two builds of the same path apart (`_IDENTITY_FIELDS`)."""
+    at the index root as an index with no generations, keyed by `key`
+    and partitioned by `partition_col`. Until this lands the path is
+    no committed index, so a build that dies mid-write is never read
+    or maintained. The random `build_id` tells two builds of the same
+    path apart (`_IDENTITY_FIELDS`)."""
     import uuid
 
     _atomic_write_json(
         _manifest_file(index_path),
-        {"format": 1, "base": ".", "generations": [], "next_gen": 1,
-         "next_base": 1, "build_id": uuid.uuid4().hex},
+        {"format": _MANIFEST_FORMAT, "key": key,
+         "partition_col": partition_col, "base": ".", "generations": [],
+         "next_gen": 1, "next_base": 1, "commit_seq": 0,
+         "build_id": uuid.uuid4().hex},
     )
 
 
@@ -257,32 +266,26 @@ def _read_manifest(index_path: str) -> dict | None:
 
 def _require_manifest(index_path: str, op: str) -> dict:
     """`_read_manifest` for the entry points that need an index: a
-    missing manifest fails loudly under the caller's name `op`."""
+    missing or format-1 manifest fails loudly under the caller's name
+    `op`."""
     m = _read_manifest(index_path)
-    if m is None:
+    if m is None or m.get("format") != _MANIFEST_FORMAT:
         raise FileNotFoundError(
-            f"{op}: no committed index at {index_path} (no {_MANIFEST}) "
-            "— an index is committed only by its builder "
-            "(minhash_write_index, rhp_write_index, ivf_write_index, "
-            "ivf_pq_write_index), which writes the manifest as its "
-            "last step; build the base first"
+            f"{op}: no committed index at {index_path} (no format-"
+            f"{_MANIFEST_FORMAT} {_MANIFEST} recording its key and "
+            "partition column) — an index is committed only by its "
+            "builder (minhash_write_index, rhp_write_index, "
+            "ivf_write_index, ivf_pq_write_index), which writes the "
+            "manifest as its last step; (re)build the index with it"
         )
     return m
 
 
-def _base_path(index_path: str, manifest: dict) -> str:
-    rel = manifest["base"]
-    return index_path if rel == "." else os.path.join(index_path, rel)
-
-
-def _committed_generations(index_path: str) -> list[str]:
-    """Paths of committed generations in fold order — listed FROM the
-    manifest (the reader contract for manifest commits), never by
-    directory walk."""
-    m = _read_manifest(index_path)
-    if m is None:
-        return []
-    return [os.path.join(index_path, rel) for rel in m["generations"]]
+def _read_base(spark: SparkSession, index_path: str, m: dict) -> DataFrame:
+    rel = m["base"]
+    return spark.read.parquet(
+        index_path if rel == "." else os.path.join(index_path, rel)
+    )
 
 
 def _gc(index_path: str) -> None:
@@ -337,14 +340,13 @@ def write_index_delta(
     diff: DataFrame,
     cur_docs: DataFrame,
     band_fn: Callable[[DataFrame], DataFrame],
-    key: str = "doc_id",
-    value_cols: tuple[str, ...] = ("band", "bucket"),
-    partition_col: str = "band",
 ) -> int:
-    """Append one maintenance generation to a materialized band index:
-    `<index>/_delta/gen=N/tombstones` (the stale doc keys) and
-    `.../gen=N/appends` (freshly banded rows for the upserted docs,
-    band-partitioned like the base). Returns N. The base partitions
+    """Append one maintenance generation to a materialized index:
+    `<index>/_delta/gen=N/tombstones` (the stale values of the
+    manifest's `key`) and `.../gen=N/appends` (rows `band_fn` derives
+    for the upserted keys, with the base's columns, partitioned by the
+    manifest's `partition_col` like the base — so a probe prunes them
+    too). Returns N. The base partitions
     are untouched — bytes written are change-sized. The generation
     becomes visible to `read_index` only when the COMMIT — one atomic
     manifest write naming it — lands after both data trees are fully
@@ -367,19 +369,11 @@ def write_index_delta(
     reconciliation. As with `apply_index_diff`, pass `diff`
     materialized: the two component writes are separate jobs, each of
     which would otherwise recompute an unmaterialized diff plan.
-
-    `value_cols`/`partition_col` default to the band-index layout;
-    pass e.g. `value_cols=("centroid_id",), partition_col="centroid_id"`
-    to maintain the IVF assignment index's inverted-list layout (one
-    directory per centroid, the partition-pruned probe shape). The
-    appends must be partitioned the SAME way as the base: `read_index`
-    takes its schema from the base, and a probe prunes delta partitions
-    only if they carry the base's partition key.
     """
     import shutil
 
     m = _require_manifest(index_path, "write_index_delta")
-    n = m["next_gen"]
+    key, n = m["key"], m["next_gen"]
     gen_rel = os.path.join("_delta", f"gen={n}")
     base = os.path.join(index_path, gen_rel)
     # retry safety: a writer that died mid-generation left gen=N
@@ -390,12 +384,11 @@ def write_index_delta(
     if os.path.isdir(base):
         shutil.rmtree(base)
     stale = diff.select(F.col(key))  # every diff key — see docstring
-    fresh = band_fn(_upsert_docs(cur_docs, diff, key)).select(
-        key, *value_cols
-    )
-    fresh.write.mode("errorifexists").partitionBy(partition_col).parquet(
-        os.path.join(base, "appends")
-    )
+    columns = _read_base(cur_docs.sparkSession, index_path, m).columns
+    fresh = band_fn(_upsert_docs(cur_docs, diff, key)).select(*columns)
+    fresh.write.mode("errorifexists").partitionBy(
+        m["partition_col"]
+    ).parquet(os.path.join(base, "appends"))
     stale.write.mode("errorifexists").parquet(
         os.path.join(base, "tombstones")
     )
@@ -424,8 +417,7 @@ def _manifest_drift(m: dict, cur: dict) -> dict:
     return {
         k: (m.get(k), cur.get(k))
         for k in _IDENTITY_FIELDS
-        if m.get(k, 0 if k == "commit_seq" else None)
-        != cur.get(k, 0 if k == "commit_seq" else None)
+        if m.get(k) != cur.get(k)
     }
 
 
@@ -462,7 +454,7 @@ def _commit_generation(
     _atomic_write_json(
         _manifest_file(index_path),
         dict(cur, generations=cur["generations"] + [gen_rel],
-             next_gen=n + 1, commit_seq=cur.get("commit_seq", 0) + 1),
+             next_gen=n + 1, commit_seq=cur["commit_seq"] + 1),
     )
 
 
@@ -483,9 +475,9 @@ def ivf_pq_write_index_delta(
     argmin against its frozen codebook) — `similarity.ivf_pq_encode_fn`
     is the code-recompute hook — and land as one change-sized
     maintenance generation under `<index>/lists` via
-    `write_index_delta` (value_cols=('pq_code','centroid_id'),
-    partitioned like the base); removed/re-embedded ids are
-    tombstoned. Returns the generation number.
+    `write_index_delta` (the lists' (nid, centroid_id) geometry comes
+    from their manifest); removed/re-embedded ids are tombstoned.
+    Returns the generation number.
 
     The serving read path (`similarity.ann_ivf_pq_partitioned`[+refine])
     folds committed generations automatically
@@ -496,9 +488,9 @@ def ivf_pq_write_index_delta(
     pytest: probe-over-maintained ≡ probe-over-rebuilt (frozen
     quantizer/codebook rebuild, refine included)
     and maintained list contents ≡ re-encoded current snapshot.
-    Compaction composes: `compact_index(key='nid',
-    partition_col='centroid_id')` folds the generations back into a
-    plain partition-pruned base. (Reference analog: the incremental
+    Compaction composes: `compact_index` over `<index>/lists` folds
+    the generations back into a plain partition-pruned base.
+    (Reference analog: the incremental
     summary merge, update-contributor-scores.js:252-263 — refresh
     the stored artifact from changes, never recompute it whole.)
 
@@ -531,13 +523,7 @@ def ivf_pq_write_index_delta(
     )
     cur_n = cur_corpus.select(F.col(id_col).alias("nid"), vec_col)
     gen = write_index_delta(
-        os.path.join(index_path, "lists"),
-        diff_n,
-        cur_n,
-        encode,
-        key="nid",
-        value_cols=("pq_code", "centroid_id"),
-        partition_col="centroid_id",
+        os.path.join(index_path, "lists"), diff_n, cur_n, encode
     )
     # per-refresh drift record (VERDICT r19 item 2), AFTER the commit
     # so a concurrent-writer abort logs nothing: the reconstruction
@@ -563,9 +549,7 @@ def ivf_pq_write_index_delta(
     return gen
 
 
-def read_index(
-    spark: SparkSession, index_path: str, key: str = "doc_id"
-) -> DataFrame:
+def read_index(spark: SparkSession, index_path: str) -> DataFrame:
     """The maintained index: base parquet with every committed delta
     generation folded over it in order (anti-join the generation's
     tombstones — broadcast, change-sized — then union its appends).
@@ -579,25 +563,23 @@ def read_index(
     """
     m = _require_manifest(index_path, "read_index")
     return _fold_generations(
-        spark,
-        spark.read.parquet(_base_path(index_path, m)),
-        [os.path.join(index_path, rel) for rel in m["generations"]],
-        key,
+        spark, _read_base(spark, index_path, m), index_path, m
     )
 
 
 def _fold_generations(
-    spark: SparkSession, base: DataFrame, gens: list[str], key: str
+    spark: SparkSession, base: DataFrame, index_path: str, m: dict
 ) -> DataFrame:
-    """Fold an EXPLICIT generation list over a base frame — the one
-    fold implementation `read_index` and `index_stats` share. Taking
-    the list (not re-listing the directory) lets index_stats report a
-    CONSISTENT snapshot: a writer committing a generation between two
-    listings would otherwise make live_rows disagree with the volumes
-    counted from the earlier listing."""
-    df = base
+    """Fold the generations of ONE manifest snapshot `m` over its base
+    frame, by its key — the one fold `read_index`, `index_stats` and
+    `compact_index` share. Taking the snapshot (not re-reading the
+    manifest) lets index_stats report a CONSISTENT state: a commit
+    between two reads would otherwise make live_rows disagree with the
+    volumes counted from the earlier read."""
+    df, key = base, m["key"]
     tomb_schema = df.select(key).schema
-    for gen in gens:
+    for rel in m["generations"]:
+        gen = os.path.join(index_path, rel)
         tomb = spark.read.schema(tomb_schema).parquet(
             os.path.join(gen, "tombstones")
         )
@@ -615,9 +597,6 @@ def refresh_index_from_change_stream(
     index_path: str,
     band_fn: Callable[[DataFrame], DataFrame],
     checkpoint_dir: str,
-    key: str = "doc_id",
-    value_cols: tuple[str, ...] = ("band", "bucket"),
-    partition_col: str = "band",
     reconcile_order_col: str | None = None,
     max_generations: int | None = None,
     max_read_amplification: float | None = None,
@@ -632,7 +611,10 @@ def refresh_index_from_change_stream(
     the stream: per micro-batch the work is change-sized banding plus
     two change-sized writes, the streaming end state of the same
     refresh loop the batch keys pin (`llm_index_apply_diff` /
-    `llm_ivf_apply_diff`).
+    `llm_ivf_apply_diff`). The manifest (and the key the change rows
+    carry) is read once before the stream starts, so a path with no
+    committed index fails at the call, before any checkpoint exists —
+    also on an empty stream.
 
     Delivery semantics: foreachBatch is at-least-once — a crash after
     the generation commits but before the checkpoint commit redelivers
@@ -683,6 +665,9 @@ def refresh_index_from_change_stream(
     micro-batch through `ivf_pq_write_index_delta` (or run the
     periodic `maybe_retrain` audit on crawl cadence, which never needs
     the log — it measures the current corpus directly)."""
+    key = _require_manifest(
+        index_path, "refresh_index_from_change_stream"
+    )["key"]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _prepare_stream_batch(
@@ -692,17 +677,13 @@ def refresh_index_from_change_stream(
         if batch_df is None:
             return
         try:
-            write_index_delta(
-                index_path, batch_df, batch_df, band_fn,
-                key, value_cols, partition_col,
-            )
+            write_index_delta(index_path, batch_df, batch_df, band_fn)
             if (
                 max_generations is not None
                 or max_read_amplification is not None
             ):
                 maybe_compact(
                     batch_df.sparkSession, index_path,
-                    key=key, partition_col=partition_col,
                     max_generations=max_generations,
                     max_read_amplification=max_read_amplification,
                 )
@@ -815,8 +796,8 @@ def ivf_pq_refresh_from_change_stream(
     semantics (a redelivered batch re-tombstones and re-appends
     identical rows — folded state unchanged; it DOES append a
     duplicate drift-log entry, which is monitoring noise, not state).
-    The compaction knobs run `maybe_compact` against the lists subdir
-    with the layout's (nid, centroid_id) geometry. Bounded
+    The compaction knobs run `maybe_compact` against the lists subdir,
+    whose manifest carries the (nid, centroid_id) geometry. Bounded
     (AvailableNow) like the repo's replay harness.
 
     PQ geometry (ADVICE r20) comes from the layout's required
@@ -846,7 +827,6 @@ def ivf_pq_refresh_from_change_stream(
                 maybe_compact(
                     batch_df.sparkSession,
                     os.path.join(index_path, "lists"),
-                    key="nid", partition_col="centroid_id",
                     max_generations=max_generations,
                     max_read_amplification=max_read_amplification,
                 )
@@ -857,10 +837,7 @@ def ivf_pq_refresh_from_change_stream(
 
 
 def index_stats(
-    spark: SparkSession,
-    index_path: str,
-    key: str = "doc_id",
-    include_live: bool = False,
+    spark: SparkSession, index_path: str, include_live: bool = False
 ) -> dict:
     """Operational snapshot of a maintained index — what a refresh
     pipeline's monitoring reads to decide WHEN to compact (the
@@ -889,9 +866,9 @@ def index_stats(
     but-uncompacted state, where readers scan everything for nothing —
     the state a compaction policy SHOULD fire on."""
     m = _require_manifest(index_path, "index_stats")
-    base = spark.read.parquet(_base_path(index_path, m))
+    base = _read_base(spark, index_path, m)
     gens = [os.path.join(index_path, rel) for rel in m["generations"]]
-    tomb_schema = base.select(key).schema
+    tomb_schema = base.select(m["key"]).schema
     if gens:
         # per-generation reads unioned, ONE count job per layer (a
         # single multi-path read would trip partition discovery on the
@@ -921,7 +898,7 @@ def index_stats(
         # (a concurrent commit between the two reads would otherwise
         # skew read_amplification)
         live = (
-            _fold_generations(spark, base, gens, key).count()
+            _fold_generations(spark, base, index_path, m).count()
             if gens
             else base_rows
         )
@@ -976,8 +953,8 @@ def _stage_compacted_base(
 def compact_index(
     spark: SparkSession,
     index_path: str,
-    key: str = "doc_id",
-    partition_col: str = "band",
+    key: str | None = None,
+    partition_col: str | None = None,
 ) -> int:
     """Fold every committed delta generation into a fresh base tree
     and flip the manifest at it — the periodic compaction the
@@ -999,6 +976,10 @@ def compact_index(
     unreferenced trailing generation (interrupted writer) was never
     part of the index, so it is swept with the rest.
 
+    Key and partition column come from the manifest; `key` /
+    `partition_col` may only restate them — a value that disagrees
+    raises ValueError before anything is swept or staged.
+
     Single-writer per index is the standing contract, and violations
     are DETECTED: after staging, the manifest is re-read — if the
     generation log advanced during the fold (a concurrent
@@ -1009,16 +990,23 @@ def compact_index(
     import shutil
 
     m = _require_manifest(index_path, "compact_index")
+    for name, given in (("key", key), ("partition_col", partition_col)):
+        if given not in (None, m[name]):
+            raise ValueError(
+                f"compact_index: {name}={given!r} disagrees with the "
+                f"manifest's {m[name]!r} — compacting by it would "
+                "re-partition the base and lose probe pruning; omit it"
+            )
     _gc(index_path)  # sweep crash garbage from any prior attempt
-    gens = [os.path.join(index_path, rel) for rel in m["generations"]]
+    gens = m["generations"]
     if not gens:
         return 0
     folded = _fold_generations(
-        spark, spark.read.parquet(_base_path(index_path, m)), gens, key
+        spark, _read_base(spark, index_path, m), index_path, m
     )
     new_base_rel = os.path.join("_base", f"v{m['next_base']}")
     staging = os.path.join(index_path, new_base_rel)
-    _stage_compacted_base(folded, staging, partition_col)
+    _stage_compacted_base(folded, staging, m["partition_col"])
     cur = _read_manifest(index_path) or {}  # vanished ⇒ drift
     drift = _manifest_drift(m, cur)
     if drift:
@@ -1038,15 +1026,15 @@ def compact_index(
         generations=[],
         next_gen=1,
         next_base=m["next_base"] + 1,
-        commit_seq=cur.get("commit_seq", 0) + 1,
+        commit_seq=cur["commit_seq"] + 1,
     )
     _atomic_write_json(_manifest_file(index_path), new_m)
     # the FOLDED generations are superseded by the flip (their content
     # lives in the new base) — delete them explicitly: the generic GC
     # below spares the gen={next_gen}=1 slot, which after the counter
     # reset is exactly where old gen=1 sits
-    for g in gens:
-        shutil.rmtree(g, ignore_errors=True)
+    for rel in gens:
+        shutil.rmtree(os.path.join(index_path, rel), ignore_errors=True)
     _gc(index_path)  # old base + remaining _delta residue
     return len(gens)
 
@@ -1054,8 +1042,6 @@ def compact_index(
 def maybe_compact(
     spark: SparkSession,
     index_path: str,
-    key: str = "doc_id",
-    partition_col: str = "band",
     max_generations: int | None = None,
     max_read_amplification: float | None = None,
 ) -> int:
@@ -1091,14 +1077,13 @@ def maybe_compact(
         return 0
     fire = max_generations is not None and n_gens >= max_generations
     if not fire and max_read_amplification is not None:
-        amp = index_stats(
-            spark, index_path, key=key, include_live=True
-        )["read_amplification"]
+        amp = index_stats(spark, index_path, include_live=True)[
+            "read_amplification"
+        ]
         fire = amp >= max_read_amplification
     if not fire:
         return 0
-    return compact_index(spark, index_path, key=key,
-                         partition_col=partition_col)
+    return compact_index(spark, index_path)
 
 
 # --------------------------------------------- IVF-PQ drift & list skew
@@ -1148,7 +1133,6 @@ def _qerr_ratio(cur: float | None, train: float | None) -> float | None:
 def ivf_list_stats(
     spark: SparkSession,
     lists_path: str,
-    key: str = "doc_id",
     hot_threshold: int | None = None,
 ) -> dict:
     """Per-centroid inverted-list size distribution of a maintained
@@ -1168,7 +1152,7 @@ def ivf_list_stats(
     import statistics
 
     rows = (
-        read_index(spark, lists_path, key=key)
+        read_index(spark, lists_path)
         .groupBy("centroid_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -1354,10 +1338,9 @@ def ivf_pq_index_stats(
     full audit ratio) — both answered by `maybe_retrain`. One call per
     refresh covers both maintenance policies."""
     lists_path = os.path.join(index_path, "lists")
-    out = index_stats(spark, lists_path, key="nid",
-                      include_live=include_live)
+    out = index_stats(spark, lists_path, include_live=include_live)
     out["list_skew"] = ivf_list_stats(
-        spark, lists_path, key="nid", hot_threshold=hot_threshold
+        spark, lists_path, hot_threshold=hot_threshold
     )
     out["drift"] = ivf_pq_drift_stats(
         spark, index_path, corpus, id_col, vec_col

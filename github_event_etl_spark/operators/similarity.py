@@ -1346,7 +1346,7 @@ def ivf_pq_write_index(
     finally:
         centroids.unpersist()
         codebook.unpersist()
-    _commit_base(f"{path}/lists")
+    _commit_base(f"{path}/lists", "nid", "centroid_id")
     _atomic_write_json(
         os.path.join(path, "_params.json"),
         {
@@ -1473,7 +1473,7 @@ def _ivf_pq_partitioned_probe(
     from .index_maintenance import read_index
 
     params = _read_ivf_pq_params(path, op)
-    lists = read_index(spark, f"{path}/lists", key="nid")
+    lists = read_index(spark, f"{path}/lists")
     centroids = spark.read.parquet(f"{path}/centroids")
     codebook = spark.read.parquet(f"{path}/codebook")
     return _ivf_pq_probe_rank(
@@ -1506,7 +1506,7 @@ def ivf_write_index(
         f"{path}/assigned"
     )
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    _commit_base(f"{path}/assigned")
+    _commit_base(f"{path}/assigned", id_col, "centroid_id")
 
 
 def ann_ivf_partitioned(
@@ -1535,12 +1535,10 @@ def ann_ivf_partitioned(
     from .index_maintenance import read_index
 
     # read_index, not a plain scan (the PQ sibling's convention): a
-    # layout maintained through write_index_delta
-    # (value_cols=('centroid_id',) — see its docstring, or the
-    # full-column serving variant) probes its MAINTAINED state by
-    # folding committed generations; a freshly built index has none
-    # and reads as the plain base scan.
-    assigned = read_index(spark, f"{path}/assigned", key=id_col)
+    # layout maintained through write_index_delta probes its
+    # MAINTAINED state by folding committed generations; a freshly
+    # built index has none and reads as the plain base scan.
+    assigned = read_index(spark, f"{path}/assigned")
     centroids = spark.read.parquet(f"{path}/centroids")
     return ivf_probe(
         _pruned_lists(assigned, centroids, queries, nprobe, id_col, vec_col),
@@ -1873,7 +1871,7 @@ def rhp_write_index(
         .partitionBy("band")
         .parquet(path)
     )
-    _commit_base(path)
+    _commit_base(path, "doc_id", "band")
 
 
 # ------------------------------------------------------- exact near-dup pairs

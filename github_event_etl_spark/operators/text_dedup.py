@@ -736,7 +736,7 @@ def minhash_write_index(
         .partitionBy("band")
         .parquet(path)
     )
-    _commit_base(path)
+    _commit_base(path, "doc_id", "band")
 
 
 _PAIR_CHUNK = 64

@@ -78,7 +78,9 @@ from ..operators.text_analysis import (
     winnow_fingerprints,
     ws_token_count,
 )
-from ..operators.index_maintenance import apply_index_diff
+from ..operators.index_maintenance import (
+    _MANIFEST_FORMAT, apply_index_diff, read_index,
+)
 from ..operators.text_dedup import (
     _band_keys,
     _let,
@@ -111,6 +113,7 @@ from .catalog import query
 # or desynchronizes fixture from oracle, which the sf0.001
 # differential pytest fails loudly on the spot (ADVICE r15 item 3;
 # hand-picked constants alone silently missed the residue moduli).
+# A tree served through `read_index` also carries the manifest format.
 
 # --------------------------------------------------------------------------
 # Shared SQL fragments (DuckDB dialect), kept in lockstep with the Spark
@@ -529,9 +532,9 @@ def llm_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     (doc_id, band, bucket) index is written band-partitioned to the
     dataset's scratch tree (`minhash_write_index`, one shuffle-free
     Arrow-banding pass — in production this runs per corpus SNAPSHOT,
-    not per increment), and the classify reads it back instead of
-    re-shingling and re-minhashing every corpus document on every
-    daily run. At 100 TB the per-increment corpus work drops from
+    not per increment), and the classify reads it back (`read_index`)
+    instead of re-shingling and re-minhashing every corpus document on
+    every daily run. At 100 TB the per-increment corpus work drops from
     an O(corpus × shingles × hashes) CPU pass to a column-pruned
     narrow-row index scan that is immediately broadcast-semi-filtered
     to the increment's band keys.
@@ -559,6 +562,7 @@ def llm_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
             "num_bands": _NUM_BANDS, "rows_per_band": _ROWS_PER_BAND,
             "k": 3, "oracle": _INCRM_ORACLE,
             "schema": corpus.schema.simpleString(),
+            "manifest_format": _MANIFEST_FORMAT,
         },
         lambda p: minhash_write_index(
             corpus, p, num_bands=_NUM_BANDS, rows_per_band=_ROWS_PER_BAND,
@@ -571,7 +575,7 @@ def llm_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
         num_bands=_NUM_BANDS,
         rows_per_band=_ROWS_PER_BAND,
         max_bucket_size=_INCR_MAX_BUCKET,
-        corpus_banded=spark.read.parquet(index),
+        corpus_banded=read_index(spark, index),
     )
 
 
@@ -3999,10 +4003,10 @@ def llm_dedup_incremental_semantic_indexed(
     (vec_id, band, bucket) index is written band-partitioned to the
     dataset scratch tree (`similarity.rhp_write_index`, one
     shuffle-free Arrow-matmul pass, run per corpus SNAPSHOT in
-    production) and the classify reads it back through the shared
-    skeleton's `corpus_banded` face — the per-increment corpus
-    signature matmul disappears into a column-pruned narrow-row index
-    scan, exactly the production note in
+    production) and the classify reads it back (`read_index`) through
+    the shared skeleton's `corpus_banded` face — the per-increment
+    corpus signature matmul disappears into a column-pruned narrow-row
+    index scan, exactly the production note in
     `incremental_dedup_semantic`'s docstring made physical.
 
     Same fixture (`_incr_sem_split`), same skeleton, same statuses —
@@ -4025,6 +4029,7 @@ def llm_dedup_incremental_semantic_indexed(
             "planes_per_table": _SEMANTIC_LSH_PLANES,
             "oracle": _INCR_SEM_ORACLE,
             "schema": corpus.schema.simpleString(),
+            "manifest_format": _MANIFEST_FORMAT,
         },
         lambda p: rhp_write_index(
             corpus, p, dim=64,
@@ -4040,7 +4045,7 @@ def llm_dedup_incremental_semantic_indexed(
         num_tables=_SEMANTIC_LSH_TABLES,
         planes_per_table=_SEMANTIC_LSH_PLANES,
         max_bucket_size=_INCR_SEM_MAX_BUCKET,
-        corpus_banded=spark.read.parquet(index),
+        corpus_banded=read_index(spark, index),
     )
 
 
@@ -4872,8 +4877,8 @@ def llm_ivf_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned lists, never re-listed. Unlike the band indexes this
     path is pure JVM end to end (cosine is codegen'd higher-order
     arithmetic): the plan gate asserts NO Python/Arrow stage at all.
-    The physical twin (write_index_delta with
-    value_cols=('centroid_id',) / partition_col='centroid_id':
+    The physical twin (write_index_delta over a centroid-partitioned
+    base, whose manifest records the (vec_id, centroid_id) geometry:
     change-sized tombstone+append generations under the base lists) is
     pinned by frame-equality pytest in tests/test_index_maintenance.py."""
     emb = load_table(spark, sf_dir, "embeddings").select(

@@ -14,7 +14,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from github_event_etl_spark.operators.index_maintenance import (
-    _committed_generations,
+    _read_manifest,
     apply_index_diff,
     compact_index,
     read_index,
@@ -62,6 +62,12 @@ def _prev_cur(spark):
 
 def _rows(df):
     return {(r.doc_id, r.band, r.bucket) for r in df.collect()}
+
+
+def _committed_generations(path):
+    """The committed generations, in fold order — read FROM the
+    manifest (the reader contract), never by directory walk."""
+    return _read_manifest(path)["generations"]
 
 
 def _base_mtimes(path):
@@ -296,10 +302,10 @@ def test_apply_index_diff_equals_rebuild_ivf(spark):
 
 def test_write_read_index_delta_ivf_layout(spark, tmp_path):
     """The physical merge-on-read layer over the inverted-list layout:
-    base and appends both partitioned by centroid_id
-    (value_cols/partition_col generalization), one maintenance
-    generation, folded read equals a from-scratch assignment of the
-    current snapshot — base list directories never rewritten."""
+    base and appends both partitioned by centroid_id (the geometry the
+    manifest records), one maintenance generation, folded read equals
+    a from-scratch assignment of the current snapshot — base list
+    directories never rewritten."""
     from github_event_etl_spark.operators.index_maintenance import (
         _commit_base,
     )
@@ -307,31 +313,22 @@ def test_write_read_index_delta_ivf_layout(spark, tmp_path):
     prev, cur, assign_fn = _ivf_fixture(spark)
     path = str(tmp_path / "ivf")
     assign_fn(prev).write.partitionBy("centroid_id").parquet(path)
-    _commit_base(path)  # the builders' shared manifest step
+    # the builders' shared manifest step
+    _commit_base(path, "vec_id", "centroid_id")
     base_files = _base_mtimes(path)
     write_index_delta(
-        path,
-        snapshot_diff(prev, cur, "vec_id", ["embedding"]),
-        cur,
+        path, snapshot_diff(prev, cur, "vec_id", ["embedding"]), cur,
         assign_fn,
-        key="vec_id",
-        value_cols=("centroid_id",),
-        partition_col="centroid_id",
     )
-    assert _ivf_rows(read_index(spark, path, key="vec_id")) == _ivf_rows(
-        assign_fn(cur)
-    )
+    assert _ivf_rows(read_index(spark, path)) == _ivf_rows(assign_fn(cur))
     assert _base_mtimes(path) == base_files, (
         "maintenance rewrote base list dirs"
     )
     # compaction generalizes to the list layout too: fold the
     # generation into a fresh centroid-partitioned base
-    assert compact_index(spark, path, key="vec_id",
-                         partition_col="centroid_id") == 1
+    assert compact_index(spark, path) == 1
     assert not os.path.isdir(os.path.join(path, "_delta"))
-    assert _ivf_rows(read_index(spark, path, key="vec_id")) == _ivf_rows(
-        assign_fn(cur)
-    )
+    assert _ivf_rows(read_index(spark, path)) == _ivf_rows(assign_fn(cur))
 
 
 def test_write_index_delta_retries_over_stranded_generation(
@@ -654,7 +651,7 @@ def test_ivf_pq_serving_lists_maintain_from_diff(spark, sf_dir, tmp_path):
     fresh = encode(
         cur.select(F.col("vec_id").alias("nid"), "embedding")
     )
-    folded = read_index(spark, f"{maintained}/lists", key="nid").select(
+    folded = read_index(spark, f"{maintained}/lists").select(
         "nid", F.col("centroid_id").cast("long").alias("centroid_id"),
         "pq_code",
     )
@@ -690,11 +687,7 @@ def test_ivf_pq_serving_lists_maintain_from_diff(spark, sf_dir, tmp_path):
     assert pruned and all(s["numPartitions"] <= 4 for s in pruned), pruned
 
     # (4) compaction folds the maintained state into a plain base
-    folded_n = compact_index(
-        spark, f"{maintained}/lists", key="nid",
-        partition_col="centroid_id",
-    )
-    assert folded_n == 1
+    assert compact_index(spark, f"{maintained}/lists") == 1
     got = _rowset(ann_ivf_pq_partitioned(
         spark, maintained, qs, k=10, nprobe=4
     ))
@@ -786,12 +779,10 @@ def test_refresh_stream_composes_with_ivf_pq_encode(spark, sf_dir, tmp_path):
     refresh_index_from_change_stream(
         stream, f"{layout}/lists", encode,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        key="nid", value_cols=("pq_code", "centroid_id"),
-        partition_col="centroid_id",
     )
     assert len(_committed_generations(f"{layout}/lists")) == 2
     cols = ["nid", "centroid_id", "pq_code"]
-    folded = read_index(spark, f"{layout}/lists", key="nid").select(
+    folded = read_index(spark, f"{layout}/lists").select(
         "nid", F.col("centroid_id").cast("long").alias("centroid_id"),
         "pq_code",
     )
@@ -858,11 +849,9 @@ def test_write_index_delta_requires_committed_base(spark, tmp_path):
 def test_builders_commit_an_empty_manifest(spark, tmp_path):
     """Every layout is born committed: each of the four builders writes
     the empty manifest (base ".", no generations, next_gen 1) as its
-    last step, and `read_index` of the fresh build is exactly the base
-    parquet."""
-    from github_event_etl_spark.operators.index_maintenance import (
-        _read_manifest,
-    )
+    last step, recording its own (key, partition_col) geometry, and
+    `read_index` of the fresh build — no key argument — is exactly the
+    base parquet."""
     from github_event_etl_spark.operators.similarity import (
         ivf_pq_write_index,
         ivf_write_index,
@@ -877,19 +866,162 @@ def test_builders_commit_an_empty_manifest(spark, tmp_path):
     ivf_write_index(vecs, ivf, num_centroids=4)
     ivf_pq_write_index(vecs, pq, num_centroids=4, num_subspaces=4,
                        num_codewords=4, dim=16)
-    for index, key in [
-        (mh, "doc_id"),
-        (rhp, "doc_id"),
-        (os.path.join(ivf, "assigned"), "vec_id"),
-        (os.path.join(pq, "lists"), "nid"),
+    for index, geometry in [
+        (mh, ("doc_id", "band")),
+        (rhp, ("doc_id", "band")),
+        (os.path.join(ivf, "assigned"), ("vec_id", "centroid_id")),
+        (os.path.join(pq, "lists"), ("nid", "centroid_id")),
     ]:
         assert os.path.exists(os.path.join(index, "_manifest.json")), index
         m = _read_manifest(index)
         assert (m["base"], m["generations"], m["next_gen"]) == (".", [], 1)
-        got = read_index(spark, index, key=key)
+        assert (m["key"], m["partition_col"]) == geometry, index
+        got = read_index(spark, index)
         want = spark.read.parquet(index)
         assert got.columns == want.columns
         assert sorted(got.collect()) == sorted(want.collect()), index
+
+
+def _tree(path):
+    """{relative file path: (mtime, bytes)} of every file under `path`."""
+    return {
+        os.path.relpath(os.path.join(root, f), path): (
+            os.path.getmtime(os.path.join(root, f)),
+            open(os.path.join(root, f), "rb").read(),
+        )
+        for root, _, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_centroid_layouts_maintain_from_manifest_geometry(spark, tmp_path):
+    """The IVF `assigned` and IVF-PQ `lists` layouts maintain with NO
+    geometry argument anywhere: the writer, reader, both stats and the
+    compaction policy take the key and partition column from the
+    manifest the builder committed, and the appends land partitioned
+    by centroid_id like the base. A format-1 manifest (no geometry) is
+    refused by the writer, the reader and compaction; and a
+    compact_index partition column that disagrees with the manifest
+    raises before anything is swept or staged."""
+    import json
+
+    from github_event_etl_spark.operators.index_maintenance import (
+        index_stats,
+        ivf_list_stats,
+        maybe_compact,
+    )
+    from github_event_etl_spark.operators.similarity import (
+        ivf_assign_with_centroids,
+        ivf_pq_encode_fn,
+        ivf_pq_write_index,
+        ivf_write_index,
+    )
+
+    prev, cur = _planted_shift(spark)
+    diff = snapshot_diff(prev, cur, "vec_id", ["embedding"]).localCheckpoint()
+    ivf, pq = str(tmp_path / "ivf"), str(tmp_path / "pq")
+    ivf_write_index(prev, ivf, num_centroids=4)
+    ivf_pq_write_index(prev, pq, num_centroids=4, num_subspaces=4,
+                       num_codewords=4, dim=16)
+    ivf_centroids = spark.read.parquet(f"{ivf}/centroids")
+    encode = ivf_pq_encode_fn(
+        spark.read.parquet(f"{pq}/centroids"),
+        spark.read.parquet(f"{pq}/codebook"),
+        num_subspaces=4, num_codewords=4, dim=16,
+    )
+
+    def nid(df):
+        return df.withColumnRenamed("vec_id", "nid")
+
+    layouts = [
+        # (index, diff, cur docs, derivation, key)
+        (f"{ivf}/assigned", diff, cur,
+         lambda d: ivf_assign_with_centroids(d, ivf_centroids), "vec_id"),
+        (f"{pq}/lists", nid(diff), nid(cur), encode, "nid"),
+    ]
+    for index, d, docs, fn, key in layouts:
+        assert write_index_delta(index, d, docs, fn) == 1
+        appends = os.path.join(index, "_delta", "gen=1", "appends")
+        assert {
+            p.split("=")[0] for p in os.listdir(appends)
+            if not p.startswith(("_", "."))
+        } == {"centroid_id"}
+
+        def rows(df):
+            return sorted(
+                tuple(r) for r in df.select(
+                    key, F.col("centroid_id").cast("long")).collect()
+            )
+
+        assert rows(read_index(spark, index)) == rows(fn(docs))
+        stats = index_stats(spark, index, include_live=True)
+        assert (stats["generations"], stats["live_rows"]) == (1, 48)
+        assert ivf_list_stats(spark, index)["rows"] == 48
+
+        # a restated geometry that disagrees with the manifest: raises,
+        # and the manifest and every file stay exactly as they were
+        before = _tree(index)
+        with pytest.raises(ValueError, match="partition_col='pq_code'"):
+            compact_index(spark, index, partition_col="pq_code")
+        with pytest.raises(ValueError, match="key='doc_id'"):
+            compact_index(spark, index, key="doc_id")
+        assert _tree(index) == before
+
+        assert maybe_compact(spark, index, max_generations=1) == 1
+        assert rows(read_index(spark, index)) == rows(fn(docs))
+        # the compacted base is partitioned like the one it replaced
+        base = os.path.join(index, _read_manifest(index)["base"])
+        assert {
+            p.split("=")[0] for p in os.listdir(base)
+            if not p.startswith(("_", "."))
+        } == {"centroid_id"}
+
+        # a format-1 manifest carries no geometry: refused, unchanged
+        manifest = os.path.join(index, "_manifest.json")
+        m = _read_manifest(index)
+        old = {k: v for k, v in m.items()
+               if k not in ("key", "partition_col")}
+        old["format"] = 1
+        with open(manifest, "w") as f:
+            json.dump(old, f)
+        for op, call in [
+            ("write_index_delta", lambda: write_index_delta(index, d, docs, fn)),
+            ("read_index", lambda: read_index(spark, index)),
+            ("compact_index", lambda: compact_index(spark, index)),
+        ]:
+            with pytest.raises(FileNotFoundError,
+                               match=f"{op}: no committed index.*format-2"):
+                call()
+        assert _read_manifest(index) == old
+        assert not os.path.isdir(os.path.join(index, "_delta"))
+
+
+def test_refresh_stream_refuses_uncommitted_path_before_it_starts(
+    spark, tmp_path
+):
+    """The refresh loop reads the manifest before the stream starts: a
+    path with no committed index fails AT THE CALL — even when the
+    stream has nothing to deliver, so no micro-batch would ever have
+    tripped over it — and no checkpoint directory is created."""
+    from github_event_etl_spark.operators.index_maintenance import (
+        refresh_index_from_change_stream,
+    )
+
+    src = tmp_path / "changes"
+    src.mkdir()  # an empty change log
+    ckpt = tmp_path / "ckpt"
+    with pytest.raises(FileNotFoundError, match=(
+        "refresh_index_from_change_stream: no committed index"
+    )):
+        refresh_index_from_change_stream(
+            spark.readStream.schema(
+                "doc_id long, change_type string, text string"
+            ).json(str(src)),
+            str(tmp_path / "never_built"),
+            _mh_band_fn(),
+            checkpoint_dir=str(ckpt),
+        )
+    assert not ckpt.exists()
 
 
 def test_compact_index_survives_fully_tombstoned_fold(spark, tmp_path):
@@ -931,7 +1063,6 @@ def test_compact_crash_windows_are_manifest_visibility(spark, tmp_path):
     the new state readable with the old trees as garbage; the next
     compaction call's manifest-anchored GC sweeps either residue."""
     from github_event_etl_spark.operators.index_maintenance import (
-        _read_manifest,
         compact_index,
         read_index,
     )
@@ -1346,7 +1477,6 @@ def test_maybe_compact_policy_fires_exactly_at_thresholds(spark, tmp_path):
     Compactions are counted from the manifest's next_base, which
     increments once per flip."""
     from github_event_etl_spark.operators.index_maintenance import (
-        _read_manifest,
         index_stats,
         maybe_compact,
         refresh_index_from_change_stream,
@@ -1914,9 +2044,7 @@ def test_ivf_list_skew_stat_fires(spark, tmp_path):
     ivf_write_index(corpus, ivf_path, num_centroids=8)
 
     # the stat fires: one list holds >= the 160 duplicates
-    stats = ivf_list_stats(
-        spark, f"{ivf_path}/assigned", key="vec_id", hot_threshold=50
-    )
+    stats = ivf_list_stats(spark, f"{ivf_path}/assigned", hot_threshold=50)
     assert stats["num_lists"] >= 2
     assert stats["max_list"] >= 160
     assert stats["max_median_ratio"] >= 4, stats
@@ -1987,13 +2115,8 @@ def test_recall_after_refresh_equals_rebuilt_layout(
             eager=False
         )
         ivf_pq_write_index_delta(spark, maintained, d, b)
-    assert index_stats(spark, f"{maintained}/lists", key="nid")[
-        "generations"
-    ] == 2
-    assert compact_index(
-        spark, f"{maintained}/lists", key="nid",
-        partition_col="centroid_id",
-    ) == 2
+    assert index_stats(spark, f"{maintained}/lists")["generations"] == 2
+    assert compact_index(spark, f"{maintained}/lists") == 2
 
     qs = cur2.filter(F.col("vec_id") < 8)
     truth = knn_bruteforce(cur2, qs, k=10).select("qid", "nid")
@@ -2129,7 +2252,7 @@ def test_ivf_pq_refresh_stream_logs_drift_per_generation(
 
     encode = ivf_pq_encode_fn(frozen_c, frozen_cb)
     cols = ["nid", "centroid_id", "pq_code"]
-    folded = read_index(spark, f"{layout}/lists", key="nid").select(
+    folded = read_index(spark, f"{layout}/lists").select(
         "nid", F.col("centroid_id").cast("long").alias("centroid_id"),
         "pq_code",
     )
@@ -2151,10 +2274,7 @@ def test_ivf_pq_refresh_stream_logs_drift_per_generation(
     assert got == want and len(got) > 0
 
     # (4) compaction composes and the drift log survives it
-    assert maybe_compact(
-        spark, f"{layout}/lists", key="nid",
-        partition_col="centroid_id", max_generations=2,
-    ) == 2
+    assert maybe_compact(spark, f"{layout}/lists", max_generations=2) == 2
     assert [e["gen"] for e in _read_drift_log(layout)] == [1, 2]
     got2 = _rowset(ann_ivf_pq_partitioned(
         spark, layout, qs, k=10, nprobe=4, id_col="nid",
@@ -2177,7 +2297,6 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from github_event_etl_spark.operators.index_maintenance import (
-        _committed_generations,
         ivf_pq_refresh_from_change_stream,
         ivf_pq_write_index_delta,
     )
