@@ -104,7 +104,10 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from github_event_etl_spark.session import ensure_session_defaults
+    from github_event_etl_spark.session import (
+        CODEGEN_CACHE_ENTRIES,
+        ensure_session_defaults,
+    )
     from github_event_etl_spark.plans.catalog import resolve
 
     spark = (
@@ -112,6 +115,8 @@ def main() -> None:
         .appName("geetl-bench")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", cpus)
+        # static, so ensure_session_defaults cannot set it (session.py)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     ensure_session_defaults(spark)
@@ -258,17 +263,12 @@ def main() -> None:
         return rep
 
     # Pipeline-section warmup (same footing as the JVM/UDF/streaming
-    # warmups above): the composite plans dozens of UNIQUE codegen
-    # stages, so its first executions pay janino compilation plus the
-    # C2 JIT ramp that the small headline queries amortize across their
-    # shared scan/shuffle shapes. Measured at sf0.1: reps decay
-    # 8.2 → 8.2 → 6.4 → 6.1 → 5.9 → 5.5 s and hold at ~5.5 s from rep
-    # ~6 — the steady state a long-running cluster job actually sees.
-    # Two untimed warmup reps move the measured median out of the ramp;
-    # BASELINE.md's series notes the policy change at r10.
-    # Each pipeline gets its OWN two untimed warmup reps — their stage
-    # chains are disjoint sets of unique codegen stages, so each pays
-    # its own janino + C2 ramp (the dedup_e2e measurement, r10).
+    # warmups above): a pipeline's first execution compiles its ~150-230
+    # generated classes (janino); the session's codegen cache
+    # (session.py) holds them, so later reps compile 0-4 (BASELINE.md
+    # corrects r10's "JIT ramp" reading). Two untimed warmup reps per
+    # pipeline keep the measured median warm; BASELINE.md's series
+    # notes the policy change at r10.
     for pname in _resolved(PIPELINES):
         rep = _with_pipeline_parallelism(qmap[pname])
         for _ in range(2):

@@ -4754,6 +4754,7 @@ def llm_index_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k": 3, "oracle": _APPLY_DIFF_ORACLE,
             "snap_added": _SNAP_ADDED, "snap_prev_text": _SNAP_PREV_TEXT_SQL,
             "schema": prev.schema.simpleString(),
+            "manifest_format": _MANIFEST_FORMAT,
         },
         lambda p: minhash_write_index(
             prev, p, num_bands=_NUM_BANDS, rows_per_band=_ROWS_PER_BAND
@@ -4770,7 +4771,7 @@ def llm_index_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bands_vec = minhash_band_buckets_vec(_NUM_BANDS, _ROWS_PER_BAND, k=3)
     return apply_index_diff(
-        spark.read.parquet(index),
+        read_index(spark, index),
         diff,
         cur,
         band_fn=lambda d: _band_keys(d, bands_vec),

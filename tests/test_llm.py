@@ -3060,6 +3060,59 @@ def test_index_apply_diff_plan_gates(spark, sf_dir):
     assert tree.count("BroadcastHashJoin") == 2, tree
 
 
+def test_index_apply_diff_rewrites_format1_tree(spark, sf_dir):
+    """A `minhash_prev_index` tree left by an older checkout (a
+    format-1 manifest without key/partition_col, a spec without
+    `manifest_format`) is rewritten by the key's first call and left
+    alone by the next; the key returns the same rows throughout."""
+    import json
+    import os
+
+    from github_event_etl_spark.operators.index_maintenance import (
+        _MANIFEST_FORMAT,
+        _read_manifest,
+    )
+    from github_event_etl_spark.plans.catalog import get_spec
+    from github_event_etl_spark.scratch import scratch_dir
+
+    key = get_spec("llm_index_apply_diff").fn
+
+    def rows():
+        return sorted(tuple(r) for r in key(spark, sf_dir).collect())
+
+    def mtimes(tree):
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _dirs, files in os.walk(tree)
+            for f in files
+        }
+
+    expected = rows()
+    index = scratch_dir(sf_dir, "minhash_prev_index")
+    m = _read_manifest(index)
+    assert m["format"] == _MANIFEST_FORMAT
+    old = {k: v for k, v in m.items() if k not in ("key", "partition_col")}
+    old["format"] = 1
+    with open(os.path.join(index, "_manifest.json"), "w") as f:
+        json.dump(old, f)
+    spec_path = os.path.join(index, "_spec.json")
+    with open(spec_path) as f:
+        spec = json.load(f)
+    spec.pop("manifest_format", None)
+    with open(spec_path, "w") as f:
+        json.dump(spec, f)
+
+    assert rows() == expected
+    m = _read_manifest(index)
+    assert m["format"] == _MANIFEST_FORMAT
+    assert (m["key"], m["partition_col"]) == ("doc_id", "band")
+    with open(spec_path) as f:
+        assert json.load(f)["manifest_format"] == _MANIFEST_FORMAT
+    before = mtimes(index)
+    assert rows() == expected
+    assert mtimes(index) == before
+
+
 def test_ivf_apply_diff_equals_rebuild(spark, sf_dir):
     """The IVF maintenance key's identity, Spark-side (the oracle pins
     it cross-engine): the maintained (vec_id, centroid_id) index equals
