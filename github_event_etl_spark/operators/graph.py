@@ -30,20 +30,19 @@ operators.
 Scale notes: labels are (long, long) pairs — the per-round shuffle
 moves O(E) narrow rows, partitioned by node id (uniform for content
 ids). Per-round checkpointing truncates the growing lineage (an
-iterative-plan necessity, not an optimization): reliable
-`df.checkpoint()` when a checkpoint dir is configured (survives
-executor loss on a cluster — localCheckpoint blocks live on
-executors and die with them, killing the job mid-iteration), with
-`localCheckpoint()` as the local-mode fallback. AQE re-sizes the
-per-round shuffles as components collapse and E shrinks.
+iterative-plan necessity, not an optimization) through
+`session.materialize`: reliable when the SparkContext has a
+checkpoint dir (survives executor loss on a cluster), local
+otherwise. AQE re-sizes the per-round shuffles as components
+collapse and E shrinks.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import materialize
 
 
 def _star_round(edges: DataFrame, large: bool) -> DataFrame:
@@ -91,11 +90,7 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    max_rounds: int = 12,
-    checkpoint_dir: Optional[str] = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
     """Map every node in the undirected edge list (u, v) to the minimum
     node id of its connected component. Returns (node, component).
 
@@ -114,37 +109,14 @@ def connected_components(
     Isolated nodes never appear in `edges` and so are their own
     implicit components (callers union them back if needed).
 
-    Executor-loss story: with `checkpoint_dir` set (or a checkpoint dir
-    already configured on the SparkContext), each round materializes
-    through a RELIABLE `df.checkpoint()` to that fault-tolerant
-    storage — losing an executor mid-iteration only recomputes from
-    the last round, as on any cluster job. Without one, the loop falls
-    back to `localCheckpoint()`: correct and cheaper in local mode,
-    but its blocks live in executor storage, so on a real cluster an
-    executor loss after lineage truncation is unrecoverable — pass a
-    shared-filesystem `checkpoint_dir` in any multi-executor
-    deployment.
-
-    Side-effect hygiene: `setCheckpointDir` mutates session-global
-    SparkContext state and has no public unset, so when this function
-    sets it, a finally block restores the PRIOR value (including the
-    unset state, via the Scala-side Option setter) before returning —
-    callers on a shared session never inherit this operator's
-    checkpoint configuration. Because the per-round checkpoints are
-    eager and the returned plan reads only the final checkpointed
-    edge set, restoring the config does not disturb the result.
+    Executor-loss story: each round materializes through
+    `session.materialize`, so a deployment that sets a checkpoint dir
+    on the SparkContext gets RELIABLE per-round checkpoints (losing an
+    executor mid-iteration only recomputes from the last round), and a
+    local session gets `localCheckpoint`s. Because the per-round
+    checkpoints are eager, the returned plan reads only the final
+    checkpointed edge set.
     """
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    prior_dir = sc.getCheckpointDir()
-    if checkpoint_dir is not None:
-        sc.setCheckpointDir(checkpoint_dir)
-    reliable = sc.getCheckpointDir() is not None
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
-        )
 
     def _sketch(df: DataFrame) -> tuple[int, int]:
         """(edge count, order-free checksum) in ONE job: XOR of per-edge
@@ -162,49 +134,36 @@ def connected_components(
         ).first()
         return row["n"], row["h"]
 
-    try:
-        cur = _ckpt(
-            edges.filter(F.col("u") != F.col("v"))
-            .select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-            .distinct()
-        )
-        prev = _sketch(cur)
-        changing_rounds = 0
-        while True:
-            nxt = _star_round(cur, large=True)
-            cur = _ckpt(_star_round(nxt, large=False))
-            sk = _sketch(cur)
-            # Fixed point: same edge set (both sides are distinct sets).
-            if sk == prev:
-                break
-            prev = sk
-            changing_rounds += 1
-            if changing_rounds > max_rounds:
-                # A partial result here is silently WRONG labels (some
-                # members non-minimal), which downstream contracts —
-                # dedup representatives, the leakage-safe split — must
-                # never receive. Fail loudly instead of returning it.
-                # This branch only fires when THIS round genuinely
-                # changed the edge set, so the message is always true;
-                # a graph that converges exactly on round max_rounds
-                # spends one extra confirming round and returns fine.
-                raise RuntimeError(
-                    "connected_components exceeded "
-                    f"max_rounds={max_rounds} alternating-star rounds "
-                    "with the edge set still changing; raise "
-                    "max_rounds (dedup_clusters plumbs it through)"
-                )
-    finally:
-        if checkpoint_dir is not None and prior_dir != sc.getCheckpointDir():
-            # Restore through the Scala-side Option setter in BOTH
-            # cases: there is no public unset for None, and for a
-            # previously-set dir re-calling setCheckpointDir would
-            # nest a fresh UUID subdir under the already-resolved
-            # path instead of restoring it verbatim.
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(
-                sc._jvm.scala.Option.apply(prior_dir)
+    cur = materialize(
+        edges.filter(F.col("u") != F.col("v"))
+        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+        .distinct()
+    )
+    prev = _sketch(cur)
+    changing_rounds = 0
+    while True:
+        nxt = _star_round(cur, large=True)
+        cur = materialize(_star_round(nxt, large=False))
+        sk = _sketch(cur)
+        # Fixed point: same edge set (both sides are distinct sets).
+        if sk == prev:
+            break
+        prev = sk
+        changing_rounds += 1
+        if changing_rounds > max_rounds:
+            # A partial result here is silently WRONG labels (some
+            # members non-minimal), which downstream contracts —
+            # dedup representatives, the leakage-safe split — must
+            # never receive. Fail loudly instead of returning it.
+            # This branch only fires when THIS round genuinely
+            # changed the edge set, so the message is always true;
+            # a graph that converges exactly on round max_rounds
+            # spends one extra confirming round and returns fine.
+            raise RuntimeError(
+                "connected_components exceeded "
+                f"max_rounds={max_rounds} alternating-star rounds "
+                "with the edge set still changing; raise "
+                "max_rounds (dedup_clusters plumbs it through)"
             )
     # After convergence every edge is (component_min, member).
     members = cur.select(F.col("v").alias("node"), F.col("u").alias("component"))
@@ -220,22 +179,20 @@ def dedup_clusters(
     id_col: str = "doc_id",
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    checkpoint_dir: Optional[str] = None,
     max_rounds: int = 12,
 ) -> DataFrame:
     """Resolve near-duplicate pairs into clusters: (doc_id, cluster_id,
     is_representative). `cluster_id` is the minimum doc_id of the
     cluster; docs not in any pair are singleton clusters of themselves.
-    `checkpoint_dir` enables reliable per-round checkpointing (see
-    connected_components — required for executor-loss tolerance on a
-    real cluster); `max_rounds` is the closure's changing-round budget
-    (connected_components raises past it rather than returning partial
-    labels — this is the knob its error message points at).
+    Per-round checkpoints follow `session.materialize` (see
+    connected_components); `max_rounds` is the closure's
+    changing-round budget (connected_components raises past it rather
+    than returning partial labels — this is the knob its error message
+    points at).
     """
     comps = connected_components(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
         max_rounds=max_rounds,
-        checkpoint_dir=checkpoint_dir,
     )
     ids = all_ids.select(F.col(id_col).alias("node")).distinct()
     labeled = ids.join(comps, "node", "left").select(

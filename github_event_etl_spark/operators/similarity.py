@@ -51,6 +51,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..session import materialize
+
 # --------------------------------------------------------------- cosine math
 
 
@@ -1613,12 +1615,10 @@ def kmeans_refine_int(
     corpus rows per cluster at that magnitude (cast to decimal there).
 
     Lineage: each iteration's centroid table is EAGERLY checkpointed
-    (reliable `checkpoint()` when the SparkContext has a checkpoint
-    dir, `localCheckpoint()` otherwise — the connected_components
-    discipline), so iteration i+1's plan reads C materialized rows
-    instead of nesting the whole prior chain; without truncation the
-    plan (and the corpus-scan count on re-execution) grows
-    superlinearly in `iters`.
+    (`session.materialize`, the connected_components discipline), so
+    iteration i+1's plan reads C materialized rows instead of nesting
+    the whole prior chain; without truncation the plan (and the
+    corpus-scan count on re-execution) grows superlinearly in `iters`.
     """
     q = corpus.select(
         F.col(id_col),
@@ -1660,15 +1660,6 @@ def kmeans_refine_int(
             F.col("_b.d2").alias("d2"),
         )
 
-    reliable = (
-        corpus.sparkSession.sparkContext.getCheckpointDir() is not None
-    )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(
-            eager=True
-        )
-
     for _ in range(iters):
         asg = assign(cent)
         comp = asg.select(
@@ -1683,7 +1674,7 @@ def kmeans_refine_int(
                 lambda s: s["m"],
             ).alias("cq_new")
         )
-        cent = _ckpt(
+        cent = materialize(
             cent.join(newc, "centroid_id", "left").select(
                 "centroid_id", F.coalesce("cq_new", "cq").alias("cq")
             )
@@ -1757,7 +1748,6 @@ def incremental_dedup_semantic(
     vec_col: str = "embedding",
     max_bucket_size: int = 10_000,
     corpus_banded: DataFrame | None = None,
-    max_broadcast_pairs: int | None = None,
     materialize_batch_bands: bool = False,
 ) -> DataFrame:
     """Embedding-space twin of text_dedup.incremental_dedup_minhash:
@@ -1824,7 +1814,6 @@ def incremental_dedup_semantic(
             if corpus_banded is not None and id_col != "doc_id"
             else corpus_banded
         ),
-        max_broadcast_pairs=max_broadcast_pairs,
         materialize_batch_bands=materialize_batch_bands,
     )
 

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import materialize
 from .text_dedup import _let, word_shingles, word_shingles_tokens, words
 
 # Tokens that vote for each language. Deterministic classification with
@@ -362,12 +363,11 @@ def bpe_merge_pairs(
     )
 
 
-def learn_bpe(
-    docs: DataFrame,
-    n_merges: int,
-    text_col: str = "text",
-    checkpoint_every: int = 4,
-) -> DataFrame:
+# learn_bpe re-checkpoints its word histogram every this many merges.
+_BPE_CHECKPOINT_EVERY = 4
+
+
+def learn_bpe(docs: DataFrame, n_merges: int, text_col: str = "text") -> DataFrame:
     """Full iterative BPE training (Sennrich et al., ACL'16),
     distributed and collect-free: returns the learned merge table
     (iteration, pair_a, pair_b, pair_count), one row per merge in
@@ -390,22 +390,21 @@ def learn_bpe(
          merge again with the next symbol as `a` would.
 
     Iterative-plan hygiene: the symbolized histogram re-checkpoints
-    every `checkpoint_every` merges (graph.py's lineage-truncation
+    every `_BPE_CHECKPOINT_EVERY` merges (graph.py's lineage-truncation
     pattern — each iteration otherwise nests another crossJoin +
-    aggregate under the last). Eager localCheckpoint per round also
-    pins the merge CHOICE, so ties broken identically on every
-    re-execution.
+    aggregate under the last). The eager per-round checkpoint
+    (`session.materialize`) also pins the merge CHOICE, so ties break
+    identically on every re-execution.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    wf = (
+    wf = materialize(
         docs.select(F.explode(words(F.col(text_col))).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .withColumn("syms", F.split(F.col("w"), ""))
         .drop("w")
-        .localCheckpoint(eager=True)
     )
     merges = []
     for it in range(n_merges):
@@ -416,7 +415,8 @@ def learn_bpe(
                 F.element_at("syms", i + F.lit(1)).alias("b"),
             ),
         )
-        best = (
+        # materialized to pin the choice (ties, replays)
+        best = materialize(
             wf.filter(F.size("syms") >= 2)
             .select("freq", F.explode(pair_expr).alias("p"))
             .groupBy("p.a", "p.b")
@@ -429,7 +429,6 @@ def learn_bpe(
                 F.col("b").alias("pair_b"),
                 "pair_count",
             )
-            .localCheckpoint(eager=True)  # pin the choice (ties, replays)
         )
         merges.append(best)
         folded = F.aggregate(
@@ -448,8 +447,8 @@ def learn_bpe(
         wf = wf.crossJoin(F.broadcast(best.drop("iteration", "pair_count"))).select(
             "freq", folded.alias("syms")
         )
-        if (it + 1) % checkpoint_every == 0 and it + 1 < n_merges:
-            wf = wf.localCheckpoint(eager=True)
+        if (it + 1) % _BPE_CHECKPOINT_EVERY == 0 and it + 1 < n_merges:
+            wf = materialize(wf)
     out = merges[0]
     for m in merges[1:]:
         out = out.unionAll(m)

@@ -58,6 +58,7 @@ from ..operators.text_dedup import (
     verify_pairs_jaccard,
     words,
 )
+from ..session import materialize
 from ..sources.tables import load_table
 
 _JACCARD_THRESHOLD = 0.8
@@ -95,10 +96,9 @@ def dedup_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one cheap doc_id equi-join back to the parquet scan (column-
     # pruned to (doc_id, text); re-reading a column from columnar
     # storage beats holding every document body in block-manager
-    # memory — at 100 TB the text column IS the corpus). Local-mode
-    # blocks suffice here; a cluster run sets a SparkContext
-    # checkpoint dir upstream (dedup_clusters already honors it) or
-    # persists to DISK — the recompute-vs-materialize call the span
+    # memory — at 100 TB the text column IS the corpus). The cut is
+    # `session.materialize`, reliable once the deployment sets a
+    # checkpoint dir — the recompute-vs-materialize call the span
     # operator's docstring discusses, decided for materialize because
     # the upstream includes a multi-join verify stage, not a map-only
     # derivation.
@@ -108,7 +108,7 @@ def dedup_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_representative",
         quality_score(F.col("text")).alias("q"),
     )
-    labeled = labeled.localCheckpoint(eager=True)
+    labeled = materialize(labeled)
     counts = labeled.groupBy("lang").agg(
         F.count(F.lit(1)).alias("docs_in"),
         F.sum(
@@ -189,7 +189,6 @@ def incremental_e2e_classify(
     batch_docs: DataFrame,
     corpus_emb: DataFrame,
     batch_emb: DataFrame,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """The daily-increment waterfall, one composed plan over the three
     incremental twins (all built on the shared
@@ -214,17 +213,13 @@ def incremental_e2e_classify(
     left-semi-shaped id equi-join, never a corpus shuffle.
 
     Materialization points (the dedup_e2e convention): each stage's
-    verdict frame is eagerly localCheckpoint-ed SCALARS-ONLY (doc_id,
-    status, matched id — never text, never vectors). Without it the
-    next stage's batch subtree — which the classify skeleton
-    deliberately plans ~3× — would nest the ENTIRE previous stage's
-    join tree inside each copy, multiplying corpus scans ~3× per
-    stage; with it each stage replays at most a cheap id equi-join
-    back to the pruned parquet scan. Cluster runs swap localCheckpoint
-    for a checkpoint dir or DISK persist, same as dedup_e2e.
-    `checkpoint=False` keeps the whole waterfall ONE lazy plan — the
-    plan gate uses it so its assertions see all three stages, not the
-    ExistingRDD stubs the checkpoints leave behind.
+    verdict frame is eagerly checkpointed (`session.materialize`)
+    SCALARS-ONLY (doc_id, status, matched id — never text, never
+    vectors). Without it the next stage's batch subtree — which the
+    classify skeleton deliberately plans ~3× — would nest the ENTIRE
+    previous stage's join tree inside each copy, multiplying corpus
+    scans ~3× per stage; with it each stage replays at most a cheap id
+    equi-join back to the pruned parquet scan.
 
     Remainders are derived by ANTI-JOINING each stage's input ids
     against that stage's resolved set — never by filtering the
@@ -236,14 +231,9 @@ def incremental_e2e_classify(
     conservation contract); the anti-join remainder carries it
     forward to the later stages and, if nothing resolves it, the
     'none'/'new' fall-through."""
-    mat = (
-        (lambda df: df.localCheckpoint(eager=True))
-        if checkpoint
-        else (lambda df: df)
-    )
     batch_ids = batch_docs.select("doc_id")
 
-    exact_st = mat(
+    exact_st = materialize(
         incremental_dedup(corpus_docs, batch_docs).select(
             "doc_id",
             "status",
@@ -258,7 +248,7 @@ def incremental_e2e_classify(
     )
 
     batch_near = batch_docs.join(rem_after_exact, "doc_id")
-    near_st = mat(
+    near_st = materialize(
         incremental_dedup_minhash(
             corpus_docs,
             batch_near,
@@ -271,9 +261,8 @@ def incremental_e2e_classify(
             # previous stage's remainder, so the ~3x-replanned batch
             # banding multiplies the whole upstream — materialize the
             # scalars-only band keys (r22 measured win, see the
-            # skeleton docstring); follows `checkpoint` so the lazy
-            # plan gate still sees the full tree
-            materialize_batch_bands=checkpoint,
+            # skeleton docstring)
+            materialize_batch_bands=True,
         ).select(
             "doc_id", "status", F.col("matched_doc_id").alias("matched_id")
         )
@@ -292,7 +281,7 @@ def incremental_e2e_classify(
     # remainder anti-join below), so it is materialized like the other
     # stages — without it the most expensive stage's join tree is
     # planned, and partially re-executed, once per consumer
-    sem_st = mat(
+    sem_st = materialize(
         incremental_dedup_semantic(
             corpus=corpus_emb,
             batch=batch_vec,
@@ -301,7 +290,7 @@ def incremental_e2e_classify(
             num_tables=_INCR_E2E_SEM_TABLES,
             planes_per_table=_INCR_E2E_SEM_PLANES,
             max_bucket_size=_INCR_E2E_MAX_BUCKET,
-            materialize_batch_bands=checkpoint,
+            materialize_batch_bands=True,
         ).select(
             F.col("vec_id").alias("doc_id"),
             "status",
@@ -328,9 +317,7 @@ def incremental_e2e_classify(
     )
 
 
-def incremental_e2e_report(
-    docs: DataFrame, emb: DataFrame, checkpoint: bool = True
-) -> DataFrame:
+def incremental_e2e_report(docs: DataFrame, emb: DataFrame) -> DataFrame:
     """80/20 split (`doc_id % 10 >= _INCR_E2E_BATCH_SPLIT`) + waterfall
     classify + the merged (stage, status, n_docs) report, over GIVEN
     documents/embeddings frames — ONE copy of the split/report wiring,
@@ -345,7 +332,6 @@ def incremental_e2e_report(
         batch_docs=docs.filter(doc_is_batch),
         corpus_emb=emb.filter(~vec_is_batch),
         batch_emb=emb.filter(vec_is_batch),
-        checkpoint=checkpoint,
     )
     return (
         per_doc.groupBy("stage", "status")
@@ -354,9 +340,7 @@ def incremental_e2e_report(
     )
 
 
-def incremental_e2e_pipeline(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def incremental_e2e_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed daily-increment job over the real (un-planted)
     tables: the exact → MinHash → semantic waterfall and its
     (stage, status, n_docs) report — the merged status report a
@@ -367,11 +351,8 @@ def incremental_e2e_pipeline(
     (queries_llm.llm_incremental_e2e_report) runs the same composition
     over a cross-stage planted fixture instead, so its driver row
     exercises every waterfall stage. Per-operator correctness is
-    already oracle-pinned by the three llm_dedup_incremental* keys.
-    `checkpoint` passes through to `incremental_e2e_classify` (False =
-    one fully lazy plan, used by the plan gate)."""
+    already oracle-pinned by the three llm_dedup_incremental* keys."""
     return incremental_e2e_report(
         load_table(spark, sf_dir, "documents"),
         load_table(spark, sf_dir, "embeddings"),
-        checkpoint=checkpoint,
     )

@@ -21,13 +21,18 @@ Scale posture (100 TB design, tested on local[32]):
   (`useIdInClassName=false`): AQE numbers codegen stages differently
   from run to run, and an identical body under a new name misses the
   cache. The id stays in the plan string and the generated comment.
+- One lineage-cut rule (`materialize`). Iterative and composed plans
+  (connected-components rounds, k-means iterations, BPE merges, the
+  two pipelines' verdict stages) cut their lineage eagerly, and the
+  kind of cut follows the deployment: a checkpoint dir set once on the
+  SparkContext makes every cut reliable; without one they stay local.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # Static `spark.sql.codegen.cache.maxEntries`; see the module docstring.
@@ -101,6 +106,29 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     _ship_package(spark)
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly compute `df` and cut its lineage: the package's one rule
+    for an iterative or composed plan's materialization points.
+
+    With a checkpoint dir set on the SparkContext
+    (`sparkContext.setCheckpointDir`, once per deployment), this is a
+    reliable `df.checkpoint(eager=True)`: the rows go to that
+    fault-tolerant storage, so losing an executor after the cut
+    recomputes nothing upstream of it. Without one it is
+    `df.localCheckpoint(eager=True)`: cheaper, and correct in local
+    mode, but its blocks live on the executors and die with them, so a
+    multi-executor deployment must set a shared-filesystem dir.
+
+    Reliable checkpoint files persist after the job, one RDD directory
+    per call, unless `spark.cleaner.referenceTracking.cleanCheckpoints`
+    is set (the cleaner then removes each once the checkpointed RDD is
+    garbage-collected on the driver).
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 _SHIPPED_SESSIONS: set[int] = set()

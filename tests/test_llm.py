@@ -332,57 +332,6 @@ def test_jaccard_rounding_policy_on_tie_denominators(spark):
     assert n_diff > 0, "expected half-ulp divergences on 640/3200"
 
 
-def test_classify_broadcast_guard_fallback_is_value_identical(
-    spark, docs, sf_dir
-):
-    """`max_broadcast_pairs` (r22): a threshold the candidate count
-    exceeds must drop the broadcast hint (plain join, AQE decides) and
-    produce EXACTLY the rows of the unconditional-broadcast default —
-    on both classify twins (prepare and no-prepare orientations). The
-    guard's probe is a bounded limit+count, so this also exercises the
-    degenerate-batch path end to end."""
-    from github_event_etl_spark.operators.similarity import (
-        incremental_dedup_semantic,
-    )
-    from github_event_etl_spark.operators.text_dedup import (
-        incremental_dedup_minhash,
-    )
-    from github_event_etl_spark.sources.tables import load_table
-
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    base = {
-        tuple(r)
-        for r in incremental_dedup_minhash(corpus, batch, 0.8).collect()
-    }
-    guarded = {
-        tuple(r)
-        for r in incremental_dedup_minhash(
-            corpus, batch, 0.8, max_broadcast_pairs=0
-        ).collect()
-    }
-    assert base == guarded and len(base) > 0
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    e_corpus = emb.filter(F.col("vec_id") % 5 != 0)
-    e_batch = emb.filter(F.col("vec_id") % 5 == 0)
-    e_base = {
-        tuple(r)
-        for r in incremental_dedup_semantic(
-            e_corpus, e_batch, 64, 0.95
-        ).collect()
-    }
-    e_guarded = {
-        tuple(r)
-        for r in incremental_dedup_semantic(
-            e_corpus, e_batch, 64, 0.95, max_broadcast_pairs=0
-        ).collect()
-    }
-    assert e_base == e_guarded and len(e_base) > 0
-
-
 def test_cosine_sql_twins_match_column_api(spark):
     """`cosine_cols` / `_subsq_l2_sql` (the single-parse construction
     fast paths) must equal the Column-API reference forms value-for-

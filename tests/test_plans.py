@@ -1763,7 +1763,9 @@ def test_threshold_sweep_runs_candidate_machinery_once(qmap, spark, sf_dir):
     assert t_sweep.count("BroadcastNestedLoopJoin") == 1
 
 
-def test_incremental_e2e_pipeline_plan_is_scale_safe(spark, sf_dir):
+def test_incremental_e2e_pipeline_plan_is_scale_safe(
+    spark, sf_dir, monkeypatch
+):
     """The composed exact→MinHash→semantic increment waterfall must
     inherit every twin's scale posture across ALL THREE stages: no
     cartesian/nested-loop join and no pickled row-at-a-time Python
@@ -1772,19 +1774,20 @@ def test_incremental_e2e_pipeline_plan_is_scale_safe(spark, sf_dir):
     stage-level scale contracts (corpus-never-shuffles, broadcast
     semi-filters) are plan-gated per twin by their own tests; this
     gate guards the composition against a regression that survives
-    only when the stages are chained. It explains the
-    `checkpoint=False` form: with checkpoints the exact/MinHash stages
-    execute at construction time and the final plan shows only their
-    ExistingRDD stubs — the gate would silently cover one stage of
-    three."""
+    only when the stages are chained. It swaps `materialize` for the
+    identity in both modules that cut the waterfall's lineage: with
+    the cuts the exact/MinHash stages execute at construction time and
+    the final plan shows only their ExistingRDD stubs — the gate would
+    silently cover one stage of three."""
     import contextlib as _ctx
     import io as _io
 
-    from github_event_etl_spark.plans.pipelines import (
-        incremental_e2e_pipeline,
-    )
+    from github_event_etl_spark.operators import text_dedup
+    from github_event_etl_spark.plans import pipelines
 
-    df = incremental_e2e_pipeline(spark, sf_dir, checkpoint=False)
+    for mod in (pipelines, text_dedup):
+        monkeypatch.setattr(mod, "materialize", lambda df: df)
+    df = pipelines.incremental_e2e_pipeline(spark, sf_dir)
     buf = _io.StringIO()
     with _ctx.redirect_stdout(buf):
         df.explain(mode="formatted")

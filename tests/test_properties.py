@@ -335,12 +335,16 @@ def test_connected_components_planted_star_hub(spark):
     assert all(comp[n] == chain_nodes[0] for n in chain_nodes)
 
 
-def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
-    """The reliable-checkpoint mode (checkpoint_dir= → df.checkpoint()
-    per round, the executor-loss-tolerant cluster configuration) must
-    converge to exactly the same components as the localCheckpoint
-    local-mode fallback, and must actually write checkpoint data to
-    the given directory."""
+def test_connected_components_reliable_checkpoint_mode(
+    spark, context_checkpoint_dir
+):
+    """With a checkpoint dir set on the SparkContext (the executor-loss-
+    tolerant cluster configuration), every round checkpoints reliably
+    through `session.materialize`: the components must equal the
+    localCheckpoint local-mode run's, and checkpoint data must land
+    under the context's dir."""
+    import os
+
     from github_event_etl_spark.operators.graph import connected_components
 
     # Two chains + a triangle: multi-round convergence, >1 component.
@@ -351,34 +355,12 @@ def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
     )
     local = {r.node: r.component for r in connected_components(edges).collect()}
 
-    ckpt = str(tmp_path / "cc_ckpt")
+    spark.sparkContext.setCheckpointDir(str(context_checkpoint_dir))
     reliable = {
-        r.node: r.component
-        for r in connected_components(edges, checkpoint_dir=ckpt).collect()
+        r.node: r.component for r in connected_components(edges).collect()
     }
-    # The operator must restore the session's prior (unset) checkpoint
-    # config itself — the sticky setCheckpointDir side effect is its
-    # own to undo, not the caller's.
-    assert spark.sparkContext.getCheckpointDir() is None
     assert reliable == local
-    # The reliable path must have gone through the fault-tolerant dir.
-    import os
-
-    assert any(files for _, _, files in os.walk(ckpt))
-
-    # And when a prior dir WAS configured, its resolved value (the
-    # UUID subdir setCheckpointDir created) is restored verbatim.
-    prior = str(tmp_path / "prior_ckpt")
-    spark.sparkContext.setCheckpointDir(prior)
-    resolved_prior = spark.sparkContext.getCheckpointDir()
-    try:
-        connected_components(edges, checkpoint_dir=ckpt).collect()
-        assert spark.sparkContext.getCheckpointDir() == resolved_prior
-    finally:
-        getattr(spark.sparkContext._jsc.sc(), "checkpointDir_$eq")(
-            spark.sparkContext._jvm.scala.Option.apply(None)
-        )
-    assert spark.sparkContext.getCheckpointDir() is None
+    assert any(files for _, _, files in os.walk(context_checkpoint_dir))
 
 
 # ------------------------------------- LSH near-dup vs exact differential

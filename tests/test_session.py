@@ -43,3 +43,24 @@ def test_warm_pipelines_compile_nothing(spark, sf_dir):
                 spark.conf.set(k, before[k])
     assert cold > 0, cold
     assert warm <= 5, (cold, warm)
+
+
+def test_context_checkpoint_dir_makes_incremental_e2e_cuts_reliable(
+    spark, sf_dir, context_checkpoint_dir
+):
+    """`session.materialize` is the one lineage-cut rule: once a
+    deployment sets a checkpoint dir on the SparkContext, every eager
+    cut of the incremental waterfall is a reliable checkpoint under it
+    (three stage verdicts plus the MinHash and semantic stages' batch
+    band keys), and the report equals a run with no dir."""
+    from github_event_etl_spark.plans.pipelines import incremental_e2e_pipeline
+
+    local = incremental_e2e_pipeline(spark, sf_dir).collect()
+    assert not context_checkpoint_dir.exists()
+
+    spark.sparkContext.setCheckpointDir(str(context_checkpoint_dir))
+    reliable = incremental_e2e_pipeline(spark, sf_dir).collect()
+    assert reliable == local and len(local) > 0
+    rdd_dirs = list(context_checkpoint_dir.glob("*/rdd-*"))
+    assert len(rdd_dirs) == 5, rdd_dirs
+    assert all(any(d.glob("part-*")) for d in rdd_dirs)
