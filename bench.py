@@ -115,8 +115,9 @@ def main() -> None:
         .appName("geetl-bench")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", cpus)
-        # static, so ensure_session_defaults cannot set it (session.py)
+        # static, so ensure_session_defaults cannot set them (session.py)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .getOrCreate()
     )
     ensure_session_defaults(spark)

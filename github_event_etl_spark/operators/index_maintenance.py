@@ -1,51 +1,53 @@
-"""Band-index maintenance — apply a corpus snapshot diff to a
-materialized LSH band index without rebuilding it.
+"""Index maintenance — apply a corpus snapshot diff to a materialized
+index without rebuilding it.
 
 The reference maintains its stored daily summary incrementally: new
 hourly keys are merged into the existing summary rather than
 recomputing it from all events (update-contributor-scores.js:252-263,
 with the hour-exists idempotency check at :195-204). This module is
-the same pattern one level down the refresh stack: the corpus band
-indexes (`text_dedup.minhash_write_index` / `similarity.rhp_write_index`
-outputs — both the (doc_id, band, bucket) schema, band-partitioned)
-are maintained from a `merge.snapshot_diff` change log instead of
-being re-banded from scratch per corpus snapshot; the IVF assignment
-index (`similarity.ivf_assign_with_centroids` against a frozen coarse
-quantizer — the (key, centroid_id) schema) maintains through the same
-two layers, since both are per-key-independent derivations; and the
-IVF-PQ packed-code SERVING lists (the (nid, pq_code) inverted-list
-layout of `similarity.ivf_pq_write_index`) maintain through
-`ivf_pq_write_index_delta` below, which re-assigns AND re-encodes
-only the changed vectors against the layout's frozen centroid and
-codebook artifacts. At 100 TB that is
-the difference between an O(corpus) banding pass per refresh and
-O(changes) work: re-banding is the dominant index CPU, and a daily
-crawl typically touches well under 1% of the corpus.
+the same pattern one level down the refresh stack, for four index
+families: the MinHash and RHP band indexes
+(`text_dedup.minhash_write_index` / `similarity.rhp_write_index`, the
+(doc_id, band, bucket) schema, band-partitioned), the IVF assignment
+lists (`similarity.ivf_write_index`, (key, embedding, centroid_id)
+against a frozen coarse quantizer) and the IVF-PQ packed-code serving
+lists (`similarity.ivf_pq_write_index`, (nid, centroid_id, pq_code)
+against a frozen quantizer and codebook). Each is a per-key
+independent derivation, so a change log re-derives only the changed
+keys. At 100 TB that is the difference between an O(corpus) banding
+or encoding pass per refresh and O(changes) work: the derivation is
+the dominant index CPU, and a daily crawl typically touches well
+under 1% of the corpus.
 
 Two layers:
 
-- `apply_index_diff` — the pure DataFrame shape: drop the stale rows
-  (removed + changed docs) with a broadcast anti-join, band ONLY the
+- `apply_index_diff` — the pure DataFrame shape, for a caller that
+  holds the derivation itself (`band_fn`): drop the stale rows
+  (removed + changed docs) with a broadcast anti-join, derive ONLY the
   upserted docs (added + changed, broadcast semi-filter before the
-  banding UDF ever sees a row), union. The banding CPU and both join
+  derivation ever sees a row), union. The derivation CPU and both join
   builds are change-sized; the index side is a column-pruned narrow
   scan that never shuffles.
 - `write_index_delta` / `read_index` — the physical merge-on-read
-  layout: each refresh appends one generation under `<index>/_delta/`
-  holding a change-sized tombstone set and change-sized banded
-  appends, and the reader folds committed generations over the base.
-  The base band partitions are never rewritten — the bytes written
-  per refresh are change-sized. This is the engine shape lakehouse
-  formats (delete vectors + appended files, periodic compaction)
-  execute underneath. Single-writer per index is the standing
-  contract (the same as the scratch materialize-once layouts), and —
-  unlike the earlier marker-based protocol — a violation is now
-  DETECTED (best-effort): every commit re-validates the manifest's
-  FULL commit identity (`_manifest_drift`: base, generation list, the
-  counters, the monotone `commit_seq` that makes even a
-  commit-then-compaction ABA interleave visible, and the `build_id`
-  that makes a builder rebuild visible) and aborts instead of
-  silently losing a concurrent generation. The revalidate-then-
+  layout of a builder-committed index, which describes itself: its
+  manifest records how the index was derived (`kind`, the source
+  columns, the derivation parameters), so the writer rebuilds the
+  derivation from there (`_derivation`) and no caller restates it.
+  Each refresh appends one generation under `<index>/_delta/` holding
+  a change-sized tombstone set and change-sized appends, and the
+  reader folds committed generations over the base. The base
+  partitions are never rewritten — the bytes written per refresh are
+  change-sized. This is the engine shape lakehouse formats (delete
+  vectors + appended files, periodic compaction) execute underneath.
+  `refresh_index_from_change_stream` is the one continuous loop over
+  it, for every family. Single-writer per index is the standing
+  contract (the same as the scratch materialize-once layouts), and a
+  violation is DETECTED (best-effort): every commit re-validates the
+  manifest's FULL commit identity (`_manifest_drift`: base,
+  generation list, the counters, the monotone `commit_seq` that makes
+  even a commit-then-compaction ABA interleave visible, and the
+  `build_id` that makes a builder rebuild visible) and aborts instead
+  of silently losing a concurrent generation. The revalidate-then-
   replace is not a CAS, so a commit landing inside that window can
   still be lost — the single-writer contract is the guarantee;
   detection is the tripwire for violating it.
@@ -62,16 +64,13 @@ the ndjson sink's commit established (sources/pysource.py
 `_NdjsonStreamWriter.commit` / `manifested_part_paths`): readers list parts
 FROM the manifest, never by directory walk, and unreferenced trees
 are garbage a later writer sweeps (manifest-anchored GC). Every
-layout is born committed: the `*_write_index` builders
-(`text_dedup.minhash_write_index`, `similarity.rhp_write_index`,
-`similarity.ivf_write_index`, `similarity.ivf_pq_write_index`) write
-the empty manifest as their last step (`_commit_base`). The manifest
-is the only commit state — a path without one is no committed index,
-whatever parquet `_SUCCESS` markers it holds. It also records the
-layout's `key` and `partition_col`, fixed by its builder, so no
-maintenance entry point asks for them (a format-1 manifest lacks them
-and is refused). Every metadata commit here and in the sidecars
-beside it goes through one durable JSON write (`_atomic_write_json`).
+layout is born committed: the four builders write the empty manifest
+as their last step (`_commit_base`). The manifest is the only commit
+state — a path without one is no committed index, whatever parquet
+`_SUCCESS` markers it holds. A manifest of an older format lacks the
+derivation and is refused, naming the builder that rebuilds it. Every
+metadata commit here and in the sidecars beside it goes through one
+durable JSON write (`_atomic_write_json`).
 
 Read-path cost note: each generation adds one broadcast anti-join +
 one union to the read plan, so generations should be compacted
@@ -84,11 +83,10 @@ staged work is unreferenced garbage) or the new one (new state fully
 readable, superseded trees are garbage) — there is no vacant window
 at all, which the marker-era two-rename swap could not promise.
 
-Beyond commit/compaction, two IVF-family health loops live here (r20):
-quantizer DRIFT — `ivf_pq_write_index_delta` logs each refresh batch's
-PQ reconstruction error against the frozen codebook
-(`ivf_pq_refresh_from_change_stream` carries the same record-keeping
-into the streaming loop), and
+Beyond commit/compaction, two IVF-family health loops live here:
+quantizer DRIFT — `write_index_delta` logs each IVF-PQ generation's
+PQ reconstruction error against the frozen codebook to the layout's
+`_drift.json`, in batch and streamed refreshes alike, and
 `maybe_retrain` compares the current corpus against the sidecar's
 training baseline and triggers the probe-compatible re-derive rebuild
 (`maybe_compact`'s analog one level up the model stack) — and list
@@ -220,26 +218,49 @@ def _atomic_write_json(path: str, obj) -> None:
         pass
 
 
-#: Format 2 records the layout's `key` and `partition_col`.
-_MANIFEST_FORMAT = 2
+#: Format 3 records how the index was derived: its `kind`, the
+#: builder's source columns and the derivation's parameters.
+_MANIFEST_FORMAT = 3
+
+#: The builder that commits each index kind.
+_BUILDERS = {
+    "minhash": "minhash_write_index",
+    "rhp": "rhp_write_index",
+    "ivf": "ivf_write_index",
+    "ivf_pq": "ivf_pq_write_index",
+}
 
 
-def _commit_base(index_path: str, key: str, partition_col: str) -> None:
+def _commit_base(index_path: str, layout: dict) -> None:
     """The builders' shared last step: commit the freshly written base
-    at the index root as an index with no generations, keyed by `key`
-    and partitioned by `partition_col`. Until this lands the path is
-    no committed index, so a build that dies mid-write is never read
-    or maintained. The random `build_id` tells two builds of the same
-    path apart (`_IDENTITY_FIELDS`)."""
+    at the index root as an index with no generations. `layout` is
+    what the builder knows and no maintenance entry point asks for
+    again: the `kind`, the index `key` and `partition_col`, the source
+    `id_col` and `payload_col` the rows were derived from, and the
+    `derivation` parameters `_derivation` rebuilds the function from.
+    Until this lands the path is no committed index, so a build that
+    dies mid-write is never read or maintained. The random `build_id`
+    tells two builds of the same path apart (`_IDENTITY_FIELDS`)."""
     import uuid
 
     _atomic_write_json(
         _manifest_file(index_path),
-        {"format": _MANIFEST_FORMAT, "key": key,
-         "partition_col": partition_col, "base": ".", "generations": [],
-         "next_gen": 1, "next_base": 1, "commit_seq": 0,
-         "build_id": uuid.uuid4().hex},
+        {"format": _MANIFEST_FORMAT, **layout, "base": ".",
+         "generations": [], "next_gen": 1, "next_base": 1,
+         "commit_seq": 0, "build_id": uuid.uuid4().hex},
     )
+
+
+def _build_index(corpus: DataFrame, path: str, layout: dict) -> None:
+    """Build a one-table index (the MinHash and RHP band indexes):
+    every corpus row through `_derivation` — the same function each
+    later generation's appends come from — written partitioned like
+    `layout` says, then committed."""
+    derive = _derivation(corpus.sparkSession, path, layout, "build")
+    derive(corpus).write.mode("overwrite").partitionBy(
+        layout["partition_col"]
+    ).parquet(path)
+    _commit_base(path, layout)
 
 
 def _read_manifest(index_path: str) -> dict | None:
@@ -264,21 +285,124 @@ def _read_manifest(index_path: str) -> dict | None:
         ) from e
 
 
+def _builder_of(m: dict) -> str:
+    """The builder that rebuilds `m`'s index. Manifests older than
+    format 3 record no kind; their partition column and key narrow
+    it down."""
+    if m.get("kind") in _BUILDERS:
+        return _BUILDERS[m["kind"]]
+    if m.get("partition_col") == "band":
+        return "minhash_write_index or rhp_write_index"
+    if m.get("partition_col") == "centroid_id":
+        return _BUILDERS["ivf_pq" if m.get("key") == "nid" else "ivf"]
+    return ", ".join(_BUILDERS.values())
+
+
 def _require_manifest(index_path: str, op: str) -> dict:
     """`_read_manifest` for the entry points that need an index: a
-    missing or format-1 manifest fails loudly under the caller's name
-    `op`."""
+    missing manifest, or one of an older format that does not record
+    the derivation, fails loudly under the caller's name `op`."""
     m = _read_manifest(index_path)
-    if m is None or m.get("format") != _MANIFEST_FORMAT:
+    if m is None:
         raise FileNotFoundError(
-            f"{op}: no committed index at {index_path} (no format-"
-            f"{_MANIFEST_FORMAT} {_MANIFEST} recording its key and "
-            "partition column) — an index is committed only by its "
-            "builder (minhash_write_index, rhp_write_index, "
-            "ivf_write_index, ivf_pq_write_index), which writes the "
+            f"{op}: no committed index at {index_path} (no {_MANIFEST})"
+            " — an index is committed only by its builder ("
+            f"{', '.join(_BUILDERS.values())}), which writes the "
             "manifest as its last step; (re)build the index with it"
         )
+    if m.get("format") != _MANIFEST_FORMAT:
+        raise FileNotFoundError(
+            f"{op}: no committed format-{_MANIFEST_FORMAT} index at "
+            f"{index_path}: its {_MANIFEST} is format {m.get('format')}"
+            ", which does not record how the index was derived — "
+            f"rebuild it with {_builder_of(m)}"
+        )
     return m
+
+
+def _artifact(index_path: str, rel: str) -> str:
+    """A path the manifest records relative to the index root."""
+    return os.path.normpath(os.path.join(index_path, rel))
+
+
+def _pq_layout(index_path: str, m: dict, op: str) -> tuple[str, dict]:
+    """An IVF-PQ lists index's layout root (the directory holding its
+    `_params.json`, centroids and codebook) and that sidecar's
+    geometry. A missing sidecar fails under `op`."""
+    from .similarity import _read_ivf_pq_params
+
+    layout = os.path.dirname(_artifact(index_path, m["derivation"]["params"]))
+    return layout, _read_ivf_pq_params(layout, op)
+
+
+def _derivation(
+    spark: SparkSession, index_path: str, m: dict, op: str
+) -> Callable[[DataFrame], DataFrame]:
+    """The index's derivation, rebuilt from its manifest `m`: a function
+    from a docs frame carrying the builder's source columns (`id_col`,
+    `payload_col`) to index rows keyed by `key`. The band builders
+    write through this very function (`_build_index`); the centroid
+    builders derive their quantizer first and assign/encode through
+    the same heads it wraps against their frozen tables (`ivf_assign_
+    with_centroids`, `ivf_pq_encode_fn`) — so appended rows are
+    bit-identical to what a rebuild would write for the same docs.
+    An IVF-PQ layout without its `_params.json` fails here, under
+    `op`, before anything is written."""
+    kind, d = m["kind"], m["derivation"]
+    id_col, payload = m["id_col"], m["payload_col"]
+    if kind == "minhash":
+        from .text_dedup import _band_keys, minhash_band_buckets_vec
+
+        bands = minhash_band_buckets_vec(
+            d["num_bands"], d["rows_per_band"], d["k"]
+        )
+        return lambda docs: _band_keys(docs, bands, id_col, payload)
+    if kind == "rhp":
+        from .similarity import _rhp_band_keys, rhp_signatures
+
+        sigs = rhp_signatures(d["dim"], d["num_tables"], d["planes_per_table"])
+        return lambda docs: _rhp_band_keys(docs, sigs, id_col, payload)
+    from .similarity import ivf_assign_with_centroids, ivf_pq_encode_fn
+
+    if kind == "ivf":
+        centroids = spark.read.parquet(_artifact(index_path, d["centroids"]))
+        return lambda docs: ivf_assign_with_centroids(
+            docs, centroids, id_col, payload
+        )
+    layout, params = _pq_layout(index_path, m, op)
+    encode = ivf_pq_encode_fn(
+        spark.read.parquet(os.path.join(layout, "centroids")),
+        spark.read.parquet(os.path.join(layout, "codebook")),
+        params["num_subspaces"], params["num_codewords"], params["dim"],
+        payload,
+    )
+    return lambda docs: encode(
+        docs.select(F.col(id_col).alias("nid"), payload)
+    )
+
+
+def _require_derivation(
+    index_path: str, kind: str, derivation: dict, op: str
+) -> None:
+    """Refuse to classify against an index derived otherwise than the
+    caller derives its batch: the batch's buckets could never meet the
+    corpus's, and every corpus duplicate would silently read 'new'.
+    The ValueError names each field that differs."""
+    m = _require_manifest(index_path, op)
+    got = {"kind": m["kind"], **m["derivation"]}
+    differ = [
+        f"{f}={got.get(f)!r} (this call: {v!r})"
+        for f, v in {"kind": kind, **derivation}.items()
+        if got.get(f) != v
+    ]
+    if differ:
+        raise ValueError(
+            f"{op}: the index at {index_path} was built with "
+            f"{', '.join(differ)} — its buckets cannot meet this "
+            "batch's, so corpus duplicates would read 'new'. Classify "
+            "with the index's parameters, or rebuild it with "
+            f"{_BUILDERS[kind]}"
+        )
 
 
 def _read_base(spark: SparkSession, index_path: str, m: dict) -> DataFrame:
@@ -339,14 +463,18 @@ def write_index_delta(
     index_path: str,
     diff: DataFrame,
     cur_docs: DataFrame,
-    band_fn: Callable[[DataFrame], DataFrame],
 ) -> int:
-    """Append one maintenance generation to a materialized index:
-    `<index>/_delta/gen=N/tombstones` (the stale values of the
-    manifest's `key`) and `.../gen=N/appends` (rows `band_fn` derives
-    for the upserted keys, with the base's columns, partitioned by the
-    manifest's `partition_col` like the base — so a probe prunes them
-    too). Returns N. The base partitions
+    """Append one maintenance generation to a builder-committed index:
+    `<index>/_delta/gen=N/tombstones` (every diff key, under the
+    manifest's `key`) and `.../gen=N/appends` (the rows the manifest's
+    derivation yields for the upserted docs, with the base's columns,
+    partitioned by the manifest's `partition_col` like the base — so a
+    probe prunes them too). Returns N. `diff` and `cur_docs` carry the
+    builder's source columns — the `merge.snapshot_diff` of the corpus
+    the index was built from, keyed by its `id_col`, and the current
+    snapshot — whatever the index family; the writer renames the id to
+    the index key on the way in, and no caller restates the derivation
+    (`_derivation` rebuilds it from the manifest). The base partitions
     are untouched — bytes written are change-sized. The generation
     becomes visible to `read_index` only when the COMMIT — one atomic
     manifest write naming it — lands after both data trees are fully
@@ -357,7 +485,7 @@ def write_index_delta(
     not just documented.
 
     Tombstones are written for EVERY diff key — changed docs (their
-    appends carry the re-banded rows), removed docs, and added docs
+    appends carry the re-derived rows), removed docs, and added docs
     too. For an added key the tombstone is a no-op on first delivery
     (nothing to drop yet), but it is what makes re-applying the SAME
     diff idempotent: an at-least-once redelivery (foreachBatch's
@@ -369,11 +497,19 @@ def write_index_delta(
     reconciliation. As with `apply_index_diff`, pass `diff`
     materialized: the two component writes are separate jobs, each of
     which would otherwise recompute an unmaterialized diff plan.
+
+    An IVF-PQ generation then appends its drift record (the re-encoded
+    vectors' reconstruction error against the frozen codebook; n=0 for
+    an all-removed generation) to the layout's `_drift.json` — after
+    the commit, so an aborted write logs nothing, and a crash between
+    the two leaves a generation whose drift is unmeasured, never one
+    that reads as an empty refresh.
     """
     import shutil
 
     m = _require_manifest(index_path, "write_index_delta")
-    key, n = m["key"], m["next_gen"]
+    spark, id_col, n = cur_docs.sparkSession, m["id_col"], m["next_gen"]
+    derive = _derivation(spark, index_path, m, "write_index_delta")
     gen_rel = os.path.join("_delta", f"gen={n}")
     base = os.path.join(index_path, gen_rel)
     # retry safety: a writer that died mid-generation left gen=N
@@ -383,16 +519,26 @@ def write_index_delta(
     # committed gen=N is in the manifest, so next_gen points past it.
     if os.path.isdir(base):
         shutil.rmtree(base)
-    stale = diff.select(F.col(key))  # every diff key — see docstring
-    columns = _read_base(cur_docs.sparkSession, index_path, m).columns
-    fresh = band_fn(_upsert_docs(cur_docs, diff, key)).select(*columns)
-    fresh.write.mode("errorifexists").partitionBy(
-        m["partition_col"]
-    ).parquet(os.path.join(base, "appends"))
-    stale.write.mode("errorifexists").parquet(
-        os.path.join(base, "tombstones")
-    )
+    upserts = _upsert_docs(cur_docs, diff, id_col)
+    columns = _read_base(spark, index_path, m).columns
+    derive(upserts).select(*columns).write.mode(
+        "errorifexists"
+    ).partitionBy(m["partition_col"]).parquet(os.path.join(base, "appends"))
+    # every diff key — see docstring
+    diff.select(F.col(id_col).alias(m["key"])).write.mode(
+        "errorifexists"
+    ).parquet(os.path.join(base, "tombstones"))
     _commit_generation(index_path, m, n, gen_rel, base)
+    if m["kind"] == "ivf_pq":
+        from .similarity import _qerr_stats
+
+        layout, params = _pq_layout(index_path, m, "write_index_delta")
+        codebook = spark.read.parquet(os.path.join(layout, "codebook"))
+        _append_drift_entry(layout, {
+            "gen": n,
+            **_qerr_stats(upserts, codebook, params["num_subspaces"],
+                          params["dim"], id_col, m["payload_col"]),
+        })
     return n
 
 
@@ -463,90 +609,18 @@ def ivf_pq_write_index_delta(
     index_path: str,
     diff: DataFrame,
     cur_corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> int:
-    """Apply a corpus snapshot diff to the on-disk IVF-PQ SERVING
-    layout (`similarity.ivf_pq_write_index` — packed-code inverted
-    lists partitioned by centroid_id): the one index family that was
-    outside the maintenance contract until r19, closed. Added and
-    re-embedded vectors are re-ASSIGNED (cosine argmin over the
-    layout's frozen centroid table) and re-ENCODED (per-subspace
-    argmin against its frozen codebook) — `similarity.ivf_pq_encode_fn`
-    is the code-recompute hook — and land as one change-sized
-    maintenance generation under `<index>/lists` via
-    `write_index_delta` (the lists' (nid, centroid_id) geometry comes
-    from their manifest); removed/re-embedded ids are tombstoned.
-    Returns the generation number.
-
-    The serving read path (`similarity.ann_ivf_pq_partitioned`[+refine])
-    folds committed generations automatically
-    (`read_index`), so a refresh is change-sized INSTEAD of the full
-    `ivf_pq_write_index` rebuild the layout previously required —
-    at a billion vectors that is the difference between re-encoding
-    <1% of the corpus per crawl and re-reading all of it. Pinned by
-    pytest: probe-over-maintained ≡ probe-over-rebuilt (frozen
-    quantizer/codebook rebuild, refine included)
-    and maintained list contents ≡ re-encoded current snapshot.
-    Compaction composes: `compact_index` over `<index>/lists` folds
-    the generations back into a plain partition-pruned base.
-    (Reference analog: the incremental
-    summary merge, update-contributor-scores.js:252-263 — refresh
-    the stored artifact from changes, never recompute it whole.)
-
-    The PQ geometry comes from the layout's `_params.json` sidecar
-    (`similarity._read_ivf_pq_params`), so the appended codes are
-    packed at the same base as the ones beside them; a missing
-    sidecar fails before anything is written.
-
-    The diff's key column (`id_col`) is renamed to the lists' `nid`
-    on the way in, so callers pass the same `merge.snapshot_diff`
-    output the other index families consume. As there, pass `diff`
-    materialized — it feeds the tombstone write and the upsert
-    semi-filter."""
-    from .similarity import (
-        _qerr_stats,
-        _read_ivf_pq_params,
-        ivf_pq_encode_fn,
+    """`write_index_delta` of an IVF-PQ layout's serving lists,
+    addressed by the layout root (`similarity.ivf_pq_write_index`'s
+    `path`) rather than by `<index_path>/lists`. Added and re-embedded
+    vectors are re-assigned and re-encoded against the layout's frozen
+    centroid and codebook tables, removed and re-embedded ids are
+    tombstoned, and the generation's drift record lands in the layout's
+    `_drift.json`. Returns the generation number. `spark` is not used:
+    the session is `cur_corpus`'s."""
+    return write_index_delta(
+        os.path.join(index_path, "lists"), diff, cur_corpus
     )
-
-    params = _read_ivf_pq_params(index_path, "ivf_pq_write_index_delta")
-    num_subspaces, dim = params["num_subspaces"], params["dim"]
-    centroids = spark.read.parquet(os.path.join(index_path, "centroids"))
-    codebook = spark.read.parquet(os.path.join(index_path, "codebook"))
-    encode = ivf_pq_encode_fn(
-        centroids, codebook, num_subspaces, params["num_codewords"], dim,
-        vec_col,
-    )
-    diff_n = (
-        diff if id_col == "nid" else diff.withColumnRenamed(id_col, "nid")
-    )
-    cur_n = cur_corpus.select(F.col(id_col).alias("nid"), vec_col)
-    gen = write_index_delta(
-        os.path.join(index_path, "lists"), diff_n, cur_n, encode
-    )
-    # per-refresh drift record (VERDICT r19 item 2), AFTER the commit
-    # so a concurrent-writer abort logs nothing: the reconstruction
-    # error of THIS generation's re-encoded vectors against the frozen
-    # codebook — change-sized (the upsert set), one aggregate job. An
-    # all-removed generation records n=0 with null errors.
-    # Crash-window note (ADVICE r20): a crash BETWEEN the generation
-    # commit above and this append leaves a committed generation with
-    # NO drift entry — the mirror image of the documented at-least-once
-    # redelivery duplicate. Monitoring that walks the log should treat
-    # a gen present in the manifest but absent from _drift.json as
-    # "drift unmeasured" (re-auditable via pq_quantization_error over
-    # the generation's appends), never as an empty refresh.
-    upserts = _upsert_docs(cur_n, diff_n, "nid")
-    _append_drift_entry(
-        index_path,
-        {
-            "gen": gen,
-            **_qerr_stats(upserts, codebook, num_subspaces, dim,
-                          "nid", vec_col),
-        },
-    )
-    return gen
 
 
 def read_index(spark: SparkSession, index_path: str) -> DataFrame:
@@ -595,25 +669,26 @@ def _fold_generations(
 def refresh_index_from_change_stream(
     changes_stream: DataFrame,
     index_path: str,
-    band_fn: Callable[[DataFrame], DataFrame],
     checkpoint_dir: str,
     reconcile_order_col: str | None = None,
     max_generations: int | None = None,
     max_read_amplification: float | None = None,
 ) -> None:
-    """Continuous index refresh: a CDC change stream — rows of
-    (key, change_type, <payload columns band_fn derives from>), i.e.
-    `merge.snapshot_diff`'s output joined with the upserted docs'
-    payload — applies ONE maintenance generation per micro-batch via
-    foreachBatch → `write_index_delta`. The batch frame serves as BOTH
-    the diff and the upsert payload (CDC rows carry the new document
-    alongside the verdict), so no corpus-sized side exists anywhere in
-    the stream: per micro-batch the work is change-sized banding plus
-    two change-sized writes, the streaming end state of the same
-    refresh loop the batch keys pin (`llm_index_apply_diff` /
-    `llm_ivf_apply_diff`). The manifest (and the key the change rows
-    carry) is read once before the stream starts, so a path with no
-    committed index fails at the call, before any checkpoint exists —
+    """Continuous index refresh, for every index family: a CDC change
+    stream — rows of (id, change_type, payload) in the builder's source
+    columns, i.e. `merge.snapshot_diff`'s output joined with the
+    upserted docs' payload — applies ONE maintenance generation per
+    micro-batch via foreachBatch → `write_index_delta`, so a streamed
+    IVF-PQ refresh logs its drift like a batch one. The batch frame
+    serves as BOTH the diff and the upsert payload (CDC rows carry the
+    new document alongside the verdict), so no corpus-sized side
+    exists anywhere in the stream: per micro-batch the work is
+    change-sized derivation plus two change-sized writes, the
+    streaming end state of the same refresh loop the batch keys pin
+    (`llm_index_apply_diff` / `llm_ivf_apply_diff`). The manifest and
+    the derivation it records are read once before the stream starts,
+    so a path with no committed index (or an IVF-PQ layout missing its
+    `_params.json`) fails at the call, before any checkpoint exists —
     also on an empty stream.
 
     Delivery semantics: foreachBatch is at-least-once — a crash after
@@ -622,16 +697,18 @@ def refresh_index_from_change_stream(
     generation. That is safe by the fold's semantics: the duplicate
     generation tombstones the rows its twin appended and re-appends
     identical ones, so the folded state is unchanged (pinned in
-    pytest); the wasted generation is reclaimed by `compact_index`. A
-    crash MID-generation leaves an uncommitted dir readers ignore and
-    the retry clears (write_index_delta's retry path). Bounded
-    (AvailableNow) like the repo's replay harness; a deployment swaps
-    the trigger — and must keep the one-row-per-key-per-batch contract
-    below, which a coalescing trigger can violate.
+    pytest); the wasted generation is reclaimed by `compact_index`,
+    and an IVF-PQ redelivery's duplicate drift entry is monitoring
+    noise, not state. A crash MID-generation leaves an uncommitted dir
+    readers ignore and the retry clears (write_index_delta's retry
+    path). Bounded (AvailableNow) like the repo's replay harness; a
+    deployment swaps the trigger — and must keep the
+    one-row-per-key-per-batch contract below, which a coalescing
+    trigger can violate.
 
     PRECONDITION: at most ONE change row per key per micro-batch. A
     batch that coalesces several change-log drops (larger triggers do)
-    can carry a key twice — conflicting payloads both band, and an
+    can carry a key twice — conflicting payloads both derive, and an
     add-then-remove pair leaks a null-payload row through the upsert
     semi-join. Two ways to hold it: publish one RECONCILED diff per
     batch (diff of oldest→newest snapshot, the change-log contract);
@@ -653,31 +730,51 @@ def refresh_index_from_change_stream(
     own read amplification instead of accreting generations until an
     operator intervenes. Safe inside the loop: foreachBatch serializes
     micro-batches, so the compaction is the same single writer — no
-    concurrent-commit abort can fire from this wiring.
+    concurrent-commit abort can fire from this wiring."""
+    from .merge import assert_unique_key, reconcile_change_log
 
-    Drift-monitoring note: this generic loop calls `write_index_delta`
-    directly, so an IVF-PQ stream refreshed through a bare
-    `ivf_pq_encode_fn` band_fn appends NO `_drift.json` records — the
-    per-refresh quantizer-drift log is written by
-    `ivf_pq_write_index_delta` (the batch apply-diff entry point). An
-    IVF-PQ deployment that wants the drift log from a stream should
-    use `ivf_pq_refresh_from_change_stream` below, which routes every
-    micro-batch through `ivf_pq_write_index_delta` (or run the
-    periodic `maybe_retrain` audit on crawl cadence, which never needs
-    the log — it measures the current corpus directly)."""
-    key = _require_manifest(
-        index_path, "refresh_index_from_change_stream"
-    )["key"]
+    op = "refresh_index_from_change_stream"
+    m = _require_manifest(index_path, op)
+    # built here only so that a derivation that cannot be rebuilt fails
+    # before the stream starts; each generation rebuilds its own
+    _derivation(changes_stream.sparkSession, index_path, m, op)
+    key = m["id_col"]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _prepare_stream_batch(
-            batch_df, key, reconcile_order_col, batch_id,
-            "refresh_index_from_change_stream",
-        )
-        if batch_df is None:
+        if batch_df.isEmpty():
             return
+        if reconcile_order_col is not None:
+            # the guard the reconcile path needs is the RECONCILE
+            # precondition on the RAW rows — non-null, tie-free
+            # (key, order) pairs — not key uniqueness, which the
+            # groupBy makes vacuously true post-net
+            payload = [
+                c for c in batch_df.columns
+                if c not in (key, "change_type", reconcile_order_col)
+            ]
+            batch_df = reconcile_change_log(
+                batch_df, key, reconcile_order_col, payload,
+                assert_order=True,
+            )
+        # two consumers downstream: the tombstone select and the
+        # upsert semi-join
+        batch_df.persist()
         try:
-            write_index_delta(index_path, batch_df, batch_df, band_fn)
+            if reconcile_order_col is None:
+                assert_unique_key(
+                    batch_df, key, f"{op} (batch {batch_id})",
+                    "a key appearing more than once makes payloads "
+                    "conflict; publish one reconciled diff per batch, "
+                    "pre-reconcile last-wins, or pass "
+                    "reconcile_order_col",
+                )
+            elif batch_df.isEmpty():
+                # a window whose every key was added then removed
+                # nets to NOTHING — committing an empty generation
+                # would tax every later read with a no-op fold until
+                # compaction
+                return
+            write_index_delta(index_path, batch_df, batch_df)
             if (
                 max_generations is not None
                 or max_read_amplification is not None
@@ -690,150 +787,13 @@ def refresh_index_from_change_stream(
         finally:
             batch_df.unpersist()
 
-    _run_available_now(changes_stream, _apply, checkpoint_dir)
-
-
-def _prepare_stream_batch(
-    batch_df: DataFrame,
-    key: str,
-    reconcile_order_col: str | None,
-    batch_id: int,
-    op: str,
-) -> DataFrame | None:
-    """The refresh loops' shared micro-batch head (one copy so the
-    generic and IVF-PQ loops cannot drift on the guard semantics the
-    `refresh_index_from_change_stream` docstring contracts): skip an
-    empty delivery, net a coalesced batch through
-    `merge.reconcile_change_log` when an order column is given (with
-    its reconcile-precondition guard on), persist the
-    change-sized frame (two consumers downstream — the stale select
-    and the upsert semi-join), skip a batch that nets to NOTHING, or
-    fail-fast on duplicate keys on the no-reconcile path. Returns the
-    PERSISTED frame (caller unpersists in its finally) or None when
-    the batch produced no work."""
-    from .merge import assert_unique_key, reconcile_change_log
-
-    if batch_df.isEmpty():
-        return None
-    if reconcile_order_col is not None:
-        # the guard the reconcile path needs is the RECONCILE
-        # precondition on the RAW rows — non-null, tie-free
-        # (key, order) pairs — not key uniqueness, which the
-        # groupBy makes vacuously true post-net
-        payload = [
-            c for c in batch_df.columns
-            if c not in (key, "change_type", reconcile_order_col)
-        ]
-        batch_df = reconcile_change_log(
-            batch_df, key, reconcile_order_col, payload,
-            assert_order=True,
-        )
-    batch_df.persist()
-    try:
-        if reconcile_order_col is not None:
-            # a window whose every key was added then removed nets
-            # to NOTHING — committing an empty generation would tax
-            # every later read with a no-op fold until compaction
-            if batch_df.isEmpty():
-                batch_df.unpersist()
-                return None
-        else:
-            assert_unique_key(
-                batch_df, key,
-                f"{op} (batch {batch_id})",
-                "a key appearing more than once makes payloads "
-                "conflict; publish one reconciled diff per batch, "
-                "pre-reconcile last-wins, or pass "
-                "reconcile_order_col",
-            )
-    except Exception:
-        batch_df.unpersist()
-        raise
-    return batch_df
-
-
-def _run_available_now(changes_stream, apply_fn, checkpoint_dir: str):
-    """One bounded foreachBatch pass over the change stream — the
-    shared trigger/checkpoint tail of both refresh loops (a deployment
-    swaps the trigger; see the stream-contract docstring)."""
-    q = (
-        changes_stream.writeStream.foreachBatch(apply_fn)
+    (
+        changes_stream.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-
-
-def ivf_pq_refresh_from_change_stream(
-    changes_stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    reconcile_order_col: str | None = None,
-    max_generations: int | None = None,
-    max_read_amplification: float | None = None,
-) -> None:
-    """Continuous IVF-PQ serving-list refresh — the drift-AWARE twin of
-    `refresh_index_from_change_stream`: every micro-batch of embedding
-    CDC rows (verdict + new vector on the same row) routes through
-    `ivf_pq_write_index_delta`, so a streamed refresh gets everything
-    the batch apply-diff path gets — the sidecar's geometry, the
-    frozen-artifact re-assign/re-encode,
-    AND the per-generation `_drift.json` reconstruction-error record
-    the quantizer-drift policy (`maybe_retrain`) reads. The generic
-    loop with a bare `ivf_pq_encode_fn` band_fn maintains the same
-    bytes but is drift-BLIND (no log entries); this wrapper closes
-    that seam. `index_path` is the LAYOUT root (the dir holding
-    lists/centroids/codebook/_params.json), matching the batch entry
-    point — not the lists subdir the generic loop takes.
-
-    Same micro-batch contract as the generic loop, enforced by the
-    shared `_prepare_stream_batch` head (one row per key per batch, or
-    `reconcile_order_col` to net coalesced deliveries; empty/netted
-    batches skip their generation) and the same at-least-once
-    semantics (a redelivered batch re-tombstones and re-appends
-    identical rows — folded state unchanged; it DOES append a
-    duplicate drift-log entry, which is monitoring noise, not state).
-    The compaction knobs run `maybe_compact` against the lists subdir,
-    whose manifest carries the (nid, centroid_id) geometry. Bounded
-    (AvailableNow) like the repo's replay harness.
-
-    PQ geometry (ADVICE r20) comes from the layout's required
-    `_params.json` sidecar, so a non-default-geometry deployment never
-    restates it. The sidecar is read once before the stream starts, so
-    a missing one fails here rather than inside the first batch."""
-    from .similarity import _read_ivf_pq_params
-
-    _read_ivf_pq_params(index_path, "ivf_pq_refresh_from_change_stream")
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _prepare_stream_batch(
-            batch_df, id_col, reconcile_order_col, batch_id,
-            "ivf_pq_refresh_from_change_stream",
-        )
-        if batch_df is None:
-            return
-        try:
-            ivf_pq_write_index_delta(
-                batch_df.sparkSession, index_path, batch_df, batch_df,
-                id_col=id_col, vec_col=vec_col,
-            )
-            if (
-                max_generations is not None
-                or max_read_amplification is not None
-            ):
-                maybe_compact(
-                    batch_df.sparkSession,
-                    os.path.join(index_path, "lists"),
-                    max_generations=max_generations,
-                    max_read_amplification=max_read_amplification,
-                )
-        finally:
-            batch_df.unpersist()
-
-    _run_available_now(changes_stream, _apply, checkpoint_dir)
 
 
 def index_stats(
@@ -1204,21 +1164,19 @@ def ivf_pq_drift_stats(
     spark: SparkSession,
     index_path: str,
     corpus: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     audit_fraction: float | None = None,
 ) -> dict:
     """Quantizer-drift snapshot of an IVF-PQ layout (VERDICT r19 item
     2): the training-time reconstruction-error baseline from the
     `_params.json` sidecar (None when the build corpus was empty),
-    the per-refresh drift log
-    `ivf_pq_write_index_delta` appends (each generation's re-encoded
-    batch vs the frozen codebook), and the ratio of the LATEST
-    non-empty refresh to the baseline — the cheap always-available
-    signal. Pass `corpus` (the current snapshot) for the full audit:
-    one corpus-sized `pq_quantization_error` aggregate adds
-    corpus_qerr_mean/p95 and corpus_qerr_ratio, the number
-    `maybe_retrain` thresholds on."""
+    the per-refresh drift log `write_index_delta` appends (each
+    generation's re-encoded batch vs the frozen codebook), and the
+    ratio of the LATEST non-empty refresh to the baseline — the cheap
+    always-available signal. Pass `corpus` (the current snapshot, in
+    the builder's source columns, which the lists' manifest records)
+    for the full audit: one corpus-sized `pq_quantization_error`
+    aggregate adds corpus_qerr_mean/p95 and corpus_qerr_ratio, the
+    number `maybe_retrain` thresholds on."""
     from .similarity import _qerr_stats, _read_ivf_pq_params
 
     params = _read_ivf_pq_params(index_path, "ivf_pq_drift_stats")
@@ -1234,15 +1192,17 @@ def ivf_pq_drift_stats(
         last.get("qerr_mean") if last else None, train_mean
     )
     if corpus is not None:
+        m = _require_manifest(
+            os.path.join(index_path, "lists"), "ivf_pq_drift_stats"
+        )
         if audit_fraction is not None:
-            corpus = _md5_fraction(corpus, id_col, audit_fraction)
+            corpus = _md5_fraction(corpus, m["id_col"], audit_fraction)
         codebook = spark.read.parquet(
             os.path.join(index_path, "codebook")
         )
         cur = _qerr_stats(
-            corpus.select(F.col(id_col).alias("nid"), vec_col),
-            codebook, params["num_subspaces"], params["dim"],
-            "nid", vec_col,
+            corpus, codebook, params["num_subspaces"], params["dim"],
+            m["id_col"], m["payload_col"],
         )
         out["corpus_qerr_mean"] = cur["qerr_mean"]
         out["corpus_qerr_p95"] = cur["qerr_p95"]
@@ -1258,8 +1218,6 @@ def maybe_retrain(
     index_path: str,
     corpus: DataFrame,
     max_qerr_ratio: float = 1.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     audit_fraction: float | None = None,
 ) -> dict:
     """The quantizer-RETRAIN policy (VERDICT r19 item 2) — the
@@ -1296,20 +1254,23 @@ def maybe_retrain(
             "the policy has nothing to compare against. Rebuild with "
             "ivf_pq_write_index, which records the baseline"
         )
-    stats = ivf_pq_drift_stats(spark, index_path, corpus, id_col,
-                               vec_col, audit_fraction=audit_fraction)
+    stats = ivf_pq_drift_stats(spark, index_path, corpus,
+                               audit_fraction=audit_fraction)
     ratio = stats["corpus_qerr_ratio"]
     fired = ratio is not None and ratio >= max_qerr_ratio
     if fired:
         from .similarity import ivf_pq_write_index
 
+        m = _require_manifest(
+            os.path.join(index_path, "lists"), "maybe_retrain"
+        )
         ivf_pq_write_index(
             corpus, index_path,
             num_centroids=params["num_centroids"],
             num_subspaces=params["num_subspaces"],
             num_codewords=params["num_codewords"],
             dim=params["dim"],
-            id_col=id_col, vec_col=vec_col,
+            id_col=m["id_col"], vec_col=m["payload_col"],
         )
     return {
         "fired": fired,
@@ -1326,8 +1287,6 @@ def ivf_pq_index_stats(
     corpus: DataFrame | None = None,
     include_live: bool = False,
     hot_threshold: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> dict:
     """The IVF-PQ family's one monitoring read — the generic
     `index_stats` of the lists layout (generations, volumes, read
@@ -1342,7 +1301,5 @@ def ivf_pq_index_stats(
     out["list_skew"] = ivf_list_stats(
         spark, lists_path, hot_threshold=hot_threshold
     )
-    out["drift"] = ivf_pq_drift_stats(
-        spark, index_path, corpus, id_col, vec_col
-    )
+    out["drift"] = ivf_pq_drift_stats(spark, index_path, corpus)
     return out

@@ -279,7 +279,8 @@ def reconcile_change_log(
     (tombstone + identical re-append). Pinned exactly in that form by
     a hypothesis property test over arbitrary snapshot triples.
     This is what makes a coalescing stream trigger safe for
-    `index_maintenance.refresh_index_from_change_stream`: a micro-batch
+    `index_maintenance.refresh_index_from_change_stream`, the one
+    refresh loop of every index family: a micro-batch
     that picked up N change-log drops reconciles to the one-row-per-key
     contract the maintenance generation requires, instead of banding
     conflicting payloads.

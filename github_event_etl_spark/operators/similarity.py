@@ -797,7 +797,7 @@ def pq_quantization_error(
     codebook was derived from makes ADC distances ever coarser with no
     error anywhere — recall decays silently. `ivf_pq_write_index`
     records the build corpus' error stats in the `_params.json`
-    sidecar, `ivf_pq_write_index_delta` logs each refresh batch's, and
+    sidecar, `write_index_delta` logs each refresh batch's, and
     `index_maintenance.maybe_retrain` is the policy that compares and
     triggers the re-derive rebuild. (Reference analog: the
     fresh-vs-incremental summary decision,
@@ -1082,7 +1082,7 @@ def ivf_pq_encode_fn(
 ):
     """The code-recompute hook that puts the IVF-PQ serving lists
     inside the apply-diff maintenance contract
-    (`index_maintenance.ivf_pq_write_index_delta`): maps a
+    (`index_maintenance._derivation` of an IVF-PQ index): maps a
     ('nid', `vec_col`) docs frame to serving-list rows
     (nid, centroid_id, pq_code) against FROZEN centroid and codebook
     tables — the exact `_ivf_pq_build_tables` head the layout was
@@ -1284,9 +1284,10 @@ def ivf_pq_write_index(
     no sidecar, and `_read_ivf_pq_params` (which REQUIRES one) fails
     the probe loudly instead of unpacking half-new codes against a
     stale geometry. Just before the sidecar, the lists get their empty
-    maintenance manifest (`index_maintenance._commit_base`), so the
-    layout is born a committed index that `ivf_pq_write_index_delta`,
-    `compact_index` and the partitioned probes read as such. Both
+    maintenance manifest (`index_maintenance._commit_base`, which
+    references the sidecar), so the layout is born a committed index
+    that `write_index_delta`, `compact_index` and the partitioned
+    probes read as such. Both
     metadata writes are durable JSON commits
     (`index_maintenance._atomic_write_json`). The three table writes
     are one corpus pass plus two cached-table flushes: the tiny
@@ -1348,7 +1349,11 @@ def ivf_pq_write_index(
     finally:
         centroids.unpersist()
         codebook.unpersist()
-    _commit_base(f"{path}/lists", "nid", "centroid_id")
+    _commit_base(f"{path}/lists", {
+        "kind": "ivf_pq", "key": "nid", "partition_col": "centroid_id",
+        "id_col": id_col, "payload_col": vec_col,
+        "derivation": {"params": "../_params.json"},
+    })
     _atomic_write_json(
         os.path.join(path, "_params.json"),
         {
@@ -1417,7 +1422,7 @@ def ann_ivf_pq_partitioned(
     scale.
 
     The lists are read through `index_maintenance.read_index`, so a
-    layout refreshed by `ivf_pq_write_index_delta` (change-sized
+    layout refreshed by `write_index_delta` (change-sized
     tombstone+append generations under `<path>/lists`) probes its
     MAINTAINED state — committed generations fold over the base as
     broadcast anti-joins + unions before the probe join; a freshly
@@ -1500,7 +1505,9 @@ def ivf_write_index(
     probe path below never reads more than nprobe/C of it. The
     assigned table's empty maintenance manifest
     (`index_maintenance._commit_base`) is the last write, so the
-    layout is born a committed index."""
+    layout is born a committed index. It records the centroid table
+    beside the lists as the frozen quantizer `write_index_delta`
+    assigns later vectors against."""
     from .index_maintenance import _commit_base
 
     assigned, centroids = ivf_assign(corpus, num_centroids, id_col, vec_col)
@@ -1508,7 +1515,11 @@ def ivf_write_index(
         f"{path}/assigned"
     )
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
-    _commit_base(f"{path}/assigned", id_col, "centroid_id")
+    _commit_base(f"{path}/assigned", {
+        "kind": "ivf", "key": id_col, "partition_col": "centroid_id",
+        "id_col": id_col, "payload_col": vec_col,
+        "derivation": {"centroids": "../centroids"},
+    })
 
 
 def ann_ivf_partitioned(
@@ -1747,7 +1758,7 @@ def incremental_dedup_semantic(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int = 10_000,
-    corpus_banded: DataFrame | None = None,
+    corpus_index: str | None = None,
     materialize_batch_bands: bool = False,
 ) -> DataFrame:
     """Embedding-space twin of text_dedup.incremental_dedup_minhash:
@@ -1773,8 +1784,11 @@ def incremental_dedup_semantic(
     vectors, both streamed against broadcast small sides); the batch
     subtree is planned ~3x (signature index, in-batch pairs, vector
     re-attach) — the same increment-sized trade as the MinHash twin.
-    In production the corpus signature index (table, sig, vec_id) is a
-    pre-materialized table and the corpus signature scan disappears.
+    In production the corpus signature index is a pre-materialized
+    table and the corpus signature scan disappears: pass an
+    `rhp_write_index` path as `corpus_index`. An index built at other
+    dim × tables × planes raises ValueError naming each differing
+    field (its buckets could never meet the batch's).
 
     Precision is exact (every candidate is verified by true cosine);
     only recall is probabilistic, tuned by tables x planes exactly as
@@ -1782,8 +1796,16 @@ def incremental_dedup_semantic(
     / semi-filter / status logic) is `_incremental_classify_lsh`,
     shared verbatim with the MinHash twin; only the banding (RHP
     signatures) and the verify metric (cosine) live here."""
+    from .index_maintenance import _require_derivation
     from .text_dedup import _incremental_classify_lsh, _spread
 
+    if corpus_index is not None:
+        _require_derivation(
+            corpus_index, "rhp",
+            {"dim": dim, "num_tables": num_tables,
+             "planes_per_table": planes_per_table},
+            "incremental_dedup_semantic",
+        )
     sig_fn = rhp_signatures(dim, num_tables, planes_per_table)
 
     def banded(df: DataFrame, spread: bool) -> DataFrame:
@@ -1791,10 +1813,8 @@ def incremental_dedup_semantic(
         # otherwise pin the signature matmul to a single task, while
         # repartitioning the corpus is exactly the full shuffle this
         # operator exists to avoid.
-        src = _spread(df) if spread else df
-        return src.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(sig_fn(F.col(vec_col))).alias("band", "bucket"),
+        return _rhp_band_keys(
+            _spread(df) if spread else df, sig_fn, id_col, vec_col
         )
 
     return _incremental_classify_lsh(
@@ -1809,12 +1829,20 @@ def incremental_dedup_semantic(
         score_out="cosine_r",
         max_bucket_size=max_bucket_size,
         finalize=lambda c: F.round(c, 6),
-        corpus_banded=(
-            corpus_banded.withColumnRenamed(id_col, "doc_id")
-            if corpus_banded is not None and id_col != "doc_id"
-            else corpus_banded
-        ),
+        corpus_index=corpus_index,
         materialize_batch_bands=materialize_batch_bands,
+    )
+
+
+def _rhp_band_keys(
+    vectors: DataFrame, sig_fn, id_col: str, vec_col: str
+) -> DataFrame:
+    """(doc_id, band, bucket) keys of each vector's RHP signatures —
+    the one projection the RHP index, its maintenance and the semantic
+    classify bucket on (the id as "doc_id", the `_band_keys` rule)."""
+    return vectors.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(sig_fn(F.col(vec_col))).alias("band", "bucket"),
     )
 
 
@@ -1828,7 +1856,7 @@ def rhp_write_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the corpus RHP signature index — the embedding-space
-    twin of `text_dedup.minhash_write_index`, the (vec_id, band,
+    twin of `text_dedup.minhash_write_index`, the (doc_id, band,
     bucket) table `incremental_dedup_semantic`'s docstring promises as
     the production layout ("the corpus signature index is a
     pre-materialized table and the corpus signature scan disappears").
@@ -1837,30 +1865,23 @@ def rhp_write_index(
     per-table maintenance, not probe-time pruning: the classify probes
     every table). At 100 TB this runs per corpus SNAPSHOT, not per
     increment; the daily classify then reads narrow index rows instead
-    of re-running the signature matmul over every corpus vector. Feed
-    the read-back frame to `incremental_dedup_semantic(...,
-    corpus_banded=...)` (built at the SAME tables × planes geometry —
-    fold the geometry into `path`, the scratch convention).
+    of re-running the signature matmul over every corpus vector. Pass
+    the path to `incremental_dedup_semantic(..., corpus_index=...)`.
 
-    The id column is written under the classify skeleton's own name,
-    "doc_id" (the `_band_keys` convention), whatever `id_col` the
-    source frame uses — so the read-back frame plugs into
-    `corpus_banded=` for ANY id_col without a rename that could
-    silently no-op. The last write is the empty maintenance manifest
-    (`index_maintenance._commit_base`): the index is born committed."""
-    from .index_maintenance import _commit_base
+    The id column is written as "doc_id" (`_rhp_band_keys`) whatever
+    `id_col` the source frame uses. The last write is the maintenance
+    manifest (`index_maintenance._commit_base`): the index is born
+    committed, recording its kind ("rhp"), source columns and dim ×
+    tables × planes, which the classify checks against its own and
+    `write_index_delta` derives appends from."""
+    from .index_maintenance import _build_index
 
-    sig_fn = rhp_signatures(dim, num_tables, planes_per_table)
-    (
-        vectors.select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(sig_fn(F.col(vec_col))).alias("band", "bucket"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(path)
-    )
-    _commit_base(path, "doc_id", "band")
+    _build_index(vectors, path, {
+        "kind": "rhp", "key": "doc_id", "partition_col": "band",
+        "id_col": id_col, "payload_col": vec_col,
+        "derivation": {"dim": dim, "num_tables": num_tables,
+                       "planes_per_table": planes_per_table},
+    })
 
 
 # ------------------------------------------------------- exact near-dup pairs

@@ -36,6 +36,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from ..session import materialize
+from .index_maintenance import _build_index, _require_derivation, read_index
 
 # ---------------------------------------------------------- expression tools
 
@@ -190,7 +191,7 @@ def _incremental_classify_lsh(
     score_out: str,
     max_bucket_size: int,
     finalize=None,
-    corpus_banded: DataFrame | None = None,
+    corpus_index: str | None = None,
     prepare=None,
     materialize_batch_bands: bool = False,
 ) -> DataFrame:
@@ -218,14 +219,13 @@ def _incremental_classify_lsh(
     batch/candidate-sized. See each twin's docstring for its
     scan-count accounting and production pre-materialization note.
 
-    `corpus_banded` is that pre-materialization made real: when a
-    (doc_id, band, bucket) frame is supplied (e.g. read from the index
-    `minhash_write_index` wrote), it replaces `banded(corpus, False)`
-    — the per-increment corpus banding (the dominant CPU at scale:
-    shingle + minhash every corpus doc on every daily run) disappears,
-    while the verify stage still re-attaches only candidate-matched
-    corpus payloads, column-pruned as before. Every other contract
-    (semi-filter, caps, first-wins) is unchanged and shared.
+    `corpus_index` is that pre-materialization made real: the path of
+    a (doc_id, band, bucket) index, read through `read_index`, replaces
+    `banded(corpus, False)` — the per-increment corpus banding (the
+    dominant CPU at scale) disappears, while the verify stage still
+    re-attaches only candidate-matched corpus payloads, column-pruned
+    as before. The twins first check the index's recorded derivation
+    against their own (`_require_derivation`).
 
     `prepare(df, col)` is the r21 verify split (guide §4: per-ROW
     Python work hoisted to per-DOC): it maps the payload column of a
@@ -291,8 +291,10 @@ def _incremental_classify_lsh(
     if materialize_batch_bands:
         bb = materialize(bb)
     cb_src = (
-        corpus_banded.select("doc_id", "band", "bucket")
-        if corpus_banded is not None
+        read_index(corpus.sparkSession, corpus_index).select(
+            "doc_id", "band", "bucket"
+        )
+        if corpus_index is not None
         else banded(corpus, False)
     )
     cb = cb_src.join(
@@ -412,7 +414,7 @@ def incremental_dedup_minhash(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket_size: int = 10_000,
-    corpus_banded: DataFrame | None = None,
+    corpus_index: str | None = None,
     materialize_batch_bands: bool = False,
 ) -> DataFrame:
     """Near-duplicate flavor of `incremental_dedup`: classify an
@@ -439,8 +441,11 @@ def incremental_dedup_minhash(
     in-batch pairs, text re-attach) — the `incremental_dedup` trade,
     deliberate: the duplicated subtrees are increment-sized and an
     eager materialization would break the declarative plan. In
-    production the corpus band index (band, bucket, doc_id) is a
-    pre-materialized table and the corpus banding scan disappears.
+    production the corpus band index is a pre-materialized table and
+    the corpus banding scan disappears: pass a `minhash_write_index`
+    path as `corpus_index`. An index banded at other bands × rows × k
+    raises ValueError naming each differing field (its buckets could
+    never meet the batch's).
 
     Degenerate buckets: both sides of the cross-candidate join are
     independently capped at `max_bucket_size` members per (band,
@@ -463,6 +468,12 @@ def incremental_dedup_minhash(
     O(pairs) Python tokenization on a single task. Values are
     identical (same shingle definition, same HALF-UP rounding — the
     jaccard parity tests and the DuckDB oracle pin it)."""
+    if corpus_index is not None:
+        _require_derivation(
+            corpus_index, "minhash",
+            {"num_bands": num_bands, "rows_per_band": rows_per_band, "k": k},
+            "incremental_dedup_minhash",
+        )
     bands_vec = minhash_band_buckets_vec(num_bands, rows_per_band, k)
     sh_vec = shingle_sets_vec(k)
 
@@ -486,7 +497,7 @@ def incremental_dedup_minhash(
         matched_col="matched_doc_id",
         score_out="jaccard_r",
         max_bucket_size=max_bucket_size,
-        corpus_banded=corpus_banded,
+        corpus_index=corpus_index,
         prepare=lambda df, col: df.withColumn(col, sh_vec(F.col(col))),
         materialize_batch_bands=materialize_batch_bands,
     )
@@ -710,20 +721,18 @@ def minhash_write_index(
     probe-time pruning. At 100 TB this runs on the index's own
     schedule (per corpus snapshot), not per increment — the daily
     classify then reads ~corpus/|bands| narrow rows per band instead
-    of re-shingling and re-hashing every document. Feed the read-back
-    frame to `incremental_dedup_minhash(..., corpus_banded=...)`. The
-    last write is the empty maintenance manifest
-    (`index_maintenance._commit_base`): the index is born committed."""
-    from .index_maintenance import _commit_base
-
-    bands_vec = minhash_band_buckets_vec(num_bands, rows_per_band, k)
-    (
-        _band_keys(corpus, bands_vec, id_col, text_col)
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(path)
-    )
-    _commit_base(path, "doc_id", "band")
+    of re-shingling and re-hashing every document. Pass the path to
+    `incremental_dedup_minhash(..., corpus_index=...)`. The last write
+    is the maintenance manifest (`index_maintenance._commit_base`):
+    the index is born committed, recording its kind ("minhash"),
+    source columns and bands × rows × k, which the classify checks
+    against its own and `write_index_delta` derives appends from."""
+    _build_index(corpus, path, {
+        "kind": "minhash", "key": "doc_id", "partition_col": "band",
+        "id_col": id_col, "payload_col": text_col,
+        "derivation": {"num_bands": num_bands,
+                       "rows_per_band": rows_per_band, "k": k},
+    })
 
 
 _PAIR_CHUNK = 64

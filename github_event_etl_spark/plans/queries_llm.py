@@ -540,7 +540,7 @@ def llm_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     to the increment's band keys.
 
     Same fixture (`_incrm_split`), same skeleton (the shared
-    `_incremental_classify_lsh` with `corpus_banded` supplied), same
+    `_incremental_classify_lsh` with `corpus_index` supplied), same
     statuses and first-wins/min-corpus contract — so results are
     IDENTICAL to `llm_dedup_incremental_minhash`, whose catalog slot
     (full `_INCRM_ORACLE` DuckDB oracle, cap mirror included) verifies
@@ -575,7 +575,7 @@ def llm_dedup_incremental_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
         num_bands=_NUM_BANDS,
         rows_per_band=_ROWS_PER_BAND,
         max_bucket_size=_INCR_MAX_BUCKET,
-        corpus_banded=read_index(spark, index),
+        corpus_index=index,
     )
 
 
@@ -4004,7 +4004,8 @@ def llm_dedup_incremental_semantic_indexed(
     dataset scratch tree (`similarity.rhp_write_index`, one
     shuffle-free Arrow-matmul pass, run per corpus SNAPSHOT in
     production) and the classify reads it back (`read_index`) through
-    the shared skeleton's `corpus_banded` face — the per-increment
+    the shared skeleton's `corpus_index` face, after checking the
+    manifest's recorded geometry against its own — the per-increment
     corpus signature matmul disappears into a column-pruned narrow-row
     index scan, exactly the production note in
     `incremental_dedup_semantic`'s docstring made physical.
@@ -4045,7 +4046,7 @@ def llm_dedup_incremental_semantic_indexed(
         num_tables=_SEMANTIC_LSH_TABLES,
         planes_per_table=_SEMANTIC_LSH_PLANES,
         max_bucket_size=_INCR_SEM_MAX_BUCKET,
-        corpus_banded=read_index(spark, index),
+        corpus_index=index,
     )
 
 

@@ -26,6 +26,7 @@ Scale posture (100 TB design, tested on local[32]):
   two pipelines' verdict stages) cut their lineage eagerly, and the
   kind of cut follows the deployment: a checkpoint dir set once on the
   SparkContext makes every cut reliable; without one they stay local.
+  Reliable cuts clean up after themselves (`materialize`).
 """
 
 from __future__ import annotations
@@ -58,6 +59,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -121,10 +123,13 @@ def materialize(df: DataFrame) -> DataFrame:
     mode, but its blocks live on the executors and die with them, so a
     multi-executor deployment must set a shared-filesystem dir.
 
-    Reliable checkpoint files persist after the job, one RDD directory
-    per call, unless `spark.cleaner.referenceTracking.cleanCheckpoints`
-    is set (the cleaner then removes each once the checkpointed RDD is
-    garbage-collected on the driver).
+    Each reliable call writes one RDD directory. `get_spark` (and
+    bench.py's builder) set the static
+    `spark.cleaner.referenceTracking.cleanCheckpoints`, so the context
+    cleaner removes a directory once its checkpointed RDD is
+    garbage-collected on the driver — never while a frame that reads
+    it is still held. A session built without that conf keeps every
+    directory for the life of its context.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)

@@ -164,10 +164,10 @@ def test_write_read_index_delta_end_to_end(spark, tmp_path):
     base_files = _base_mtimes(path)
 
     g1 = write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
     g2 = write_index_delta(
-        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt, band_fn
+        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt
     )
     assert (g1, g2) == (1, 2)
     assert _rows(read_index(spark, path)) == _rows(band_fn(nxt))
@@ -189,12 +189,12 @@ def test_index_delta_empty_sides(spark, tmp_path):
     path = str(tmp_path / "idx")
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     write_index_delta(
-        path, snapshot_diff(prev, grown, "doc_id", ["text"]), grown, band_fn
+        path, snapshot_diff(prev, grown, "doc_id", ["text"]), grown
     )
     assert _rows(read_index(spark, path)) == _rows(band_fn(grown))
     # now shrink back: removal-only generation (empty appends)
     write_index_delta(
-        path, snapshot_diff(grown, prev, "doc_id", ["text"]), prev, band_fn
+        path, snapshot_diff(grown, prev, "doc_id", ["text"]), prev
     )
     assert _rows(read_index(spark, path)) == _rows(band_fn(prev))
 
@@ -210,7 +210,7 @@ def test_index_delta_uncommitted_generation_ignored(spark, tmp_path):
     path = str(tmp_path / "idx")
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
     # simulate an interrupted gen=2: appends committed, tombstones not
     gen2 = os.path.join(path, "_delta", "gen=2")
@@ -303,22 +303,28 @@ def test_apply_index_diff_equals_rebuild_ivf(spark):
 def test_write_read_index_delta_ivf_layout(spark, tmp_path):
     """The physical merge-on-read layer over the inverted-list layout:
     base and appends both partitioned by centroid_id (the geometry the
-    manifest records), one maintenance generation, folded read equals
-    a from-scratch assignment of the current snapshot — base list
+    manifest records), one maintenance generation assigned against the
+    centroid table the manifest names, folded read equals a
+    from-scratch assignment of the current snapshot — base list
     directories never rewritten."""
-    from github_event_etl_spark.operators.index_maintenance import (
-        _commit_base,
+    from github_event_etl_spark.operators.similarity import (
+        ivf_assign_with_centroids,
+        ivf_write_index,
     )
 
-    prev, cur, assign_fn = _ivf_fixture(spark)
-    path = str(tmp_path / "ivf")
-    assign_fn(prev).write.partitionBy("centroid_id").parquet(path)
-    # the builders' shared manifest step
-    _commit_base(path, "vec_id", "centroid_id")
+    prev, cur, _ = _ivf_fixture(spark)
+    layout = str(tmp_path / "ivf")
+    # three vectors, three centroids: each prev vector seeds a list
+    ivf_write_index(prev, layout, num_centroids=3)
+    path = os.path.join(layout, "assigned")
+    centroids = spark.read.parquet(os.path.join(layout, "centroids"))
+
+    def assign_fn(d):
+        return ivf_assign_with_centroids(d, centroids)
+
     base_files = _base_mtimes(path)
     write_index_delta(
-        path, snapshot_diff(prev, cur, "vec_id", ["embedding"]), cur,
-        assign_fn,
+        path, snapshot_diff(prev, cur, "vec_id", ["embedding"]), cur
     )
     assert _ivf_rows(read_index(spark, path)) == _ivf_rows(assign_fn(cur))
     assert _base_mtimes(path) == base_files, (
@@ -350,7 +356,7 @@ def test_write_index_delta_retries_over_stranded_generation(
     ).parquet(os.path.join(gen1, "appends"))
     assert _committed_generations(path) == []
     g = write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
     assert g == 1
     assert _rows(read_index(spark, path)) == _rows(band_fn(cur))
@@ -382,7 +388,7 @@ def test_refresh_index_from_change_stream(spark, tmp_path):
 
     def changes(a, b):
         # CDC rows: verdict + the new snapshot's payload (null for
-        # removed keys — band_fn never sees them)
+        # removed keys — the derivation never sees them)
         return (
             snapshot_diff(a, b, "doc_id", ["text"])
             .select("doc_id", "change_type")
@@ -409,7 +415,7 @@ def test_refresh_index_from_change_stream(spark, tmp_path):
         .json(str(src))
     )
     refresh_index_from_change_stream(
-        stream, path, band_fn, checkpoint_dir=str(tmp_path / "ckpt")
+        stream, path, checkpoint_dir=str(tmp_path / "ckpt")
     )
     assert len(_committed_generations(path)) == 2
     assert _rows(read_index(spark, path)) == _rows(band_fn(nxt))
@@ -418,7 +424,7 @@ def test_refresh_index_from_change_stream(spark, tmp_path):
     # a redelivered 'added' key's rows (the tombstone-every-diff-key
     # rule exists to prevent it) would survive a set comparison.
     b2 = spark.createDataFrame(batch2, "doc_id long, change_type string, text string")
-    assert write_index_delta(path, b2, b2, band_fn) == 3
+    assert write_index_delta(path, b2, b2) == 3
     redelivered = read_index(spark, path)
     assert _rows(redelivered) == _rows(band_fn(nxt))
     assert redelivered.count() == band_fn(nxt).count()
@@ -472,7 +478,6 @@ def test_refresh_stream_coalesced_batch_reconciles(spark, tmp_path):
     refresh_index_from_change_stream(
         spark.readStream.schema(schema).json(str(src)),  # ONE batch
         path,
-        band_fn,
         checkpoint_dir=str(tmp_path / "ckpt"),
         reconcile_order_col="seq",
     )
@@ -488,7 +493,6 @@ def test_refresh_stream_coalesced_batch_reconciles(spark, tmp_path):
         refresh_index_from_change_stream(
             spark.readStream.schema(schema).json(str(src)),
             path2,
-            band_fn,
             checkpoint_dir=str(tmp_path / "ckpt2"),
         )
 
@@ -527,7 +531,6 @@ def test_refresh_stream_skips_generation_when_batch_nets_to_nothing(
             "doc_id long, change_type string, text string, seq int"
         ).json(str(src)),
         path,
-        band_fn,
         checkpoint_dir=str(tmp_path / "ckpt"),
         reconcile_order_col="seq",
     )
@@ -701,109 +704,6 @@ def _rowset(df):
     return {tuple(r) for r in df.collect()}
 
 
-def test_refresh_stream_composes_with_ivf_pq_encode(spark, sf_dir, tmp_path):
-    """The continuous refresh loop generalizes to the PQ serving
-    family: two micro-batches of embedding CDC rows (verdict + new
-    vector on the same row) apply two maintenance generations to the
-    layout's lists through `refresh_index_from_change_stream` with
-    `ivf_pq_encode_fn` as the derivation — and the partitioned probe
-    over the streamed-refresh state equals the probe over a
-    frozen-artifact rebuild of the final snapshot. Parquet change
-    files, not JSON: the payload is float vectors, and a lossy text
-    round-trip would perturb the codes both sides must agree on."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from github_event_etl_spark.operators.index_maintenance import (
-        refresh_index_from_change_stream,
-    )
-    from github_event_etl_spark.operators.similarity import (
-        ann_ivf_pq_partitioned,
-        ivf_pq_encode_fn,
-        ivf_pq_write_index,
-        ivf_seed_centroids,
-        pq_codebook,
-    )
-    from github_event_etl_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").cast("array<double>").alias("embedding"),
-    )
-    frozen_c = ivf_seed_centroids(emb, 16, id_col="nid")
-    frozen_cb = pq_codebook(emb, 16, id_col="nid")
-    encode = ivf_pq_encode_fn(frozen_c, frozen_cb)
-    neg = F.transform("embedding", lambda x: -x)
-    d = F.col("nid")
-    prev = emb
-    cur = emb.filter(d % 10 != 3).select(
-        "nid", F.when(d % 7 == 1, neg).otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    nxt = cur.filter(d % 13 != 2).select(
-        "nid", F.when(d % 11 == 4, neg).otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-
-    def changes(a, b):
-        return (
-            snapshot_diff(a, b, "nid", ["embedding"])
-            .select("nid", "change_type")
-            .join(b.select("nid", "embedding"), "nid", "left")
-            .select("nid", "change_type", "embedding")
-        )
-
-    src = tmp_path / "changes"
-    src.mkdir()
-    for i, batch in enumerate([changes(prev, cur), changes(cur, nxt)]):
-        stage = tmp_path / f"stage{i}"
-        batch.coalesce(1).write.parquet(str(stage))
-        (part,) = [p for p in os.listdir(stage) if p.endswith(".parquet")]
-        dst = str(src / f"b{i}.parquet")
-        shutil.copy(os.path.join(stage, part), dst)
-        os.utime(dst, (1_000_000_000 + i * 100,) * 2)
-
-    layout = str(tmp_path / "pq")
-    ivf_pq_write_index(
-        prev, layout, id_col="nid",
-        centroids=frozen_c, codebook=frozen_cb,
-    )
-    stream = (
-        spark.readStream.schema(
-            "nid long, change_type string, embedding array<double>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    refresh_index_from_change_stream(
-        stream, f"{layout}/lists", encode,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert len(_committed_generations(f"{layout}/lists")) == 2
-    cols = ["nid", "centroid_id", "pq_code"]
-    folded = read_index(spark, f"{layout}/lists").select(
-        "nid", F.col("centroid_id").cast("long").alias("centroid_id"),
-        "pq_code",
-    )
-    assert _rowset(folded.select(*cols)) == _rowset(
-        encode(nxt).select(*cols)
-    )
-    rebuilt = str(tmp_path / "pq_rebuilt")
-    ivf_pq_write_index(
-        nxt, rebuilt, id_col="nid",
-        centroids=frozen_c, codebook=frozen_cb,
-    )
-    qs = nxt.filter(d < 8)
-    got = _rowset(ann_ivf_pq_partitioned(
-        spark, layout, qs, k=10, nprobe=4, id_col="nid",
-    ))
-    want = _rowset(ann_ivf_pq_partitioned(
-        spark, rebuilt, qs, k=10, nprobe=4, id_col="nid",
-    ))
-    assert got == want and len(got) > 0
-
-
 def test_write_index_delta_requires_committed_base(spark, tmp_path):
     """Maintenance against a vacant or half-written base fails fast:
     a generation written there would fabricate an unreadable index
@@ -826,7 +726,7 @@ def test_write_index_delta_requires_committed_base(spark, tmp_path):
     )
     for op, call in [
         ("write_index_delta",
-         lambda: write_index_delta(bare, diff, cur, band_fn)),
+         lambda: write_index_delta(bare, diff, cur)),
         ("read_index", lambda: read_index(spark, bare)),
         ("compact_index", lambda: compact_index(spark, bare)),
     ]:
@@ -837,13 +737,13 @@ def test_write_index_delta_requires_committed_base(spark, tmp_path):
     # vacant path
     with pytest.raises(FileNotFoundError, match="no committed index"):
         write_index_delta(
-            str(tmp_path / "nowhere"), diff, cur, band_fn
+            str(tmp_path / "nowhere"), diff, cur
         )
     # half-written: directory exists, _SUCCESS does not
     half = tmp_path / "half"
     half.mkdir()
     with pytest.raises(FileNotFoundError, match="no committed index"):
-        write_index_delta(str(half), diff, cur, band_fn)
+        write_index_delta(str(half), diff, cur)
 
 
 def test_builders_commit_an_empty_manifest(spark, tmp_path):
@@ -882,6 +782,138 @@ def test_builders_commit_an_empty_manifest(spark, tmp_path):
         assert sorted(got.collect()) == sorted(want.collect()), index
 
 
+def test_classify_refuses_an_index_derived_at_another_geometry(
+    spark, tmp_path
+):
+    """The indexed classify checks the index it is handed: a MinHash
+    index banded at num_bands=2 cannot serve a num_bands=4 classify,
+    nor an RHP index at planes_per_table=2 a planes_per_table=3 one —
+    both raise, naming each differing field. The planted near-dup
+    shows what the check prevents: it collides only in bands 2-3, so
+    the 2-band corpus buckets cannot meet it and it would read 'new'
+    (as it does in memory at 2 bands); at matching geometry the
+    indexed classify equals the in-memory one."""
+    from github_event_etl_spark.operators.similarity import (
+        incremental_dedup_semantic,
+        rhp_write_index,
+    )
+    from github_event_etl_spark.operators.text_dedup import (
+        incremental_dedup_minhash,
+    )
+
+    corpus = spark.createDataFrame([
+        (1, "theta chi theta alpha pi tau zeta iota kappa alpha"),
+        (2, "one two three four five six"),
+    ], DOCS_SCHEMA)
+    batch = spark.createDataFrame(
+        [(10, "theta chi theta alpha pi tau zeta iota xi alpha")],
+        DOCS_SCHEMA,
+    )
+    geo = dict(rows_per_band=2, k=2)
+
+    def status(**kw):
+        return [(r.doc_id, r.status) for r in incremental_dedup_minhash(
+            corpus, batch, 0.5, **geo, **kw).collect()]
+
+    assert status(num_bands=4) == [(10, "dup_corpus")]
+    assert status(num_bands=2) == [(10, "new")]
+    mh2, mh4 = str(tmp_path / "mh2"), str(tmp_path / "mh4")
+    minhash_write_index(corpus, mh2, num_bands=2, **geo)
+    minhash_write_index(corpus, mh4, num_bands=4, **geo)
+    assert status(num_bands=2, corpus_index=mh2) == [(10, "new")]
+    assert status(num_bands=4, corpus_index=mh4) == [(10, "dup_corpus")]
+    with pytest.raises(ValueError, match=(
+        r"incremental_dedup_minhash: the index at .*mh2 was built with "
+        r"num_bands=2 \(this call: 4\) — .*minhash_write_index$"
+    )):
+        status(num_bands=4, corpus_index=mh2)
+    with pytest.raises(ValueError, match=(
+        r"with num_bands=2 \(this call: 4\), k=2 \(this call: 3\) — "
+    )):
+        incremental_dedup_minhash(corpus, batch, 0.5, num_bands=4,
+                                  rows_per_band=2, k=3, corpus_index=mh2)
+
+    vecs, _ = _planted_shift(spark)
+    copy = vecs.filter("vec_id = 5").selectExpr(
+        "vec_id + 1000 AS vec_id", "embedding"
+    )
+    rhp = str(tmp_path / "rhp")
+    rhp_write_index(vecs, rhp, dim=16, num_tables=3, planes_per_table=2)
+
+    def semantic(planes, **kw):
+        return [(r.vec_id, r.status) for r in incremental_dedup_semantic(
+            vecs, copy, dim=16, threshold=0.99, num_tables=3,
+            planes_per_table=planes, **kw).collect()]
+
+    assert semantic(3) == [(1005, "dup_corpus")]
+    assert semantic(2, corpus_index=rhp) == [(1005, "dup_corpus")]
+    with pytest.raises(ValueError, match=(
+        r"incremental_dedup_semantic: the index at .*rhp was built with "
+        r"planes_per_table=2 \(this call: 3\) — .*rhp_write_index$"
+    )):
+        semantic(3, corpus_index=rhp)
+    # a band index of the other family is refused by its kind
+    with pytest.raises(ValueError, match=r"kind='minhash' \(this call: 'rhp'\)"):
+        incremental_dedup_semantic(vecs, copy, dim=16, threshold=0.99,
+                                   corpus_index=mh2)
+
+
+def test_format2_manifest_is_refused_naming_its_builder(spark, tmp_path):
+    """A manifest written before the derivation was recorded (format 2:
+    key and partition column, no kind) is refused by every entry point
+    — writer, reader, compaction, the refresh loop and the indexed
+    classify — with an error that names the format it found and the
+    builder that rebuilds an index of that shape. Nothing is written."""
+    import json
+
+    from github_event_etl_spark.operators.index_maintenance import (
+        refresh_index_from_change_stream,
+    )
+    from github_event_etl_spark.operators.text_dedup import (
+        incremental_dedup_minhash,
+    )
+
+    prev, cur = _prev_cur(spark)
+    path = str(tmp_path / "idx")
+    minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
+    m = _read_manifest(path)
+    assert (m["format"], m["kind"], m["id_col"], m["payload_col"]) == (
+        3, "minhash", "doc_id", "text"
+    )
+    assert m["derivation"] == {"num_bands": 2, "rows_per_band": 2, "k": 2}
+    old = {k: v for k, v in m.items()
+           if k not in ("kind", "id_col", "payload_col", "derivation")}
+    old["format"] = 2
+    with open(os.path.join(path, "_manifest.json"), "w") as f:
+        json.dump(old, f)
+    before = _tree(path)
+    diff = snapshot_diff(prev, cur, "doc_id", ["text"])
+    src = tmp_path / "changes"
+    src.mkdir()
+    for op, call in [
+        ("write_index_delta", lambda: write_index_delta(path, diff, cur)),
+        ("read_index", lambda: read_index(spark, path)),
+        ("compact_index", lambda: compact_index(spark, path)),
+        ("refresh_index_from_change_stream",
+         lambda: refresh_index_from_change_stream(
+             spark.readStream.schema(
+                 "doc_id long, change_type string, text string"
+             ).json(str(src)),
+             path, checkpoint_dir=str(tmp_path / "ckpt"))),
+        ("incremental_dedup_minhash",
+         lambda: incremental_dedup_minhash(
+             prev, cur, 0.5, num_bands=2, rows_per_band=2, k=2,
+             corpus_index=path)),
+    ]:
+        with pytest.raises(FileNotFoundError, match=(
+            f"{op}: no committed format-3 index at .*format 2, .*rebuild "
+            "it with minhash_write_index or rhp_write_index$"
+        )):
+            call()
+    assert _tree(path) == before
+    assert not (tmp_path / "ckpt").exists()
+
+
 def _tree(path):
     """{relative file path: (mtime, bytes)} of every file under `path`."""
     return {
@@ -899,8 +931,9 @@ def test_centroid_layouts_maintain_from_manifest_geometry(spark, tmp_path):
     geometry argument anywhere: the writer, reader, both stats and the
     compaction policy take the key and partition column from the
     manifest the builder committed, and the appends land partitioned
-    by centroid_id like the base. A format-1 manifest (no geometry) is
-    refused by the writer, the reader and compaction; and a
+    by centroid_id like the base. A format-2 manifest (no derivation)
+    is refused by the writer, the reader and compaction, naming the
+    layout's builder; and a
     compact_index partition column that disagrees with the manifest
     raises before anything is swept or staged."""
     import json
@@ -930,17 +963,16 @@ def test_centroid_layouts_maintain_from_manifest_geometry(spark, tmp_path):
         num_subspaces=4, num_codewords=4, dim=16,
     )
 
-    def nid(df):
-        return df.withColumnRenamed("vec_id", "nid")
-
     layouts = [
-        # (index, diff, cur docs, derivation, key)
-        (f"{ivf}/assigned", diff, cur,
+        # (index, expected rows of the docs, key): both take the same
+        # vec_id-keyed diff; the IVF-PQ writer renames it to nid
+        (f"{ivf}/assigned",
          lambda d: ivf_assign_with_centroids(d, ivf_centroids), "vec_id"),
-        (f"{pq}/lists", nid(diff), nid(cur), encode, "nid"),
+        (f"{pq}/lists",
+         lambda d: encode(d.withColumnRenamed("vec_id", "nid")), "nid"),
     ]
-    for index, d, docs, fn, key in layouts:
-        assert write_index_delta(index, d, docs, fn) == 1
+    for index, fn, key in layouts:
+        assert write_index_delta(index, diff, cur) == 1
         appends = os.path.join(index, "_delta", "gen=1", "appends")
         assert {
             p.split("=")[0] for p in os.listdir(appends)
@@ -953,7 +985,7 @@ def test_centroid_layouts_maintain_from_manifest_geometry(spark, tmp_path):
                     key, F.col("centroid_id").cast("long")).collect()
             )
 
-        assert rows(read_index(spark, index)) == rows(fn(docs))
+        assert rows(read_index(spark, index)) == rows(fn(cur))
         stats = index_stats(spark, index, include_live=True)
         assert (stats["generations"], stats["live_rows"]) == (1, 48)
         assert ivf_list_stats(spark, index)["rows"] == 48
@@ -968,7 +1000,7 @@ def test_centroid_layouts_maintain_from_manifest_geometry(spark, tmp_path):
         assert _tree(index) == before
 
         assert maybe_compact(spark, index, max_generations=1) == 1
-        assert rows(read_index(spark, index)) == rows(fn(docs))
+        assert rows(read_index(spark, index)) == rows(fn(cur))
         # the compacted base is partitioned like the one it replaced
         base = os.path.join(index, _read_manifest(index)["base"])
         assert {
@@ -976,21 +1008,25 @@ def test_centroid_layouts_maintain_from_manifest_geometry(spark, tmp_path):
             if not p.startswith(("_", "."))
         } == {"centroid_id"}
 
-        # a format-1 manifest carries no geometry: refused, unchanged
+        # a format-2 manifest records no derivation: refused, unchanged
         manifest = os.path.join(index, "_manifest.json")
         m = _read_manifest(index)
         old = {k: v for k, v in m.items()
-               if k not in ("key", "partition_col")}
-        old["format"] = 1
+               if k not in ("kind", "id_col", "payload_col", "derivation")}
+        old["format"] = 2
         with open(manifest, "w") as f:
             json.dump(old, f)
+        builder = "ivf_pq_write_index" if key == "nid" else "ivf_write_index"
         for op, call in [
-            ("write_index_delta", lambda: write_index_delta(index, d, docs, fn)),
+            ("write_index_delta", lambda: write_index_delta(index, diff, cur)),
             ("read_index", lambda: read_index(spark, index)),
             ("compact_index", lambda: compact_index(spark, index)),
         ]:
-            with pytest.raises(FileNotFoundError,
-                               match=f"{op}: no committed index.*format-2"):
+            with pytest.raises(
+                FileNotFoundError,
+                match=f"{op}: no committed format-3 index.*format 2.*"
+                      f"rebuild it with {builder}$",
+            ):
                 call()
         assert _read_manifest(index) == old
         assert not os.path.isdir(os.path.join(index, "_delta"))
@@ -1018,7 +1054,6 @@ def test_refresh_stream_refuses_uncommitted_path_before_it_starts(
                 "doc_id long, change_type string, text string"
             ).json(str(src)),
             str(tmp_path / "never_built"),
-            _mh_band_fn(),
             checkpoint_dir=str(ckpt),
         )
     assert not ckpt.exists()
@@ -1041,7 +1076,7 @@ def test_compact_index_survives_fully_tombstoned_fold(spark, tmp_path):
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     # remove EVERY doc
     write_index_delta(
-        path, snapshot_diff(prev, empty, "doc_id", ["text"]), empty, band_fn
+        path, snapshot_diff(prev, empty, "doc_id", ["text"]), empty
     )
     assert compact_index(spark, path) == 1
     folded = read_index(spark, path)
@@ -1049,7 +1084,7 @@ def test_compact_index_survives_fully_tombstoned_fold(spark, tmp_path):
     assert set(folded.columns) == {"doc_id", "band", "bucket"}
     # still maintainable: re-grow from the empty base
     grown = write_index_delta(
-        path, snapshot_diff(empty, prev, "doc_id", ["text"]), prev, band_fn
+        path, snapshot_diff(empty, prev, "doc_id", ["text"]), prev
     )
     assert grown == 1
     assert _rows(read_index(spark, path)) == _rows(band_fn(prev))
@@ -1073,7 +1108,7 @@ def test_compact_crash_windows_are_manifest_visibility(spark, tmp_path):
     def build(path):
         minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
         write_index_delta(
-            path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+            path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
         )
 
     # crash point 1: staging fully written, manifest NOT yet flipped —
@@ -1145,7 +1180,7 @@ def test_concurrent_writer_detected_not_silently_lost(spark, tmp_path):
     path = str(tmp_path / "idx")
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
 
     # (a) sneak a concurrent generation commit in between compaction's
@@ -1155,7 +1190,7 @@ def test_concurrent_writer_detected_not_silently_lost(spark, tmp_path):
     def stage_then_race(folded, staging, partition_col):
         real_stage(folded, staging, partition_col)
         write_index_delta(
-            path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt, band_fn
+            path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt
         )
 
     with mock.patch.object(
@@ -1177,7 +1212,7 @@ def test_concurrent_writer_detected_not_silently_lost(spark, tmp_path):
     minhash_write_index(prev, p2, num_bands=2, rows_per_band=2, k=2)
     stale_m = im._read_manifest(p2)  # next_gen == 1
     write_index_delta(
-        p2, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        p2, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )  # the concurrent writer takes slot 1
     staged = os.path.join(p2, "_delta", "gen=1-loser")
     os.makedirs(staged, exist_ok=True)
@@ -1213,7 +1248,7 @@ def test_commit_aba_across_compaction_detected(spark, tmp_path):
     # one commit + one compaction so the stale read starts from a
     # compacted state (base already off the root)
     write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
     s1 = seq()
     compact_index(spark, path)
@@ -1229,7 +1264,7 @@ def test_commit_aba_across_compaction_detected(spark, tmp_path):
         DOCS_SCHEMA,
     )
     write_index_delta(
-        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt, band_fn
+        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt
     )
     compact_index(spark, path)
     now = im._read_manifest(path)
@@ -1270,7 +1305,7 @@ def test_vanished_manifest_at_commit_aborts(spark, tmp_path):
     # (a) generation commit, manifest deleted after staging
     p1 = str(tmp_path / "idx1")
     minhash_write_index(prev, p1, num_bands=2, rows_per_band=2, k=2)
-    write_index_delta(p1, diff, cur, band_fn)
+    write_index_delta(p1, diff, cur)
     m = im._read_manifest(p1)
     gen_rel, staged = stage(p1, 2)
     os.remove(os.path.join(p1, "_manifest.json"))
@@ -1294,7 +1329,7 @@ def test_vanished_manifest_at_commit_aborts(spark, tmp_path):
     # (c) compaction, manifest deleted after the folded base is staged
     p3 = str(tmp_path / "idx3")
     minhash_write_index(prev, p3, num_bands=2, rows_per_band=2, k=2)
-    write_index_delta(p3, diff, cur, band_fn)
+    write_index_delta(p3, diff, cur)
     real_stage = im._stage_compacted_base
 
     def stage_then_vanish(folded, staging, partition_col):
@@ -1412,7 +1447,7 @@ def test_index_stats_tracks_generations_and_compaction(spark, tmp_path):
     assert s0["read_amplification"] == 1.0
 
     diff = snapshot_diff(prev, cur, "doc_id", ["text"])
-    write_index_delta(path, diff, cur, band_fn)
+    write_index_delta(path, diff, cur)
     # strand an unreferenced gen=2 next to the committed one
     os.makedirs(os.path.join(path, "_delta", "gen=2", "tombstones"),
                 exist_ok=True)
@@ -1457,7 +1492,7 @@ def test_index_stats_empty_index_amplification_is_finite(spark, tmp_path):
     path = str(tmp_path / "idx")
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     write_index_delta(
-        path, snapshot_diff(prev, empty, "doc_id", ["text"]), empty, band_fn
+        path, snapshot_diff(prev, empty, "doc_id", ["text"]), empty
     )
     s_anom = index_stats(spark, path, include_live=True)
     assert s_anom["live_rows"] == 0
@@ -1521,7 +1556,6 @@ def test_maybe_compact_policy_fires_exactly_at_thresholds(spark, tmp_path):
             "doc_id long, change_type string, text string"
         ).option("maxFilesPerTrigger", 1).json(str(src)),
         path,
-        band_fn,
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_generations=2,
     )
@@ -1539,7 +1573,7 @@ def test_maybe_compact_policy_fires_exactly_at_thresholds(spark, tmp_path):
         [(7, "added", "one more doc")],
         "doc_id long, change_type string, text string",
     )
-    write_index_delta(path, b3, b3, band_fn)
+    write_index_delta(path, b3, b3)
     assert maybe_compact(spark, path, max_generations=2) == 0  # 1 < 2
     assert maybe_compact(spark, path, max_generations=1) == 1
 
@@ -1560,7 +1594,6 @@ def test_maybe_compact_policy_fires_exactly_at_thresholds(spark, tmp_path):
         path,
         snapshot_diff(cur_after, empty, "doc_id", ["text"]),
         empty,
-        band_fn,
     )
     assert maybe_compact(spark, path, max_read_amplification=2.0) == 1
     assert index_stats(spark, path, include_live=True)[
@@ -1586,7 +1619,7 @@ def test_gc_spares_live_staging_slot_and_sweeps_the_rest(spark, tmp_path):
     path = str(tmp_path / "idx")
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
     compact_index(spark, path)  # manifest now: no gens, next_gen=1
     # plant possibly-live staging (slot 1) + clearly dead residue
@@ -1604,7 +1637,7 @@ def test_gc_spares_live_staging_slot_and_sweeps_the_rest(spark, tmp_path):
         DOCS_SCHEMA,
     )
     assert write_index_delta(
-        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt, band_fn
+        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt
     ) == 1
     assert _rows(read_index(spark, path)) == _rows(band_fn(nxt))
 
@@ -1637,7 +1670,7 @@ def test_compact_index_folds_generations_and_resets(spark, tmp_path):
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     assert compact_index(spark, path) == 0  # nothing to fold: untouched
     write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
     # strand an uncommitted gen=2 (tombstones dir without _SUCCESS)
     gen2 = os.path.join(path, "_delta", "gen=2")
@@ -1648,7 +1681,7 @@ def test_compact_index_folds_generations_and_resets(spark, tmp_path):
     assert _rows(read_index(spark, path)) == _rows(band_fn(cur))
     # the counter reset: next refresh writes gen=1 against the new base
     g = write_index_delta(
-        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt, band_fn
+        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt
     )
     assert g == 1
     assert _rows(read_index(spark, path)) == _rows(band_fn(nxt))
@@ -1711,7 +1744,6 @@ def test_maintenance_sequence_equals_rebuild_property(
                 path,
                 snapshot_diff(prev, cur, "doc_id", ["text"]),
                 cur,
-                band_fn,
             )
             if junk_mask[i % 3]:
                 # crash residue: an unreferenced generation staged by a
@@ -1766,10 +1798,10 @@ def test_read_index_fold_plan_is_broadcast_only(spark, tmp_path):
     path = str(tmp_path / "idx")
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     write_index_delta(
-        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur, band_fn
+        path, snapshot_diff(prev, cur, "doc_id", ["text"]), cur
     )
     write_index_delta(
-        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt, band_fn
+        path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt
     )
     plan = _simple_plan(read_index(spark, path))
     assert plan.count("BroadcastHashJoin") == 3, plan
@@ -2148,27 +2180,29 @@ def test_recall_after_refresh_equals_rebuilt_layout(
 def test_ivf_pq_refresh_stream_logs_drift_per_generation(
     spark, sf_dir, tmp_path
 ):
-    """The drift-AWARE streaming refresh (`ivf_pq_refresh_from_change_
-    stream`): the generic loop with a bare encode band_fn maintains
-    the same bytes but appends NO drift records — this wrapper routes
-    every micro-batch through `ivf_pq_write_index_delta`, so a streamed
-    refresh is sidecar-validated AND drift-logged exactly like the
-    batch apply-diff path. Proofs: (1) two micro-batches land two
+    """A streamed IVF-PQ refresh goes through the ONE refresh loop
+    every index family uses, addressed at the layout's lists, and is
+    drift-logged exactly like the batch apply-diff path: the lists'
+    manifest names the layout's `_params.json`, so the loop's writer
+    re-encodes against the frozen artifacts and appends each
+    generation's drift record. Proofs: (1) two micro-batches land two
     generations whose folded lists equal a fresh encode of the final
     snapshot; (2) the drift log carries one change-sized record per
     generation (the signal `maybe_retrain`'s cheap path reads);
     (3) probe-over-streamed equals probe-over-rebuilt; (4) the
-    compaction policy composes against the lists subdir with the
-    layout's geometry and the drift log survives it (compaction does
-    not change the quantizer, so the log stays meaningful)."""
+    compaction policy composes against the lists and the drift log
+    survives it (compaction does not change the quantizer, so the log
+    stays meaningful). Parquet change files, not JSON: the payload is
+    float vectors, and a lossy text round-trip would perturb the codes
+    both sides must agree on."""
     import shutil
 
     from pyspark.sql import functions as F
 
     from github_event_etl_spark.operators.index_maintenance import (
         _read_drift_log,
-        ivf_pq_refresh_from_change_stream,
         maybe_compact,
+        refresh_index_from_change_stream,
     )
     from github_event_etl_spark.operators.similarity import (
         ann_ivf_pq_partitioned,
@@ -2232,9 +2266,8 @@ def test_ivf_pq_refresh_stream_logs_drift_per_generation(
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    ivf_pq_refresh_from_change_stream(
-        stream, layout, checkpoint_dir=str(tmp_path / "ckpt"),
-        id_col="nid",
+    refresh_index_from_change_stream(
+        stream, f"{layout}/lists", checkpoint_dir=str(tmp_path / "ckpt"),
     )
     assert len(_committed_generations(f"{layout}/lists")) == 2
 
@@ -2286,7 +2319,8 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
     """ADVICE r20: every reader of a NON-default-geometry IVF-PQ layout
     takes num_subspaces/num_codewords/dim from its _params.json
     sidecar — the stream refresh, the batch delta, and both partitioned
-    probes take no geometry arguments — and the maintained layout then
+    probes take no geometry or column arguments — and the maintained
+    layout then
     answers exactly as the in-memory `ann_ivf_pq` over the current
     corpus. The changed ids avoid the md5 seed ids, so the in-memory
     quantizer equals the layout's frozen one. A layout without a
@@ -2297,8 +2331,8 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from github_event_etl_spark.operators.index_maintenance import (
-        ivf_pq_refresh_from_change_stream,
         ivf_pq_write_index_delta,
+        refresh_index_from_change_stream,
     )
     from github_event_etl_spark.operators.similarity import (
         ann_ivf_pq,
@@ -2341,9 +2375,8 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
         .parquet(str(src))
     )
     # no geometry args: must come from the sidecar, not the defaults
-    ivf_pq_refresh_from_change_stream(
-        stream, layout, checkpoint_dir=str(tmp_path / "ckpt32"),
-        id_col="nid",
+    refresh_index_from_change_stream(
+        stream, f"{layout}/lists", checkpoint_dir=str(tmp_path / "ckpt32"),
     )
     assert len(_committed_generations(f"{layout}/lists")) == 1
 
@@ -2364,9 +2397,7 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
         ).otherwise(F.col("embedding")).alias("embedding"),
     ).localCheckpoint()
     diff = snapshot_diff(cur, cur2, "nid", ["embedding"]).localCheckpoint()
-    assert ivf_pq_write_index_delta(
-        spark, layout, diff, cur2, id_col="nid"
-    ) == 2
+    assert ivf_pq_write_index_delta(spark, layout, diff, cur2) == 2
 
     geo = dict(num_centroids=4, num_subspaces=subs, num_codewords=cw,
                dim=dim, id_col="nid")
@@ -2387,10 +2418,10 @@ def test_ivf_pq_refresh_defaults_geometry_from_sidecar(spark, tmp_path):
     # no sidecar, no geometry: refused before any generation is written
     os.remove(os.path.join(layout, "_params.json"))
     with pytest.raises(ValueError, match="no _params.json"):
-        ivf_pq_write_index_delta(spark, layout, diff, cur2, id_col="nid")
+        ivf_pq_write_index_delta(spark, layout, diff, cur2)
     with pytest.raises(ValueError, match="no _params.json"):
-        ivf_pq_refresh_from_change_stream(
-            stream, layout, checkpoint_dir=str(tmp_path / "ckpt32b"),
-            id_col="nid",
+        refresh_index_from_change_stream(
+            stream, f"{layout}/lists",
+            checkpoint_dir=str(tmp_path / "ckpt32b"),
         )
     assert len(_committed_generations(f"{layout}/lists")) == 2

@@ -2749,7 +2749,7 @@ def test_dedup_semantic_cap_mirror_binds_identically(spark, sf_dir):
 
 def test_incremental_indexed_equals_in_memory(spark, sf_dir):
     """The indexed classify (pre-materialized band index,
-    `minhash_write_index` → `corpus_banded=`) must return EXACTLY the
+    `minhash_write_index` → `corpus_index=`) must return EXACTLY the
     in-memory twin's answer — same fixture, same skeleton, the index
     only replaces where the corpus banding comes from. Frame-level
     set equality over every column pins it directly (the shared

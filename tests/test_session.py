@@ -46,21 +46,88 @@ def test_warm_pipelines_compile_nothing(spark, sf_dir):
 
 
 def test_context_checkpoint_dir_makes_incremental_e2e_cuts_reliable(
-    spark, sf_dir, context_checkpoint_dir
+    spark, sf_dir, context_checkpoint_dir, monkeypatch
 ):
     """`session.materialize` is the one lineage-cut rule: once a
     deployment sets a checkpoint dir on the SparkContext, every eager
     cut of the incremental waterfall is a reliable checkpoint under it
     (three stage verdicts plus the MinHash and semantic stages' batch
-    band keys), and the report equals a run with no dir."""
-    from github_event_etl_spark.plans.pipelines import incremental_e2e_pipeline
+    band keys), and the report equals a run with no dir. The test holds
+    every cut frame, so the context cleaner cannot remove a dir before
+    it is counted."""
+    from github_event_etl_spark.operators import text_dedup
+    from github_event_etl_spark.plans import pipelines
+    from github_event_etl_spark.session import materialize
 
-    local = incremental_e2e_pipeline(spark, sf_dir).collect()
+    cuts = []
+
+    def holding(df):
+        cuts.append(materialize(df))
+        return cuts[-1]
+
+    for module in (pipelines, text_dedup):
+        monkeypatch.setattr(module, "materialize", holding)
+
+    local = pipelines.incremental_e2e_pipeline(spark, sf_dir).collect()
     assert not context_checkpoint_dir.exists()
 
+    cuts.clear()
     spark.sparkContext.setCheckpointDir(str(context_checkpoint_dir))
-    reliable = incremental_e2e_pipeline(spark, sf_dir).collect()
+    reliable = pipelines.incremental_e2e_pipeline(spark, sf_dir).collect()
     assert reliable == local and len(local) > 0
     rdd_dirs = list(context_checkpoint_dir.glob("*/rdd-*"))
-    assert len(rdd_dirs) == 5, rdd_dirs
+    assert len(rdd_dirs) == len(cuts) == 5, rdd_dirs
     assert all(any(d.glob("part-*")) for d in rdd_dirs)
+
+
+def test_reliable_cuts_are_cleaned_once_no_frame_reads_them(
+    spark, sf_dir, context_checkpoint_dir
+):
+    """`get_spark` sets `spark.cleaner.referenceTracking.cleanCheckpoints`,
+    so a reliable cut's `rdd-*` dir lives as long as a frame reads it and
+    no longer. Two incremental waterfall runs under a context checkpoint
+    dir: while the second run's report frame is held, forced driver GCs
+    (Python, then JVM) remove the first run's dirs and the second run's
+    batch-band cuts, which nothing reads once its verdicts are cut; the
+    three verdict dirs the held frame reads stay, and its rows do not
+    change. Once that frame is dropped too, every dir goes. Without the
+    conf every dir stays for the life of the context."""
+    import gc
+    import time
+
+    from github_event_etl_spark.plans.pipelines import incremental_e2e_pipeline
+
+    sc = spark.sparkContext
+    assert sc.getConf().get(
+        "spark.cleaner.referenceTracking.cleanCheckpoints"
+    ) == "true"
+    sc.setCheckpointDir(str(context_checkpoint_dir))
+
+    def dirs():
+        return {d.name for d in context_checkpoint_dir.glob("*/rdd-*")}
+
+    def collect_until(done, seconds=60):
+        deadline = time.monotonic() + seconds
+        while not done() and time.monotonic() < deadline:
+            gc.collect()
+            spark._jvm.System.gc()
+            time.sleep(0.5)
+
+    first = incremental_e2e_pipeline(spark, sf_dir)
+    rows = sorted(first.collect())
+    first_dirs = dirs()
+    held = incremental_e2e_pipeline(spark, sf_dir)
+    assert sorted(held.collect()) == rows and rows
+    held_dirs = dirs() - first_dirs
+    assert first_dirs and held_dirs
+
+    del first
+    collect_until(lambda: not dirs() & first_dirs and len(dirs()) == 3)
+    kept = dirs()
+    assert len(kept) == 3 and kept <= held_dirs, (kept, held_dirs)
+    assert sorted(held.collect()) == rows
+    assert dirs() == kept
+
+    del held
+    collect_until(lambda: not dirs())
+    assert not dirs()
