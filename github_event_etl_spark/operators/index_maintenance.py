@@ -19,38 +19,33 @@ or encoding pass per refresh and O(changes) work: the derivation is
 the dominant index CPU, and a daily crawl typically touches well
 under 1% of the corpus.
 
-Two layers:
-
-- `apply_index_diff` — the pure DataFrame shape, for a caller that
-  holds the derivation itself (`band_fn`): drop the stale rows
-  (removed + changed docs) with a broadcast anti-join, derive ONLY the
-  upserted docs (added + changed, broadcast semi-filter before the
-  derivation ever sees a row), union. The derivation CPU and both join
-  builds are change-sized; the index side is a column-pruned narrow
-  scan that never shuffles.
-- `write_index_delta` / `read_index` — the physical merge-on-read
-  layout of a builder-committed index, which describes itself: its
-  manifest records how the index was derived (`kind`, the source
-  columns, the derivation parameters), so the writer rebuilds the
-  derivation from there (`_derivation`) and no caller restates it.
-  Each refresh appends one generation under `<index>/_delta/` holding
-  a change-sized tombstone set and change-sized appends, and the
-  reader folds committed generations over the base. The base
-  partitions are never rewritten — the bytes written per refresh are
-  change-sized. This is the engine shape lakehouse formats (delete
-  vectors + appended files, periodic compaction) execute underneath.
-  `refresh_index_from_change_stream` is the one continuous loop over
-  it, for every family. Single-writer per index is the standing
-  contract (the same as the scratch materialize-once layouts), and a
-  violation is DETECTED (best-effort): every commit re-validates the
-  manifest's FULL commit identity (`_manifest_drift`: base,
-  generation list, the counters, the monotone `commit_seq` that makes
-  even a commit-then-compaction ABA interleave visible, and the
-  `build_id` that makes a builder rebuild visible) and aborts instead
-  of silently losing a concurrent generation. The revalidate-then-
-  replace is not a CAS, so a commit landing inside that window can
-  still be lost — the single-writer contract is the guarantee;
-  detection is the tripwire for violating it.
+Every index describes itself: its manifest records how it was derived
+(`kind`, the source columns, the derivation parameters), so each entry
+point rebuilds the derivation from there (`_derivation`) and no caller
+restates it. A refresh is one GENERATION (`_generation`): a
+change-sized tombstone set (every diff key) and change-sized appends
+(the derivation over ONLY the upserted docs, broadcast-semi-filtered
+before the derivation sees a row). `write_index_delta` commits it
+under `<index>/_delta/`, and every reader folds the committed
+generations over the base with one step (`_fold_generations`: a
+broadcast anti-join + a union per generation); `apply_index_diff`
+folds the same generation without writing it, so the catalog's value
+oracles check the very code the refresh loop runs. The base partitions
+are never rewritten — the bytes written per refresh are change-sized.
+This is the engine shape lakehouse formats (delete vectors + appended
+files, periodic compaction) execute underneath.
+`refresh_index_from_change_stream` is the one continuous loop over it,
+for every family. Single-writer per index is the standing contract
+(the same as the scratch materialize-once layouts), and a violation is
+DETECTED (best-effort): every commit re-validates the manifest's FULL
+commit identity (`_manifest_drift`: base, generation list, the
+counters, the monotone `commit_seq` that makes even a
+commit-then-compaction ABA interleave visible, and the `build_id` that
+makes a builder rebuild visible) and aborts instead of silently losing
+a concurrent generation. The revalidate-then-replace is not a CAS, so
+a commit landing inside that window can still be lost — the
+single-writer contract is the guarantee; detection is the tripwire for
+violating it.
 
 Commit protocol — ONE atomic manifest write, the object-storage
 shape: `<index>/_manifest.json` names the committed base tree and the
@@ -64,10 +59,11 @@ the ndjson sink's commit established (sources/pysource.py
 `_NdjsonStreamWriter.commit` / `manifested_part_paths`): readers list parts
 FROM the manifest, never by directory walk, and unreferenced trees
 are garbage a later writer sweeps (manifest-anchored GC). Every
-layout is born committed: the four builders write the empty manifest
-as their last step (`_commit_base`). The manifest is the only commit
-state — a path without one is no committed index, whatever parquet
-`_SUCCESS` markers it holds. A manifest of an older format lacks the
+layout is born committed: the four builders write their base by one
+rule (`_write_base`, which keeps an empty base readable) and the empty
+manifest as their last step (`_commit_base`). The manifest is the only
+commit state — a path without one is no committed index, whatever
+parquet `_SUCCESS` markers it holds. A manifest of an older format lacks the
 derivation and is refused, naming the builder that rebuilds it. Every
 metadata commit here and in the sidecars beside it goes through one
 durable JSON write (`_atomic_write_json`).
@@ -105,73 +101,73 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Diff verdicts that invalidate a doc's existing index rows / require
-# freshly banded rows — `merge.snapshot_diff`'s change_type vocabulary.
-_STALE_TYPES = ("removed", "changed")
+# Diff verdicts whose docs need freshly derived rows —
+# `merge.snapshot_diff`'s change_type vocabulary.
 _UPSERT_TYPES = ("added", "changed")
 
 
 def apply_index_diff(
-    prev_index: DataFrame,
-    diff: DataFrame,
-    cur_docs: DataFrame,
-    band_fn: Callable[[DataFrame], DataFrame],
-    key: str = "doc_id",
+    index_path: str, diff: DataFrame, cur_docs: DataFrame
 ) -> DataFrame:
-    """Maintained band index after applying `diff`: equals
-    `band_fn(cur_docs)` whenever `prev_index` was built by the same
-    `band_fn` over the previous snapshot and `diff` is their
-    `snapshot_diff` on the column(s) the index derives from (pinned by
-    frame-equality pytest and the catalog key's oracle, which
-    recomputes the current corpus' banding from scratch).
-
-    `band_fn` maps a docs frame to index rows carrying `prev_index`'s
-    columns — pass the SAME derivation the index was written with
-    (`_band_keys` over `minhash_band_buckets_vec` for the MinHash
-    index, the `rhp_write_index` projection for the RHP one — both the
-    (key, band, bucket) schema — or `ivf_assign_with_centroids`
-    against the frozen centroid table for the IVF (key, centroid_id)
-    assignment index; the union takes its column list from
-    `prev_index`, so any keyed index shape maintains through here).
+    """The index `read_index(index_path)` would return after
+    `write_index_delta(index_path, diff, cur_docs)`, without writing
+    anything: the committed state with the same generation
+    (`_generation`) folded over it by the same step
+    (`_fold_generations`). Same arguments as `write_index_delta`:
+    `diff` is the `merge.snapshot_diff` of the corpus the index was
+    built from, in the builder's source columns, and `cur_docs` the
+    current snapshot; the derivation comes from the manifest. Equals a
+    fresh build over `cur_docs` (pinned per family in pytest, and by
+    the catalog keys' oracles, which recompute the current snapshot's
+    index from scratch). A centroid column that partition discovery
+    read narrower than the derivation writes it comes back widened by
+    the union; the rows are the same.
 
     Scale shape: the change set is broadcast to BOTH sides — a
-    broadcast LEFT ANTI join drops the stale docs' rows from the index
+    broadcast LEFT ANTI join drops every diff key's rows from the index
     scan (no shuffle of the corpus-sized index), and a broadcast LEFT
     SEMI join narrows `cur_docs` to the upserted docs BEFORE the
-    banding UDF runs, so the Arrow banding pass — the cost this
-    operator exists to avoid — is change-sized, never corpus-sized.
-    Pass `diff` MATERIALIZED (the published change-log table in
-    production; `localCheckpoint` of an inline `snapshot_diff` in the
-    catalog key — it is change-sized, so materializing is trivially
-    cheap): the change set feeds two consumers here (and the verdict
-    predicates sit build-side, so the planner pushes them below each
-    broadcast exchange — the two exchanges cannot canonicalize to one
-    ReusedExchange), which would recompute an unmaterialized diff plan
-    once per consumer. Plan-gated: broadcast joins only, one
+    derivation runs, so the Arrow pass — the cost this operator exists
+    to avoid — is change-sized, never corpus-sized. Pass `diff`
+    MATERIALIZED (the published change-log table in production;
+    `localCheckpoint` of an inline `snapshot_diff` in the catalog keys
+    — it is change-sized, so materializing is trivially cheap): the
+    change set feeds two consumers, which would each recompute an
+    unmaterialized diff plan. Plan-gated: broadcast joins only, one
     ArrowEvalPython stage, no cartesian product, no sort-merge join.
     """
-    stale = diff.filter(F.col("change_type").isin(*_STALE_TYPES)).select(
-        F.col(key)
+    op = "apply_index_diff"
+    m = _require_manifest(index_path, op)
+    tombstones, _, appends = _generation(index_path, m, diff, cur_docs, op)
+    return _fold_generations(
+        _read_base(cur_docs.sparkSession, index_path, m), index_path, m,
+        (tombstones, appends),
     )
-    kept = prev_index.join(F.broadcast(stale), key, "left_anti")
-    fresh = band_fn(_upsert_docs(cur_docs, diff, key))
-    # schema-generic: the index's columns come from `prev_index`, so the
-    # same operator maintains the (key, band, bucket) band indexes AND
-    # differently-shaped ones like the IVF (key, centroid_id) assignment
-    return kept.unionByName(fresh.select(*prev_index.columns))
 
 
-def _upsert_docs(cur_docs: DataFrame, diff: DataFrame, key: str) -> DataFrame:
-    """The change-sized doc set the derivation (banding / assignment)
-    must re-run on: `cur_docs` broadcast-semi-filtered to the diff's
-    added/changed keys. ONE implementation for the logical
-    (`apply_index_diff`) and physical (`write_index_delta`) layers —
-    the semi-filter is the guard that keeps the derivation CPU
-    change-sized, so the two paths must never drift apart."""
-    upserts = diff.filter(F.col("change_type").isin(*_UPSERT_TYPES)).select(
-        F.col(key)
+def _generation(
+    index_path: str, m: dict, diff: DataFrame, cur_docs: DataFrame, op: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """One refresh generation of the index manifest `m` describes —
+    what `write_index_delta` commits and `apply_index_diff` folds — as
+    (tombstones, upserts, appends). Tombstones: EVERY diff key,
+    renamed from the source `id_col` to the index `key` (why every
+    key, not only removed/changed: `write_index_delta`'s docstring).
+    Upserts: `cur_docs` broadcast-semi-filtered to the diff's
+    added/changed keys — the guard that keeps the derivation CPU
+    change-sized. Appends: the manifest's derivation over the upserts.
+    A derivation that cannot be rebuilt fails under `op` before
+    anything is written."""
+    id_col = m["id_col"]
+    changed = diff.filter(F.col("change_type").isin(*_UPSERT_TYPES))
+    upserts = cur_docs.join(
+        F.broadcast(changed.select(id_col)), id_col, "left_semi"
     )
-    return cur_docs.join(F.broadcast(upserts), key, "left_semi")
+    return (
+        diff.select(F.col(id_col).alias(m["key"])),
+        upserts,
+        _derivation(index_path, m, op)(upserts),
+    )
 
 
 _MANIFEST = "_manifest.json"
@@ -251,15 +247,31 @@ def _commit_base(index_path: str, layout: dict) -> None:
     )
 
 
+def _write_base(
+    rows: DataFrame, path: str, partition_col: str, mode: str = "overwrite"
+) -> None:
+    """The one rule every index base is written by — the four builders
+    and compaction: partitioned by `partition_col`, except that an
+    EMPTY frame writes one unpartitioned zero-row parquet file. A
+    partitioned write of zero rows emits no data file at all, and a
+    base without one is schema-less, so `read_index` and
+    `write_index_delta` could never read it; the zero-row file's
+    footer carries the full schema (the partition column as an
+    ordinary column), keeping an empty index readable and
+    maintainable."""
+    if rows.isEmpty():
+        rows.write.mode(mode).parquet(path)
+    else:
+        rows.write.mode(mode).partitionBy(partition_col).parquet(path)
+
+
 def _build_index(corpus: DataFrame, path: str, layout: dict) -> None:
     """Build a one-table index (the MinHash and RHP band indexes):
     every corpus row through `_derivation` — the same function each
-    later generation's appends come from — written partitioned like
-    `layout` says, then committed."""
-    derive = _derivation(corpus.sparkSession, path, layout, "build")
-    derive(corpus).write.mode("overwrite").partitionBy(
-        layout["partition_col"]
-    ).parquet(path)
+    later generation's appends come from — written by `_write_base`,
+    then committed."""
+    derive = _derivation(path, layout, "build")
+    _write_base(derive(corpus), path, layout["partition_col"])
     _commit_base(path, layout)
 
 
@@ -336,7 +348,7 @@ def _pq_layout(index_path: str, m: dict, op: str) -> tuple[str, dict]:
 
 
 def _derivation(
-    spark: SparkSession, index_path: str, m: dict, op: str
+    index_path: str, m: dict, op: str
 ) -> Callable[[DataFrame], DataFrame]:
     """The index's derivation, rebuilt from its manifest `m`: a function
     from a docs frame carrying the builder's source columns (`id_col`,
@@ -365,20 +377,20 @@ def _derivation(
     from .similarity import ivf_assign_with_centroids, ivf_pq_encode_fn
 
     if kind == "ivf":
-        centroids = spark.read.parquet(_artifact(index_path, d["centroids"]))
         return lambda docs: ivf_assign_with_centroids(
-            docs, centroids, id_col, payload
+            docs,
+            docs.sparkSession.read.parquet(
+                _artifact(index_path, d["centroids"])
+            ),
+            id_col, payload,
         )
     layout, params = _pq_layout(index_path, m, op)
-    encode = ivf_pq_encode_fn(
-        spark.read.parquet(os.path.join(layout, "centroids")),
-        spark.read.parquet(os.path.join(layout, "codebook")),
+    return lambda docs: ivf_pq_encode_fn(
+        docs.sparkSession.read.parquet(os.path.join(layout, "centroids")),
+        docs.sparkSession.read.parquet(os.path.join(layout, "codebook")),
         params["num_subspaces"], params["num_codewords"], params["dim"],
         payload,
-    )
-    return lambda docs: encode(
-        docs.select(F.col(id_col).alias("nid"), payload)
-    )
+    )(docs.select(F.col(id_col).alias("nid"), payload))
 
 
 def _require_derivation(
@@ -484,9 +496,10 @@ def write_index_delta(
     the call fails loudly — the single-writer contract is enforced,
     not just documented.
 
-    Tombstones are written for EVERY diff key — changed docs (their
-    appends carry the re-derived rows), removed docs, and added docs
-    too. For an added key the tombstone is a no-op on first delivery
+    Both trees are the one `_generation` that `apply_index_diff` folds
+    without writing. Tombstones are written for EVERY diff key —
+    changed docs (their appends carry the re-derived rows), removed
+    docs, and added docs too. For an added key the tombstone is a no-op on first delivery
     (nothing to drop yet), but it is what makes re-applying the SAME
     diff idempotent: an at-least-once redelivery (foreachBatch's
     contract in `refresh_index_from_change_stream`) appends a twin
@@ -494,9 +507,9 @@ def write_index_delta(
     re-appending identical ones — tombstoning only removed/changed
     would let a redelivered 'added' key's rows duplicate. A reader
     folds each generation as one anti-join + one union with no per-row
-    reconciliation. As with `apply_index_diff`, pass `diff`
-    materialized: the two component writes are separate jobs, each of
-    which would otherwise recompute an unmaterialized diff plan.
+    reconciliation. Pass `diff` materialized: the two component writes
+    are separate jobs, each of which would otherwise recompute an
+    unmaterialized diff plan.
 
     An IVF-PQ generation then appends its drift record (the re-encoded
     vectors' reconstruction error against the frozen codebook; n=0 for
@@ -507,9 +520,12 @@ def write_index_delta(
     """
     import shutil
 
-    m = _require_manifest(index_path, "write_index_delta")
-    spark, id_col, n = cur_docs.sparkSession, m["id_col"], m["next_gen"]
-    derive = _derivation(spark, index_path, m, "write_index_delta")
+    op = "write_index_delta"
+    m = _require_manifest(index_path, op)
+    spark, n = cur_docs.sparkSession, m["next_gen"]
+    tombstones, upserts, appends = _generation(
+        index_path, m, diff, cur_docs, op
+    )
     gen_rel = os.path.join("_delta", f"gen={n}")
     base = os.path.join(index_path, gen_rel)
     # retry safety: a writer that died mid-generation left gen=N
@@ -519,25 +535,22 @@ def write_index_delta(
     # committed gen=N is in the manifest, so next_gen points past it.
     if os.path.isdir(base):
         shutil.rmtree(base)
-    upserts = _upsert_docs(cur_docs, diff, id_col)
-    columns = _read_base(spark, index_path, m).columns
-    derive(upserts).select(*columns).write.mode(
-        "errorifexists"
-    ).partitionBy(m["partition_col"]).parquet(os.path.join(base, "appends"))
-    # every diff key — see docstring
-    diff.select(F.col(id_col).alias(m["key"])).write.mode(
-        "errorifexists"
-    ).parquet(os.path.join(base, "tombstones"))
+    appends.write.mode("errorifexists").partitionBy(
+        m["partition_col"]
+    ).parquet(os.path.join(base, "appends"))
+    tombstones.write.mode("errorifexists").parquet(
+        os.path.join(base, "tombstones")
+    )
     _commit_generation(index_path, m, n, gen_rel, base)
     if m["kind"] == "ivf_pq":
         from .similarity import _qerr_stats
 
-        layout, params = _pq_layout(index_path, m, "write_index_delta")
+        layout, params = _pq_layout(index_path, m, op)
         codebook = spark.read.parquet(os.path.join(layout, "codebook"))
         _append_drift_entry(layout, {
             "gen": n,
             **_qerr_stats(upserts, codebook, params["num_subspaces"],
-                          params["dim"], id_col, m["payload_col"]),
+                          params["dim"], m["id_col"], m["payload_col"]),
         })
     return n
 
@@ -636,30 +649,38 @@ def read_index(spark: SparkSession, index_path: str) -> DataFrame:
     tombstone or append set, which schema inference cannot read back.
     """
     m = _require_manifest(index_path, "read_index")
-    return _fold_generations(
-        spark, _read_base(spark, index_path, m), index_path, m
-    )
+    return _fold_generations(_read_base(spark, index_path, m), index_path, m)
 
 
 def _fold_generations(
-    spark: SparkSession, base: DataFrame, index_path: str, m: dict
+    base: DataFrame,
+    index_path: str,
+    m: dict,
+    *pending: tuple[DataFrame, DataFrame],
 ) -> DataFrame:
-    """Fold the generations of ONE manifest snapshot `m` over its base
-    frame, by its key — the one fold `read_index`, `index_stats` and
-    `compact_index` share. Taking the snapshot (not re-reading the
-    manifest) lets index_stats report a CONSISTENT state: a commit
-    between two reads would otherwise make live_rows disagree with the
-    volumes counted from the earlier read."""
-    df, key = base, m["key"]
-    tomb_schema = df.select(key).schema
-    for rel in m["generations"]:
-        gen = os.path.join(index_path, rel)
-        tomb = spark.read.schema(tomb_schema).parquet(
-            os.path.join(gen, "tombstones")
+    """Fold the committed generations of ONE manifest snapshot `m`,
+    then any `pending` (tombstones, appends) generation, over its base
+    frame by its key: per generation, a broadcast anti-join of the
+    tombstones and a union of the appends. The one fold `read_index`,
+    `index_stats`, `compact_index` and `apply_index_diff` share.
+    Taking the snapshot (not re-reading the manifest) lets index_stats
+    report a CONSISTENT state: a commit between two reads would
+    otherwise make live_rows disagree with the volumes counted from
+    the earlier read."""
+    key, spark = m["key"], base.sparkSession
+    committed = [
+        (
+            spark.read.schema(base.select(key).schema).parquet(
+                os.path.join(index_path, rel, "tombstones")
+            ),
+            spark.read.schema(base.schema).parquet(
+                os.path.join(index_path, rel, "appends")
+            ),
         )
-        app = spark.read.schema(df.schema).parquet(
-            os.path.join(gen, "appends")
-        )
+        for rel in m["generations"]
+    ]
+    df = base
+    for tomb, app in committed + list(pending):
         df = df.join(F.broadcast(tomb), key, "left_anti").unionByName(
             app.select(*df.columns)
         )
@@ -737,7 +758,7 @@ def refresh_index_from_change_stream(
     m = _require_manifest(index_path, op)
     # built here only so that a derivation that cannot be rebuilt fails
     # before the stream starts; each generation rebuilds its own
-    _derivation(changes_stream.sparkSession, index_path, m, op)
+    _derivation(index_path, m, op)
     key = m["id_col"]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -858,7 +879,7 @@ def index_stats(
         # (a concurrent commit between the two reads would otherwise
         # skew read_amplification)
         live = (
-            _fold_generations(spark, base, index_path, m).count()
+            _fold_generations(base, index_path, m).count()
             if gens
             else base_rows
         )
@@ -884,30 +905,6 @@ def index_stats(
         "live_rows": live,
         "read_amplification": amp,
     }
-
-
-def _stage_compacted_base(
-    folded: DataFrame, staging: str, partition_col: str
-) -> None:
-    """Materialize the folded index COMPLETELY to its staging tree —
-    unreferenced by the manifest until the commit flips to it, so a
-    crash mid-write strands only garbage the next GC sweeps. Split out
-    so the concurrency pytest can interleave a competing commit
-    between staging and the commit check."""
-    if folded.isEmpty():
-        # a fully-tombstoned index folds to ZERO rows; a partitioned
-        # write of an empty frame emits no data files at all, and the
-        # committed base would be schema-less — permanently unreadable
-        # (the schema lived only in the superseded old base). An
-        # UNpartitioned empty write emits one zero-row parquet file
-        # whose footer carries the full schema (partition column
-        # included, as an ordinary column), keeping the empty index
-        # readable and maintainable.
-        folded.write.mode("errorifexists").parquet(staging)
-    else:
-        folded.write.mode("errorifexists").partitionBy(
-            partition_col
-        ).parquet(staging)
 
 
 def compact_index(
@@ -961,12 +958,12 @@ def compact_index(
     gens = m["generations"]
     if not gens:
         return 0
-    folded = _fold_generations(
-        spark, _read_base(spark, index_path, m), index_path, m
-    )
+    folded = _fold_generations(_read_base(spark, index_path, m), index_path, m)
     new_base_rel = os.path.join("_base", f"v{m['next_base']}")
     staging = os.path.join(index_path, new_base_rel)
-    _stage_compacted_base(folded, staging, m["partition_col"])
+    # fully staged before the commit check; unreferenced until the flip,
+    # so a crash mid-write strands only garbage the next GC sweeps
+    _write_base(folded, staging, m["partition_col"], "errorifexists")
     cur = _read_manifest(index_path) or {}  # vanished ⇒ drift
     drift = _manifest_drift(m, cur)
     if drift:

@@ -586,19 +586,10 @@ def ivf_assign(
     stops re-planning the corpus-sized TakeOrdered; values round-trip
     exactly (float32 widen/narrow of collected values is lossless)."""
     centroids = ivf_seed_centroids(corpus, num_centroids, id_col, vec_col)
-    rows = centroids.collect()
-    local = corpus.sparkSession.createDataFrame(rows, centroids.schema)
-    if not rows:
-        return ivf_assign_with_centroids(corpus, local, id_col, vec_col), local
-    # assignment delegates to the shared UDF builder so the cosine
-    # argmax + tie-break lives in exactly one place
-    assign = _ivf_assign_udf(rows, centroids.schema["centroid_id"].dataType)
-    assigned = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        assign(F.col(vec_col)).alias("centroid_id"),
+    local = corpus.sparkSession.createDataFrame(
+        centroids.collect(), centroids.schema
     )
-    return assigned, local
+    return ivf_assign_with_centroids(corpus, local, id_col, vec_col), local
 
 
 def ivf_seed_centroids(
@@ -671,14 +662,14 @@ def ivf_probe(
 ) -> DataFrame:
     """The IVF search shared by every index source — a freshly built
     assignment (`ann_ivf`), the on-disk partitioned layout
-    (`ann_ivf_partitioned`), or a diff-MAINTAINED index
-    (`index_maintenance.apply_index_diff` / `read_index` output, whose
-    search-equivalence to a rebuild is pinned in pytest): rank
-    centroids per query (broadcast of the tiny centroid table), keep
-    the top-`nprobe` lists, candidate-join the assigned table against
-    the broadcast probe set (partition-pruned when `assigned` is the
-    partitioned scan), exact-score within them with a deterministic
-    (sim DESC, id ASC) tie-break."""
+    (`ann_ivf_partitioned`), or a diff-MAINTAINED `ivf_write_index`
+    layout (`index_maintenance.read_index` / `apply_index_diff` of its
+    `assigned` lists, whose search-equivalence to a rebuild is pinned
+    in pytest): rank centroids per query (broadcast of the tiny
+    centroid table), keep the top-`nprobe` lists, candidate-join the
+    assigned table against the broadcast probe set (partition-pruned
+    when `assigned` is the partitioned scan), exact-score within them
+    with a deterministic (sim DESC, id ASC) tie-break."""
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("q_vec"))
     probes = _nearest_centroids(q, centroids, nprobe).select(
         "qid", "q_vec", "centroid_id"
@@ -1096,7 +1087,8 @@ def ivf_pq_encode_fn(
 
     Scale shape: everything is change-sized — the docs frame arriving
     here has already been broadcast-semi-filtered to the diff's
-    upserted keys (`_upsert_docs`), and both model tables broadcast —
+    upserted keys (`index_maintenance._generation`), and both model
+    tables are collected to the driver —
     so a daily refresh costs O(changes) assignment+encoding CPU, never
     the O(corpus) rebuild pass `ivf_pq_write_index` runs."""
 
@@ -1263,13 +1255,14 @@ def ivf_pq_write_index(
     `ann_ivf_pq` docstring promises for a billion-vector deployment:
     packed-code inverted lists (nid, pq_code) written PARTITIONED BY
     centroid_id (one directory per list, each row ~64× smaller than
-    its float vector), with the tiny centroid and codebook tables
-    beside them. Building it is one broadcast-joined pass over the
-    corpus (assignment + codes are both map-side against broadcast
-    tables; the one corpus-sized equi-join is the code attach) run per
-    corpus SNAPSHOT, not per query; the probe below then reads
-    nprobe/C of the lists and never touches an embedding until the
-    refine fetch. All md5-seeded — rebuilding from the same corpus
+    its float vector; `index_maintenance._write_base`, so an empty
+    corpus still commits a readable base), with the tiny centroid and
+    codebook tables beside them. Building it is one fused Arrow map
+    pass over the corpus (assignment + codes against the
+    driver-collected model tables — no join, no exchange;
+    `_ivf_pq_build_tables`) run per corpus SNAPSHOT, not per query;
+    the probe below then reads nprobe/C of the lists and never touches
+    an embedding until the refine fetch. All md5-seeded — rebuilding from the same corpus
     bit-reproduces the layout.
 
     The PQ geometry (subspaces, codewords, dim, centroids) is baked
@@ -1290,7 +1283,8 @@ def ivf_pq_write_index(
     probes read as such. Both
     metadata writes are durable JSON commits
     (`index_maintenance._atomic_write_json`). The three table writes
-    are one corpus pass plus two cached-table flushes: the tiny
+    are one corpus pass (after `_write_base`'s `limit(1)` emptiness
+    probe) plus two cached-table flushes: the tiny
     centroid/codebook frames are cache()'d so the lists write populates
     them and their own writes reuse the cached rows instead of
     re-scanning the corpus (Catalyst does not dedupe
@@ -1305,7 +1299,11 @@ def ivf_pq_write_index(
     cached)."""
     import contextlib
 
-    from .index_maintenance import _atomic_write_json, _commit_base
+    from .index_maintenance import (
+        _atomic_write_json,
+        _commit_base,
+        _write_base,
+    )
 
     # frozen-artifact hook (see _ivf_pq_build_tables): a REBUILD of a
     # maintained deployment passes the versioned centroid/codebook
@@ -1339,9 +1337,7 @@ def ivf_pq_write_index(
         # count is one job that also warms the cache for the writes
         if frozen_centroids:
             num_centroids = centroids.count()
-        lists.write.mode("overwrite").partitionBy("centroid_id").parquet(
-            f"{path}/lists"
-        )
+        _write_base(lists, f"{path}/lists", "centroid_id")
         centroids.write.mode("overwrite").parquet(f"{path}/centroids")
         codebook.write.mode("overwrite").parquet(f"{path}/codebook")
         train = _qerr_stats(corpus, codebook, num_subspaces, dim,
@@ -1496,24 +1492,36 @@ def ivf_write_index(
     num_centroids: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    centroids: DataFrame | None = None,
 ) -> None:
     """Materialize the IVF index as the physical layout `ivf_assign`'s
     docstring promises: the assigned corpus written PARTITIONED BY
-    centroid_id (one directory per inverted list) plus the tiny centroid
-    table beside it. At 100 TB this write is one shuffle-free pass over
-    the corpus (the assignment is a broadcast join + window) and the
-    probe path below never reads more than nprobe/C of it. The
-    assigned table's empty maintenance manifest
+    centroid_id (one directory per inverted list; `index_maintenance.
+    _write_base`, so an empty corpus still commits a readable base)
+    plus the tiny centroid table beside it. At 100 TB this write is
+    one shuffle-free pass over the corpus (the assignment is one
+    Arrow-vectorized map pass against the driver-collected centroid
+    table — no join, no exchange) and the probe path below never reads
+    more than nprobe/C of it. Pass `centroids` (centroid_id, c_vec) to
+    assign against a FROZEN coarse quantizer instead of seeding
+    `num_centroids` from `corpus` (`ivf_pq_write_index`'s frozen-
+    artifact contract; `num_centroids` is then unused). The assigned
+    table's empty maintenance manifest
     (`index_maintenance._commit_base`) is the last write, so the
     layout is born a committed index. It records the centroid table
     beside the lists as the frozen quantizer `write_index_delta`
     assigns later vectors against."""
-    from .index_maintenance import _commit_base
+    from .index_maintenance import _commit_base, _write_base
 
-    assigned, centroids = ivf_assign(corpus, num_centroids, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("centroid_id").parquet(
-        f"{path}/assigned"
-    )
+    if centroids is None:
+        assigned, centroids = ivf_assign(
+            corpus, num_centroids, id_col, vec_col
+        )
+    else:
+        assigned = ivf_assign_with_centroids(
+            corpus, centroids, id_col, vec_col
+        )
+    _write_base(assigned, f"{path}/assigned", "centroid_id")
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
     _commit_base(f"{path}/assigned", {
         "kind": "ivf", "key": id_col, "partition_col": "centroid_id",

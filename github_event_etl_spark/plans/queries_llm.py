@@ -40,8 +40,7 @@ from ..operators.similarity import (
     cosine_dup_pairs,
     cosine_dup_pairs_lsh,
     incremental_dedup_semantic,
-    ivf_assign_with_centroids,
-    ivf_pq_encode_fn,
+    ivf_pq_write_index,
     ivf_seed_centroids,
     jl_plane_rows,
     jl_projection,
@@ -79,17 +78,15 @@ from ..operators.text_analysis import (
     ws_token_count,
 )
 from ..operators.index_maintenance import (
-    _MANIFEST_FORMAT, apply_index_diff, read_index,
+    _MANIFEST_FORMAT, apply_index_diff,
 )
 from ..operators.text_dedup import (
-    _band_keys,
     _let,
     dedup_exact,
     duplicated_spans,
     incremental_dedup,
     incremental_dedup_minhash,
     jaccard_ngram,
-    minhash_band_buckets_vec,
     minhash_candidate_pairs,
     minhash_write_index,
     remove_spans,
@@ -113,7 +110,8 @@ from .catalog import query
 # or desynchronizes fixture from oracle, which the sf0.001
 # differential pytest fails loudly on the spot (ADVICE r15 item 3;
 # hand-picked constants alone silently missed the residue moduli).
-# A tree served through `read_index` also carries the manifest format.
+# A tree served as an index (`read_index`, `apply_index_diff`) also
+# carries the manifest format.
 
 # --------------------------------------------------------------------------
 # Shared SQL fragments (DuckDB dialect), kept in lockstep with the Spark
@@ -4710,10 +4708,12 @@ def llm_index_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     `llm_corpus_snapshot_diff` opens, closed: yesterday's materialized
     MinHash band index (`minhash_write_index` over the prev snapshot,
     the production per-snapshot layout) is brought up to the current
-    snapshot by applying the change log — stale rows (removed/changed
-    docs) anti-joined out, ONLY the added/changed docs re-banded —
-    never by re-banding the corpus
-    (operators/index_maintenance.py::apply_index_diff). The key
+    snapshot by applying the change log — every diff key's rows
+    anti-joined out, ONLY the added/changed docs re-banded — never by
+    re-banding the corpus (operators/index_maintenance.py::
+    apply_index_diff, which folds the one generation
+    `write_index_delta` commits, its derivation read from the index's
+    manifest). The key
     returns the maintained (doc_id, band, bucket) index; the oracle
     recomputes the current snapshot's banding from scratch, so a
     hash-match proves maintenance ≡ rebuild. The diff compares exactly
@@ -4732,9 +4732,9 @@ def llm_index_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan with no shuffle. Plan-gated in tests/test_llm.py: broadcast
     joins only, exactly one ArrowEvalPython stage, no sort-merge join.
     The physical merge-on-read twin (`write_index_delta`/`read_index`:
-    change-sized tombstone+append generations under the index, base
-    partitions never rewritten) is pinned by an end-to-end
-    frame-equality pytest against a from-scratch rebuild."""
+    the same generation committed under the index, base partitions
+    never rewritten) is pinned by frame-equality pytest against a
+    from-scratch rebuild."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
@@ -4762,21 +4762,16 @@ def llm_index_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     # lazily checkpointed: the change log feeds two maintenance
-    # consumers (anti + semi), whose build-side verdict predicates are
-    # pushed below each broadcast exchange — unmaterialized, the diff's
-    # full-outer join would execute once per consumer (see
+    # consumers (anti + semi) — unmaterialized, the diff's full-outer
+    # join would execute once per consumer (see
     # apply_index_diff's contract; production reads the PUBLISHED
     # change-log table here). Change-sized, so the checkpoint is cheap.
     diff = snapshot_diff(prev, cur, "doc_id", ["text"]).localCheckpoint(
         eager=False
     )
-    bands_vec = minhash_band_buckets_vec(_NUM_BANDS, _ROWS_PER_BAND, k=3)
-    return apply_index_diff(
-        read_index(spark, index),
-        diff,
-        cur,
-        band_fn=lambda d: _band_keys(d, bands_vec),
-    ).select("doc_id", "band", "bucket")
+    return apply_index_diff(index, diff, cur).select(
+        "doc_id", "band", "bucket"
+    )
 
 
 # IVF maintenance geometry: the frozen coarse quantizer is the same
@@ -4850,15 +4845,16 @@ def llm_ivf_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-index maintenance from an embedding snapshot diff — the
     `llm_index_apply_diff` pattern proven on the SECOND index shape the
     refresh loop must keep fresh: yesterday's materialized inverted-file
-    assignment (`ivf_assign_with_centroids` over the prev snapshot
-    against the frozen coarse quantizer, written partitioned by
-    centroid_id — the inverted-list layout) is brought up to the
-    current snapshot by applying the change log: removed/re-embedded
-    vectors anti-joined out of the lists, ONLY added/re-embedded
-    vectors re-assigned. The key returns the maintained
-    (vec_id, centroid_id) index; the oracle recomputes the current
-    snapshot's assignment from scratch, so a hash-match proves
-    maintenance ≡ rebuild. Fixture: the shared snapshot residue
+    layout (`ivf_write_index` over the prev snapshot against the frozen
+    coarse quantizer — the `assigned` lists partitioned by
+    centroid_id, the centroid table beside them) is brought up to the
+    current snapshot by applying the change log
+    (`index_maintenance.apply_index_diff`): every diff key anti-joined
+    out of the lists, ONLY added/re-embedded vectors re-assigned
+    against the centroid table the manifest records. The key returns
+    the maintained (vec_id, centroid_id) index; the oracle recomputes
+    the current snapshot's assignment from scratch, so a hash-match
+    proves maintenance ≡ rebuild. Fixture: the shared snapshot residue
     classes on vec_id — added %{_SNAP_ADDED[0]}=={_SNAP_ADDED[1]},
     removed %{_SNAP_REMOVED[0]}=={_SNAP_REMOVED[1]}; the edit class
     (%{_SNAP_EDIT[0]}=={_SNAP_EDIT[1]}) carries a NEGATED prev vector,
@@ -4873,16 +4869,14 @@ def llm_ivf_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout — re-assigning the corpus per crawl would read and shuffle
     every vector, while a daily diff touches <1%. Here the change set
     broadcasts both ways (anti-join on the index scan, semi-filter
-    before assignment), the 16-row frozen-centroid table broadcasts
-    into the assignment, and the ONLY shuffle is the change-sized
-    argmin window — the index side is a two-column scan of the
-    partitioned lists, never re-listed. Unlike the band indexes this
-    path is pure JVM end to end (cosine is codegen'd higher-order
-    arithmetic): the plan gate asserts NO Python/Arrow stage at all.
-    The physical twin (write_index_delta over a centroid-partitioned
-    base, whose manifest records the (vec_id, centroid_id) geometry:
-    change-sized tombstone+append generations under the base lists) is
-    pinned by frame-equality pytest in tests/test_index_maintenance.py."""
+    before assignment), and the re-assignment is ONE Arrow-vectorized
+    pass over the change-sized upserts against the driver-collected
+    16-row centroid table — no join, no window, no exchange; the index
+    side is a two-column scan of the partitioned lists, never
+    re-listed. The plan gate asserts exactly one ArrowEvalPython stage
+    and broadcast joins only. The physical twin (`write_index_delta`
+    committing the same generation under the lists) is pinned by
+    frame-equality pytest in tests/test_index_maintenance.py."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -4891,12 +4885,6 @@ def llm_ivf_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = ivf_seed_centroids(emb, _IVF_APPLY_CENTROIDS)
     prev = _emb_snap_prev(emb)
     cur = _emb_snap_cur(emb)
-
-    def assign(docs: DataFrame) -> DataFrame:
-        return ivf_assign_with_centroids(docs, centroids).select(
-            "vec_id", "centroid_id"
-        )
-
     # the oracle describes cur's assignment only, so the MATERIALIZED
     # prev tree's extra dependencies — the 'added' membership class
     # and the edit-class negation rule — join the spec
@@ -4908,24 +4896,17 @@ def llm_ivf_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "oracle": _IVF_APPLY_ORACLE, "snap_added": _SNAP_ADDED,
             "snap_edit": _SNAP_EDIT, "edit_rule": "negate-edit-vec",
             "schema": prev.schema.simpleString(),
+            "manifest_format": _MANIFEST_FORMAT,
         },
-        lambda p: assign(prev).write.mode("overwrite").partitionBy(
-            "centroid_id"
-        ).parquet(p),
+        lambda p: ivf_write_index(prev, p, centroids=centroids),
     )
     # change-sized and twice-consumed — same checkpoint contract as
     # the band-index key above
     diff = snapshot_diff(prev, cur, "vec_id", ["embedding"]).localCheckpoint(
         eager=False
     )
-    # partition-column discovery narrows centroid_id (small ints on
-    # disk) to INT; cast back so the union with the fresh assignment
-    # (vec_id-typed, i.e. LONG) and the oracle's BIGINT schema agree
-    prev_index = spark.read.parquet(index).select(
-        "vec_id", F.col("centroid_id").cast("long").alias("centroid_id")
-    )
-    return apply_index_diff(
-        prev_index, diff, cur, band_fn=assign, key="vec_id"
+    return apply_index_diff(f"{index}/assigned", diff, cur).select(
+        "vec_id", "centroid_id"
     )
 
 
@@ -4981,17 +4962,17 @@ def llm_ivf_pq_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ serving-list maintenance from an embedding snapshot
     diff — the THIRD index shape under the apply-diff contract, and
     the one the whole refresh stack ultimately serves: yesterday's
-    materialized packed-code inverted lists (`ivf_pq_encode_fn` over
+    materialized packed-code inverted lists (`ivf_pq_write_index` over
     the prev snapshot against the FROZEN coarse quantizer and
-    codebook, written partitioned by centroid_id — the
-    `ivf_pq_write_index` list layout) are brought to the current
-    snapshot by the change log: removed/re-embedded vectors
-    anti-joined out, ONLY added/re-embedded vectors re-ASSIGNED and
-    re-ENCODED. The key returns the maintained
-    (nid, centroid_id, pq_code) lists; the oracle re-derives the
-    current snapshot's assignment AND codes from scratch, so a
-    hash-match proves maintenance ≡ rebuild on the exact bytes a
-    probe reads. Fixture: the shared embedding snapshot residue
+    codebook — the `lists` partitioned by centroid_id) are brought to
+    the current snapshot by the change log
+    (`index_maintenance.apply_index_diff`): every diff key anti-joined
+    out, ONLY added/re-embedded vectors re-ASSIGNED and re-ENCODED
+    against the tables the layout's sidecar names. The key returns
+    the maintained (nid, centroid_id, pq_code) lists; the oracle
+    re-derives the current snapshot's assignment AND codes from
+    scratch, so a hash-match proves maintenance ≡ rebuild on the exact
+    bytes a probe reads. Fixture: the shared embedding snapshot residue
     classes (`_emb_snap_prev`/`_emb_snap_cur` — the edit class
     carries a NEGATED prev vector, so a re-embed moves BOTH its list
     membership and its packed code).
@@ -5002,18 +4983,16 @@ def llm_ivf_pq_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-assignment keys above, applied to the serving layout.
 
     Scale shape: identical economics to `llm_ivf_apply_diff` plus the
-    change-sized re-encode — the change set broadcasts both ways, the
-    16-row centroid and codeword tables broadcast into assignment and
-    encoding, and the index side is a three-column scan of the
-    partitioned lists (packed codes, ~64× smaller than vectors),
-    never re-encoded. Pure JVM end to end (cosine argmin + subspace
-    struct-min are codegen'd column arithmetic): the plan gate
-    asserts NO Python/Arrow stage. The PHYSICAL twin
-    (`index_maintenance.ivf_pq_write_index_delta`: change-sized
-    tombstone+append generations under the layout's lists, probes
-    folding them via read_index) is pinned by frame-equality pytest
-    in tests/test_index_maintenance.py; this key carries the logical
-    layer's full value oracle."""
+    change-sized re-encode — the change set broadcasts both ways,
+    assignment and encoding are ONE fused Arrow pass over the upserts
+    against the driver-collected 16-row centroid and codeword tables,
+    and the index side is a three-column scan of the partitioned lists
+    (packed codes, ~64× smaller than vectors), never re-encoded. The
+    plan gate asserts exactly one ArrowEvalPython stage. The PHYSICAL
+    twin (`index_maintenance.ivf_pq_write_index_delta`: the same
+    generation committed under the layout's lists, probes folding it
+    via read_index) is pinned by frame-equality pytest in
+    tests/test_index_maintenance.py."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -5021,15 +5000,6 @@ def llm_ivf_pq_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle's cent CTE and _pq_ctes codebook derive identically
     centroids = ivf_seed_centroids(emb, _IVF_APPLY_CENTROIDS)
     codebook = pq_codebook(emb, _PQ_CODEWORDS)
-    encode = ivf_pq_encode_fn(
-        centroids, codebook, _PQ_SUBSPACES, _PQ_CODEWORDS,
-        _PQ_SUBSPACES * _PQ_DSUB,
-    )
-
-    def nidify(df: DataFrame) -> DataFrame:
-        # the serving lists key on nid (the ivf_pq_write_index layout)
-        return df.select(F.col("vec_id").alias("nid"), "embedding")
-
     prev = _emb_snap_prev(emb)
     cur = _emb_snap_cur(emb)
     # the oracle describes cur's lists only, so the MATERIALIZED prev
@@ -5044,28 +5014,19 @@ def llm_ivf_pq_apply_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "oracle": _ivf_pq_apply_oracle(), "snap_added": _SNAP_ADDED,
             "snap_edit": _SNAP_EDIT, "edit_rule": "negate-edit-vec",
             "schema": prev.schema.simpleString(),
+            "manifest_format": _MANIFEST_FORMAT,
         },
-        lambda p: encode(nidify(prev)).write.mode("overwrite").partitionBy(
-            "centroid_id"
-        ).parquet(p),
+        lambda p: ivf_pq_write_index(
+            prev, p, num_subspaces=_PQ_SUBSPACES,
+            num_codewords=_PQ_CODEWORDS, dim=_PQ_SUBSPACES * _PQ_DSUB,
+            centroids=centroids, codebook=codebook,
+        ),
     )
     # change-sized and twice-consumed — the apply_index_diff contract
-    diff = (
-        snapshot_diff(prev, cur, "vec_id", ["embedding"])
-        .localCheckpoint(eager=False)
-        .withColumnRenamed("vec_id", "nid")
+    diff = snapshot_diff(prev, cur, "vec_id", ["embedding"]).localCheckpoint(
+        eager=False
     )
-    # partition-column discovery narrows centroid_id to INT; cast back
-    # so the union with the fresh encode (vec_id-typed LONG) and the
-    # oracle's BIGINT schema agree
-    prev_index = spark.read.parquet(index).select(
-        "nid",
-        F.col("centroid_id").cast("long").alias("centroid_id"),
-        "pq_code",
-    )
-    return apply_index_diff(
-        prev_index, diff, nidify(cur), band_fn=encode, key="nid"
-    )
+    return apply_index_diff(f"{index}/lists", diff, cur)
 
 
 # JL-projection geometry: 64 → 16 dims, ±1 planes from the shared

@@ -29,10 +29,10 @@ contract) or clear the scratch tree.
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 from typing import Callable
 
@@ -80,10 +80,11 @@ def materialize_once(
 ) -> bool:
     """Make the tree at `path` hold the content `spec` describes and
     return whether this call wrote it. The tree is committed only when
-    `<path>/_spec.json` equals `spec`; otherwise the stale spec is
-    deleted first (so a `write` that fails leaves the tree uncommitted),
-    `write(path)` rewrites the tree (it must overwrite), and `spec` is
-    committed last through `index_maintenance._atomic_write_json`."""
+    `<path>/_spec.json` equals `spec`; otherwise the stale tree is
+    deleted first (so a `write` that fails leaves the tree uncommitted,
+    and a tree of another shape leaves no file behind), `write(path)`
+    writes it afresh, and `spec` is committed last through
+    `index_maintenance._atomic_write_json`."""
     spec_path = os.path.join(path, "_spec.json")
     try:
         with open(spec_path) as f:
@@ -93,8 +94,7 @@ def materialize_once(
                 return False
     except (OSError, ValueError):
         pass
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(spec_path)
+    shutil.rmtree(path, ignore_errors=True)
     write(path)
     _atomic_write_json(spec_path, spec)
     return True

@@ -1,11 +1,12 @@
 """operators/index_maintenance.py — maintaining a materialized band
 index from a snapshot_diff change log instead of rebuilding it.
 
-Covers the pure frame layer (apply_index_diff ≡ from-scratch banding
-of the current snapshot, for BOTH index families — MinHash text and
-RHP embedding), the physical merge-on-read layer (write_index_delta /
-read_index over generations, including empty-sided and uncommitted
-generations), and the change-sized plan shape."""
+Covers the one refresh generation over builder-committed indexes of
+all four families (apply_index_diff ≡ read_index after
+write_index_delta ≡ a fresh build of the current snapshot), the
+merge-on-read layer (generations, including empty-sided and
+uncommitted ones, compaction, the streaming loop), indexes built from
+an empty corpus, and the change-sized plan shape."""
 
 import os
 
@@ -21,6 +22,13 @@ from github_event_etl_spark.operators.index_maintenance import (
     write_index_delta,
 )
 from github_event_etl_spark.operators.merge import snapshot_diff
+from github_event_etl_spark.operators.similarity import (
+    ivf_pq_write_index,
+    ivf_write_index,
+    pq_codebook,
+    rhp_signatures,
+    rhp_write_index,
+)
 from github_event_etl_spark.operators.text_dedup import (
     _band_keys,
     minhash_band_buckets_vec,
@@ -85,34 +93,71 @@ def _base_mtimes(path):
     }
 
 
-def test_apply_index_diff_equals_rebuild_minhash(spark):
+def _mh_index(corpus, path):
+    """A MinHash index committed by its builder at `_mh_band_fn`'s
+    geometry."""
+    minhash_write_index(corpus, path, num_bands=2, rows_per_band=2, k=2)
+    return path
+
+
+def test_apply_index_diff_equals_rebuild_minhash(spark, tmp_path):
     band_fn = _mh_band_fn()
     prev, cur = _prev_cur(spark)
+    path = _mh_index(prev, str(tmp_path / "idx"))
     diff = snapshot_diff(prev, cur, "doc_id", ["text"])
-    maintained = apply_index_diff(band_fn(prev), diff, cur, band_fn)
+    maintained = apply_index_diff(path, diff, cur)
     assert _rows(maintained) == _rows(band_fn(cur))
     # the diff genuinely fired every verdict (non-vacuous fixture)
     kinds = {r.change_type for r in diff.collect()}
     assert kinds == {"added", "removed", "changed"}
+    # nothing was written: the index still reads as the prev build
+    assert _committed_generations(path) == []
+    assert _rows(read_index(spark, path)) == _rows(band_fn(prev))
 
 
-def test_apply_index_diff_empty_diff_is_identity(spark):
+def test_apply_index_diff_empty_diff_is_identity(spark, tmp_path):
     band_fn = _mh_band_fn()
     prev, _ = _prev_cur(spark)
+    path = _mh_index(prev, str(tmp_path / "idx"))
     diff = snapshot_diff(prev, prev, "doc_id", ["text"])
     assert diff.count() == 0
-    maintained = apply_index_diff(band_fn(prev), diff, prev, band_fn)
+    maintained = apply_index_diff(path, diff, prev)
     assert _rows(maintained) == _rows(band_fn(prev))
 
 
-def test_apply_index_diff_equals_rebuild_rhp(spark):
-    """The operator is index-family-generic: the RHP embedding index
-    (similarity.rhp_write_index's projection) maintains through the
-    SAME apply_index_diff — only band_fn differs."""
-    from github_event_etl_spark.operators.similarity import rhp_signatures
+_RHP_GEOMETRY = {"dim": 4, "num_tables": 3, "planes_per_table": 2}
 
-    dim, tables, planes = 4, 3, 2
-    sig_fn = rhp_signatures(dim, tables, planes)
+
+def _rhp_prev_cur(spark):
+    """Hand-built vector snapshots: 1 unchanged, 2 re-embedded,
+    3 removed, 4 added."""
+    def vecs(rows):
+        return spark.createDataFrame(rows, "doc_id long, v array<double>")
+
+    prev = vecs([
+        (1, [1.0, 0.0, 0.5, -0.25]),
+        (2, [0.0, 1.0, -1.0, 2.0]),
+        (3, [-1.0, -1.0, 0.0, 0.0]),
+    ])
+    cur = vecs([
+        (1, [1.0, 0.0, 0.5, -0.25]),   # unchanged
+        (2, [9.0, -3.0, 1.0, 0.0]),    # re-embedded
+        (4, [0.25, 0.25, 0.25, 0.25]),  # added
+    ])
+    return prev, cur
+
+
+def _rhp_index(vectors, path):
+    rhp_write_index(vectors, path, id_col="doc_id", vec_col="v",
+                    **_RHP_GEOMETRY)
+    return path
+
+
+def test_apply_index_diff_equals_rebuild_rhp(spark, tmp_path):
+    """The operator is index-family-generic: an RHP embedding index
+    committed by `rhp_write_index` maintains through the SAME
+    apply_index_diff — the derivation comes from its manifest."""
+    sig_fn = rhp_signatures(**_RHP_GEOMETRY)
 
     def band_fn(d):
         return d.select(
@@ -120,22 +165,11 @@ def test_apply_index_diff_equals_rebuild_rhp(spark):
             F.posexplode(sig_fn(F.col("v"))).alias("band", "bucket"),
         )
 
-    def vecs(spark, rows):
-        return spark.createDataFrame(rows, "doc_id long, v array<double>")
-
-    prev = vecs(spark, [
-        (1, [1.0, 0.0, 0.5, -0.25]),
-        (2, [0.0, 1.0, -1.0, 2.0]),
-        (3, [-1.0, -1.0, 0.0, 0.0]),
-    ])
-    cur = vecs(spark, [
-        (1, [1.0, 0.0, 0.5, -0.25]),   # unchanged
-        (2, [9.0, -3.0, 1.0, 0.0]),    # re-embedded
-        (4, [0.25, 0.25, 0.25, 0.25]),  # added
-    ])
+    prev, cur = _rhp_prev_cur(spark)
+    path = _rhp_index(prev, str(tmp_path / "rhp"))
     # vectors diff on the embedding column itself (array eqNullSafe)
     diff = snapshot_diff(prev, cur, "doc_id", ["v"])
-    maintained = apply_index_diff(band_fn(prev), diff, cur, band_fn)
+    maintained = apply_index_diff(path, diff, cur)
     assert _rows(maintained) == _rows(band_fn(cur))
     assert {r.change_type for r in diff.collect()} == {
         "added", "removed", "changed",
@@ -240,10 +274,6 @@ def _ivf_fixture(spark):
     """Hand-built embedding snapshots + a FROZEN caller-supplied
     centroid table (the trained-quantizer contract): doc 1 unchanged,
     2 re-embedded ACROSS lists (c2 → c3), 3 removed, 4 added."""
-    from github_event_etl_spark.operators.similarity import (
-        ivf_assign_with_centroids,
-    )
-
     centroids = spark.createDataFrame(
         [(10, [1.0, 0.0]), (20, [0.0, 1.0]), (30, [-1.0, 0.0])],
         "centroid_id long, c_vec array<double>",
@@ -264,32 +294,34 @@ def _ivf_fixture(spark):
         ],
         VECS_SCHEMA,
     )
-
-    def assign_fn(d):
-        return ivf_assign_with_centroids(d, centroids).select(
-            "vec_id", "centroid_id"
-        )
-
-    return prev, cur, assign_fn
+    return prev, cur, centroids
 
 
 def _ivf_rows(df):
     return {(int(r.vec_id), int(r.centroid_id)) for r in df.collect()}
 
 
-def test_apply_index_diff_equals_rebuild_ivf(spark):
-    """Third index family through the SAME operator: the IVF
-    (vec_id, centroid_id) assignment index — apply_index_diff takes
-    its column list from prev_index, so the two-column shape maintains
-    without any band/bucket assumption. The fixture's re-embed moves
-    doc 2 across inverted lists (c2 → c3), so the anti-join really
-    evicts a list member and the re-assignment really files it
-    elsewhere."""
-    prev, cur, assign_fn = _ivf_fixture(spark)
-    diff = snapshot_diff(prev, cur, "vec_id", ["embedding"])
-    maintained = apply_index_diff(
-        assign_fn(prev), diff, cur, assign_fn, key="vec_id"
+def test_apply_index_diff_equals_rebuild_ivf(spark, tmp_path):
+    """Third index family through the SAME operator: the `assigned`
+    lists of an `ivf_write_index` layout built against a frozen
+    quantizer — apply_index_diff takes the columns and the centroid
+    table from the layout, so the list shape maintains without any
+    band/bucket assumption. The fixture's re-embed moves doc 2 across
+    inverted lists (c2 → c3), so the anti-join really evicts a list
+    member and the re-assignment really files it elsewhere."""
+    from github_event_etl_spark.operators.similarity import (
+        ivf_assign_with_centroids,
     )
+
+    prev, cur, centroids = _ivf_fixture(spark)
+
+    def assign_fn(d):
+        return ivf_assign_with_centroids(d, centroids)
+
+    layout = str(tmp_path / "ivf")
+    ivf_write_index(prev, layout, centroids=centroids)
+    diff = snapshot_diff(prev, cur, "vec_id", ["embedding"])
+    maintained = apply_index_diff(f"{layout}/assigned", diff, cur)
     assert _ivf_rows(maintained) == _ivf_rows(assign_fn(cur))
     assert {r.change_type for r in diff.collect()} == {
         "added", "removed", "changed",
@@ -298,6 +330,105 @@ def test_apply_index_diff_equals_rebuild_ivf(spark):
     prev_cid = dict(_ivf_rows(assign_fn(prev)))
     cur_cid = dict(_ivf_rows(assign_fn(cur)))
     assert prev_cid[2] != cur_cid[2], (prev_cid, cur_cid)
+
+
+_FAMILIES = ("minhash", "rhp", "ivf", "ivf_pq")
+
+
+def _family(spark, family):
+    """One index family's fixture: (build, prev, cur, id_col,
+    payload_col, sub). `build(corpus, root)` commits an index from the
+    family's builder at a fixed geometry — the IVF families against a
+    FROZEN quantizer (and codebook), so builds over different
+    snapshots share one model — and the index itself lives at
+    `root/sub`."""
+    if family == "minhash":
+        prev, cur = _prev_cur(spark)
+        return _mh_index, prev, cur, "doc_id", "text", ""
+    if family == "rhp":
+        prev, cur = _rhp_prev_cur(spark)
+        return _rhp_index, prev, cur, "doc_id", "v", ""
+    prev, cur, centroids = _ivf_fixture(spark)
+    if family == "ivf":
+        def build(corpus, root):
+            ivf_write_index(corpus, root, centroids=centroids)
+
+        return build, prev, cur, "vec_id", "embedding", "assigned"
+    codebook = pq_codebook(prev.unionByName(cur), 2)
+
+    def build(corpus, root):
+        ivf_pq_write_index(
+            corpus, root, num_subspaces=2, num_codewords=2, dim=2,
+            centroids=centroids, codebook=codebook,
+        )
+
+    return build, prev, cur, "vec_id", "embedding", "lists"
+
+
+def _index_rows(df):
+    """Order-free rows of an index frame, its columns in name order
+    (array cells as tuples, so the rows are hashable)."""
+    return {
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(*sorted(df.columns)).collect()
+    }
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_one_generation_applied_written_and_rebuilt_agree(
+    spark, tmp_path, family
+):
+    """The one refresh generation, per family: over an index committed
+    by the family's builder and a materialized `snapshot_diff`,
+    `apply_index_diff`, `read_index` after `write_index_delta` with
+    the same arguments, and a fresh build over the current snapshot
+    all hold the same rows."""
+    build, prev, cur, id_col, payload, sub = _family(spark, family)
+    root = str(tmp_path / "maintained")
+    build(prev, root)
+    path = os.path.join(root, sub)
+    diff = snapshot_diff(prev, cur, id_col, [payload]).localCheckpoint(
+        eager=True
+    )
+    assert {r.change_type for r in diff.collect()} == {
+        "added", "removed", "changed",
+    }
+    applied = _index_rows(apply_index_diff(path, diff, cur))
+    assert write_index_delta(path, diff, cur) == 1
+    written = _index_rows(read_index(spark, path))
+    fresh_root = str(tmp_path / "fresh")
+    build(cur, fresh_root)
+    fresh = _index_rows(read_index(spark, os.path.join(fresh_root, sub)))
+    assert applied == written == fresh
+    assert len(fresh) > 0
+
+
+@pytest.mark.parametrize("family", _FAMILIES)
+def test_index_built_from_empty_corpus_is_readable_and_maintainable(
+    spark, tmp_path, family
+):
+    """A builder over a zero-row corpus commits a base that carries its
+    schema (one unpartitioned zero-row file), so the index reads back
+    empty with the builder's columns, and an all-added refresh brings
+    it to a fresh build of the current snapshot."""
+    build, _, cur, id_col, payload, sub = _family(spark, family)
+    empty = cur.limit(0)
+    root = str(tmp_path / "empty")
+    build(empty, root)
+    path = os.path.join(root, sub)
+    fresh_root = str(tmp_path / "fresh")
+    build(cur, fresh_root)
+    fresh = read_index(spark, os.path.join(fresh_root, sub))
+    got = read_index(spark, path)
+    assert got.count() == 0
+    assert sorted(got.columns) == sorted(fresh.columns)
+    diff = snapshot_diff(empty, cur, id_col, [payload])
+    assert {r.change_type for r in diff.collect()} == {"added"}
+    assert _index_rows(apply_index_diff(path, diff, cur)) == (
+        _index_rows(fresh)
+    )
+    write_index_delta(path, diff, cur)
+    assert _index_rows(read_index(spark, path)) == _index_rows(fresh)
 
 
 def test_write_read_index_delta_ivf_layout(spark, tmp_path):
@@ -309,7 +440,6 @@ def test_write_read_index_delta_ivf_layout(spark, tmp_path):
     directories never rewritten."""
     from github_event_etl_spark.operators.similarity import (
         ivf_assign_with_centroids,
-        ivf_write_index,
     )
 
     prev, cur, _ = _ivf_fixture(spark)
@@ -538,11 +668,13 @@ def test_refresh_stream_skips_generation_when_batch_nets_to_nothing(
     assert _rows(read_index(spark, path)) == _rows(band_fn(prev))
 
 
-def test_probe_over_maintained_ivf_index_equals_rebuild(spark, sf_dir):
+def test_probe_over_maintained_ivf_index_equals_rebuild(
+    spark, sf_dir, tmp_path
+):
     """Maintenance preserves SEARCH, not just index rows: an
-    `ivf_probe` over the diff-MAINTAINED full-column inverted lists
-    (vec_id, embedding, centroid_id — the serving layout
-    `ivf_write_index` materializes) returns exactly the top-k a probe
+    `ivf_probe` over the diff-MAINTAINED full-column inverted lists of
+    an `ivf_write_index` layout (vec_id, embedding, centroid_id)
+    returns exactly the top-k a probe
     over a from-scratch assignment of the current snapshot returns.
     Frozen quantizer, real embeddings table, the catalog key's residue
     snapshots — the end-to-end claim the maintenance keys exist for."""
@@ -570,13 +702,13 @@ def test_probe_over_maintained_ivf_index_equals_rebuild(spark, sf_dir):
     d = F.col("vec_id")
 
     def assign(docs):
-        # full serving columns — the union schema follows prev_index
+        # full serving columns, as the layout's lists hold them
         return ivf_assign_with_centroids(docs, centroids)
 
+    layout = str(tmp_path / "ivf")
+    ivf_write_index(prev, layout, centroids=centroids)
     diff = snapshot_diff(prev, cur, "vec_id", ["embedding"])
-    maintained = apply_index_diff(
-        assign(prev), diff, cur, assign, key="vec_id"
-    )
+    maintained = apply_index_diff(f"{layout}/assigned", diff, cur)
     queries = cur.filter(d < 20)
 
     def topk(assigned):
@@ -1185,17 +1317,15 @@ def test_concurrent_writer_detected_not_silently_lost(spark, tmp_path):
 
     # (a) sneak a concurrent generation commit in between compaction's
     # staging write and its commit check
-    real_stage = im._stage_compacted_base
+    real_write = im._write_base
 
-    def stage_then_race(folded, staging, partition_col):
-        real_stage(folded, staging, partition_col)
+    def stage_then_race(*args):
+        real_write(*args)
         write_index_delta(
             path, snapshot_diff(cur, nxt, "doc_id", ["text"]), nxt
         )
 
-    with mock.patch.object(
-        im, "_stage_compacted_base", side_effect=stage_then_race
-    ):
+    with mock.patch.object(im, "_write_base", side_effect=stage_then_race):
         with pytest.raises(RuntimeError, match="during the fold"):
             compact_index(spark, path)
     # nothing lost, nothing flipped: both generations fold, staging gone
@@ -1330,15 +1460,13 @@ def test_vanished_manifest_at_commit_aborts(spark, tmp_path):
     p3 = str(tmp_path / "idx3")
     minhash_write_index(prev, p3, num_bands=2, rows_per_band=2, k=2)
     write_index_delta(p3, diff, cur)
-    real_stage = im._stage_compacted_base
+    real_write = im._write_base
 
-    def stage_then_vanish(folded, staging, partition_col):
-        real_stage(folded, staging, partition_col)
+    def stage_then_vanish(*args):
+        real_write(*args)
         os.remove(os.path.join(p3, "_manifest.json"))
 
-    with mock.patch.object(
-        im, "_stage_compacted_base", side_effect=stage_then_vanish
-    ):
+    with mock.patch.object(im, "_write_base", side_effect=stage_then_vanish):
         with pytest.raises(RuntimeError, match="during the fold"):
             compact_index(spark, p3)
     assert not os.path.isdir(os.path.join(p3, "_base", "v1"))
@@ -1820,17 +1948,13 @@ def test_apply_index_diff_plan_is_change_sized(spark, tmp_path):
     runs EXACTLY one Arrow banding stage (over the semi-filtered
     upserts, never the corpus), and no row-at-a-time Python or
     cartesian product appears."""
-    band_fn = _mh_band_fn()
     prev, cur = _prev_cur(spark)
-    path = str(tmp_path / "idx")
-    minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
+    path = _mh_index(prev, str(tmp_path / "idx"))
     change_log = spark.createDataFrame(
         [r.asDict() for r in
          snapshot_diff(prev, cur, "doc_id", ["text"]).collect()]
     ).select("doc_id", "change_type")
-    maintained = apply_index_diff(
-        spark.read.parquet(path), change_log, cur, band_fn
-    )
+    maintained = apply_index_diff(path, change_log, cur)
     plan = _simple_plan(maintained)
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "SortMergeJoin" not in plan, plan
@@ -1853,15 +1977,11 @@ def test_apply_index_diff_materialized_diff_computes_once(spark, tmp_path):
     path = str(tmp_path / "idx")
     minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
     inline = snapshot_diff(prev, cur, "doc_id", ["text"])
-    plan_inline = _simple_plan(
-        apply_index_diff(spark.read.parquet(path), inline, cur, band_fn)
-    )
+    plan_inline = _simple_plan(apply_index_diff(path, inline, cur))
     assert plan_inline.count("SortMergeJoin") == 2, plan_inline
 
     ckpt = inline.localCheckpoint(eager=False)
-    maintained = apply_index_diff(
-        spark.read.parquet(path), ckpt, cur, band_fn
-    )
+    maintained = apply_index_diff(path, ckpt, cur)
     plan_ckpt = _simple_plan(maintained)
     assert "SortMergeJoin" not in plan_ckpt, plan_ckpt
     # and the value contract holds through the checkpoint

@@ -3062,6 +3062,45 @@ def test_index_apply_diff_rewrites_format1_tree(spark, sf_dir):
     assert mtimes(index) == before
 
 
+@pytest.mark.parametrize("key,tree,kind", [
+    ("llm_index_apply_diff", "minhash_prev_index", "minhash"),
+    ("llm_ivf_apply_diff", "ivf_prev_index/assigned", "ivf"),
+    ("llm_ivf_pq_apply_diff", "ivf_pq_prev_lists/lists", "ivf_pq"),
+])
+def test_apply_diff_key_serves_its_builders_index(
+    spark, sf_dir, key, tree, kind
+):
+    """Each apply-diff key maintains an index its family's builder
+    committed: the scratch tree holds a format-3 manifest of that
+    kind, and a second call serves it untouched (every file's mtime
+    unchanged)."""
+    import os
+
+    from github_event_etl_spark.operators.index_maintenance import (
+        _MANIFEST_FORMAT,
+        _read_manifest,
+    )
+    from github_event_etl_spark.plans.catalog import get_spec
+    from github_event_etl_spark.scratch import scratch_dir
+
+    fn = get_spec(key).fn
+    root = scratch_dir(sf_dir, tree.split("/")[0])
+
+    def mtimes():
+        return {
+            os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+            for d, _dirs, files in os.walk(root)
+            for f in files
+        }
+
+    rows = fn(spark, sf_dir).count()
+    m = _read_manifest(scratch_dir(sf_dir, *tree.split("/")))
+    assert (m["format"], m["kind"]) == (_MANIFEST_FORMAT, kind)
+    before = mtimes()
+    assert fn(spark, sf_dir).count() == rows > 0
+    assert mtimes() == before
+
+
 def test_ivf_apply_diff_equals_rebuild(spark, sf_dir):
     """The IVF maintenance key's identity, Spark-side (the oracle pins
     it cross-engine): the maintained (vec_id, centroid_id) index equals
@@ -3130,9 +3169,9 @@ def test_ivf_apply_diff_equals_rebuild(spark, sf_dir):
 
 def test_ivf_apply_diff_plan_gates(spark, sf_dir):
     """The IVF maintenance key's scale shape (r22): reads the
-    materialized prev assignment (the scratch ivf_prev_index tree,
-    partitioned by centroid_id), joins the checkpointed change log via
-    broadcast only, and re-assigns the change-sized upserts in ONE
+    materialized prev lists (the `assigned` tree of the scratch
+    ivf_prev_index layout, partitioned by centroid_id), joins the
+    checkpointed change log via broadcast only, and re-assigns the change-sized upserts in ONE
     Arrow-vectorized pass against the driver-collected frozen centroid
     table — no centroid join, no argmin window, no row-at-a-time
     Python. The corpus-sized index side never exchanges."""
@@ -3164,11 +3203,8 @@ def test_ivf_pq_apply_diff_equals_rebuild_and_plan_gates(spark, sf_dir):
     vector changes its packed CODE (not just its list) — a re-embed
     that kept its code would leave the re-encode path untested. Plan
     gates: the materialized prev lists tree is read (not re-encoded),
-    no Python/Arrow stage anywhere, no cartesian product, the
-    anti/semi/code-attach joins are broadcast, and the only sort-merge
-    join is the change-sized assigned⋈codes attach (both sides
-    change-sized by the semi-filter — broadcasting either would be
-    wrong at a 1%-of-corpus daily diff; AQE upgrades it when small)."""
+    no cartesian product, and exactly one Arrow stage — the fused
+    assignment + encode of the change-sized upserts."""
     from pyspark.sql import functions as F
 
     from github_event_etl_spark.operators.merge import snapshot_diff

@@ -36,6 +36,13 @@ def test_masks_run_ids_and_scratch_paths_only(tmp_path):
         plan_b.replace("hashpartitioning", "rangepartitioning")
     )
     (a / "join_broadcast_parent.txt").write_text(plan_a)
+    # scratch roots outside /tmp, wherever each checkout's TMPDIR points
+    (a / "llm_ivf_apply_diff_parent.txt").write_text(
+        _PLAN.format(e=1, f=2, p=3, r=4, tmp="/srv/pd_parent")
+    )
+    (b / "llm_ivf_apply_diff_change.txt").write_text(
+        _PLAN.format(e=5, f=6, p=7, r=8, tmp="/home/u/tmp_change")
+    )
 
     out = subprocess.run(
         [sys.executable, _TOOL, str(a), str(b)],
@@ -46,5 +53,5 @@ def test_masks_run_ids_and_scratch_paths_only(tmp_path):
     assert out.stdout.splitlines() == [
         "diff dedup_e2e",
         f"only {a} join_broadcast",
-        "same 1 diff 2",
+        "same 2 diff 2",
     ]

@@ -1310,6 +1310,39 @@ def test_incremental_classify_skeleton_matches_python_model(spark):
 # ---------------------------------------- snapshot diff + index maintenance
 
 
+def _assert_refresh_equals_rebuild(spark, prev, diff, cur):
+    """Build a MinHash index of `prev` into a fresh directory with its
+    builder; `apply_index_diff(diff, cur)` and `read_index` after
+    `write_index_delta(diff, cur)` must both equal a from-scratch
+    banding of `cur`."""
+    import os
+    import tempfile
+
+    from github_event_etl_spark.operators.index_maintenance import (
+        apply_index_diff,
+        read_index,
+        write_index_delta,
+    )
+    from github_event_etl_spark.operators.text_dedup import (
+        _band_keys,
+        minhash_band_buckets_vec,
+        minhash_write_index,
+    )
+
+    def rows(df):
+        return {tuple(r) for r in df.select("doc_id", "band", "bucket")
+                .collect()}
+
+    vec = minhash_band_buckets_vec(num_bands=2, rows_per_band=2, k=2)
+    rebuilt = rows(_band_keys(cur, vec))
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "idx")
+        minhash_write_index(prev, path, num_bands=2, rows_per_band=2, k=2)
+        assert rows(apply_index_diff(path, diff, cur)) == rebuilt
+        write_index_delta(path, diff, cur)
+        assert rows(read_index(spark, path)) == rebuilt
+
+
 # doc universe: id → (prev text | None, cur text | None); None = absent
 # from that snapshot. Short texts over a tiny alphabet make shingle
 # collisions (and thus genuinely shared bands) common; the empty string
@@ -1326,18 +1359,12 @@ def test_snapshot_diff_and_maintenance_model(spark, docs):
     """Two invariants over ARBITRARY snapshot pairs: (1) snapshot_diff
     agrees with a direct Python model of the CDC classification
     (added / removed / changed / silent-when-unchanged), and (2) the
-    maintained band index equals a from-scratch banding of the current
-    snapshot — apply_index_diff's contract holds for every change-set
-    shape hypothesis finds, not just the hand-built and residue-class
-    fixtures."""
-    from github_event_etl_spark.operators.index_maintenance import (
-        apply_index_diff,
-    )
+    refreshed index — `apply_index_diff`, and `read_index` after
+    `write_index_delta`, over a `minhash_write_index` build of the
+    previous snapshot (empty included) — equals a from-scratch banding
+    of the current snapshot, for every change-set shape hypothesis
+    finds, not just the hand-built and residue-class fixtures."""
     from github_event_etl_spark.operators.merge import snapshot_diff
-    from github_event_etl_spark.operators.text_dedup import (
-        _band_keys,
-        minhash_band_buckets_vec,
-    )
 
     universe = {i: pc for i, pc in enumerate(docs)}
     prev_rows = [(i, p) for i, (p, _) in universe.items() if p is not None]
@@ -1359,17 +1386,7 @@ def test_snapshot_diff_and_maintenance_model(spark, docs):
     got = {r.doc_id: r.change_type for r in diff.collect()}
     assert got == model
 
-    vec = minhash_band_buckets_vec(num_bands=2, rows_per_band=2, k=2)
-
-    def band_fn(d):
-        return _band_keys(d, vec)
-
-    maintained = {
-        tuple(r)
-        for r in apply_index_diff(band_fn(prev), diff, cur, band_fn).collect()
-    }
-    rebuilt = {tuple(r) for r in band_fn(cur).collect()}
-    assert maintained == rebuilt
+    _assert_refresh_equals_rebuild(spark, prev, diff, cur)
 
 
 # snapshot-CHAIN universe: id → one text-or-absent per snapshot in the
@@ -1398,16 +1415,9 @@ def test_reconcile_composes_snapshot_diffs(spark, docs, chain_len):
     keys whose content reverted (first == last) — and applying the
     reconciled log yields the same final index state as a from-scratch
     derivation of the last snapshot."""
-    from github_event_etl_spark.operators.index_maintenance import (
-        apply_index_diff,
-    )
     from github_event_etl_spark.operators.merge import (
         reconcile_change_log,
         snapshot_diff,
-    )
-    from github_event_etl_spark.operators.text_dedup import (
-        _band_keys,
-        minhash_band_buckets_vec,
     )
 
     universe = dict(enumerate(docs))
@@ -1462,22 +1472,11 @@ def test_reconcile_composes_snapshot_diffs(spark, docs, chain_len):
             assert net[i][1] == tc  # payload is the final content
 
     # final-state equivalence: the net log drives the index to c
-    vec = minhash_band_buckets_vec(num_bands=2, rows_per_band=2, k=2)
-
-    def band_fn(d):
-        return _band_keys(d, vec)
-
     net_df = spark.createDataFrame(
         [(i, t, x) for i, (t, x) in net.items()],
         "doc_id long, change_type string, text string",
     )
-    maintained = {
-        tuple(r)
-        for r in apply_index_diff(
-            band_fn(a), net_df, c, band_fn
-        ).collect()
-    }
-    assert maintained == {tuple(r) for r in band_fn(c).collect()}
+    _assert_refresh_equals_rebuild(spark, a, net_df, c)
 
 
 def test_pair_explode_matches_brute_force_at_chunk_boundaries(spark):

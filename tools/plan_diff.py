@@ -10,10 +10,11 @@ Before comparing, each plan masks:
 
 - expression ids (`doc_id#123L` -> `doc_id#N`);
 - plan ids (`[plan_id=45]`) and RDD ids (`MapPartitionsRDD[67]`);
-- the directories of scratch paths under `/tmp`
-  (`file:/tmp/a/b/minhash_index` -> `<tmp>/minhash_index`), so two
-  checkouts run each under its own `TMPDIR` there compare equal while
-  the tree a plan reads still shows.
+- every scratch path up to and including its `geetl_spark/` root
+  (`file:/x/y/geetl_spark/sf0.1-ab12cd34/minhash_index` ->
+  `<tmp>/sf0.1-ab12cd34/minhash_index`), so two checkouts run each
+  under its own `TMPDIR`, wherever it points, compare equal while the
+  dataset and the tree a plan reads still show.
 
 Prints one `diff <key>` line per differing key, one `only <dir> <key>`
 line per unpaired key, then `same N diff M`. Exit status 1 when any key
@@ -30,7 +31,7 @@ _MASKS = (
     (re.compile(r"#\d+L?\b"), "#N"),
     (re.compile(r"\bplan_id=\d+"), "plan_id=N"),
     (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[N]"),
-    (re.compile(r"(?:file:)?/tmp/[^\s,\]\)}]*/"), "<tmp>/"),
+    (re.compile(r"(?:file:)?[^\s,\[\]\(\){}]*/geetl_spark/"), "<tmp>/"),
 )
 
 
