@@ -2,8 +2,8 @@
 """Bench harness (driver contract, SURVEY.md §6 / BASELINE.md).
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+``/root/testdata/sf0.1``) in the engine's session (`session.get_spark`,
+the one the tests and perfbench run) and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -97,30 +97,14 @@ def _force(df) -> None:
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # sf0.1 keys are bound by fixed costs (the r22 8-core/32-core ratios
     # are about 1), so this SF cannot show parallel scaling.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import SparkSession
-
-    from github_event_etl_spark.session import (
-        CODEGEN_CACHE_ENTRIES,
-        ensure_session_defaults,
-    )
     from github_event_etl_spark.plans.catalog import resolve
+    from github_event_etl_spark.session import get_spark, pinned_confs
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("geetl-bench")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", cpus)
-        # static, so ensure_session_defaults cannot set them (session.py)
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .getOrCreate()
-    )
-    ensure_session_defaults(spark)
+    spark = get_spark("geetl-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # Fault isolation: every lookup/warmup/measurement is fenced so one
@@ -170,9 +154,10 @@ def main() -> None:
                 token_count_vec,
             )
 
+            cores = spark.sparkContext.defaultParallelism
             _force(
-                spark.range(int(cpus) * 4)
-                .repartition(int(cpus))
+                spark.range(cores * 4)
+                .repartition(cores)
                 .select(token_count_vec(_F.lit("a b")))
             )
 
@@ -253,13 +238,8 @@ def main() -> None:
         """One rep of a composed pipeline under the job-sized shuffle
         parallelism described above, conf restored after."""
         def rep():
-            key = "spark.sql.shuffle.partitions"
-            prev = spark.conf.get(key)
-            spark.conf.set(key, "16")
-            try:
+            with pinned_confs(spark, {"spark.sql.shuffle.partitions": "16"}):
                 _force(fn(spark, sf_dir))
-            finally:
-                spark.conf.set(key, prev)
 
         return rep
 

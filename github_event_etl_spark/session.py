@@ -1,6 +1,6 @@
 """SparkSession construction and session-level defaults.
 
-Scale posture (100 TB design, tested on local[32]):
+Scale posture (100 TB design, tested in local mode on one host):
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   and broadcast-join demotion/promotion replace hand-tuned plans.
 - Arrow on: every Python<->JVM hop (pandas UDFs, toPandas) is batched.
@@ -31,6 +31,7 @@ Scale posture (100 TB design, tested on local[32]):
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,36 +41,31 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 CODEGEN_CACHE_ENTRIES = 1500
 
 
-def get_spark(
-    app_name: str = "github-event-etl-spark",
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
+def get_spark(app_name: str = "github-event-etl-spark") -> SparkSession:
+    """Build (or fetch) the engine's local-mode SparkSession, with
+    `ensure_session_defaults` applied.
 
-    ``local[$SPARK_GRAFT_CPUS]`` in this container; on a real cluster the
-    master/resource settings come from spark-submit and everything here
-    still applies.
+    The master is ``local[$SPARK_GRAFT_CPUS]``, by default the CPUs this
+    process may run on (what `nproc` reports). Only static and launch
+    confs are set here; every runtime conf the queries rely on is set
+    once, in `ensure_session_defaults`. Builder options override a
+    submitted conf, so a cluster deployment builds its own session and
+    calls `ensure_session_defaults` on it, as the verification driver
+    does.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    return builder.getOrCreate()
+    return ensure_session_defaults(builder.getOrCreate())
 
 
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
@@ -83,7 +79,7 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # A vanilla session defaults to 200 shuffle partitions — wasteful on
-    # local[32] (and each streaming micro-batch materializes one state
+    # one host (and each streaming micro-batch materializes one state
     # store per partition). Runtime-settable, so pin it here; AQE still
     # coalesces below this at execution. Safe for the bounded streams:
     # every declared streaming query uses a fresh checkpoint.
@@ -110,6 +106,24 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextlib.contextmanager
+def pinned_confs(spark: SparkSession, pins: dict[str, str]):
+    """Set the runtime confs `pins` for the body of the `with`, then
+    restore each faithfully: a key that was unset before is unset again,
+    so a pin never leaks into the shared session as an explicit value."""
+    prev = [(k, spark.conf.get(k, None)) for k in pins]
+    try:
+        for k, v in pins.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, p in prev:
+            if p is not None:
+                spark.conf.set(k, p)
+            else:
+                spark.conf.unset(k)
+
+
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly compute `df` and cut its lineage: the package's one rule
     for an iterative or composed plan's materialization points.
@@ -123,9 +137,8 @@ def materialize(df: DataFrame) -> DataFrame:
     mode, but its blocks live on the executors and die with them, so a
     multi-executor deployment must set a shared-filesystem dir.
 
-    Each reliable call writes one RDD directory. `get_spark` (and
-    bench.py's builder) set the static
-    `spark.cleaner.referenceTracking.cleanCheckpoints`, so the context
+    Each reliable call writes one RDD directory. `get_spark` sets the
+    static `spark.cleaner.referenceTracking.cleanCheckpoints`, so the context
     cleaner removes a directory once its checkpointed RDD is
     garbage-collected on the driver — never while a frame that reads
     it is still held. A session built without that conf keeps every

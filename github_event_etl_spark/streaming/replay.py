@@ -25,7 +25,6 @@ update-contributor-scores.js:195-204).
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import tempfile
@@ -37,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..scratch import materialize_once, scratch_dir
+from ..session import pinned_confs
 from ..sources.tables import SCHEMAS, load_table
 
 REPLAY_SCHEMA = T.StructType(
@@ -155,25 +155,6 @@ def read_event_stream(spark: SparkSession, src_dir: str, **options) -> DataFrame
     )
 
 
-@contextlib.contextmanager
-def _pinned_confs(spark: SparkSession, pins: dict[str, str]):
-    """THE conf pin/restore mechanism for the bounded-replay helpers.
-    Restore is faithful: a key that was UNSET before pinning is unset
-    again — re-setting the old effective value (or skipping restore)
-    would leak the bounded-replay config into the shared session."""
-    prev = [(k, spark.conf.get(k, None)) for k in pins]
-    try:
-        for k, v in pins.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, p in prev:
-            if p is not None:
-                spark.conf.set(k, p)
-            else:
-                spark.conf.unset(k)
-
-
 def run_bounded(
     stream_df: DataFrame,
     output_mode: str,
@@ -216,7 +197,7 @@ def run_bounded(
     if not no_data_batches:
         pins["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     try:
-        with _pinned_confs(spark, pins):
+        with pinned_confs(spark, pins):
             q = (
                 stream_df.writeStream.format("memory")
                 .queryName(name)
@@ -264,7 +245,7 @@ def run_until_input_rows(
         pins["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     # the query clones the session config synchronously inside start():
     # the pin is restored immediately after, before the poll loop
-    with _pinned_confs(spark, pins):
+    with pinned_confs(spark, pins):
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)

@@ -10,7 +10,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     from github_event_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="geetl-tests", shuffle_partitions=8)
+    spark = get_spark(app_name="geetl-tests")
     yield spark
 
 

@@ -9,16 +9,12 @@ def test_warm_pipelines_compile_nothing(spark, sf_dir):
     class in Spark's codegen cache. With the default 100-entry cache (or
     with stage ids in class names, which AQE numbers differently from
     run to run) the second run recompiles nearly all of its ~300
-    classes. The confs `ensure_session_defaults` changes are restored
-    after, so later tests see the fixture session as it was."""
+    classes."""
     from github_event_etl_spark.plans.pipelines import (
         dedup_e2e_pipeline,
         incremental_e2e_pipeline,
     )
-    from github_event_etl_spark.session import ensure_session_defaults
 
-    before = spark.conf.getAll
-    ensure_session_defaults(spark)
     compiles = (
         spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME()
@@ -32,17 +28,55 @@ def test_warm_pipelines_compile_nothing(spark, sf_dir):
             ).save()
         return compiles.getCount() - n0
 
-    try:
-        cold = run_both()
-        warm = run_both()
-    finally:
-        for k, v in spark.conf.getAll.items():
-            if k not in before:
-                spark.conf.unset(k)
-            elif v != before[k]:
-                spark.conf.set(k, before[k])
+    cold = run_both()
+    warm = run_both()
     assert cold > 0, cold
     assert warm <= 5, (cold, warm)
+
+
+_FRESH_SESSION_PROBE = """
+import json, os, sys
+from github_event_etl_spark.plans.catalog import resolve
+from github_event_etl_spark.session import get_spark
+
+spark = get_spark()
+before = spark.conf.getAll
+resolve("agg_hourly_count")(spark, sys.argv[1])
+print(json.dumps({
+    "master": spark.sparkContext.master,
+    "cpus": len(os.sched_getaffinity(0)),
+    "added_or_changed": sorted(
+        k for k, v in spark.conf.getAll.items() if before.get(k) != v
+    ),
+    "removed": sorted(set(before) - set(spark.conf.getAll)),
+}))
+spark.stop()
+"""
+
+
+def test_unconfigured_session_is_host_sized_and_complete(sf_dir):
+    """With no `SPARK_GRAFT_*` sizing set, `get_spark` runs one local
+    core per usable CPU, and its session already carries every conf a
+    catalog query applies: building a key changes no conf. Runs in a
+    fresh process, since the fixture session's JVM is already sized."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        k: v for k, v in os.environ.items()
+        if k not in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _FRESH_SESSION_PROBE, sf_dir],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    probe = json.loads(out.stdout.strip().splitlines()[-1])
+    assert probe["master"] == f"local[{probe['cpus']}]", probe
+    assert probe["added_or_changed"] == [] and probe["removed"] == [], probe
 
 
 def test_context_checkpoint_dir_makes_incremental_e2e_cuts_reliable(

@@ -4,7 +4,7 @@ plans/<tag>/<key>_<suffix>.txt — before/after plan evidence.
 
     python tools/dump_plans.py <tag> <suffix> <key> [key ...]
 
-Uses one session for all keys. A key is any name `catalog.resolve`
+Uses one `session.get_spark` session for all keys. A key is any name `catalog.resolve`
 knows: a catalog key, a slot-less indexed twin, or a pipeline.
 """
 
@@ -22,21 +22,11 @@ def main() -> int:
     keys = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pyspark.sql import SparkSession
-
-    from github_event_etl_spark.session import ensure_session_defaults
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("dump-plans")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
-    ensure_session_defaults(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-
     from github_event_etl_spark.plans.catalog import resolve
+    from github_event_etl_spark.session import get_spark
+
+    spark = get_spark("dump-plans")
+    spark.sparkContext.setLogLevel("ERROR")
 
     outdir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", tag)

@@ -35,19 +35,10 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     mode = sys.argv[3] if len(sys.argv) > 3 else "formatted"
 
-    from pyspark.sql import SparkSession
-
     from github_event_etl_spark.plans.catalog import resolve
-    from github_event_etl_spark.session import ensure_session_defaults
+    from github_event_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("explain-key")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
-    ensure_session_defaults(spark)
+    spark = get_spark("explain-key")
     spark.sparkContext.setLogLevel("ERROR")
 
     df = resolve(key)(spark, sf_dir)
